@@ -37,10 +37,8 @@ object Bench {
       // by bytes, let AQE coalesce; the r18 probe showed hundreds of
       // 32-task stages over KB-sized caches). Scale-adaptive by
       // construction — AQE only coalesces when actual bytes are small —
-      // so the same setting is right at 100 TB. Overridable via
-      // SPARK_GRAFT_CACHE_AQE for A/B.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+      // so the same setting is right at 100 TB.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -23,8 +23,7 @@ object StageProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // same cached-plan AQE setting as the bench session (Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // UI ON (unlike Bench): the probe reads the SQL tab's per-operator
       // metrics back through the REST API and dumps them per query.
       .config("spark.ui.enabled", "true")

@@ -25,8 +25,7 @@ object Verify {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // same cached-plan AQE setting as the bench session (Bench.scala) so
       // correctness is verified under the exact config the bench times
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -21,27 +21,17 @@ import org.apache.spark.storage.StorageLevel
   * rounds where a general-graph algorithm (large-star/small-star) would
   * pay its constant factors for nothing.
   *
-  * Scale notes: the label table is persisted per round and the previous
-  * round is unpersisted, so cached DATA stays one round deep; the logical
-  * plan still doubles per round (labels is referenced twice), so past
-  * [[PlainCheckpointDepth]] rounds the loop flips to per-round eager
-  * `localCheckpoint`, which truncates lineage to a leaf — deep chain
-  * graphs converge instead of OOM-ing plan rendering (exercised to
-  * depth 33 in ClustersSpec). Hitting `maxIter` without a fixpoint
+  * Scale notes: every round's label table is an eager `localCheckpoint`
+  * and the previous round is released, so cached DATA stays one round
+  * deep and each round's plan starts from a leaf — the plan an action
+  * renders is O(1) in the round count, not a nest of every earlier
+  * round's cached plan (deep chain graphs converge instead of OOM-ing
+  * plan rendering; exercised to depth 33 in ClustersSpec, and over a
+  * long store history in PairStoreSpec). Hitting `maxIter` without a fixpoint
   * throws — a truncated closure would silently under-merge clusters and
   * let duplicates through.
   */
 object Clusters {
-
-  /** Round at which plain-mode propagation switches from persist to
-    * per-round `localCheckpoint`: the label plan references the previous
-    * round twice, so the logical plan doubles per round: by depth d the
-    * tree holds 2^d copies of the base relation, and AQE re-renders the
-    * plan string on every stage update — measured OOM at depth ~12 on a
-    * 33-chain in ClustersSpec. 2^6 copies renders in microseconds, and
-    * dup near-cliques (≤ ~4 rounds) never pay the checkpoint. */
-  private val PlainCheckpointDepth = 6
-
 
   /** Connected components over `nodes` with undirected `edges`.
     *
@@ -253,14 +243,11 @@ object Clusters {
       // when shortcut briefly switched to lazy persist. An eager
       // localCheckpoint truncates lineage to a LEAF each round (the
       // checkpointed RDDs are reclaimed by the ContextCleaner once
-      // unreferenced), which is why shortcut always checkpoints; plain
-      // mode keeps the cheaper persist through the rounds dup
-      // near-cliques actually need (diameter ≤ ~3) and flips to
-      // checkpointing automatically at depth — deep chains converge
-      // instead of blowing up the plan.
-      val next =
-        if (shortcut || iter >= PlainCheckpointDepth) stepped.localCheckpoint(true)
-        else stepped.persist(StorageLevel.MEMORY_AND_DISK)
+      // unreferenced), in both modes: a persisted round's cached plan is
+      // rendered inside the next round's plan description, so even the
+      // few rounds of a near-clique closure nested each store write's
+      // plan string inside the next one until the driver heap ran out.
+      val next = stepped.localCheckpoint(true)
       // Convergence via a FULL aggregate, not isEmpty: isEmpty short-
       // circuits at the first changed row, which left the lazily-
       // persisted round table PARTIALLY cached — the next round's 2–3

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,9 +35,10 @@ import org.apache.spark.sql.types._
   * driver-side — O(queries·nProbe) ints — and pushed as a literal IN
   * filter so pruning is STATIC (no runtime DPP machinery needed).
   *
-  * '''Layout & write contract''' ([[StoreCommit]] — the [[PairStore]]
-  * protocol): vectors+codes live in immutable salted cell-partitioned
-  * generation dirs `cells_g<v>.<salt>/cell=<c>/`; each quantizer lives in
+  * '''Layout & write contract''' ([[StoreCommit]]'s one layout, shared
+  * with [[PairStore]] and [[SignatureStore]]): vectors+codes live in
+  * immutable salted cell-partitioned generation dirs
+  * `cells_g<v>.<salt>/cell=<c>/`; each quantizer lives in
   * an immutable `quant_g<v>.<salt>/` dir; `history/v<N>` manifests map
   * each committed version to its quantizer and its live (generation,
   * cell) pairs. Every reader pins ONE manifest per call, so a racing
@@ -70,16 +71,10 @@ final class IvfIndex private (
   private final case class Snap(
       version: Long, quantDir: String, genCells: Seq[(String, Int)])
 
-  private def snapshot(): Snap = pin match {
-    case Some(v) =>
-      val fs = StoreCommit.fsOf(spark, path)
-      require(fs.exists(new Path(s"$path/history/v$v")),
-        s"$Store $path has no committed version $v (never written, or " +
-          "vacuumed past retention)")
-      snapshotAt(v)
-    case None =>
-      val fs = StoreCommit.fsOf(spark, path)
-      snapshotAt(StoreCommit.currentVersion(fs, path, Store))
+  private def snapshot(): Snap = {
+    val fs = StoreCommit.fsOf(spark, path)
+    pin.foreach(StoreCommit.requireCommitted(fs, path, _, Store))
+    snapshotAt(pin.getOrElse(StoreCommit.currentVersion(fs, path, Store)))
   }
 
   /** A read-only handle PINNED at committed version `v` — the
@@ -106,14 +101,9 @@ final class IvfIndex private (
     val pairs = Seq.newBuilder[(String, Int)]
     // serve path: memoized — committed manifests are immutable, so a
     // pinned or re-resolved version pays the manifest open ONCE per JVM
-    StoreCommit.readManifestLinesCached(fs, path, v).foreach { l =>
-      l.split(" ") match {
-        case Array("version", _) | Array("nonce", _) => ()
-        case Array("quant", q)                       => quant = Some(q)
-        case Array("gen", g, c)                      => pairs += ((g, c.toInt))
-        case other => throw new IllegalStateException(
-          s"corrupt $Store manifest line '${other.mkString(" ")}' in $path/history/v$v")
-      }
+    StoreCommit.readEntries(fs, path, v, Store) {
+      case Array("quant", q)  => quant = Some(q)
+      case Array("gen", g, c) => pairs += ((g, c.toInt))
     }
     Snap(v, quant.getOrElse(throw new IllegalStateException(
       s"$Store manifest v$v at $path names no quantizer")), pairs.result())
@@ -210,18 +200,9 @@ final class IvfIndex private (
     val written = listCells(fs, path, gen)
     if (written.isEmpty) return // empty batch: nothing to commit
     onBeforeCommit()
-    val all = snap.genCells ++ written.map(gen -> _)
-    StoreCommit.commitManifest(fs, path, snap.version + 1,
-      manifestLines(snap.version + 1, snap.quantDir, all), Store,
-      referenced = referencedPaths(snap.quantDir, all))
+    commit(fs, path, snap.version + 1, snap.quantDir,
+      snap.genCells ++ written.map(gen -> _))
   }
-
-  /** On-disk paths a manifest references — the commit-time existence
-    * verify's target list (see [[StoreCommit.commitManifest]] guard 2). */
-  private def referencedPaths(
-      quantDir: String, genCells: Seq[(String, Int)]): Seq[Path] =
-    new Path(s"$path/$quantDir") +:
-      genCells.map { case (g, c) => new Path(s"$path/$g/cell=$c") }
 
   /** [[appendBatch]] made IDEMPOTENT under whole-batch replay — the
     * micro-batch ingest kernel [[graft.streaming.StreamOps
@@ -308,11 +289,8 @@ final class IvfIndex private (
         .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$gen")
       val kept = listCells(fs, path, gen)
       onBeforeCommit()
-      val all = snap.genCells.filterNot { case (_, c) => touched(c) } ++
-        kept.map(gen -> _)
-      StoreCommit.commitManifest(fs, path, snap.version + 1,
-        manifestLines(snap.version + 1, snap.quantDir, all), Store,
-        referenced = referencedPaths(snap.quantDir, all))
+      commit(fs, path, snap.version + 1, snap.quantDir,
+        snap.genCells.filterNot { case (_, c) => touched(c) } ++ kept.map(gen -> _))
     } finally del.unpersist(blocking = false)
   }
 
@@ -338,10 +316,7 @@ final class IvfIndex private (
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$gen")
     val written = listCells(fs, path, gen)
     onBeforeCommit()
-    StoreCommit.commitManifest(fs, path, snap.version + 1,
-      manifestLines(snap.version + 1, snap.quantDir, written.map(gen -> _)),
-      Store,
-      referenced = referencedPaths(snap.quantDir, written.map(gen -> _)))
+    commit(fs, path, snap.version + 1, snap.quantDir, written.map(gen -> _))
   }
 
   /** Blue-green quantizer rebuild — the drift recovery [[appendBatch]]'s
@@ -384,9 +359,7 @@ final class IvfIndex private (
     } finally corpus.unpersist(blocking = false)
     val written = listCells(fs, path, gen)
     onBeforeCommit()
-    StoreCommit.commitManifest(fs, path, v,
-      manifestLines(v, quantDir, written.map(gen -> _)), Store,
-      referenced = referencedPaths(quantDir, written.map(gen -> _)))
+    commit(fs, path, v, quantDir, written.map(gen -> _))
   }
 
   /** Retire manifests older than the newest `keepLast` and delete the
@@ -395,32 +368,8 @@ final class IvfIndex private (
     * racers. Run only with no writer live (the store tier's rule). */
   def vacuum(keepLast: Int = 2): Unit = {
     requireWritable("vacuum")
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val fs = StoreCommit.fsOf(spark, path)
-    val versions = StoreCommit.committedVersions(fs, path).sorted
-    val (drop, keep) = versions.splitAt(math.max(0, versions.size - keepLast))
-    val snaps = keep.map(snapshotAt)
-    val liveQuant = snaps.map(_.quantDir).toSet
-    val liveCells: Set[(String, Int)] = snaps.flatMap(_.genCells).toSet
-    val liveGens = liveCells.map(_._1)
-    // abort loudly (deleting nothing) if a publish landed since the reap
-    // set was computed — see StoreCommit.assertVersionsUnchanged
-    StoreCommit.assertVersionsUnchanged(fs, path, versions, Store)
-    drop.foreach(dv =>
-      StoreCommit.deleteOrThrow(fs, new Path(s"$path/history/v$dv"), Store))
-    StoreCommit.reapManifestTmp(fs, path, Store)
-    StoreCommit.fsOf(spark, path).listStatus(new Path(path)).toSeq.foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("quant_g") && !liveQuant(n))
-        StoreCommit.deleteOrThrow(fs, s.getPath, Store)
-      else if (n.startsWith("cells_g")) {
-        if (!liveGens(n)) StoreCommit.deleteOrThrow(fs, s.getPath, Store)
-        else fs.listStatus(s.getPath).toSeq
-          .filter(c => c.getPath.getName.startsWith("cell=") &&
-            !liveCells((n, c.getPath.getName.stripPrefix("cell=").toInt)))
-          .foreach(c => StoreCommit.deleteOrThrow(fs, c.getPath, Store))
-      }
-    }
+    StoreCommit.vacuum(StoreCommit.fsOf(spark, path), path, Store, keepLast)(
+      v => { val s = snapshotAt(v); refs(s.quantDir, s.genCells) })
   }
 
   /** Top-k cosine neighbors of each query against the probed cells only,
@@ -538,21 +487,23 @@ object IvfIndex {
     StructField("codes", ArrayType(IntegerType)),
     StructField("cell", IntegerType)))
 
-  private def manifestLines(
-      v: Long, quantDir: String, genCells: Seq[(String, Int)]): Seq[String] =
-    Seq(s"version $v", s"quant $quantDir") ++
-      genCells.sortBy(gc => (gc._1, gc._2)).map { case (g, c) => s"gen $g $c" }
+  /** Paths version (quantDir, genCells) reads, relative to the index
+    * root — what its commit verifies and what vacuum keeps. */
+  private def refs(quantDir: String, genCells: Seq[(String, Int)]): Seq[String] =
+    quantDir +: genCells.map { case (g, c) => s"$g/cell=$c" }
+
+  /** CAS-commit version `v` of the index at `path`. */
+  private def commit(
+      fs: FileSystem, path: String, v: Long,
+      quantDir: String, genCells: Seq[(String, Int)]): Unit =
+    StoreCommit.commitManifest(fs, path, v, s"quant $quantDir" +:
+      genCells.sorted.map { case (g, c) => s"gen $g $c" },
+      Store, refs(quantDir, genCells))
 
   /** Cell ids present in a freshly-written generation dir. */
   private def listCells(
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      gen: String): Seq[Int] = {
-    val p = new Path(s"$path/$gen")
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      .map(_.getPath.getName.stripPrefix("cell=").toInt).sorted
-  }
+      fs: FileSystem, path: String, gen: String): Seq[Int] =
+    StoreCommit.partitionValues(fs, path, gen, "cell")
 
   /** Per-(path, generation, live-cell-set) relation memo: a generation
     * dir is immutable once a manifest references it (appends mint new
@@ -620,14 +571,7 @@ object IvfIndex {
       path: String, seed: Long = 42L, m: Int = 8, kCodes: Int = 16): IvfIndex = {
     val spark = corpus.sparkSession
     val fs = StoreCommit.fsOf(spark, path)
-    if (fs.exists(new Path(path)))
-      fs.listStatus(new Path(path)).toSeq
-        .filter(s => s.getPath.getName.startsWith("cells_g") ||
-          s.getPath.getName.startsWith("quant_g") ||
-          s.getPath.getName == "history" ||
-          // pre-round-14 flat layout — a rebuild starts over
-          Seq("cells", "centroids", "codebooks").contains(s.getPath.getName))
-        .foreach(s => StoreCommit.deleteOrThrow(fs, s.getPath, Store))
+    StoreCommit.reset(fs, path, Store)
     val centroids = Ivf.trainCentroids(corpus, vecCol, nCells, seed)
     val cb = Pq.trainCodebooks(corpus, vecCol, m, kCodes, seed)
     val quantDir = StoreCommit.saltedGenDir("quant", 0L)
@@ -639,9 +583,7 @@ object IvfIndex {
       .withColumn("cell", Ivf.assignCellCol(col("v"), centroids))
       .withColumn("codes", graft.plans.PqNative.encodeNative(col("v"), cb))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$gen")
-    StoreCommit.commitManifest(fs, path, 0L,
-      manifestLines(0L, quantDir, listCells(fs, path, gen).map(gen -> _)),
-      Store)
+    commit(fs, path, 0L, quantDir, listCells(fs, path, gen).map(gen -> _))
     new IvfIndex(spark, path)
   }
 

@@ -19,10 +19,11 @@ import org.apache.spark.sql.functions._
   * manifest-last): each publish stages its model tables under a SALTED
   * per-publish subdir `t<nonce>/<table>/` that no other attempt can
   * collide with, then commits the `dir/_MODEL` manifest (scalars, the
-  * model kind, the `tables` pointer, the nonce) through an atomic
-  * create-exclusive publish ([[StoreCommit.exclusiveMoveFile]]) plus a
-  * nonce read-back. Two publishers racing one dir therefore resolve to
-  * exactly one winner WHOSE OWN tables the winning manifest references —
+  * model kind, the `tables` pointer, the nonce) through the store tier's
+  * one publish ([[StoreCommit.publish]]: tmp write, referenced-path
+  * check, atomic create-exclusive move, nonce read-back). Two publishers
+  * racing one dir therefore resolve to exactly one winner WHOSE OWN
+  * tables the winning manifest references —
   * the loser's staging is unreferenced garbage, never a torn mix (the
   * round-13 layout staged tables at fixed names, where a loser could
   * rewrite a winner's tables between its table writes and its manifest
@@ -41,9 +42,6 @@ object ModelStore {
 
   private val Store = "ModelStore"
 
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
-    StoreCommit.fsOf(spark, dir)
-
   /** Published models are immutable: refuse a publish into a dir that
     * already holds a committed `_MODEL`. */
   private def requireUnpublished(fs: FileSystem, dir: String): Unit =
@@ -54,93 +52,42 @@ object ModelStore {
 
   /** Stage-then-commit shared by every save*: allocate the publish nonce,
     * let `writeTables` stage under the salted `t<nonce>` subdir, then
-    * commit the manifest referencing it. */
+    * publish the manifest referencing it. The publish re-verifies the
+    * staged subdir right before its exclusive move: a vacuum racing
+    * this publish saw t<nonce> as an unreferenced orphan (on a first
+    * publish there is no _MODEL for its manifest recheck to see move),
+    * so a reaped staging dir aborts loudly and the caller republishes
+    * instead of committing a manifest that references deleted tables.
+    * That narrows the reap window to the single move call; the store
+    * tier's no-writer-live-during-vacuum rule covers the rest. Exactly
+    * one of N same-dir publishers returns; the rest throw with the
+    * winner's model intact. */
   private def publish(
       spark: SparkSession, dir: String, kind: String,
       scalars: Seq[String])(writeTables: String => Unit): Unit = {
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     requireUnpublished(fs, dir)
     val nonce = java.util.concurrent.ThreadLocalRandom.current()
       .nextLong(1L, Long.MaxValue)
     writeTables(s"$dir/t$nonce")
-    // referenced-data verify (StoreCommit guard 2's form): a vacuum
-    // racing this publish saw t<nonce> as an unreferenced orphan — on a
-    // first publish there is no _MODEL for its manifest recheck to see
-    // move — so this check NARROWS the reap window from the WRITER's
-    // side (StoreCommit's "detector, not a license to race" framing): a
-    // vacuum landing between this exists and the manifest move can still
-    // win, which is why the store tier's no-writer-live-during-vacuum
-    // rule stands. commitManifest re-verifies the same paths again
-    // immediately before the exclusive move, shrinking the window to the
-    // write-tmp→move gap. If the staging dir is gone at either check,
-    // abort loudly and let the caller republish instead of committing a
-    // manifest that references deleted tables.
-    val staged = new Path(s"$dir/t$nonce")
-    if (!fs.exists(staged))
-      throw new java.util.ConcurrentModificationException(
-        s"$Store: staged tables t$nonce at $dir vanished before the " +
-          "commit (a concurrent vacuum reaped them?) — republish")
-    commitManifest(fs, dir,
-      (s"kind $kind" +: scalars) :+ s"tables t$nonce", nonce,
-      referenced = Seq(staged))
+    StoreCommit.publish(fs, new Path(s"$dir/_MODEL"), nonce,
+      (s"kind $kind" +: scalars) :+ s"tables t$nonce", Store,
+      referenced = Seq(new Path(s"$dir/t$nonce")))
   }
 
-  /** Publish `lines` (+ the nonce line) as `dir/_MODEL` — temp write,
-    * atomic create-exclusive move ([[StoreCommit.exclusiveMoveFile]]:
-    * hard-link on local FS, where a bare rename REPLACES silently;
-    * refuse-existing rename elsewhere), then a READ-BACK VERIFY against
-    * the per-publish nonce. Exactly one of N same-dir publishers
-    * returns; the rest throw with the winner's model intact.
-    * `referenced` paths are re-verified AFTER the tmp write, immediately
-    * before the exclusive move — the last cheap point a vacuum-reaped
-    * staging dir can be detected before a manifest referencing it lands
-    * (shrinks the publish-vs-vacuum TOCTOU window to the single move
-    * call; the no-writer-live-during-vacuum rule covers the rest). */
-  private def commitManifest(
-      fs: FileSystem, dir: String, lines: Seq[String], nonce: Long,
-      referenced: Seq[Path] = Seq.empty): Unit = {
-    val dst = new Path(s"$dir/_MODEL")
-    requireUnpublished(fs, dir)
-    val tmp = new Path(s"$dir/.tmp_MODEL_$nonce")
-    val out = fs.create(tmp, true)
-    try out.write(((lines :+ s"nonce $nonce").mkString("\n") + "\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-    referenced.find(!fs.exists(_)).foreach { p =>
-      fs.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"$Store: referenced $p vanished between staging and the manifest " +
-          "move (a concurrent vacuum reaped it?) — republish")
-    }
-    try StoreCommit.exclusiveMoveFile(fs, tmp, dst, Store)
-    catch { case e: Throwable => fs.delete(tmp, false); throw e }
-    val back = readRawManifest(fs, dir)
-    if (!back.get("nonce").contains(nonce.toString))
-      throw new java.util.ConcurrentModificationException(
-        s"$Store: published $dst content is not ours — lost a same-dir " +
-          "publish race; the other publisher's model stands")
-  }
-
-  /** [[readManifest]] without the kind check — the commit read-back and
-    * the [[list]] probe. */
+  /** [[readManifest]] without the kind check — the [[list]] probe. */
   private def readRawManifest(
-      fs: FileSystem, dir: String): Map[String, String] = {
-    val in = fs.open(new Path(s"$dir/_MODEL"))
-    val lines =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      finally in.close()
-    lines.flatMap { l =>
+      fs: FileSystem, dir: String): Map[String, String] =
+    StoreCommit.readLines(fs, new Path(s"$dir/_MODEL")).flatMap { l =>
       val i = l.indexOf(' ')
       if (i > 0) Some(l.substring(0, i) -> l.substring(i + 1)) else None
     }.toMap
-  }
 
   /** Parse `dir/_MODEL`, verifying the `kind` line — a missing manifest
     * is an unpublished (crashed or foreign) dir and fails loudly. */
   private def readManifest(
       spark: SparkSession, dir: String, kind: String): Map[String, String] = {
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val p = new Path(s"$dir/_MODEL")
     if (!fs.exists(p))
       throw new IllegalStateException(
@@ -165,7 +112,7 @@ object ModelStore {
     * ops verb for the artifact tier ("what models exist here?"), and
     * the safe way to discover dirs without knowing each name. */
   def list(spark: SparkSession, root: String): Seq[(String, String, Long)] = {
-    val fs = fsOf(spark, root)
+    val fs = StoreCommit.fsOf(spark, root)
     val r = new Path(root)
     if (!fs.exists(r)) return Seq.empty
     fs.listStatus(r).toSeq.filter(_.isDirectory).flatMap { s =>
@@ -186,7 +133,7 @@ object ModelStore {
     * the store tier's vacuum rule (a reap can race an in-flight publish
     * into a loud abort). */
   def vacuumOrphans(spark: SparkSession, dir: String): Unit = {
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val root = new Path(dir)
     if (!fs.exists(root)) return
     def liveRef: Option[String] =

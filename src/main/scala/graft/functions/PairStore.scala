@@ -16,62 +16,61 @@ import org.apache.spark.sql.functions._
   * the text-dedup analog of [[IvfIndex]] (persisted index) and
   * [[SignatureStore]] (persisted signatures).
   *
-  * Layout under `dir` — IMMUTABLE data + versioned manifests:
-  *   - `pairs/` — append-only parquet pair-row files exactly as produced
-  *     by the finder (e.g. `(id_a, id_b, jaccard)`); tens of bytes per
-  *     EDGE, never corpus text. [[compactPairs]] folds accumulated small
-  *     files into a `pairs_g<v>/` generation (auto-triggered past
-  *     `maxPairFiles`); superseded files linger until [[vacuum]].
-  *   - `labels/g<v>b<b>/` — one dir per (commit version, cluster-residue
-  *     bucket), holding `(nodeCol, cluster_id)` rows node-sorted, for
-  *     the bucket generations written at version `v`. `b = pmod(hash(
-  *     cluster_id), buckets)`, so an [[append]] rewrites ONLY the
-  *     buckets holding merged or fresh clusters — never the corpus
-  *     table. Dirs are written once and never mutated.
-  *   - `history/v<N>` — the version-N MANIFEST: the complete
-  *     bucket→generation map plus the complete pairs file list. One
-  *     small text file IS the commit: readers resolve every path
-  *     through it, so publishing it (full write to a tmp name, then
-  *     rename) atomically exposes version N.
-  *   - `_BUCKETS` — the residue modulus, fixed at [[build]] time.
+  * Layout under `dir` — [[StoreCommit]]'s one layout, IMMUTABLE data +
+  * versioned manifests:
+  *   - `pairs_g<v>.<salt>/` — salted pair generations holding parquet
+  *     pair rows exactly as produced by the finder (e.g. `(id_a, id_b,
+  *     jaccard)`); tens of bytes per EDGE, never corpus text. [[build]]
+  *     and every [[append]] write one; [[delete]] rewrites survivors into
+  *     one; [[compactPairs]] folds the live files into one
+  *     (auto-triggered past `maxPairFiles`).
+  *   - `labels_g<v>.<salt>/cbucket=<b>/` — salted label generations
+  *     holding `(nodeCol, cluster_id)` rows node-sorted, one leaf per
+  *     cluster-residue bucket `b = pmod(hash(cluster_id), modulus)`. An
+  *     [[append]] or [[delete]] writes ONLY the buckets holding merged,
+  *     split or fresh clusters — never the corpus table. Readers address
+  *     the live leaves directly, as [[IvfIndex]] reads its cells, so the
+  *     bucket column never reaches them.
+  *   - `history/v<N>` — the version-N MANIFEST: the residue modulus
+  *     (fixed at [[build]]), the complete bucket→generation map and the
+  *     complete pair-file list. Publishing it through
+  *     [[StoreCommit.commitManifest]] IS the commit: readers resolve every
+  *     path through it.
   *
-  * '''Crash model.''' The manifest rename is the single commit point.
-  * Data written for an uncommitted version (staged label dirs, `g<v>b*`
-  * generations, a `pairs_g<v>` compaction, appended pair files) is
-  * unreachable garbage — no manifest references it — so [[recover]]
-  * just deletes anything newer than the last committed manifest; there
-  * is no journal replay. [[append]] is idempotent under whole-batch
-  * replay, including replay after a crash at ANY point: the quotient
-  * edges derive from the FULL delivered batch lifted onto current
-  * labels (already-merged pairs lift to `label == label` and drop out),
-  * and a crashed delivery's orphan pair files are excluded from every
-  * manifest (the replay's appended-file diff never picks them up), so
-  * the replay converges to the same store as a clean run.
+  * '''Crash model.''' The manifest publish is the single commit point.
+  * Data staged for an uncommitted version is unreachable garbage — no
+  * manifest references it — so [[recover]] deletes the generations
+  * staged above the last committed manifest and [[vacuum]] every
+  * unreferenced one; there is no journal replay. [[append]] is
+  * idempotent under whole-batch replay, including replay after a crash
+  * at ANY point: the quotient edges derive from the FULL delivered batch
+  * lifted onto current labels (already-merged pairs lift to `label ==
+  * label` and drop out), and a crashed delivery's pair generation is in
+  * no manifest, so the replay converges to the same store as a clean
+  * run.
   *
   * '''Snapshots.''' Because data files are immutable and manifests are
   * self-contained, [[snapshot]] pins a consistent (pairs, labels) view
   * that stays valid while appends and compactions race ahead — the
   * concurrent-reader contract a bare swap protocol cannot give.
   * [[vacuum]] retires manifests older than `keepLast` and deletes the
-  * data files only they referenced (plus unreferenced orphans, e.g. a
-  * losing concurrent writer's generations); readers need no
-  * coordination beyond vacuum retention.
+  * data only they referenced (plus unreferenced orphans, e.g. a losing
+  * concurrent writer's generations); readers need no coordination beyond
+  * vacuum retention.
   *
-  * '''Concurrent writers.''' Commits are serialized by a manifest
-  * compare-and-swap, not by convention: every commit stages its data
-  * under SALTED generation paths no other attempt can collide with,
-  * then publishes through [[commitManifest]], which (1) fails if any
-  * version ≥ its own was committed since its manifest was read, (2)
-  * verifies every generation dir it references still exists, and (3)
-  * renames the manifest onto a destination that must not exist
-  * ([[renameOrThrow]] refuses, never overwrites) and read-back-verifies
-  * the published content. Of N writers racing an append, EXACTLY ONE
-  * commits; the rest throw `ConcurrentModificationException` with the
-  * store unharmed, and replaying their batches converges (append/delete
-  * are idempotent under whole-batch replay). The one residual rule:
-  * don't run [[recover]]/[[vacuum]] concurrently with a live append —
-  * they may reap its in-flight generations, which downgrades that
-  * append to a loud commit-time abort (never corruption).
+  * '''Concurrent writers.''' Commits are serialized by the manifest
+  * compare-and-swap of [[StoreCommit.commitManifest]], not by
+  * convention: it (1) fails if any version ≥ its own was committed since
+  * its manifest was read, (2) verifies every label leaf and pair file it
+  * references still exists, and (3) publishes the manifest
+  * create-exclusive and read-back-verifies it. Of N writers racing an
+  * append, EXACTLY ONE commits; the rest throw
+  * `ConcurrentModificationException` with the store unharmed, and
+  * replaying their batches converges (append/delete are idempotent under
+  * whole-batch replay). The one residual rule: don't run
+  * [[recover]]/[[vacuum]] concurrently with a live append — they may
+  * reap its in-flight generations, which downgrades that append to a
+  * loud commit-time abort (never corruption).
   *
   * The closure is computed FROM the stored pair parquet (read back, not
   * from the live pair plan), so the pair pipeline executes exactly once
@@ -82,8 +81,10 @@ import org.apache.spark.sql.functions._
   */
 object PairStore {
 
-  /** Partition-column name used transiently by the staged bucket write
-    * (no leading underscore — Spark's listing hides `_` paths). */
+  private val Store = "PairStore"
+
+  /** Partition column of the label generations (no leading underscore —
+    * Spark's listing hides `_` paths). */
   private val BucketCol = "cbucket"
 
   /** Test seam: invoked by [[append]] immediately before its manifest
@@ -92,9 +93,9 @@ object PairStore {
     * No-op in production. */
   private[graft] var onBeforeAppendCommit: () => Unit = () => ()
 
-  /** Test seam: invoked inside [[commitManifest]] for EVERY write verb
-    * (build/append/delete/recover), with the writer's generations fully
-    * staged and the manifest not yet published — the store tier's
+  /** Test seam: invoked before the manifest commit of EVERY write verb
+    * (build/append/delete/compactPairs), with the writer's generations
+    * fully staged and the manifest not yet published — the store tier's
     * shared crash window ([[SignatureStore.onBeforeCommit]] /
     * [[IvfIndex.onBeforeCommit]] convention). PairStoreSpec's
     * randomized kill-replay injects a crash here and asserts the replay
@@ -110,12 +111,22 @@ object PairStore {
   final case class Snapshot(version: Long, pairs: DataFrame, labels: DataFrame)
 
   /** The complete state of one committed version. `buckets` maps each
-    * live cluster-residue bucket to the version that last wrote it;
-    * `pairFiles` is the full pair-file list (paths relative to the
-    * store root). Small by construction: ≤ modulus bucket lines plus
-    * one line per pair file (compaction keeps that bounded). */
+    * live cluster-residue bucket to the label generation that holds it;
+    * `pairFiles` is the full pair-file list (paths relative to the store
+    * root). Small by construction: ≤ modulus bucket lines plus one line
+    * per pair file (compaction keeps that bounded). */
   private final case class Manifest(
-      version: Long, buckets: Map[Int, Long], pairFiles: Seq[String])
+      version: Long, modulus: Int, buckets: Map[Int, String],
+      pairFiles: Seq[String]) {
+    def leaf(bk: Int): Option[String] =
+      buckets.get(bk).map(g => s"$g/$BucketCol=$bk")
+    /** Everything this version reads — what its commit verifies and what
+      * vacuum keeps while it is retained. */
+    def paths: Seq[String] = buckets.keys.toSeq.sorted.flatMap(leaf) ++ pairFiles
+    def lines: Seq[String] = s"modulus $modulus" +:
+      (buckets.toSeq.sorted.map { case (bk, g) => s"bucket $bk $g" } ++
+        pairFiles.sorted.map(f => s"pairfile $f"))
+  }
 
   // ------------------------------------------------------------------ //
   // build / append / compact / vacuum (the writers' API — CAS-committed)
@@ -146,29 +157,14 @@ object PairStore {
       buckets: Int = 16): Unit = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val spark = nodes.sparkSession
-    val fs = fsOf(spark, dir)
-    // overwrite semantics: a rebuild starts the store's history over
-    for (old <- Seq("labels", "history", "pairs", "_BUCKETS"))
-      deleteOrThrow(fs, new Path(s"$dir/$old"))
-    fs.listStatus(new Path(dir)).toSeq
-      .filter(_.getPath.getName.startsWith("pairs_g"))
-      .foreach(s => deleteOrThrow(fs, s.getPath))
-    pairs.write.mode("overwrite").parquet(s"$dir/pairs")
-    if (listDataFiles(fs, dir, "pairs").isEmpty)
-      // an empty pair set can write zero part files; force one so the
-      // manifest always lists a schema-bearing file and no reader ever
-      // falls back to a directory listing (which could pick up orphans)
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pairs.schema)
-        .repartition(1).write.mode("overwrite").parquet(s"$dir/pairs")
-    val stored = spark.read.parquet(s"$dir/pairs")
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.reset(fs, dir, Store)
+    val pairFiles = writePairs(fs, dir, pairs, 0L)
     val labels = Clusters.connectedComponents(
-      nodes.select(col(nodeCol)), stored, nodeCol, srcCol, dstCol,
-      shortcut = shortcut)
-    val written = writeBucketGen(spark, dir, labels, buckets, gen = 0L)
-    writeSmallFile(fs, new Path(s"$dir/_BUCKETS"), buckets.toString)
-    commitManifest(fs, dir, Manifest(0L,
-      written.map(_ -> 0L).toMap, listDataFiles(fs, dir, "pairs")))
+      nodes.select(col(nodeCol)), readPairs(spark, dir, pairFiles),
+      nodeCol, srcCol, dstCol, shortcut = shortcut)
+    commit(fs, dir, Manifest(0L, buckets,
+      writeLabels(fs, dir, labels, buckets, 0L), pairFiles))
   }
 
   /** Incrementally extend the store with a batch: append the batch's
@@ -226,16 +222,13 @@ object PairStore {
     // through the manifest, and replays are idempotent); crashed
     // leftovers are unreferenced garbage for an EXPLICIT
     // recover()/vacuum() run when no writer is live.
-    val fs = fsOf(spark, dir)
-    val b = bucketCount(fs, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val man = currentManifest(fs, dir)
+    val b = man.modulus
     val v = man.version + 1
-    // Eager localCheckpoint: the batch is read several times across
-    // writes that modify the very paths a live plan might read (the
-    // pairs append triggers Spark's recache-by-path and would recompute
-    // a lazy screen against its own output, emptying the batch
-    // mid-flight). Checkpointing truncates lineage to concrete blocks
-    // first. Batch-sized by contract.
+    // Eager localCheckpoint: the batch is read several times across the
+    // screens and writes below, and each read must see the same rows and
+    // start from a leaf plan. Batch-sized by contract.
     val batch = newPairs.localCheckpoint(true)
     // Screen ONLY the pairs-file append on already-stored rows — the
     // label merge below deliberately uses the full batch, so a replay
@@ -245,26 +238,23 @@ object PairStore {
     // pair if its src is a batch endpoint), so the anti-join's store
     // side is batch-sized — the store is scanned, never shuffled.
     val batchSrc = batch.select(col(srcCol)).distinct()
-    val storedTouching = readFiles(spark, dir, man.pairFiles, "pairs")
+    val storedTouching = readPairs(spark, dir, man.pairFiles)
       .select(col(srcCol), col(dstCol))
       .join(broadcast(batchSrc), Seq(srcCol), "left_semi")
     val freshPairs = batch
       .join(storedTouching, Seq(srcCol, dstCol), "left_anti")
       .localCheckpoint(true)
-    // appended-file accounting by before/after diff: a crashed earlier
-    // delivery's ORPHAN files predate the diff and stay out of every
-    // manifest — replays never double-count pair rows. A fully-screened
-    // (replayed) batch skips the write: the writer emits a file per
-    // task even for zero rows, which would masquerade as a pairs-only
+    // the fresh pairs land in this attempt's own salted generation, so
+    // a crashed earlier delivery's files stay out of every manifest —
+    // replays never double-count pair rows. A fully-screened (replayed)
+    // batch skips the write, which would masquerade as a pairs-only
     // commit
-    val appended = if (freshPairs.isEmpty) Seq.empty[String] else {
-      val before = listDataFiles(fs, dir, "pairs").toSet
-      freshPairs.write.mode("append").parquet(s"$dir/pairs")
-      listDataFiles(fs, dir, "pairs").filterNot(before)
-    }
+    val appended =
+      if (freshPairs.isEmpty) Seq.empty[String]
+      else writePairs(fs, dir, freshPairs, v)
     var pairFiles = man.pairFiles ++ appended
 
-    val old = readBuckets(spark, dir, man, man.buckets.keySet.toSeq)
+    val old = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
       .select(col(nodeCol), col("cluster_id"))
     // Fresh-node screen, same broadcast-batch shape as the pair screen:
     // semi-reduce the corpus label table by the batch's node ids first,
@@ -327,22 +317,19 @@ object PairStore {
       // through the batch-sized merge map, plus the fresh nodes. Rows
       // whose new label has a different residue migrate buckets; a
       // bucket whose rows ALL migrate out simply leaves the manifest.
-      val candidates = readBuckets(spark, dir, man,
-          touched.filter(man.buckets.contains))
+      val candidates = readLabels(spark, dir, man, touched)
         .select(col(nodeCol), col("cluster_id"))
         .unionByName(freshNodes.select(col(nodeCol), col(nodeCol).as("cluster_id")))
       val staged = candidates
         .join(broadcast(merged), col("cluster_id") === col("_q"), "left")
         .select(col(nodeCol),
           coalesce(col("_merged"), col("cluster_id")).as("cluster_id"))
-      val tok = genToken(v)
-      val written = writeBucketGen(spark, dir, staged, b, gen = tok)
-      newBuckets = (man.buckets -- touched) ++ written.map(_ -> tok)
+      newBuckets = (man.buckets -- touched) ++ writeLabels(fs, dir, staged, b, v)
     }
     if (pairFiles.size > maxPairFiles)
-      pairFiles = compactInto(spark, dir, pairFiles, genToken(v))
+      pairFiles = compactInto(spark, fs, dir, pairFiles, v)
     onBeforeAppendCommit()
-    commitManifest(fs, dir, Manifest(v, newBuckets, pairFiles))
+    commit(fs, dir, Manifest(v, b, newBuckets, pairFiles))
     Seq(merged, endLabels, freshNodes, freshPairs, batch)
       .foreach(_.unpersist(blocking = false))
   }
@@ -351,9 +338,10 @@ object PairStore {
     * path. Copy-on-write at FILE granularity, the same shape engines
     * like Delta use for DELETE: one columnar scan of the live pair
     * files finds those holding a pair that touches a deleted id, and
-    * ONLY those files are rewritten (survivor rows into a `pairs_g<v>`
-    * generation); untouched files keep their manifest entries, and the
-    * superseded ones stay on disk for pinned snapshots until [[vacuum]].
+    * ONLY those files are rewritten (survivor rows into this attempt's
+    * salted pair generation); untouched files keep their manifest
+    * entries, and the superseded ones stay on disk for pinned snapshots
+    * until [[vacuum]].
     *
     * Labels are recomputed for the AFFECTED COMPONENTS only: deleting a
     * bridge node must SPLIT its cluster, and deleting a cluster's
@@ -388,12 +376,12 @@ object PairStore {
       shortcut: Boolean = false): Unit = {
     val spark = deletedNodes.sparkSession
     // no automatic recover — same concurrent-writer hazard as append
-    val fs = fsOf(spark, dir)
-    val b = bucketCount(fs, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val man = currentManifest(fs, dir)
+    val b = man.modulus
     val v = man.version + 1
     val del = deletedNodes.select(col(nodeCol)).distinct().localCheckpoint(true)
-    val old = readBuckets(spark, dir, man, man.buckets.keySet.toSeq)
+    val old = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
       .select(col(nodeCol), col("cluster_id"))
     // labels of the deleted ids actually stored — batch-sized; replayed
     // or never-stored ids drop out here (corpus scanned via a broadcast
@@ -406,37 +394,39 @@ object PairStore {
     // file holding a pair that touches a deleted id (endpoints exploded
     // against the broadcast batch — an OR-of-equalities semi would plan
     // as a nested-loop join). The collect is file-path-sized.
-    val deadAbs = readFiles(spark, dir, man.pairFiles, "pairs")
+    val deadAbs = readPairs(spark, dir, man.pairFiles)
       .select(input_file_name().as("_file"),
         explode(array(col(srcCol), col(dstCol))).as(nodeCol))
       .join(broadcast(del), Seq(nodeCol), "left_semi")
       .select(col("_file")).distinct().collect().map(_.getString(0))
     val deadFiles = man.pairFiles
       .filter(f => deadAbs.exists(_.endsWith("/" + f))).toSet
-    var pairFiles = man.pairFiles
-    if (deadFiles.nonEmpty) {
-      // survivor rows of ONLY the dead files, rewritten as this
-      // version's pair generation (an empty survivor set still writes a
-      // schema-bearing file — harmless, vacuumed with its version)
-      readFiles(spark, dir, deadFiles.toSeq.sorted, "pairs")
-        .join(broadcast(del.select(col(nodeCol).as(srcCol))), Seq(srcCol), "left_anti")
-        .join(broadcast(del.select(col(nodeCol).as(dstCol))), Seq(dstCol), "left_anti")
-        .write.mode("overwrite").parquet(s"$dir/pairs_g$v")
-      pairFiles = man.pairFiles.filterNot(deadFiles) ++
-        listDataFiles(fs, dir, s"pairs_g$v")
-    }
+    // survivor rows of ONLY the dead files, rewritten as this attempt's
+    // pair generation in the stored column order (a USING join moves its
+    // key first, and a reader takes its schema from the first listed
+    // file); an empty survivor set still writes a schema-bearing file —
+    // harmless, vacuumed with its version
+    val pairFiles =
+      if (deadFiles.isEmpty) man.pairFiles
+      else {
+        val dead = readPairs(spark, dir, deadFiles.toSeq.sorted)
+        man.pairFiles.filterNot(deadFiles) ++ writePairs(fs, dir, dead
+          .join(broadcast(del.select(col(nodeCol).as(srcCol))), Seq(srcCol), "left_anti")
+          .join(broadcast(del.select(col(nodeCol).as(dstCol))), Seq(dstCol), "left_anti")
+          .select(dead.columns.map(col): _*), v)
+      }
     // affected-component closure: members of the clusters that lost a
     // node (bucket-addressed read + broadcast label semi), minus the
     // deleted ids, over the already-rewritten pair set
     val affBk = affLabels.select(pmod(hash(col("cluster_id")), lit(b)).as("bk"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val members = readBuckets(spark, dir, man, affBk.filter(man.buckets.contains))
+    val members = readLabels(spark, dir, man, affBk)
       .join(broadcast(affLabels), Seq("cluster_id"), "left_semi")
       .select(col(nodeCol), col("cluster_id"))
       .localCheckpoint(true)
     val survivors = members.select(col(nodeCol))
       .join(broadcast(del), Seq(nodeCol), "left_anti")
-    val affPairs = readFiles(spark, dir, pairFiles, "pairs")
+    val affPairs = readPairs(spark, dir, pairFiles)
       .join(members.select(col(nodeCol).as(srcCol)), Seq(srcCol), "left_semi")
     val cc = Clusters.connectedComponents(
         survivors, affPairs, nodeCol, srcCol, dstCol, shortcut = shortcut)
@@ -454,51 +444,30 @@ object PairStore {
     }
     var newBuckets = man.buckets
     if (touched.nonEmpty) {
-      val candidates = readBuckets(spark, dir, man,
-          touched.filter(man.buckets.contains))
+      val candidates = readLabels(spark, dir, man, touched)
         .join(members.select(col(nodeCol)), Seq(nodeCol), "left_anti")
         .select(col(nodeCol), col("cluster_id"))
         .unionByName(cc)
-      val tok = genToken(v)
-      val written = writeBucketGen(spark, dir, candidates, b, gen = tok)
-      newBuckets = (man.buckets -- touched) ++ written.map(_ -> tok)
+      newBuckets = (man.buckets -- touched) ++ writeLabels(fs, dir, candidates, b, v)
     }
-    commitManifest(fs, dir, Manifest(v, newBuckets, pairFiles))
+    commit(fs, dir, Manifest(v, b, newBuckets, pairFiles))
     Seq(cc, members, affLabels, delRows, del)
       .foreach(_.unpersist(blocking = false))
   }
 
-  /** Delete any data newer than the last committed manifest: staged
-    * label writes, uncommitted `g<v>b*` generations, an uncommitted
-    * `pairs_g<v>` compaction, manifest tmp files. (Orphan pair files
-    * from a crashed append are unreferenced and harmless; [[vacuum]]
-    * reaps them.) Safe on a healthy store — pure listing checks. Run it
-    * ONLY when no writer is live: it reaps every generation newer than
-    * the last committed manifest, which includes a concurrent writer's
-    * in-flight staging (the reason the writers do NOT call it
-    * implicitly — a restarted ingest loop needs no recover to converge;
-    * replays are idempotent and crashed leftovers are invisible
+  /** Delete the data staged for versions above the last committed
+    * manifest — crashed writers' pair and label generations — and
+    * manifest tmp files ([[StoreCommit.recover]]). Generations at or
+    * below the head are unreferenced-or-live garbage for [[vacuum]].
+    * Safe on a healthy store — pure listing checks. Run it ONLY when no
+    * writer is live: it reaps every generation newer than the last
+    * committed manifest, which includes a concurrent writer's in-flight
+    * staging (the reason the writers do NOT call it implicitly — a
+    * restarted ingest loop needs no recover to converge; replays are
+    * idempotent and crashed leftovers are invisible
     * manifest-unreferenced garbage until this explicit pass). */
-  def recover(spark: SparkSession, dir: String): Unit = {
-    val fs = fsOf(spark, dir)
-    val vMax = committedVersions(fs, dir).maxOption.getOrElse(return)
-    val hist = new Path(s"$dir/history")
-    fs.listStatus(hist).toSeq
-      .filterNot(s => s.getPath.getName.matches("v\\d+"))
-      .foreach(s => deleteOrThrow(fs, s.getPath))
-    val labelsRoot = new Path(s"$dir/labels")
-    if (fs.exists(labelsRoot))
-      fs.listStatus(labelsRoot).toSeq.foreach { s =>
-        val n = s.getPath.getName
-        val stale = n.startsWith("_staged") ||
-          parseGenBucket(n).exists(gb => versionOfGen(gb._1) > vMax)
-        if (stale) deleteOrThrow(fs, s.getPath)
-      }
-    fs.listStatus(new Path(dir)).toSeq
-      .filter(s => parsePairsGen(s.getPath.getName)
-        .exists(versionOfGen(_) > vMax))
-      .foreach(s => deleteOrThrow(fs, s.getPath))
-  }
+  def recover(spark: SparkSession, dir: String): Unit =
+    StoreCommit.recover(StoreCommit.fsOf(spark, dir), dir, Store)
 
   /** Fold the live pair files into ~`targetFileBytes` outputs as a new
     * committed version (labels unchanged). Old files stay for pinned
@@ -508,52 +477,21 @@ object PairStore {
       dir: String,
       targetFileBytes: Long = 128L << 20): Unit = {
     // no automatic recover — same concurrent-writer hazard as append
-    val fs = fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(spark, dir)
     val man = currentManifest(fs, dir)
     val v = man.version + 1
-    val files = compactInto(spark, dir, man.pairFiles, genToken(v), targetFileBytes)
-    commitManifest(fs, dir, Manifest(v, man.buckets, files))
+    commit(fs, dir, man.copy(version = v,
+      pairFiles = compactInto(spark, fs, dir, man.pairFiles, v, targetFileBytes)))
   }
 
   /** Retire manifests older than the newest `keepLast` and delete the
-    * label generations and pair files no retained manifest references —
-    * including orphans from crashed appends. Snapshots pinned inside
-    * the retention window stay valid; older pins fail loudly on read. */
+    * label leaves and pair files no retained manifest references —
+    * including orphans from crashed appends ([[StoreCommit.vacuum]]).
+    * Snapshots pinned inside the retention window stay valid; older pins
+    * fail loudly on read. */
   def vacuum(spark: SparkSession, dir: String, keepLast: Int = 2): Unit = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val fs = fsOf(spark, dir)
-    val versions = committedVersions(fs, dir).sorted
-    val (drop, keep) = versions.splitAt(math.max(0, versions.size - keepLast))
-    val kept = keep.map(readManifest(fs, dir, _))
-    // note the .toSeq: mapping the bucket Map directly would collapse
-    // every (gen -> bucket) pair sharing a generation into one entry
-    val liveGens: Set[(Long, Int)] = kept
-      .flatMap(m => m.buckets.toSeq.map { case (bk, g) => (g, bk) }).toSet
-    val livePairs: Set[String] = kept.flatMap(_.pairFiles).toSet
-    // abort loudly (deleting nothing) if a publish landed since the reap
-    // set was computed — see StoreCommit.assertVersionsUnchanged
-    StoreCommit.assertVersionsUnchanged(fs, dir, versions, "PairStore")
-    drop.foreach(dv => deleteOrThrow(fs, new Path(s"$dir/history/v$dv")))
-    StoreCommit.reapManifestTmp(fs, dir, "PairStore")
-    val labelsRoot = new Path(s"$dir/labels")
-    if (fs.exists(labelsRoot))
-      fs.listStatus(labelsRoot).toSeq.foreach { s =>
-        parseGenBucket(s.getPath.getName).foreach { gb =>
-          if (!liveGens.contains(gb)) deleteOrThrow(fs, s.getPath)
-        }
-      }
-    (listDataFiles(fs, dir, "pairs") ++
-      fs.listStatus(new Path(dir)).toSeq
-        .filter(_.getPath.getName.startsWith("pairs_g"))
-        .flatMap(s => listDataFiles(fs, dir, s.getPath.getName)))
-      .filterNot(livePairs)
-      .foreach(f => deleteOrThrow(fs, new Path(s"$dir/$f")))
-    // drop compaction-generation dir shells with no live file left —
-    // including a losing concurrent writer's whole orphan generation
-    fs.listStatus(new Path(dir)).toSeq
-      .filter(s => parsePairsGen(s.getPath.getName).isDefined &&
-        listDataFiles(fs, dir, s.getPath.getName).forall(!livePairs(_)))
-      .foreach(s => deleteOrThrow(fs, s.getPath))
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.vacuum(fs, dir, Store, keepLast)(readManifest(fs, dir, _).paths)
   }
 
   // ------------------------------------------------------------------ //
@@ -562,20 +500,19 @@ object PairStore {
 
   /** Pin the CURRENT committed version as an immutable view — valid
     * across racing appends/compactions until [[vacuum]] retires it. */
-  def snapshot(spark: SparkSession, dir: String): Snapshot =
-    snapshotAt(spark, dir, currentManifest(fsOf(spark, dir), dir).version)
+  def snapshot(spark: SparkSession, dir: String): Snapshot = {
+    val fs = StoreCommit.fsOf(spark, dir)
+    snapshotAt(spark, dir, StoreCommit.currentVersion(fs, dir, Store))
+  }
 
   /** Pin a specific committed version. Throws if that version was never
     * committed or has been vacuumed past retention. */
   def snapshotAt(spark: SparkSession, dir: String, version: Long): Snapshot = {
-    val fs = fsOf(spark, dir)
-    require(fs.exists(new Path(s"$dir/history/v$version")),
-      s"PairStore $dir has no committed version $version (never written, " +
-        "or vacuumed past retention)")
+    val fs = StoreCommit.fsOf(spark, dir)
+    StoreCommit.requireCommitted(fs, dir, version, Store)
     val man = readManifest(fs, dir, version)
-    Snapshot(version,
-      readFiles(spark, dir, man.pairFiles, "pairs"),
-      readBuckets(spark, dir, man, man.buckets.keySet.toSeq))
+    Snapshot(version, readPairs(spark, dir, man.pairFiles),
+      readLabels(spark, dir, man, man.buckets.keySet.toSeq))
   }
 
   /** The stored verified pair table (current version's view). */
@@ -589,320 +526,88 @@ object PairStore {
 
   // ------------------------------------------------------------------ //
 
-  /** Stage `labels` partitioned by cluster residue, then rename each
-    * bucket into its immutable `g<gen>b<bucket>` address; returns the
-    * bucket ids that produced output. */
-  private def writeBucketGen(
-      spark: SparkSession, dir: String, labels: DataFrame,
-      buckets: Int, gen: Long): Seq[Int] = {
-    val nodeCol = labels.columns.head
-    val fs = fsOf(spark, dir)
-    val stagedRoot = new Path(s"$dir/labels/_staged_v$gen")
+  /** The write verbs' commit: the crash seam, then
+    * [[StoreCommit.commitManifest]] over every label leaf and pair file
+    * the manifest references. */
+  private def commit(fs: FileSystem, dir: String, m: Manifest): Unit = {
+    onBeforeCommit()
+    StoreCommit.commitManifest(fs, dir, m.version, m.lines, Store, m.paths)
+  }
+
+  /** Write `rows` as a fresh salted pair generation for version `v`;
+    * returns its files. An empty frame still yields one schema-bearing
+    * file, so every manifest lists a readable schema and no reader ever
+    * falls back to a directory listing. */
+  private def writePairs(
+      fs: FileSystem, dir: String, rows: DataFrame, v: Long): Seq[String] = {
+    val gen = StoreCommit.saltedGenDir("pairs", v)
+    rows.write.parquet(s"$dir/$gen")
+    if (StoreCommit.listDataFiles(fs, dir, gen).isEmpty)
+      rows.limit(0).repartition(1).write.mode("overwrite").parquet(s"$dir/$gen")
+    StoreCommit.listDataFiles(fs, dir, gen)
+  }
+
+  /** Write `labels` as a fresh salted label generation for version `v`,
+    * one node-sorted leaf per cluster-residue bucket; returns the
+    * buckets that produced output, mapped to the generation. */
+  private def writeLabels(
+      fs: FileSystem, dir: String, labels: DataFrame, modulus: Int,
+      v: Long): Map[Int, String] = {
+    val gen = StoreCommit.saltedGenDir("labels", v)
     labels
-      .withColumn(BucketCol, pmod(hash(col("cluster_id")), lit(buckets)))
+      .withColumn(BucketCol, pmod(hash(col("cluster_id")), lit(modulus)))
       .repartition(col(BucketCol))
-      .sortWithinPartitions(col(BucketCol), col(nodeCol))
-      .write.partitionBy(BucketCol).mode("overwrite")
-      .parquet(stagedRoot.toString)
-    val out = fs.listStatus(stagedRoot).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$BucketCol="))
-      .map(s => s.getPath.getName.stripPrefix(s"$BucketCol=").toInt)
-      .sorted
-    out.foreach { bk =>
-      // Salted tokens make each attempt's destination unique, so an
-      // existing dst can only mean a concurrent writer's data —
-      // renameOrThrow refuses it loudly rather than clobbering. (The
-      // legacy replay-cleanup delete lived here when generations were
-      // version-keyed; recover() still reaps crashed uncommitted gens.)
-      renameOrThrow(fs, new Path(s"$stagedRoot/$BucketCol=$bk"),
-        new Path(s"$dir/labels/${genDirName(gen, bk)}"))
-    }
-    deleteOrThrow(fs, stagedRoot)
-    out
+      .sortWithinPartitions(col(BucketCol), col(labels.columns.head))
+      .write.partitionBy(BucketCol).parquet(s"$dir/$gen")
+    StoreCommit.partitionValues(fs, dir, gen, BucketCol).map(_ -> gen).toMap
   }
 
-  /** Fold `files` into a `pairs_g<v>` generation; returns its file
-    * list. */
+  /** Fold `files` into one fresh pair generation for version `v`;
+    * returns its file list. */
   private def compactInto(
-      spark: SparkSession, dir: String, files: Seq[String], v: Long,
-      targetFileBytes: Long = 128L << 20): Seq[String] = {
-    val fs = fsOf(spark, dir)
-    val bytes = files.map(f =>
-      fs.getFileStatus(new Path(s"$dir/$f")).getLen).sum
-    val parts = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    readFiles(spark, dir, files, "pairs").repartition(parts)
-      .write.mode("overwrite").parquet(s"$dir/${pairsGenDirName(v)}")
-    listDataFiles(fs, dir, pairsGenDirName(v))
-  }
+      spark: SparkSession, fs: FileSystem, dir: String, files: Seq[String],
+      v: Long, targetFileBytes: Long = 128L << 20): Seq[String] =
+    writePairs(fs, dir, readPairs(spark, dir, files)
+      .repartition(StoreCommit.compactedParts(fs, dir, files, targetFileBytes)), v)
 
-  /** Read a manifest's bucket selection by direct generation-dir
-    * addressing (no listing, no partition discovery). */
-  private def readBuckets(
+  /** Read a manifest's bucket selection by direct leaf addressing (no
+    * listing, no partition discovery); buckets the manifest does not
+    * hold are skipped. A selection with no live leaf reads as a
+    * zero-row frame whose schema comes from any label leaf on disk — or
+    * fails loudly on a store that never held one. */
+  private def readLabels(
       spark: SparkSession, dir: String, man: Manifest,
       buckets: Seq[Int]): DataFrame = {
-    val paths = buckets.sorted.flatMap(bk =>
-      man.buckets.get(bk).map(g => s"$dir/labels/${genDirName(g, bk)}"))
-    if (paths.isEmpty) emptyLike(spark, dir, man)
-    else spark.read.parquet(paths: _*)
-  }
-
-  /** Zero-row labels frame with the store's schema (empty-corpus edge:
-    * schema comes from any committed generation, or fails loudly on a
-    * truly bucketless store with no history of one). */
-  private def emptyLike(
-      spark: SparkSession, dir: String, man: Manifest): DataFrame = {
-    val fs = fsOf(spark, dir)
-    val labelsRoot = new Path(s"$dir/labels")
-    val any = (if (fs.exists(labelsRoot)) fs.listStatus(labelsRoot).toSeq
-      else Seq.empty)
-      .find(s => parseGenBucket(s.getPath.getName).isDefined)
-      .getOrElse(throw new IllegalStateException(
-        s"PairStore $dir has no label generation to derive a schema from"))
-    spark.read.parquet(any.getPath.toString).where(lit(false))
-  }
-
-  /** Read an explicit pair-file list; an empty list falls back to the
-    * (possibly empty) `pairs/` dir so the v0-no-pairs edge still has a
-    * schema. */
-  private def readFiles(
-      spark: SparkSession, dir: String, files: Seq[String],
-      fallbackDir: String): DataFrame =
-    if (files.isEmpty) spark.read.parquet(s"$dir/$fallbackDir")
-    else spark.read.parquet(files.map(f => s"$dir/$f"): _*)
-
-  /** Publish manifest `m` as the store's version `m.version` — the CAS
-    * commit point that makes concurrent writers safe. Three guards, in
-    * order:
-    *
-    *  1. '''Version CAS''': if any committed version ≥ `m.version`
-    *     already exists, another writer advanced the store since this
-    *     commit's manifest was read — fail loudly; the caller's batch
-    *     must be replayed against the new head (append/delete are
-    *     idempotent under whole-batch replay, so the replay converges).
-    *  2. '''Referenced-data verify''': every label-generation dir the
-    *     manifest references must exist on disk — a concurrent
-    *     [[recover]]/[[vacuum]] may have reaped this writer's
-    *     not-yet-committed generations; publishing a manifest that
-    *     points at deleted dirs would corrupt the store, so that race
-    *     also dies here instead. ≤ modulus exists-checks — cheap.
-    *  3. '''Exclusive publish''': full write to a tmp name, then an
-    *     atomic create-exclusive move onto `history/v<N>`
-    *     ([[StoreCommit.exclusiveMoveFile]] — a hard link on local
-    *     filesystems, where POSIX rename(2) would silently replace and
-    *     leave a stalled loser able to clobber an already-verified
-    *     winner; refuse-existing rename on HDFS, whose file rename
-    *     fails atomically), then a read-back that verifies the
-    *     committed content is OURS.
-    *
-    * Exactly one of N racing writers passes all three; the rest throw
-    * `ConcurrentModificationException` with the store unharmed. The one
-    * race these guards do NOT close is a concurrent [[recover]]/
-    * [[vacuum]]: guard 2's exists-checks can pass just before a reap
-    * deletes the referenced dirs, publishing a manifest that points at
-    * deleted data — which is why recover/vacuum must only run with no
-    * writer live (the class-level rule). */
-  private def commitManifest(fs: FileSystem, dir: String, m: Manifest): Unit = {
-    // test seam: fires with this writer's generations fully staged and
-    // the manifest not yet published — the crash window every store
-    // carries ([[SignatureStore.onBeforeCommit]] / [[IvfIndex
-    // .onBeforeCommit]] convention); PairStoreSpec kills here and
-    // asserts replay convergence + vacuum reap. No-op in production.
-    onBeforeCommit()
-    val latest = committedVersions(fs, dir).maxOption
-    if (latest.exists(_ >= m.version))
-      throw new java.util.ConcurrentModificationException(
-        s"PairStore commit v${m.version} aborted: version ${latest.get} was " +
-          "committed by a concurrent writer since this batch began — " +
-          "replay the batch against the new head (append is idempotent)")
-    m.buckets.toSeq.sortBy(_._1).foreach { case (bk, g) =>
-      val p = new Path(s"$dir/labels/${genDirName(g, bk)}")
-      if (!fs.exists(p))
-        // ConcurrentModificationException, the same type as every other
-        // replay-the-batch abort in the store tier (and StoreCommit's
-        // identical guard 2) — retry-on-CME callers must see this race
-        // as a replay signal, not an unclassified failure
-        throw new java.util.ConcurrentModificationException(
-          s"PairStore commit v${m.version} aborted: referenced $p is " +
-            "missing (a concurrent recover/vacuum reaped this writer's " +
-            "uncommitted generation?) — replay the batch")
+    val paths = buckets.sorted.flatMap(man.leaf).map(l => s"$dir/$l")
+    if (paths.nonEmpty) spark.read.parquet(paths: _*)
+    else {
+      val fs = StoreCommit.fsOf(spark, dir)
+      val any = Option(fs.globStatus(new Path(s"$dir/labels_g*/$BucketCol=*")))
+        .toSeq.flatten.headOption.getOrElse(throw new IllegalStateException(
+          s"$Store $dir has no label generation to derive a schema from"))
+      spark.read.parquet(any.getPath.toString).where(lit(false))
     }
-    // leading per-commit nonce — the same first-line identity every
-    // StoreCommit manifest carries, so the serve memo's positional
-    // staleness check ([[StoreCommit.readManifestLinesCached]]) is
-    // sound here too (a cross-JVM rebuild recycling (dir, v) can never
-    // alias: it mints a fresh nonce)
-    val nonce = java.util.concurrent.ThreadLocalRandom.current()
-      .nextLong(1L, Long.MaxValue)
-    val lines =
-      Seq(s"nonce $nonce", s"version ${m.version}") ++
-        m.buckets.toSeq.sortBy(_._1).map { case (bk, g) => s"bucket $bk $g" } ++
-        m.pairFiles.sorted.map(f => s"pairfile $f")
-    val tmp = new Path(s"$dir/history/.tmp_v${m.version}_$nonce")
-    fs.mkdirs(new Path(s"$dir/history"))
-    val out = fs.create(tmp, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    try StoreCommit.exclusiveMoveFile(
-      fs, tmp, new Path(s"$dir/history/v${m.version}"), "PairStore")
-    catch { case e: Throwable => fs.delete(tmp, false); throw e }
-    val back = readManifestPhysical(fs, dir, m.version)
-    if (back.buckets != m.buckets || back.pairFiles.sorted != m.pairFiles.sorted)
-      throw new java.util.ConcurrentModificationException(
-        s"PairStore commit v${m.version}: published manifest content is not " +
-          "ours — lost a same-version publish race; replay the batch")
-    // every commit drops the dir's memoized manifests (the build()-
-    // restarts-history-at-v0 staleness edge — same rule as StoreCommit)
-    StoreCommit.invalidateManifestMemo(fs, dir)
   }
 
-  /** Serve-path manifest read — memoized per (dir, version) via
-    * [[StoreCommit.readManifestLinesCached]] (manifests are immutable
-    * once committed; [[commitManifest]] invalidates the dir's entries on
-    * every commit, so a rebuilt store can't serve stale lines under a
-    * recycled version number). */
-  private def readManifest(fs: FileSystem, dir: String, v: Long): Manifest =
-    parseManifest(dir, v, StoreCommit.readManifestLinesCached(fs, dir, v))
+  /** Read an explicit pair-file list (never empty: see [[writePairs]]). */
+  private def readPairs(
+      spark: SparkSession, dir: String, files: Seq[String]): DataFrame =
+    spark.read.parquet(files.map(f => s"$dir/$f"): _*)
 
-  /** PHYSICAL manifest read — the commit read-back verify's form (it
-    * must see actual on-disk bytes, never a memo). */
-  private def readManifestPhysical(
-      fs: FileSystem, dir: String, v: Long): Manifest =
-    parseManifest(dir, v, StoreCommit.readManifestLines(fs, dir, v))
-
-  private def parseManifest(
-      dir: String, v: Long, lines: Seq[String]): Manifest = {
-    val buckets = Map.newBuilder[Int, Long]
+  /** Manifest `v` through the serve-path memo
+    * ([[StoreCommit.readManifestLinesCached]]). */
+  private def readManifest(fs: FileSystem, dir: String, v: Long): Manifest = {
+    var modulus = 0
+    val buckets = Map.newBuilder[Int, String]
     val files = Seq.newBuilder[String]
-    lines.foreach { l =>
-      l.split(" ") match {
-        case Array("version", _)     => ()
-        case Array("nonce", _)       => ()
-        case Array("bucket", bk, g)  => buckets += (bk.toInt -> g.toLong)
-        case Array("pairfile", f)    => files += f
-        case other => throw new IllegalStateException(
-          s"corrupt PairStore manifest line '${other.mkString(" ")}' in " +
-            s"$dir/history/v$v")
-      }
+    StoreCommit.readEntries(fs, dir, v, Store) {
+      case Array("modulus", m)    => modulus = m.toInt
+      case Array("bucket", bk, g) => buckets += (bk.toInt -> g)
+      case Array("pairfile", f)   => files += f
     }
-    Manifest(v, buckets.result(), files.result())
+    Manifest(v, modulus, buckets.result(), files.result())
   }
 
-  private def currentManifest(fs: FileSystem, dir: String): Manifest = {
-    val v = committedVersions(fs, dir).maxOption.getOrElse(
-      throw new IllegalStateException(
-        s"$dir is not a PairStore (no committed manifest) — run build() first"))
-    readManifest(fs, dir, v)
-  }
-
-  private def committedVersions(fs: FileSystem, dir: String): Seq[Long] = {
-    val hist = new Path(s"$dir/history")
-    if (!fs.exists(hist)) Seq.empty
-    else fs.listStatus(hist).toSeq
-      .flatMap(s => "^v(\\d+)$".r.findFirstMatchIn(s.getPath.getName)
-        .map(_.group(1).toLong))
-  }
-
-  /** Generation tokens. [[build]] writes the legacy unsalted `gen = 0`;
-    * every later commit derives its generations from a SALTED token
-    * `v·GenStride + salt` (salt ∈ [1, GenStride)), rendered as
-    * `g<v>.<salt>b<bucket>` — so two writers racing toward the same
-    * version stage and rename DISJOINT paths and can never overwrite or
-    * delete each other's data. Which of them commits is decided solely
-    * by [[commitManifest]]'s manifest CAS; the loser's dirs are
-    * unreferenced orphans that [[vacuum]] reaps. */
-  private val GenStride = 1L << 20
-
-  private def genToken(v: Long): Long = {
-    require(v >= 1, s"salted generations start at version 1, got $v")
-    v * GenStride +
-      java.util.concurrent.ThreadLocalRandom.current().nextLong(1L, GenStride)
-  }
-
-  /** The manifest version a generation token belongs to (legacy unsalted
-    * tokens ARE the version). */
-  private def versionOfGen(g: Long): Long =
-    if (g < GenStride) g else g / GenStride
-
-  private def genDirName(g: Long, bk: Int): String =
-    if (g < GenStride) s"g${g}b$bk"
-    else s"g${g / GenStride}.${g % GenStride}b$bk"
-
-  private def pairsGenDirName(g: Long): String =
-    if (g < GenStride) s"pairs_g$g"
-    else s"pairs_g${g / GenStride}.${g % GenStride}"
-
-  /** `g<gen>b<bucket>` / `g<v>.<salt>b<bucket>` dir-name parse (returns
-    * the token form stored in manifests). */
-  private def parseGenBucket(name: String): Option[(Long, Int)] =
-    "^g(\\d+)(?:\\.(\\d+))?b(\\d+)$".r.findFirstMatchIn(name).map { m =>
-      val base = m.group(1).toLong
-      val g = Option(m.group(2)) match {
-        case Some(salt) => base * GenStride + salt.toLong
-        case None       => base
-      }
-      (g, m.group(3).toInt)
-    }
-
-  /** `pairs_g<v>` / `pairs_g<v>.<salt>` dir-name parse → token. */
-  private def parsePairsGen(name: String): Option[Long] =
-    "^pairs_g(\\d+)(?:\\.(\\d+))?$".r.findFirstMatchIn(name).map { m =>
-      val base = m.group(1).toLong
-      Option(m.group(2)) match {
-        case Some(salt) => base * GenStride + salt.toLong
-        case None       => base
-      }
-    }
-
-  /** Relative paths of the parquet data files directly under
-    * `dir/<sub>`. */
-  private def listDataFiles(
-      fs: FileSystem, dir: String, sub: String): Seq[String] = {
-    val p = new Path(s"$dir/$sub")
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(s => s"$sub/${s.getPath.getName}")
-      .sorted
-  }
-
-  private def bucketCount(fs: FileSystem, dir: String): Int = {
-    val p = new Path(s"$dir/_BUCKETS")
-    require(fs.exists(p),
-      s"$dir is not a PairStore (missing _BUCKETS) — run build() first")
-    val in = fs.open(p)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      .trim.toInt
-    finally in.close()
-  }
-
-  private def writeSmallFile(fs: FileSystem, p: Path, content: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Filesystems may report failure by RETURNING false (local FS renames
-    * across devices, permission walls) — a silent false here corrupts
-    * the store, so every structural move is checked and loud. An
-    * EXISTING destination is refused outright: every move through here
-    * targets a salted generation DIRECTORY no other attempt can name, so
-    * a pre-existing destination can only be same-salt lightning — refused
-    * rather than clobbered. (The exists-check→rename pair is not atomic
-    * on POSIX; for the MANIFEST — the one path concurrent writers race
-    * by design — the commit goes through [[StoreCommit
-    * .exclusiveMoveFile]]'s atomic create-exclusive publish instead.) */
-  private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit = {
-    if (fs.exists(dst))
-      throw new java.util.ConcurrentModificationException(
-        s"PairStore: rename $src -> $dst refused — destination already " +
-          "exists (concurrent writer?); never overwriting committed state")
-    if (!fs.rename(src, dst))
-      throw new IllegalStateException(s"PairStore: rename $src -> $dst failed")
-  }
-
-  private def deleteOrThrow(fs: FileSystem, p: Path): Unit =
-    if (!fs.delete(p, true) && fs.exists(p))
-      throw new IllegalStateException(s"PairStore: delete $p failed")
+  private def currentManifest(fs: FileSystem, dir: String): Manifest =
+    readManifest(fs, dir, StoreCommit.currentVersion(fs, dir, Store))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,9 +24,10 @@ import org.apache.spark.sql.functions._
   * is not already ingested, and it has no ≥threshold near-dup in the
   * store or earlier in the batch.
   *
-  * '''Layout & write contract''' ([[StoreCommit]] — the [[PairStore]]
-  * protocol, applied verbatim): signature rows live in immutable salted
-  * `data_g<v>.<salt>/` generation dirs; `history/v<N>` manifests list the
+  * '''Layout & write contract''' ([[StoreCommit]]'s one layout, shared
+  * with [[PairStore]] and [[IvfIndex]]): signature rows live in
+  * immutable salted `data_g<v>.<salt>/` generation dirs;
+  * `history/v<N>` manifests list the
   * LIVE files of each committed version; readers resolve every path
   * through the current manifest, so uncommitted and superseded files are
   * invisible. [[append]] writes its generation completely, then
@@ -75,11 +76,7 @@ object SignatureStore {
   def build(docs: DataFrame, dir: String, w: Int = 3): Unit = {
     val spark = docs.sparkSession
     val fs = StoreCommit.fsOf(spark, dir)
-    if (fs.exists(new Path(dir)))
-      fs.listStatus(new Path(dir)).toSeq
-        .filter(s => s.getPath.getName.startsWith("data_g") ||
-          s.getPath.getName == "history")
-        .foreach(s => StoreCommit.deleteOrThrow(fs, s.getPath, Store))
+    StoreCommit.reset(fs, dir, Store)
     val gen = StoreCommit.saltedGenDir("data", 0L)
     val sigs = signatures(docs, w)
     sigs.write.mode("overwrite").parquet(s"$dir/$gen")
@@ -93,9 +90,7 @@ object SignatureStore {
       spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sigs.schema)
         .repartition(1).write.mode("overwrite").parquet(s"$dir/$gen")
-    val files = StoreCommit.listDataFiles(fs, dir, gen)
-    StoreCommit.commitManifest(fs, dir, 0L, manifestLines(0L, files), Store,
-      referenced = files.map(f => new Path(s"$dir/$f")))
+    commit(fs, dir, 0L, StoreCommit.listDataFiles(fs, dir, gen))
   }
 
   /** Append a batch's signatures (call after [[screenBatch]] accepts):
@@ -112,9 +107,7 @@ object SignatureStore {
     val fresh = StoreCommit.listDataFiles(fs, dir, gen)
     if (fresh.isEmpty) return // empty batch: nothing to commit
     onBeforeCommit()
-    StoreCommit.commitManifest(fs, dir, v + 1,
-      manifestLines(v + 1, old ++ fresh), Store,
-      referenced = (old ++ fresh).map(f => new Path(s"$dir/$f")))
+    commit(fs, dir, v + 1, old ++ fresh)
   }
 
   /** Delete signatures by doc id — the retention pass: once a document
@@ -148,11 +141,8 @@ object SignatureStore {
         .join(broadcast(del), Seq("doc_id"), "left_anti")
         .write.mode("overwrite").parquet(s"$dir/$gen")
       onBeforeCommit()
-      val survivors =
-        live.filterNot(dead) ++ StoreCommit.listDataFiles(fs, dir, gen)
-      StoreCommit.commitManifest(fs, dir, v + 1,
-        manifestLines(v + 1, survivors), Store,
-        referenced = survivors.map(f => new Path(s"$dir/$f")))
+      commit(fs, dir, v + 1,
+        live.filterNot(dead) ++ StoreCommit.listDataFiles(fs, dir, gen))
     } finally del.unpersist(blocking = false)
   }
 
@@ -171,45 +161,23 @@ object SignatureStore {
     val fs = StoreCommit.fsOf(spark, dir)
     val v = StoreCommit.currentVersion(fs, dir, Store)
     val live = liveFiles(fs, dir, v)
-    val bytes = live.map(f =>
-      fs.getFileStatus(new Path(s"$dir/$f")).getLen).sum
-    val parts = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     val gen = StoreCommit.saltedGenDir("data", v + 1)
-    readFiles(spark, dir, live).repartition(parts)
+    readFiles(spark, dir, live)
+      .repartition(StoreCommit.compactedParts(fs, dir, live, targetFileBytes))
       .write.mode("overwrite").parquet(s"$dir/$gen")
     onBeforeCommit()
-    val folded = StoreCommit.listDataFiles(fs, dir, gen)
-    StoreCommit.commitManifest(fs, dir, v + 1,
-      manifestLines(v + 1, folded), Store,
-      referenced = folded.map(f => new Path(s"$dir/$f")))
+    commit(fs, dir, v + 1, StoreCommit.listDataFiles(fs, dir, gen))
   }
 
   /** Retire manifests older than the newest `keepLast` and delete the
     * data files no retained manifest references — superseded delete
-    * targets, crashed appends' orphans, and losing racers' generations.
-    * Run it only when no writer is live (the PairStore rule: a reap can
-    * race a not-yet-committed generation into a loud commit abort). */
+    * targets, crashed appends' orphans, and losing racers' generations
+    * ([[StoreCommit.vacuum]]). Run it only when no writer is live: a
+    * reap can race a not-yet-committed generation into a loud commit
+    * abort. */
   def vacuum(spark: SparkSession, dir: String, keepLast: Int = 2): Unit = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val fs = StoreCommit.fsOf(spark, dir)
-    val versions = StoreCommit.committedVersions(fs, dir).sorted
-    val (drop, keep) = versions.splitAt(math.max(0, versions.size - keepLast))
-    val liveSet: Set[String] = keep.flatMap(liveFiles(fs, dir, _)).toSet
-    // abort loudly (deleting nothing) if a publish landed since the reap
-    // set was computed — see StoreCommit.assertVersionsUnchanged
-    StoreCommit.assertVersionsUnchanged(fs, dir, versions, Store)
-    drop.foreach(dv =>
-      StoreCommit.deleteOrThrow(fs, new Path(s"$dir/history/v$dv"), Store))
-    StoreCommit.reapManifestTmp(fs, dir, Store)
-    fs.listStatus(new Path(dir)).toSeq
-      .filter(_.getPath.getName.startsWith("data_g"))
-      .foreach { s =>
-        val sub = s.getPath.getName
-        StoreCommit.listDataFiles(fs, dir, sub).filterNot(liveSet)
-          .foreach(f => StoreCommit.deleteOrThrow(fs, new Path(s"$dir/$f"), Store))
-        if (StoreCommit.listDataFiles(fs, dir, sub).isEmpty)
-          StoreCommit.deleteOrThrow(fs, s.getPath, Store)
-      }
+    StoreCommit.vacuum(fs, dir, Store, keepLast)(liveFiles(fs, dir, _))
   }
 
   /** The stored signature table at the CURRENT committed version — a
@@ -228,9 +196,7 @@ object SignatureStore {
     * retention. */
   def storedAt(spark: SparkSession, dir: String, version: Long): DataFrame = {
     val fs = StoreCommit.fsOf(spark, dir)
-    require(fs.exists(new Path(s"$dir/history/v$version")),
-      s"$Store $dir has no committed version $version (never written, or " +
-        "vacuumed past retention)")
+    StoreCommit.requireCommitted(fs, dir, version, Store)
     readFiles(spark, dir, liveFiles(fs, dir, version))
   }
 
@@ -277,22 +243,19 @@ object SignatureStore {
 
   // ------------------------------------------------------------------ //
 
-  private def manifestLines(v: Long, files: Seq[String]): Seq[String] =
-    s"version $v" +: files.sorted.map(f => s"file $f")
+  /** CAS-commit `files` (relative to `dir`) as version `v`. */
+  private def commit(fs: FileSystem, dir: String, v: Long, files: Seq[String]): Unit =
+    StoreCommit.commitManifest(fs, dir, v, files.sorted.map(f => s"file $f"),
+      Store, files)
 
-  private def liveFiles(fs: FileSystem, dir: String, v: Long): Seq[String] =
+  private def liveFiles(fs: FileSystem, dir: String, v: Long): Seq[String] = {
     // memoized: committed manifests are immutable; any commit at `dir`
     // invalidates its entries (StoreCommit.commitManifest), so the serve
     // path pays the manifest open once per (dir, version) per JVM
-    StoreCommit.readManifestLinesCached(fs, dir, v).flatMap { l =>
-      l.split(" ", 2) match {
-        case Array("file", f)    => Some(f)
-        case Array("version", _) => None
-        case Array("nonce", _)   => None
-        case other => throw new IllegalStateException(
-          s"corrupt $Store manifest line '${other.mkString(" ")}' in $dir/history/v$v")
-      }
-    }
+    val files = Seq.newBuilder[String]
+    StoreCommit.readEntries(fs, dir, v, Store) { case Array("file", f) => files += f }
+    files.result()
+  }
 
   /** Schema per store, memoized by the FIRST live file's full path:
     * part files are immutable once committed (salted generation dirs),

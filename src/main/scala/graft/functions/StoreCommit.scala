@@ -1,23 +1,28 @@
 package graft.functions
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** The store tier's shared manifest-commit protocol — the mechanics
-  * [[PairStore]] proved out (salted immutable data generations, one small
-  * versioned manifest file as the single commit point, version CAS,
-  * exclusive publish, read-back ownership verify), factored out so
-  * [[SignatureStore]] and [[IvfIndex]] commit under the SAME contract
-  * instead of re-deriving it. Layout convention under a store `dir`:
+/** The store tier's one generational commit core: the versioned stores
+  * ([[PairStore]], [[SignatureStore]], [[IvfIndex]]) stage, publish and
+  * vacuum through it, and [[ModelStore]]'s `_MODEL` pointer goes through
+  * the same [[publish]]. Each store supplies only its manifest lines and
+  * its data layout. The one layout under a store `dir`:
   *
-  *   - data lands in salted generation dirs no two attempts can collide
-  *     on (`<prefix>_g<salt>`), written completely BEFORE any commit;
-  *   - `history/v<N>` is the version-N manifest: newline-separated
-  *     `key value...` lines, including a per-commit `nonce` line that
-  *     makes the published content ownable;
-  *   - publishing the manifest IS the commit. A crash before it leaves
-  *     unreferenced garbage (reaped by the store's vacuum); a loser of a
-  *     racing commit throws `ConcurrentModificationException` with the
-  *     store unharmed.
+  *   - data lands in salted generation dirs `<prefix>_g<v>.<salt>/`
+  *     ([[saltedGenDir]]): named for the version they were staged for,
+  *     unique per attempt, written completely BEFORE any commit. A
+  *     generation holds parquet part files, or partition leaves
+  *     (`<col>=<value>/`) that readers address directly;
+  *   - `history/v<N>` is the version-N manifest: a leading per-commit
+  *     `nonce` line that makes the published content ownable, a
+  *     `version` line, then the store's `key value...` lines naming every
+  *     generation, leaf or file version N reads;
+  *   - publishing the manifest IS the commit ([[commitManifest]]). A
+  *     crash before it leaves unreferenced garbage: [[vacuum]] reaps
+  *     every generation, leaf or file no retained manifest references,
+  *     and [[recover]] reaps the generations staged above the committed
+  *     head. A loser of a racing commit throws
+  *     `ConcurrentModificationException` with the store unharmed.
   *
   * '''Exclusive publish.''' HDFS `rename` onto an existing file fails
   * atomically, but POSIX rename(2) REPLACES — so on local filesystems the
@@ -48,17 +53,41 @@ private[graft] object StoreCommit {
       throw new IllegalStateException(
         s"$dir is not a $store (no committed manifest) — run build() first"))
 
-  /** Non-empty trimmed lines of manifest `v` (throws if never committed).
-    * Always a PHYSICAL read — [[commitManifest]]'s read-back ownership
-    * verify depends on seeing the actual on-disk bytes. Serve paths go
-    * through [[readManifestLinesCached]]. */
-  def readManifestLines(fs: FileSystem, dir: String, v: Long): Seq[String] = {
+  /** Non-empty trimmed lines of manifest `v` (throws if never committed)
+    * — always a PHYSICAL read, counted in [[manifestFileReads]]. Serve
+    * paths go through [[readManifestLinesCached]]. */
+  private def readManifestLines(fs: FileSystem, dir: String, v: Long): Seq[String] = {
     manifestFileReads.incrementAndGet()
-    val in = fs.open(new Path(s"$dir/history/v$v"))
+    readLines(fs, new Path(s"$dir/history/v$v"))
+  }
+
+  /** Non-empty trimmed lines of the small text file `p`. */
+  def readLines(fs: FileSystem, p: Path): Seq[String] = {
+    val in = fs.open(p)
     try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
       .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
     finally in.close()
   }
+
+  /** Feed each line of the served manifest `v` to `parse`, split on
+    * spaces, after dropping its `nonce` and `version` lines; a line
+    * `parse` does not define is a loud corruption error. */
+  def readEntries(fs: FileSystem, dir: String, v: Long, store: String)(
+      parse: PartialFunction[Array[String], Unit]): Unit =
+    readManifestLinesCached(fs, dir, v).map(_.split(" ")).foreach {
+      case Array("nonce" | "version", _) => ()
+      case f => parse.applyOrElse(f, (_: Array[String]) =>
+        throw new IllegalStateException(s"corrupt $store manifest line " +
+          s"'${f.mkString(" ")}' in $dir/history/v$v"))
+    }
+
+  /** Fail loudly unless version `v` of the store at `dir` is committed
+    * and not yet vacuumed — the pinned readers' gate. */
+  def requireCommitted(
+      fs: FileSystem, dir: String, v: Long, store: String): Unit =
+    require(fs.exists(new Path(s"$dir/history/v$v")),
+      s"$store $dir has no committed version $v (never written, or " +
+        "vacuumed past retention)")
 
   /** Physical manifest-file reads performed by this JVM — the test seam
     * pinning that pinned-version serve reads hit the memo (no second
@@ -208,72 +237,91 @@ private[graft] object StoreCommit {
   private def memoDir(fs: FileSystem, dir: String): String =
     fs.makeQualified(new Path(dir)).toString
 
-  private[functions] def invalidateManifestMemo(
+  private def invalidateManifestMemo(
       fs: FileSystem, dir: String): Unit = {
     val d = memoDir(fs, dir)
     manifestMemo.removeIf(_._1 == d)
   }
 
-  /** Publish `lines` (plus a generated `nonce` line) as version `v` of
-    * the store at `dir` — the CAS commit point. Guards, in order:
+  /** Publish `lines` (after a generated `nonce` and the `version` line)
+    * as version `v` of the store at `dir` — the CAS commit point.
+    * Guards, in order:
     *
     *  1. '''Version CAS''': any committed version ≥ `v` means another
     *     writer advanced the store since this commit's manifest was read
     *     — abort loudly; the caller's batch replays against the new head.
-    *  2. '''Referenced-data verify''': every path in `referenced` must
-    *     exist on disk — a concurrent vacuum may have reaped this
-    *     writer's staged-but-uncommitted generation (it is unreferenced
-    *     until the commit lands, which is exactly what a reap set is
-    *     computed from); publishing a manifest that points at deleted
-    *     data would corrupt the store, so that race dies HERE, loudly,
-    *     and the caller replays. (The vacuum side narrows the same
-    *     window from its end with [[assertVersionsUnchanged]].)
-    *  3. '''Exclusive publish''': full write to a salted tmp name, then
-    *     an atomic create-exclusive move onto `history/v<N>`
-    *     ([[exclusiveMoveFile]] — hard-link on local FS, refuse-existing
-    *     rename elsewhere).
-    *  4. '''Read-back ownership verify''': the committed content must
-    *     carry OUR nonce — belt-and-braces for filesystems whose rename
-    *     semantics we can't prove exclusive.
+    *  2. the rest of [[publish]]: the referenced-data verify over every
+    *     generation, leaf or file in `referenced` (paths relative to
+    *     `dir`), the exclusive move onto `history/v<N>`, and the
+    *     read-back ownership verify.
     *
     * Exactly one of N same-version racers returns; the rest throw
     * `ConcurrentModificationException` with the store unharmed. */
   def commitManifest(
       fs: FileSystem, dir: String, v: Long, lines: Seq[String],
-      store: String, referenced: Seq[Path] = Seq.empty): Unit = {
+      store: String, referenced: Seq[String]): Unit = {
     val latest = committedVersions(fs, dir).maxOption
     if (latest.exists(_ >= v))
       throw new java.util.ConcurrentModificationException(
         s"$store commit v$v aborted: version ${latest.get} was committed " +
           "by a concurrent writer since this batch began — replay the " +
           "batch against the new head")
-    referenced.find(!fs.exists(_)).foreach(p =>
-      throw new java.util.ConcurrentModificationException(
-        s"$store commit v$v aborted: referenced $p is missing (a " +
-          "concurrent vacuum reaped this writer's uncommitted " +
-          "generation?) — replay the batch"))
-    val nonce = java.util.concurrent.ThreadLocalRandom.current()
-      .nextLong(1L, Long.MaxValue)
-    // the nonce line leads so [[validateNonceHit]] can identify the
-    // commit from the file's first bytes alone (manifest parsers are
-    // line-order-insensitive)
-    val all = s"nonce $nonce" +: lines
-    val tmp = new Path(s"$dir/history/.tmp_v${v}_$nonce")
-    fs.mkdirs(new Path(s"$dir/history"))
-    val out = fs.create(tmp, true)
-    try out.write((all.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    try exclusiveMoveFile(fs, tmp, new Path(s"$dir/history/v$v"), store)
-    catch { case e: Throwable => fs.delete(tmp, false); throw e }
-    val back = readManifestLines(fs, dir, v)
-    if (!back.contains(s"nonce $nonce"))
-      throw new java.util.ConcurrentModificationException(
-        s"$store commit v$v: published manifest content is not ours — " +
-          "lost a same-version publish race; replay the batch")
+    publish(fs, new Path(s"$dir/history/v$v"),
+      java.util.concurrent.ThreadLocalRandom.current()
+        .nextLong(1L, Long.MaxValue),
+      s"version $v" +: lines, store, referenced.map(r => new Path(s"$dir/$r")))
     // every commit drops the dir's memoized manifests: a build() that
     // restarted history at this dir must not serve pre-rebuild content
     // under a recycled (dir, version) key
     invalidateManifestMemo(fs, dir)
+  }
+
+  /** Publish `nonce <nonce>` followed by `lines` as the small file `dst`
+    * — every manifest and `_MODEL` pointer in the store tier lands here:
+    *
+    *  1. full write to a tmp name beside `dst` (`.tmp_<name>_<nonce>`);
+    *  2. '''Referenced-data verify''': every path in `referenced` must
+    *     exist — a concurrent vacuum may have reaped this writer's
+    *     staged-but-uncommitted data (it is unreferenced until the
+    *     publish lands, which is exactly what a reap set is computed
+    *     from), and a pointer at deleted data would corrupt the store, so
+    *     that race dies HERE, loudly, and the caller replays. The vacuum
+    *     side narrows the same window from its end with
+    *     [[assertVersionsUnchanged]]; the check runs after the tmp write
+    *     so the window left is the single move call;
+    *  3. '''Exclusive publish''': an atomic create-exclusive move onto
+    *     `dst` ([[exclusiveMoveFile]] — hard-link on local FS,
+    *     refuse-existing rename elsewhere);
+    *  4. '''Read-back ownership verify''': the published content must
+    *     carry OUR nonce — belt-and-braces for filesystems whose rename
+    *     semantics we can't prove exclusive.
+    *
+    * The nonce line leads so [[validateNonceHit]] can identify a commit
+    * from the file's first bytes alone (parsers are line-order-
+    * insensitive). */
+  def publish(
+      fs: FileSystem, dst: Path, nonce: Long, lines: Seq[String],
+      store: String, referenced: Seq[Path]): Unit = {
+    val tmp = new Path(dst.getParent,
+      s".tmp_${dst.getName.stripPrefix("_")}_$nonce")
+    fs.mkdirs(dst.getParent)
+    val out = fs.create(tmp, true)
+    try out.write(((s"nonce $nonce" +: lines).mkString("\n") + "\n")
+      .getBytes("UTF-8"))
+    finally out.close()
+    referenced.find(!fs.exists(_)).foreach { p =>
+      fs.delete(tmp, false)
+      throw new java.util.ConcurrentModificationException(
+        s"$store publish of $dst aborted: referenced $p is missing (a " +
+          "concurrent vacuum reaped this writer's uncommitted " +
+          "generation?) — replay the batch")
+    }
+    try exclusiveMoveFile(fs, tmp, dst, store)
+    catch { case e: Throwable => fs.delete(tmp, false); throw e }
+    if (!readLines(fs, dst).contains(s"nonce $nonce"))
+      throw new java.util.ConcurrentModificationException(
+        s"$store: published $dst content is not ours — lost a publish " +
+          "race; replay the batch")
   }
 
   /** Publish strategies [[exclusiveMoveFile]] dispatches between, BY
@@ -473,7 +521,7 @@ private[graft] object StoreCommit {
     * which is exactly why the store tier's "no writer live during
     * vacuum" rule still stands; this guard is the detector for
     * violations of it, not a license to race. */
-  def assertVersionsUnchanged(
+  private def assertVersionsUnchanged(
       fs: FileSystem, dir: String, observed: Seq[Long], store: String): Unit = {
     onBeforeReap()
     val now = committedVersions(fs, dir).sorted
@@ -494,7 +542,7 @@ private[graft] object StoreCommit {
     * directory the vacuum verbs promise to keep clean. Safe ONLY under
     * the store tier's vacuum contract (no writer live): an in-flight
     * publisher's tmp is indistinguishable from garbage. */
-  def reapManifestTmp(fs: FileSystem, dir: String, store: String): Unit = {
+  private def reapManifestTmp(fs: FileSystem, dir: String, store: String): Unit = {
     val hist = new Path(s"$dir/history")
     if (!fs.exists(hist)) return
     fs.listStatus(hist).toSeq
@@ -502,14 +550,75 @@ private[graft] object StoreCommit {
       .foreach(s => deleteOrThrow(fs, s.getPath, store))
   }
 
-  /** Salted generation-dir name: unique per attempt, so racing writers
-    * stage disjoint paths and a loser's data is unreferenced garbage.
-    * 62 bits of salt (the manifest nonce's range): generation staging
-    * writes with mode("overwrite"), so a salt collision between two
-    * same-version racers would silently replace the first racer's staged
-    * files — the collision probability has to be negligible, not merely
-    * small (a 20-bit salt's ~1e-6 per race is a real event at fleet
-    * scale). */
+  /** Retire manifests older than the newest `keepLast`, reap manifest tmp
+    * files, and delete every generation dir — or, inside a generation a
+    * retained manifest reads only in part, every data leaf (part file or
+    * `<col>=<value>` dir) — that no retained manifest references:
+    * superseded generations, crashed writers' staging, losing racers'
+    * generations. `livePaths(v)` lists what retained version `v` reads,
+    * relative to `dir` (the same paths its commit verified). Snapshots
+    * pinned inside the retention window stay valid; older pins fail
+    * loudly on read. Run it only with no writer live: a reap can race a
+    * not-yet-committed generation into a loud commit abort. */
+  def vacuum(fs: FileSystem, dir: String, store: String, keepLast: Int)(
+      livePaths: Long => Seq[String]): Unit = {
+    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
+    val versions = committedVersions(fs, dir).sorted
+    val (drop, keep) = versions.splitAt(math.max(0, versions.size - keepLast))
+    val live = keep.flatMap(livePaths).toSet
+    // abort loudly (deleting nothing) if a publish landed since the reap
+    // set was computed
+    assertVersionsUnchanged(fs, dir, versions, store)
+    drop.foreach(v => deleteOrThrow(fs, new Path(s"$dir/history/v$v"), store))
+    reapManifestTmp(fs, dir, store)
+    generations(fs, dir).foreach { case (s, _) =>
+      val g = s.getPath.getName
+      if (!live.exists(p => p == g || p.startsWith(s"$g/")))
+        deleteOrThrow(fs, s.getPath, store)
+      else if (!live(g))
+        fs.listStatus(s.getPath).toSeq.map(_.getPath)
+          .filter(c => (c.getName.startsWith("part-") || c.getName.contains("=")) &&
+            !live(s"$g/${c.getName}"))
+          .foreach(deleteOrThrow(fs, _, store))
+    }
+  }
+
+  /** Crash recovery: reap manifest tmp files and every generation staged
+    * for a version above the committed head — data no commit can ever
+    * reference, since any later commit stages afresh. Generations AT the
+    * head stay (a racing loser's orphan looks exactly like a live
+    * writer's in-flight data); [[vacuum]] reaps them once unreferenced.
+    * A no-op on a store with no committed version. */
+  def recover(fs: FileSystem, dir: String, store: String): Unit =
+    committedVersions(fs, dir).maxOption.foreach { head =>
+      reapManifestTmp(fs, dir, store)
+      generations(fs, dir).filter(_._2 > head)
+        .foreach(g => deleteOrThrow(fs, g._1.getPath, store))
+    }
+
+  /** A build's overwrite: drop `dir`'s history and every generation, so
+    * the store's history starts over at v0. */
+  def reset(fs: FileSystem, dir: String, store: String): Unit = {
+    deleteOrThrow(fs, new Path(s"$dir/history"), store)
+    generations(fs, dir).foreach(g => deleteOrThrow(fs, g._1.getPath, store))
+  }
+
+  private val GenName = "^[A-Za-z]+_g(\\d+)\\.\\d+$".r
+
+  /** Generation dirs directly under `dir`, with the version each was
+    * staged for. */
+  private def generations(fs: FileSystem, dir: String): Seq[(FileStatus, Long)] =
+    if (!fs.exists(new Path(dir))) Seq.empty
+    else fs.listStatus(new Path(dir)).toSeq.flatMap(s =>
+      GenName.findFirstMatchIn(s.getPath.getName).map(m => s -> m.group(1).toLong))
+
+  /** Salted generation-dir name `<prefix>_g<v>.<salt>`: unique per
+    * attempt, so racing writers stage disjoint paths and a loser's data
+    * is unreferenced garbage. 62 bits of salt (the manifest nonce's
+    * range): a salt collision between two same-version racers would put
+    * both attempts' files in one dir, so the collision probability has
+    * to be negligible, not merely small (a 20-bit salt's ~1e-6 per race
+    * is a real event at fleet scale). */
   def saltedGenDir(prefix: String, v: Long): String = {
     val salt = java.util.concurrent.ThreadLocalRandom.current()
       .nextLong(1L, Long.MaxValue)
@@ -528,6 +637,25 @@ private[graft] object StoreCommit {
         listDataFiles(fs, dir, s"$sub/${s.getPath.getName}")
       else Seq.empty
     }.sorted
+  }
+
+  /** The int partition values `<partCol>=<value>` present as leaf dirs
+    * of the freshly written generation `dir/<gen>`, ascending. */
+  def partitionValues(
+      fs: FileSystem, dir: String, gen: String, partCol: String): Seq[Int] = {
+    val p = new Path(s"$dir/$gen")
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
+      .map(_.getPath.getName.stripPrefix(s"$partCol=").toInt).sorted
+  }
+
+  /** Output file count for folding `files` (relative to `dir`) into
+    * ~`targetFileBytes` outputs — the stores' compaction sizing. */
+  def compactedParts(
+      fs: FileSystem, dir: String, files: Seq[String], targetFileBytes: Long): Int = {
+    val bytes = files.map(f => fs.getFileStatus(new Path(s"$dir/$f")).getLen).sum
+    math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
   }
 
   def deleteOrThrow(fs: FileSystem, p: Path, store: String): Unit =

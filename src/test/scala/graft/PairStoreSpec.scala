@@ -158,7 +158,7 @@ class PairStoreSpec extends SparkSpec {
     // the crashed half-delivery: the batch's pair files reached pairs/
     // but the process died before committing — exactly the ADVICE window
     val batchPairs = Seq((3L, 4L), (2L, 3L)).toDF("id_a", "id_b")
-    batchPairs.write.mode("append").parquet(s"$dir/pairs")
+    batchPairs.write.parquet(s"$dir/pairs_g1.4242")
     assert(PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap
       == Map(1L -> 1L, 2L -> 1L, 3L -> 3L), "precondition: labels still stale")
     assert(PairStore.pairs(spark, dir).count() == 1L,
@@ -172,7 +172,7 @@ class PairStoreSpec extends SparkSpec {
       == Seq((1L, 2L), (2L, 3L), (3L, 4L)), "and pair rows must not duplicate")
     // vacuum reaps the crashed delivery's orphan files from disk
     PairStore.vacuum(spark, dir, keepLast = 1)
-    val onDisk = fs.listStatus(p(s"$dir/pairs"))
+    val onDisk = fs.globStatus(p(s"$dir/pairs_g*/part-*"))
       .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
     val referenced = PairStore.pairs(spark, dir).inputFiles.length
     assert(onDisk == referenced,
@@ -187,15 +187,15 @@ class PairStoreSpec extends SparkSpec {
     // crash mid-commit: a staged write and a renamed-but-never-committed
     // generation dir (manifest v1 was never published)
     Seq((1L, 99L, 0)).toDF("id", "cluster_id", "cbucket")
-      .write.partitionBy("cbucket").parquet(s"$dir/labels/_staged_v1")
+      .write.partitionBy("cbucket").parquet(s"$dir/labels_g1.4242")
     Seq((2L, 99L)).toDF("id", "cluster_id")
-      .write.parquet(s"$dir/labels/g1b0")
+      .write.parquet(s"$dir/labels_g1.4243/cbucket=0")
     // even BEFORE recover, readers resolve through the committed
     // manifest and never see the garbage
     assert(PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap == before)
     PairStore.recover(spark, dir)
-    assert(!fs.exists(p(s"$dir/labels/_staged_v1")))
-    assert(!fs.exists(p(s"$dir/labels/g1b0")))
+    assert(!fs.exists(p(s"$dir/labels_g1.4242")))
+    assert(!fs.exists(p(s"$dir/labels_g1.4243")))
     assert(PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap == before)
     // recover on the healthy store is a no-op
     PairStore.recover(spark, dir)
@@ -208,12 +208,12 @@ class PairStoreSpec extends SparkSpec {
       Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"), dir, "id", "id_a", "id_b")
     val expected = PairStore.pairs(spark, dir).as[(Long, Long)].collect().sorted.toSeq
     // crash mid-compaction: pairs_g1 written but manifest v1 never landed
-    spark.read.parquet(s"$dir/pairs").repartition(1)
-      .write.parquet(s"$dir/pairs_g1")
+    PairStore.pairs(spark, dir).repartition(1)
+      .write.parquet(s"$dir/pairs_g1.4242")
     assert(PairStore.pairs(spark, dir).as[(Long, Long)].collect().sorted.toSeq
       == expected, "uncommitted compaction must be invisible")
     PairStore.recover(spark, dir)
-    assert(!fs.exists(p(s"$dir/pairs_g1")))
+    assert(!fs.exists(p(s"$dir/pairs_g1.4242")))
     // a COMMITTED compaction serves the same rows from the new generation
     PairStore.compactPairs(spark, dir)
     assert(PairStore.pairs(spark, dir).as[(Long, Long)].collect().sorted.toSeq
@@ -228,20 +228,31 @@ class PairStoreSpec extends SparkSpec {
     PairStore.build(nodes, Seq((1L, 2L), (10L, 11L)).toDF("id_a", "id_b"),
       dir, "id", "id_a", "id_b")
     def genDirs(): Set[String] =
-      fs.listStatus(p(s"$dir/labels")).map(_.getPath.getName)
-        .filter(_.startsWith("g")).toSet
+      fs.globStatus(p(s"$dir/labels_g*/cbucket=*")).map(_.getPath)
+        .map(l => s"${l.getParent.getName}/${l.getName}").toSet
     val before = genDirs()
     // pure-growth singleton: only its own residue bucket gets a new gen
     val nv = 101L
     PairStore.append(Seq(nv).toDF("id"),
       Seq.empty[(Long, Long)].toDF("id_a", "id_b"), dir, "id", "id_a", "id_b")
     val added = genDirs() -- before
-    // post-CAS generations are salted: g<version>.<salt>b<bucket>
+    // generations are salted: labels_g<version>.<salt>/cbucket=<bucket>
     assert(added.size == 1 &&
-      added.head.matches(s"g1\\.\\d+b${bucketOf(nv)}"),
+      added.head.matches(s"labels_g1\\.\\d+/cbucket=${bucketOf(nv)}"),
       s"expected one new v1 generation for the fresh node's bucket, got $added")
     assert(PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap
       .apply(nv) == nv)
+    // every write verb stages only under salted generation names — no
+    // fixed path two same-version writers could share (a delete's
+    // survivor rewrite included)
+    PairStore.append(Seq(102L).toDF("id"),
+      Seq((101L, 102L)).toDF("id_a", "id_b"), dir, "id", "id_a", "id_b")
+    PairStore.delete(Seq(2L).toDF("id"), dir, "id", "id_a", "id_b")
+    PairStore.compactPairs(spark, dir)
+    val staged = fs.listStatus(p(dir)).map(_.getPath.getName)
+      .filterNot(_ == "history").toSeq
+    assert(staged.forall(_.matches("(pairs|labels)_g\\d+\\.\\d+")),
+      s"unsalted staging path under the store root: $staged")
   }
 
   test("append with no effect (full replay of a completed batch) commits nothing") {
@@ -253,7 +264,7 @@ class PairStoreSpec extends SparkSpec {
     PairStore.append(nodes, batch, dir, "id", "id_a", "id_b")
     def state(): (Set[String], Set[String]) = (
       fs.listStatus(p(s"$dir/history")).map(_.getPath.getName).toSet,
-      fs.listStatus(p(s"$dir/labels")).map(_.getPath.getName).toSet)
+      fs.listStatus(p(dir)).map(_.getPath.getName).toSet)
     val s1 = state()
     PairStore.append(nodes, batch, dir, "id", "id_a", "id_b")
     assert(state() == s1,
@@ -276,7 +287,7 @@ class PairStoreSpec extends SparkSpec {
       == (1L to 6L).map(_ -> 1L).toMap)
     // vacuum then bounds the on-disk count too
     PairStore.vacuum(spark, dir, keepLast = 1)
-    val onDisk = fs.listStatus(p(s"$dir/pairs"))
+    val onDisk = fs.globStatus(p(s"$dir/pairs_g*/part-*"))
       .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
     assert(onDisk <= live, s"superseded pair files must be reaped, got $onDisk")
   }
@@ -371,7 +382,7 @@ class PairStoreSpec extends SparkSpec {
     // replay of the same delete batch: identity fast path, no new version
     def state(): (Set[String], Set[String]) = (
       fs.listStatus(p(s"$dir/history")).map(_.getPath.getName).toSet,
-      fs.listStatus(p(s"$dir/labels")).map(_.getPath.getName).toSet)
+      fs.listStatus(p(dir)).map(_.getPath.getName).toSet)
     val s1 = state()
     PairStore.delete(dead.toDF("id"), dir, "id", "id_a", "id_b")
     assert(state() == s1, "replayed delete must commit nothing")
@@ -407,9 +418,9 @@ class PairStoreSpec extends SparkSpec {
       == Map(1L -> 1L, 3L -> 3L))
     // vacuum retires v0 and reaps the superseded pair file from disk
     PairStore.vacuum(spark, dir, keepLast = 1)
-    val onDisk = (fs.listStatus(p(s"$dir/pairs")).toSeq ++
-        fs.listStatus(p(dir)).toSeq.filter(_.getPath.getName.startsWith("pairs_g"))
-          .flatMap(s => fs.listStatus(s.getPath).toSeq))
+    val onDisk = fs.listStatus(p(dir)).toSeq
+        .filter(_.getPath.getName.startsWith("pairs_g"))
+        .flatMap(s => fs.listStatus(s.getPath).toSeq)
       .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
     assert(onDisk == PairStore.pairs(spark, dir).inputFiles.length,
       "vacuum must reap the pre-delete pair files")
@@ -600,7 +611,7 @@ class PairStoreSpec extends SparkSpec {
       Seq.empty[(Long, Long)].toDF("id_a", "id_b"), dir, "id", "id_a", "id_b")
     // fabricate a losing v1 attempt's salted generation: same version
     // as the committed head, unreferenced by any manifest
-    val orphan = s"$dir/labels/g1.99999b0"
+    val orphan = s"$dir/labels_g1.99999/cbucket=0"
     Seq((42L, 42L)).toDF("id", "cluster_id").write.parquet(orphan)
     val before = PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap
     PairStore.recover(spark, dir)
@@ -620,8 +631,8 @@ class PairStoreSpec extends SparkSpec {
       Seq((1L, 2L)).toDF("id_a", "id_b"), dir, "id", "id_a", "id_b")
     // writer A mid-flight at version 1: salted staging root, a renamed
     // salted generation, and a tmp manifest — none committed yet
-    val staged = s"$dir/labels/_staged_v1.7777"
-    val gen = s"$dir/labels/g1.7777b0"
+    val staged = s"$dir/labels_g2.7777"
+    val gen = s"$dir/labels_g1.7777/cbucket=0"
     val tmpMan = s"$dir/history/.tmp_v1_7777"
     Seq((9L, 9L, 0)).toDF("id", "cluster_id", "cbucket")
       .write.partitionBy("cbucket").parquet(staged)
@@ -684,7 +695,7 @@ class PairStoreSpec extends SparkSpec {
     def pairsOf(dir: String): Seq[(Long, Long)] =
       PairStore.pairs(spark, dir).as[(Long, Long)].collect().sorted.toSeq
     def genDirs(dir: String): Int =
-      fs.listStatus(p(s"$dir/labels")).count(_.isDirectory)
+      fs.globStatus(p(s"$dir/labels_g*/cbucket=*")).length
 
     // uninterrupted reference run, taken through the same maintenance
     val ref = runStore(Seq(false, false, false, false))

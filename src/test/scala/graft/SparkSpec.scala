@@ -17,12 +17,23 @@ trait SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
+  private var suiteStartNanos = System.nanoTime()
+
+  override protected def beforeAll(): Unit = {
+    suiteStartNanos = System.nanoTime()
+    super.beforeAll()
+  }
+
   override protected def afterAll(): Unit = {
     try {
       graft.PlanCache.clearAll()
       graft.AutoUnpersist.releaseAll()
       SparkSpec.session.catalog.clearCache()
     } catch { case scala.util.control.NonFatal(_) => () }
+    // one line per suite, so a long log names its slow or aborted suite
+    val rt = Runtime.getRuntime
+    println(f"[suite] $suiteName%s ${(System.nanoTime() - suiteStartNanos) / 1e9}%.1f s, " +
+      s"driver heap in use ${(rt.totalMemory - rt.freeMemory) >> 20} MB")
     super.afterAll()
   }
 }

@@ -297,6 +297,29 @@ class StoreCommitSpec extends SparkSpec {
     assert(SignatureStore.stored(spark, dir).count() == 20)
     SignatureStore.append(docsRange(20, 30), dir)
     assert(SignatureStore.stored(spark, dir).count() == 30)
+
+    // PairStore: an append whose pair already lies inside one cluster
+    // stages ONLY a pair file (no label generation), so the commit must
+    // verify pair files, not just label dirs
+    val pdir = tmp("sc_pub_vac_pairs")
+    PairStore.build((1L to 3L).toDF("id"),
+      Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"), pdir, "id", "id_a", "id_b")
+    def appendPair(): Unit = PairStore.append(Seq.empty[Long].toDF("id"),
+      Seq((1L, 3L)).toDF("id_a", "id_b"), pdir, "id", "id_a", "id_b")
+    PairStore.onBeforeCommit = () => {
+      PairStore.onBeforeCommit = () => ()
+      PairStore.vacuum(spark, pdir, keepLast = 1)
+    }
+    try intercept[java.util.ConcurrentModificationException](appendPair())
+    finally PairStore.onBeforeCommit = () => ()
+    assert(PairStore.snapshot(spark, pdir).version == 0L)
+    assert(PairStore.pairs(spark, pdir).as[(Long, Long)].collect().sorted.toSeq
+      == Seq((1L, 2L), (2L, 3L)), "v0 must still be served")
+    appendPair()
+    assert(PairStore.pairs(spark, pdir).as[(Long, Long)].collect().sorted.toSeq
+      == Seq((1L, 2L), (1L, 3L), (2L, 3L)))
+    assert(PairStore.labels(spark, pdir).as[(Long, Long)].collect().toMap
+      == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
   // ------------------------------------------- cross-store interleave
