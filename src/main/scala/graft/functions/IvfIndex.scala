@@ -269,29 +269,49 @@ final class IvfIndex private (
     * physical files. The quantizer stays frozen ([[appendBatch]]'s
     * contract). Superseded cell data stays on disk for pinned readers
     * until [[vacuum]]; replaying a completed delete finds no touched
-    * cell and commits nothing. */
+    * cell and commits nothing. Ids within `graft.store.localRows`
+    * ([[StoreCommit.localRows]]) are collected once and filter both
+    * scans; a larger id set is broadcast-joined. */
   def delete(ids: DataFrame, idCol: String): Unit = {
     requireWritable("delete")
     val fs = StoreCommit.fsOf(spark, path)
     val snap = snapshot()
-    val del = ids.select(col(idCol).cast("long").as("id"))
-      .distinct().localCheckpoint(true)
-    // try/finally: losing a CAS race throws out of the commit, and the
-    // checkpointed delete set must release on that path too
-    try {
-      val touched = cellsOf(snap, None).select(col("id"), col("cell"))
-        .join(broadcast(del), Seq("id"), "left_semi")
-        .select(col("cell")).distinct().collect().map(_.getInt(0)).toSet
-      if (touched.isEmpty) return
-      val gen = StoreCommit.saltedGenDir("cells", snap.version + 1)
-      cellsOf(snap, Some(touched))
-        .join(broadcast(del), Seq("id"), "left_anti")
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$gen")
-      val kept = listCells(fs, path, gen)
-      onBeforeCommit()
-      commit(fs, path, snap.version + 1, snap.quantDir,
-        snap.genCells.filterNot { case (_, c) => touched(c) } ++ kept.map(gen -> _))
-    } finally del.unpersist(blocking = false)
+    val idsLong = ids.select(col(idCol).cast("long").as("id"))
+    StoreCommit.localRows(idsLong) match {
+      case Some(rows) =>
+        val del = rows.toSeq.filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct
+        if (del.nonEmpty) {
+          val hit = col("id").isin(del: _*)
+          deleteWhere(fs, snap, _.filter(hit).select(col("cell")),
+            _.filter(!coalesce(hit, lit(false))))
+        }
+      case None =>
+        val del = idsLong.distinct().localCheckpoint(true)
+        // try/finally: losing a CAS race throws out of the commit, and
+        // the checkpointed delete set must release on that path too
+        try deleteWhere(fs, snap,
+          _.join(broadcast(del), Seq("id"), "left_semi").select(col("cell")).distinct(),
+          _.join(broadcast(del), Seq("id"), "left_anti"))
+        finally del.unpersist(blocking = false)
+    }
+  }
+
+  /** [[delete]]'s cell-pruned rewrite: `touchedCells` maps the live
+    * `(id, cell)` rows to the cells holding a deleted id, `survivors`
+    * keeps a frame's rows whose id is not deleted. */
+  private def deleteWhere(
+      fs: FileSystem, snap: Snap,
+      touchedCells: DataFrame => DataFrame, survivors: DataFrame => DataFrame): Unit = {
+    val touched = touchedCells(cellsOf(snap, None).select(col("id"), col("cell")))
+      .collect().map(_.getInt(0)).toSet
+    if (touched.isEmpty) return
+    val gen = StoreCommit.saltedGenDir("cells", snap.version + 1)
+    survivors(cellsOf(snap, Some(touched)))
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$gen")
+    val kept = listCells(fs, path, gen)
+    onBeforeCommit()
+    commit(fs, path, snap.version + 1, snap.quantDir,
+      snap.genCells.filterNot { case (_, c) => touched(c) } ++ kept.map(gen -> _))
   }
 
   /** Fold every live generation into ONE — the small-files compaction a

@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Persisted near-dup pair + cluster-label store — the build-once-serve-
   * many artifact for the whole dedup family. Pair finding (shingle/LSH/
@@ -185,10 +186,16 @@ object PairStore {
     * of merging clusters (old residue), receiving merged labels (new
     * residue), or receiving fresh nodes. A pure-growth batch writes the
     * fresh nodes' buckets; a full replay of a completed batch commits
-    * nothing at all. The one O(corpus) cost left is the label SCAN that
-    * lifts batch pair endpoints onto current labels — a broadcast-batch
-    * map-side join, no corpus shuffle (a node-keyed secondary index
-    * would remove even the scan; out of scope here).
+    * nothing at all.
+    *
+    * The one O(corpus) cost left is the label SCAN that lifts batch pair
+    * endpoints onto current labels — a broadcast-batch map-side join, no
+    * corpus shuffle (a node-keyed secondary index would remove even the
+    * scan; out of scope here). Append stays distributed at every
+    * `graft.store.localRows` setting: a driver-local closure leaves the
+    * touched-bucket rewrite as its only shuffle, and that rewrite grows
+    * with bucket size when a batch merges stored clusters (ScalingSpec's
+    * append gate measured 5.6× at 8× corpus against its 3× bound).
     *
     * @param newNodes     one row per NEW node (already-stored ids are
     *                     ignored)
@@ -224,8 +231,18 @@ object PairStore {
     // recover()/vacuum() run when no writer is live.
     val fs = StoreCommit.fsOf(spark, dir)
     val man = currentManifest(fs, dir)
+    commitChange(spark, fs, dir, man,
+      appendChange(spark, fs, dir, man, newNodes, newPairs, nodeCol, srcCol, dstCol, shortcut),
+      maxPairFiles, () => onBeforeAppendCommit())
+  }
+
+  /** [[append]]'s change: the screens and the quotient closure, run
+    * distributed. */
+  private def appendChange(
+      spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
+      newNodes: DataFrame, newPairs: DataFrame, nodeCol: String,
+      srcCol: String, dstCol: String, shortcut: Boolean): Change = {
     val b = man.modulus
-    val v = man.version + 1
     // Eager localCheckpoint: the batch is read several times across the
     // screens and writes below, and each read must see the same rows and
     // start from a leaf plan. Batch-sized by contract.
@@ -251,8 +268,7 @@ object PairStore {
     // commit
     val appended =
       if (freshPairs.isEmpty) Seq.empty[String]
-      else writePairs(fs, dir, freshPairs, v)
-    var pairFiles = man.pairFiles ++ appended
+      else writePairs(fs, dir, freshPairs, man.version + 1)
 
     val old = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
       .select(col(nodeCol), col("cluster_id"))
@@ -303,35 +319,20 @@ object PairStore {
       .unionByName(merged.select(pmod(hash(col("_merged")), lit(b)).as("bk")))
       .unionByName(freshNodes.select(pmod(hash(col(nodeCol)), lit(b)).as("bk")))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty && appended.isEmpty) {
-      // fully-applied replay (or empty batch): nothing changed, commit
-      // nothing — the fast path that makes restarted loops cheap
-      Seq(merged, endLabels, freshNodes, freshPairs, batch)
-        .foreach(_.unpersist(blocking = false))
-      return
-    }
-    var newBuckets = man.buckets
-    if (touched.nonEmpty) {
-      // New generation = every current row of a touched bucket (read by
-      // direct manifest addressing — touched dirs only), relabeled
-      // through the batch-sized merge map, plus the fresh nodes. Rows
-      // whose new label has a different residue migrate buckets; a
-      // bucket whose rows ALL migrate out simply leaves the manifest.
-      val candidates = readLabels(spark, dir, man, touched)
+    // New generation = every current row of a touched bucket (read by
+    // direct manifest addressing — touched dirs only), relabeled through
+    // the batch-sized merge map, plus the fresh nodes. Rows whose new
+    // label has a different residue migrate buckets; a bucket whose rows
+    // ALL migrate out simply leaves the manifest.
+    Change(man.pairFiles ++ appended, touched,
+      () => readLabels(spark, dir, man, touched)
         .select(col(nodeCol), col("cluster_id"))
         .unionByName(freshNodes.select(col(nodeCol), col(nodeCol).as("cluster_id")))
-      val staged = candidates
         .join(broadcast(merged), col("cluster_id") === col("_q"), "left")
         .select(col(nodeCol),
-          coalesce(col("_merged"), col("cluster_id")).as("cluster_id"))
-      newBuckets = (man.buckets -- touched) ++ writeLabels(fs, dir, staged, b, v)
-    }
-    if (pairFiles.size > maxPairFiles)
-      pairFiles = compactInto(spark, fs, dir, pairFiles, v)
-    onBeforeAppendCommit()
-    commit(fs, dir, Manifest(v, b, newBuckets, pairFiles))
-    Seq(merged, endLabels, freshNodes, freshPairs, batch)
-      .foreach(_.unpersist(blocking = false))
+          coalesce(col("_merged"), col("cluster_id")).as("cluster_id")),
+      () => Seq(merged, endLabels, freshNodes, freshPairs, batch)
+        .foreach(_.unpersist(blocking = false)))
   }
 
   /** Remove nodes from the store — the retention / right-to-be-forgotten
@@ -348,18 +349,26 @@ object PairStore {
     * minimum id must re-canonicalize the survivors, so the closure is
     * re-run — but only over the members of clusters that lost a node
     * (their rows all live in the clusters' residue buckets, so the
-    * member read is bucket-addressed, never a corpus scan) with the
-    * already-rewritten pair set. The min-label invariant holds: the new
-    * label of each surviving component is its minimum surviving member.
+    * member read is bucket-addressed, never a corpus scan) and the pairs
+    * among the survivors. The min-label invariant holds: the new label
+    * of each surviving component is its minimum surviving member.
     *
-    * Cost model per delete batch: one O(live pairs) columnar scan (no
-    * shuffle) for file pruning, one O(corpus) label scan to locate the
-    * deleted ids (broadcast-semi, the same map-side shape as
-    * [[append]]'s), and component-sized rewrite/closure work. The
-    * merge-on-read upgrade (deletion vectors applied at read time,
-    * folded in at compaction) trades the scan for reader-side work;
-    * file-level copy-on-write is the simpler contract and keeps every
-    * reader untouched.
+    * Cost model per delete batch: one O(corpus) label scan to locate
+    * the deleted ids and one O(live pairs) columnar scan for file
+    * pruning (neither shuffled), then component-sized rewrite/closure
+    * work. A batch within the `graft.store.localRows` bound
+    * ([[StoreCommit.localRows]]) with integral ids does that work on the
+    * driver: the deleted ids are collected once, the label scan finds
+    * their clusters, one bucket-addressed read collects those clusters'
+    * members, the ONE pair scan yields both the dead files and the pairs
+    * among the members, and a union-find closes the survivors; the
+    * writes are the survivor pairs of the dead files and the touched
+    * buckets. Above the bound, or for other id types, the same steps run
+    * distributed (broadcast-semi probes and
+    * [[Clusters.connectedComponents]]). The merge-on-read upgrade
+    * (deletion vectors applied at read time, folded in at compaction)
+    * trades the scans for reader-side work; file-level copy-on-write is
+    * the simpler contract and keeps every reader untouched.
     *
     * Idempotent under whole-batch replay at any crash point: already-
     * deleted ids have no label row and no surviving pair, so a replay
@@ -378,8 +387,88 @@ object PairStore {
     // no automatic recover — same concurrent-writer hazard as append
     val fs = StoreCommit.fsOf(spark, dir)
     val man = currentManifest(fs, dir)
+    val change =
+      localDelete(spark, fs, dir, man, deletedNodes, nodeCol, srcCol, dstCol)
+        .getOrElse(distributedDelete(spark, fs, dir, man, deletedNodes,
+          nodeCol, srcCol, dstCol, shortcut))
+    commitChange(spark, fs, dir, man, change, Int.MaxValue, () => ())
+  }
+
+  /** [[delete]]'s change computed on the driver, or None — before
+    * anything is written — when the batch or the stored rows it touches
+    * exceed `graft.store.localRows`, or an id is not integral. */
+  private def localDelete(
+      spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
+      deletedNodes: DataFrame, nodeCol: String, srcCol: String,
+      dstCol: String): Option[Change] = {
+    val labels = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
+      .select(col(nodeCol), col("cluster_id"))
+    val pairs = readPairs(spark, dir, man.pairFiles)
+    val t = labels.schema(nodeCol).dataType
+    if (!sameIntegral(t, labels, pairs.select(col(srcCol), col(dstCol)),
+        deletedNodes.select(col(nodeCol)))) return None
+    val box = StoreCommit.boxAs(t) _
+    val del = StoreCommit.localRows(deletedNodes.select(col(nodeCol)))
+      .getOrElse(return None).toSeq.filterNot(_.isNullAt(0)).map(idAt(_, 0)).distinct
+    if (del.isEmpty) return Some(Change(man.pairFiles, Seq.empty, () => labels))
+    // the deleted ids' clusters (one labels scan; replayed or never-stored
+    // ids drop out here), then those clusters' members (one
+    // bucket-addressed read)
+    val affected = StoreCommit.localRows(labels.filter(col(nodeCol).isin(del.map(box): _*)))
+      .getOrElse(return None).toSeq.map(idAt(_, 1)).distinct
+    val affBk = StoreCommit.residues(spark, t, man.modulus, affected)
+    val members =
+      if (affected.isEmpty) Seq.empty[Long]
+      else StoreCommit.localRows(readLabels(spark, dir, man, affBk)
+          .select(col(nodeCol), col("cluster_id"))
+          .filter(col("cluster_id").isin(affected.map(box): _*)))
+        .getOrElse(return None).toSeq.map(idAt(_, 0)).distinct
+    // ONE pair scan yields both the files holding a dead pair and the
+    // pairs among the affected clusters
+    val reach = (members ++ del).distinct.map(box)
+    val hits = StoreCommit.localRows(pairs
+        .select(input_file_name().as("_file"), col(srcCol), col(dstCol))
+        .filter(col(srcCol).isin(reach: _*) || col(dstCol).isin(reach: _*)))
+      .getOrElse(return None).toSeq
+    val dead = del.toSet
+    def end(r: Row, i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(idAt(r, i))
+    val deadAbs = hits.filter(r => end(r, 1).exists(dead) || end(r, 2).exists(dead))
+      .map(_.getString(0)).distinct
+    val deadFiles = man.pairFiles.filter(f => deadAbs.exists(_.endsWith("/" + f))).toSet
+    // the closure over the surviving members, on edges with both ends
+    // among them (the node-set restriction Clusters applies)
+    val survivors = members.filterNot(dead)
+    val alive = survivors.toSet
+    val cc = minLabels(survivors, hits.flatMap(r =>
+      for (s <- end(r, 1); d <- end(r, 2) if alive(s) && alive(d)) yield (s, d)))
+    val touched = (affBk ++ StoreCommit.residues(spark, t, man.modulus, cc.values.toSeq))
+      .distinct.sorted
+    // survivor rows of ONLY the dead files, rewritten as this attempt's
+    // pair generation in the stored column order
+    val pairFiles =
+      if (deadFiles.isEmpty) man.pairFiles
+      else {
+        val gone = del.map(box)
+        def kept(c: String) = !coalesce(col(c).isin(gone: _*), lit(false))
+        man.pairFiles.filterNot(deadFiles) ++ writePairs(fs, dir,
+          readPairs(spark, dir, deadFiles.toSeq.sorted).filter(kept(srcCol) && kept(dstCol)),
+          man.version + 1)
+      }
+    Some(Change(pairFiles, touched, () => {
+      val rest = readLabels(spark, dir, man, touched).select(col(nodeCol), col("cluster_id"))
+      (if (members.isEmpty) rest
+       else rest.filter(!coalesce(col(nodeCol).isin(members.map(box): _*), lit(false))))
+        .unionByName(labelFrame(spark, nodeCol, t, cc.toSeq))
+    }))
+  }
+
+  /** [[delete]]'s change computed distributed — any batch size, any id
+    * type. */
+  private def distributedDelete(
+      spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
+      deletedNodes: DataFrame, nodeCol: String, srcCol: String,
+      dstCol: String, shortcut: Boolean): Change = {
     val b = man.modulus
-    val v = man.version + 1
     val del = deletedNodes.select(col(nodeCol)).distinct().localCheckpoint(true)
     val old = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
       .select(col(nodeCol), col("cluster_id"))
@@ -413,7 +502,7 @@ object PairStore {
         man.pairFiles.filterNot(deadFiles) ++ writePairs(fs, dir, dead
           .join(broadcast(del.select(col(nodeCol).as(srcCol))), Seq(srcCol), "left_anti")
           .join(broadcast(del.select(col(nodeCol).as(dstCol))), Seq(dstCol), "left_anti")
-          .select(dead.columns.map(col): _*), v)
+          .select(dead.columns.map(col): _*), man.version + 1)
       }
     // affected-component closure: members of the clusters that lost a
     // node (bucket-addressed read + broadcast label semi), minus the
@@ -436,23 +525,13 @@ object PairStore {
     val touched = (affBk ++ cc
         .select(pmod(hash(col("cluster_id")), lit(b)).as("bk"))
         .distinct().collect().map(_.getInt(0))).distinct.sorted
-    if (touched.isEmpty && deadFiles.isEmpty) {
-      // fully-applied replay (or nothing stored from this batch)
-      Seq(cc, members, affLabels, delRows, del)
-        .foreach(_.unpersist(blocking = false))
-      return
-    }
-    var newBuckets = man.buckets
-    if (touched.nonEmpty) {
-      val candidates = readLabels(spark, dir, man, touched)
+    Change(pairFiles, touched,
+      () => readLabels(spark, dir, man, touched)
         .join(members.select(col(nodeCol)), Seq(nodeCol), "left_anti")
         .select(col(nodeCol), col("cluster_id"))
-        .unionByName(cc)
-      newBuckets = (man.buckets -- touched) ++ writeLabels(fs, dir, candidates, b, v)
-    }
-    commit(fs, dir, Manifest(v, b, newBuckets, pairFiles))
-    Seq(cc, members, affLabels, delRows, del)
-      .foreach(_.unpersist(blocking = false))
+        .unionByName(cc),
+      () => Seq(cc, members, affLabels, delRows, del)
+        .foreach(_.unpersist(blocking = false)))
   }
 
   /** Delete the data staged for versions above the last committed
@@ -526,6 +605,73 @@ object PairStore {
 
   // ------------------------------------------------------------------ //
 
+  /** What one [[append]] or [[delete]] changes: the complete pair-file
+    * list it commits (its own pair generation already written), the
+    * label buckets it rewrites with their new rows (read when written),
+    * and the release of its cached intermediates. */
+  private final case class Change(
+      pairFiles: Seq[String], touched: Seq[Int], staged: () => DataFrame,
+      release: () => Unit = () => ())
+
+  /** The shared tail of [[append]] and [[delete]]: write the touched
+    * buckets as one label generation, fold the pair files past
+    * `maxPairFiles`, and commit — or commit nothing when the change is
+    * empty (a fully-applied replay, or a batch touching nothing stored),
+    * the fast path that makes restarted loops cheap. */
+  private def commitChange(
+      spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
+      c: Change, maxPairFiles: Int, beforeCommit: () => Unit): Unit =
+    try {
+      if (c.touched.nonEmpty || c.pairFiles != man.pairFiles) {
+        val v = man.version + 1
+        val buckets =
+          if (c.touched.isEmpty) man.buckets
+          else (man.buckets -- c.touched) ++
+            writeLabels(fs, dir, c.staged(), man.modulus, v)
+        val pairFiles =
+          if (c.pairFiles.size > maxPairFiles) compactInto(spark, fs, dir, c.pairFiles, v)
+          else c.pairFiles
+        beforeCommit()
+        commit(fs, dir, Manifest(v, man.modulus, buckets, pairFiles))
+      }
+    } finally c.release()
+
+  /** Connected components over `nodes` plus the endpoints of `edges`, on
+    * the driver: a union-find where the smaller root always wins, so
+    * every node maps to its component's minimum id — the fixpoint
+    * [[Clusters.connectedComponents]] computes distributed. */
+  private def minLabels(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    nodes.foreach(find)
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(x => x -> find(x)).toMap
+  }
+
+  /** A driver-local `(nodeCol, cluster_id)` frame of integral type `t`. */
+  private def labelFrame(
+      spark: SparkSession, nodeCol: String, t: DataType,
+      rows: Seq[(Long, Long)]): DataFrame =
+    StoreCommit.localFrame(spark,
+      StructType(Seq(StructField(nodeCol, t), StructField("cluster_id", t))),
+      rows.map { case (n, l) => Row(StoreCommit.boxAs(t)(n), StoreCommit.boxAs(t)(l)) })
+
+  /** Whether `t` is integral and every column of `frames` has type `t` —
+    * the driver-local paths' precondition. */
+  private def sameIntegral(t: DataType, frames: DataFrame*): Boolean =
+    StoreCommit.isIntegral(t) && frames.forall(_.schema.forall(_.dataType == t))
+
+  private def idAt(r: Row, i: Int): Long = r.get(i).asInstanceOf[Number].longValue
+
   /** The write verbs' commit: the crash seam, then
     * [[StoreCommit.commitManifest]] over every label leaf and pair file
     * the manifest references. */
@@ -571,28 +717,29 @@ object PairStore {
       .repartition(StoreCommit.compactedParts(fs, dir, files, targetFileBytes)), v)
 
   /** Read a manifest's bucket selection by direct leaf addressing (no
-    * listing, no partition discovery); buckets the manifest does not
-    * hold are skipped. A selection with no live leaf reads as a
-    * zero-row frame whose schema comes from any label leaf on disk — or
-    * fails loudly on a store that never held one. */
+    * listing, no partition discovery, a memoized schema —
+    * [[StoreCommit.readParquet]]); buckets the manifest does not hold are
+    * skipped. A selection with no live leaf reads as a zero-row frame
+    * whose schema comes from any label leaf on disk — or fails loudly on
+    * a store that never held one. */
   private def readLabels(
       spark: SparkSession, dir: String, man: Manifest,
       buckets: Seq[Int]): DataFrame = {
     val paths = buckets.sorted.flatMap(man.leaf).map(l => s"$dir/$l")
-    if (paths.nonEmpty) spark.read.parquet(paths: _*)
+    if (paths.nonEmpty) StoreCommit.readParquet(spark, paths)
     else {
       val fs = StoreCommit.fsOf(spark, dir)
       val any = Option(fs.globStatus(new Path(s"$dir/labels_g*/$BucketCol=*")))
         .toSeq.flatten.headOption.getOrElse(throw new IllegalStateException(
           s"$Store $dir has no label generation to derive a schema from"))
-      spark.read.parquet(any.getPath.toString).where(lit(false))
+      StoreCommit.readParquet(spark, Seq(any.getPath.toString)).where(lit(false))
     }
   }
 
   /** Read an explicit pair-file list (never empty: see [[writePairs]]). */
   private def readPairs(
       spark: SparkSession, dir: String, files: Seq[String]): DataFrame =
-    spark.read.parquet(files.map(f => s"$dir/$f"): _*)
+    StoreCommit.readParquet(spark, files.map(f => s"$dir/$f"))
 
   /** Manifest `v` through the serve-path memo
     * ([[StoreCommit.readManifestLinesCached]]). */

@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.hadoop.fs.FileSystem
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Persisted dedup signature store — the [[IvfIndex]] of text dedup: the
   * per-document signatures (exact content hash + sorted n-gram hash
@@ -120,30 +121,55 @@ object SignatureStore {
     * the dead files for the new ones. Superseded files stay on disk for
     * racing readers until [[vacuum]]; a crash before the commit leaves
     * only an unreferenced generation. Replaying a completed delete is a
-    * no-op (already-deleted ids match no live file). */
+    * no-op (already-deleted ids match no live file). Ids within
+    * `graft.store.localRows` ([[StoreCommit.localRows]]) and of the
+    * store's `doc_id` type are collected once and filter both scans; a
+    * larger id set is broadcast-joined. */
   def delete(spark: SparkSession, ids: DataFrame, dir: String): Unit = {
     val fs = StoreCommit.fsOf(spark, dir)
     val v = StoreCommit.currentVersion(fs, dir, Store)
     val live = liveFiles(fs, dir, v)
-    val del = ids.select(col(ids.columns.head).as("doc_id"))
-      .distinct().localCheckpoint(true)
-    // try/finally: losing a CAS race throws out of the commit, and the
-    // checkpointed delete set must release on that path too
-    try {
-      val deadAbs = readFiles(spark, dir, live)
-        .select(col("doc_id"), input_file_name().as("_f"))
-        .join(broadcast(del), Seq("doc_id"), "left_semi")
-        .select(col("_f")).distinct().collect().map(_.getString(0))
-      val dead = live.filter(f => deadAbs.exists(_.endsWith("/" + f))).toSet
-      if (dead.isEmpty) return
-      val gen = StoreCommit.saltedGenDir("data", v + 1)
-      readFiles(spark, dir, dead.toSeq.sorted)
-        .join(broadcast(del), Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$dir/$gen")
-      onBeforeCommit()
-      commit(fs, dir, v + 1,
-        live.filterNot(dead) ++ StoreCommit.listDataFiles(fs, dir, gen))
-    } finally del.unpersist(blocking = false)
+    val store = readFiles(spark, dir, live)
+    val idCol = ids.select(col(ids.columns.head).as("doc_id"))
+    val local =
+      if (idCol.schema.head.dataType != store.schema("doc_id").dataType) None
+      else StoreCommit.localRows(idCol)
+    local match {
+      case Some(rows) =>
+        val del = rows.toSeq.filterNot(_.isNullAt(0)).map(_.get(0)).distinct
+        if (del.nonEmpty) {
+          val hit = col("doc_id").isin(del: _*)
+          deleteWhere(spark, fs, dir, v, live,
+            _.filter(hit).select(col("_f")), _.filter(!coalesce(hit, lit(false))))
+        }
+      case None =>
+        val del = idCol.distinct().localCheckpoint(true)
+        // try/finally: losing a CAS race throws out of the commit, and
+        // the checkpointed delete set must release on that path too
+        try deleteWhere(spark, fs, dir, v, live,
+          _.join(broadcast(del), Seq("doc_id"), "left_semi").select(col("_f")).distinct(),
+          _.join(broadcast(del), Seq("doc_id"), "left_anti"))
+        finally del.unpersist(blocking = false)
+    }
+  }
+
+  /** [[delete]]'s file-pruned rewrite: `deadFiles` maps the live
+    * `(doc_id, _f)` rows to the file names `_f` holding a deleted id,
+    * `survivors` keeps a frame's rows whose doc id is not deleted. */
+  private def deleteWhere(
+      spark: SparkSession, fs: FileSystem, dir: String, v: Long, live: Seq[String],
+      deadFiles: DataFrame => DataFrame, survivors: DataFrame => DataFrame): Unit = {
+    val deadAbs = deadFiles(readFiles(spark, dir, live)
+        .select(col("doc_id"), input_file_name().as("_f")))
+      .collect().map(_.getString(0)).distinct
+    val dead = live.filter(f => deadAbs.exists(_.endsWith("/" + f))).toSet
+    if (dead.isEmpty) return
+    val gen = StoreCommit.saltedGenDir("data", v + 1)
+    survivors(readFiles(spark, dir, dead.toSeq.sorted))
+      .write.mode("overwrite").parquet(s"$dir/$gen")
+    onBeforeCommit()
+    commit(fs, dir, v + 1,
+      live.filterNot(dead) ++ StoreCommit.listDataFiles(fs, dir, gen))
   }
 
   /** Fold the live signature files into ~`targetFileBytes` outputs as a
@@ -206,39 +232,111 @@ object SignatureStore {
 
   /** Surviving doc ids of a new batch screened against the store:
     * batch-exact-keeper ∧ exact hash unseen ∧ no near-dup vs store ∧ no
-    * near-dup vs smaller batch id. All joins are batch-sized on one side;
-    * the store side is touched via column-pruned scans and the prefix
-    * hash join only. */
+    * near-dup vs smaller batch id, in `doc_id` order.
+    *
+    * A batch within the `graft.store.localRows` bound
+    * ([[StoreCommit.localRows]]) with integral doc ids is screened on
+    * the driver: its signatures are collected once, the exact-hash
+    * keepers and the batch-internal near-dups are computed in memory,
+    * and ONE column-pruned store scan keeps the rows whose `exact_h` is
+    * a batch hash or whose PPJoin prefix shares a hash with a batch
+    * prefix — lossless for Jaccard ≥ `threshold`, as in
+    * [[NearDup.ngramJaccardPairs]] — which are then verified exactly on
+    * the driver. The result is a local frame. Otherwise every join is
+    * distributed and batch-sized on one side; the store side is touched
+    * via column-pruned scans and the prefix hash join only. */
   def screenBatch(
       spark: SparkSession, batch: DataFrame, dir: String,
       threshold: Double, w: Int = 3): DataFrame = {
     val store = stored(spark, dir)
-    val batchSigs = signatures(batch, w).persist()
-    val keepers = batchSigs.groupBy(col("exact_h"))
-      .agg(min(col("doc_id")).as("doc_id"))
-    val afterExact = keepers
-      .join(store.select(col("exact_h")).distinct(), Seq("exact_h"), "left_anti")
-      .select(col("doc_id"))
-    val storeArrs = store
-      .select(col("doc_id"), col("arr"), col("n_shingles"))
-      .filter(col("n_shingles") > 0)
-    val batchArrs = batchSigs
-      .select(col("doc_id"), col("arr"), col("n_shingles"))
-      .filter(col("n_shingles") > 0)
-    val ndStore = NearDup
-      .acrossArrays(batchArrs, storeArrs, threshold)
-      .select(col("id_a").as("doc_id")).distinct()
-    val ndBatch = NearDup.ngramJaccardPairs(batch, threshold, w)
-      .select(col("id_b").as("doc_id")).distinct()
-    // batchSigs released once the survivor set is first materialized — an
-    // ingest loop screens many batches and must not accumulate one cached
-    // signature table per call
-    graft.AutoUnpersist.afterFirstUse(
-      afterExact
-        .join(ndStore, Seq("doc_id"), "left_anti")
-        .join(ndBatch, Seq("doc_id"), "left_anti")
-        .orderBy(col("doc_id")),
-      batchSigs)
+    val sigs = signatures(batch, w)
+    localScreen(spark, store, sigs, threshold).getOrElse {
+      val batchSigs = sigs.persist()
+      val keepers = batchSigs.groupBy(col("exact_h"))
+        .agg(min(col("doc_id")).as("doc_id"))
+      val afterExact = keepers
+        .join(store.select(col("exact_h")).distinct(), Seq("exact_h"), "left_anti")
+        .select(col("doc_id"))
+      val storeArrs = store
+        .select(col("doc_id"), col("arr"), col("n_shingles"))
+        .filter(col("n_shingles") > 0)
+      val batchArrs = batchSigs
+        .select(col("doc_id"), col("arr"), col("n_shingles"))
+        .filter(col("n_shingles") > 0)
+      val ndStore = NearDup
+        .acrossArrays(batchArrs, storeArrs, threshold)
+        .select(col("id_a").as("doc_id")).distinct()
+      val ndBatch = NearDup.ngramJaccardPairs(batch, threshold, w)
+        .select(col("id_b").as("doc_id")).distinct()
+      // batchSigs released once the survivor set is first materialized —
+      // an ingest loop screens many batches and must not accumulate one
+      // cached signature table per call
+      graft.AutoUnpersist.afterFirstUse(
+        afterExact
+          .join(ndStore, Seq("doc_id"), "left_anti")
+          .join(ndBatch, Seq("doc_id"), "left_anti")
+          .orderBy(col("doc_id")),
+        batchSigs)
+    }
+  }
+
+  /** One signature row on the driver. */
+  private final case class Sig(id: Long, exactH: String, arr: Array[Long], n: Int)
+
+  /** [[screenBatch]] on the driver, or None when the batch or its store
+    * candidates exceed `graft.store.localRows`, or the doc ids are null
+    * or not integral. Candidate pairs are the distributed path's — rows
+    * sharing a hash within both PPJoin prefixes ([[NearDup.prefixLenCol]])
+    * — and each is verified with the same exact Jaccard. */
+  private def localScreen(
+      spark: SparkSession, store: DataFrame, sigs: DataFrame,
+      threshold: Double): Option[DataFrame] = {
+    val idType = sigs.schema("doc_id").dataType
+    if (!StoreCommit.isIntegral(idType)) return None
+    def sigsOf(rows: Array[Row]): Seq[Sig] = rows.toSeq.map(r => Sig(
+      r.get(0).asInstanceOf[Number].longValue, r.getString(1),
+      r.getSeq[Long](2).toArray, r.getInt(3)))
+    val cols = Seq("doc_id", "exact_h", "arr", "n_shingles").map(col)
+    val batchRows = StoreCommit.localRows(sigs.select(cols: _*)).getOrElse(return None)
+    if (batchRows.exists(_.isNullAt(0))) return None
+    val batch = sigsOf(batchRows)
+    def prefix(s: Sig): Array[Long] =
+      s.arr.take((s.n - math.ceil(threshold * s.n - 1e-9).toLong + 1).toInt)
+    val arrs = batch.filter(_.n > 0)
+    val byPrefix: Map[Long, Seq[Sig]] =
+      arrs.flatMap(s => prefix(s).distinct.map(_ -> s)).groupMap(_._1)(_._2)
+    def nearDup(a: Sig, b: Sig): Boolean = {
+      var i = 0; var j = 0; var inter = 0
+      while (i < a.arr.length && j < b.arr.length) {
+        if (a.arr(i) == b.arr(j)) { inter += 1; i += 1; j += 1 }
+        else if (a.arr(i) < b.arr(j)) i += 1
+        else j += 1
+      }
+      inter.toDouble / (a.n + b.n - inter) >= threshold
+    }
+    def partners(s: Sig): Seq[Sig] = prefix(s).distinct.toSeq.flatMap(byPrefix.getOrElse(_, Nil))
+    // ONE store scan: rows sharing an exact hash or a prefix hash
+    val hashes = batch.flatMap(s => Option(s.exactH)).distinct
+    val prefixHashes = byPrefix.keys.toSeq
+    val candidates =
+      if (hashes.isEmpty && prefixHashes.isEmpty) Seq.empty[Sig]
+      else sigsOf(StoreCommit.localRows(store.select(cols: _*).filter(
+          col("exact_h").isin(hashes: _*) ||
+            (col("n_shingles") > 0 && exists(
+              slice(col("arr"), lit(1), NearDup.prefixLenCol(col("n_shingles"), threshold)),
+              h => h.isin(prefixHashes: _*)))))
+        .getOrElse(return None))
+    val storeHashes = candidates.flatMap(s => Option(s.exactH)).toSet
+    val ndStore = candidates.filter(_.n > 0)
+      .flatMap(c => partners(c).filter(nearDup(_, c)).map(_.id)).toSet
+    val ndBatch = arrs
+      .flatMap(b => partners(b).filter(a => a.id < b.id && nearDup(a, b)).map(_ => b.id)).toSet
+    val survivors = batch.groupBy(s => Option(s.exactH)).toSeq
+      .collect { case (h, group) if !h.exists(storeHashes) => group.map(_.id).min }
+      .filterNot(id => ndStore(id) || ndBatch(id))
+      .sorted
+    Some(StoreCommit.localFrame(spark, StructType(Seq(StructField("doc_id", idType))),
+      survivors.map(id => Row(StoreCommit.boxAs(idType)(id)))))
   }
 
   // ------------------------------------------------------------------ //
@@ -257,24 +355,10 @@ object SignatureStore {
     files.result()
   }
 
-  /** Schema per store, memoized by the FIRST live file's full path:
-    * part files are immutable once committed (salted generation dirs),
-    * and a rebuilt/compacted store mints new salted paths — so the key
-    * can never alias two different schemas, and the per-call footer
-    * read schema inference pays otherwise disappears from the serve
-    * path. Durable: a store's layout is an offline-built artifact. */
-  private val schemaMemo =
-    new graft.PlanCache[org.apache.spark.sql.types.StructType](
-      capacity = 64, durable = true)
-
   private def readFiles(
       spark: SparkSession, dir: String, files: Seq[String]): DataFrame = {
     require(files.nonEmpty,
       s"$Store $dir manifest lists no files — corrupt store?")
-    val paths = files.map(f => s"$dir/$f")
-    val schema = schemaMemo.getOrCompute(
-      graft.PlanCache.Key(spark, s"$Store.schema", paths.head),
-      spark.read.parquet(paths.head).schema)
-    spark.read.schema(schema).parquet(paths: _*)
+    StoreCommit.readParquet(spark, files.map(f => s"$dir/$f"))
   }
 }

@@ -1,6 +1,9 @@
 package graft.functions
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.types._
 
 /** The store tier's one generational commit core: the versioned stores
   * ([[PairStore]], [[SignatureStore]], [[IvfIndex]]) stage, publish and
@@ -24,6 +27,12 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *     head. A loser of a racing commit throws
   *     `ConcurrentModificationException` with the store unharmed.
   *
+  * Store verbs read generations through [[readParquet]] (a memoized
+  * schema, so a read starts no Spark job) and take their batch-sized
+  * inputs through [[localRows]], under the one `graft.store.localRows`
+  * bound that decides whether a verb's batch-sized work runs on the
+  * driver.
+  *
   * '''Exclusive publish.''' HDFS `rename` onto an existing file fails
   * atomically, but POSIX rename(2) REPLACES — so on local filesystems the
   * exists-precheck + rename protocol has a residual window where a
@@ -35,8 +44,116 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   */
 private[graft] object StoreCommit {
 
-  def fsOf(spark: org.apache.spark.sql.SparkSession, dir: String): FileSystem =
+  def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  // ------------------------------------------------------------------ //
+  // batch-sized verbs: the driver-local path and its row bound
+  // ------------------------------------------------------------------ //
+
+  /** Session conf: the most rows a store verb collects to the driver to
+    * do its batch-sized work there — the reference library's eager,
+    * in-memory model, used only where an input is small by contract (a
+    * verb's batch, the stored rows that batch touches). `0` keeps every
+    * verb on the distributed path. */
+  val LocalRowsKey = "graft.store.localRows"
+  val DefaultLocalRows = 10000
+
+  /** `df`'s rows when it has at most [[LocalRowsKey]] of them, else
+    * None — one run of the frame's plan either way (a `limit` one row
+    * past the bound), so a frame above the bound is never collected
+    * whole. Always None at bound 0. */
+  def localRows(df: DataFrame): Option[Array[Row]] = {
+    val bound = df.sparkSession.conf.get(LocalRowsKey, DefaultLocalRows.toString).trim.toInt
+    require(bound >= 0, s"$LocalRowsKey must be >= 0 (0 = always distributed), got $bound")
+    if (bound == 0) None
+    else {
+      val rows = df.limit(math.min(bound, Int.MaxValue - 1) + 1).collect()
+      if (rows.length > bound) None else Some(rows)
+    }
+  }
+
+  /** The id types the driver-local paths accept: their ordering and
+    * equality on the driver (as `Long`) are Catalyst's. Other id types
+    * keep Catalyst semantics through the distributed paths. */
+  def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** `x` as a value of the integral type `t`. */
+  def boxAs(t: DataType)(x: Long): Any = t match {
+    case LongType    => x
+    case IntegerType => x.toInt
+    case ShortType   => x.toShort
+    case ByteType    => x.toByte
+    case _ => throw new IllegalArgumentException(s"not an integral type: $t")
+  }
+
+  /** A driver-local frame of `rows` (a `LocalRelation`). */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** `pmod(hash(v), modulus)` of each value of integral type `t` — the
+    * same Catalyst expression the stores bucket by, evaluated over a
+    * `LocalRelation` (folded on the driver, no job). */
+  def residues(spark: SparkSession, t: DataType, modulus: Int, values: Seq[Long]): Seq[Int] =
+    if (values.isEmpty) Seq.empty
+    else localFrame(spark, StructType(Seq(StructField("v", t))),
+        values.distinct.map(x => Row(boxAs(t)(x))))
+      .select(pmod(hash(col("v")), lit(modulus))).collect().map(_.getInt(0))
+      .distinct.sorted.toSeq
+
+  // ------------------------------------------------------------------ //
+  // reads
+  // ------------------------------------------------------------------ //
+
+  /** Schemas memoized by the FIRST path read: store generations are
+    * immutable once written (salted dirs), and a rebuilt or compacted
+    * store mints new salted paths — so the key never aliases two
+    * schemas. Durable: a store's layout is an offline-built artifact. */
+  private val schemaMemo = new graft.PlanCache[StructType](capacity = 256, durable = true)
+
+  /** Parquet `paths` (absolute, at least one) read with the memoized
+    * schema of the first. A schema-less read would start a Spark job per
+    * read to infer it from a footer; a miss here reads that footer on
+    * the driver instead ([[footerSchema]]). */
+  def readParquet(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    val schema = schemaMemo.getOrCompute(
+      graft.PlanCache.Key(spark, "StoreCommit.schema", paths.head),
+      footerSchema(spark, paths.head).getOrElse(spark.read.parquet(paths.head).schema))
+    spark.read.schema(schema).parquet(paths: _*)
+  }
+
+  /** The schema Spark infers for the parquet file or directory `path` —
+    * the Spark schema its writer stored in the first data file's footer,
+    * made nullable as file sources read it — read on the driver, or None
+    * when no footer carries one. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file =
+      if (fs.getFileStatus(p).isFile) Some(p)
+      else fs.listStatus(p).map(_.getPath)
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .sortBy(_.getName).headOption
+    file.flatMap { f =>
+      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      try Option(in.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(j => org.apache.spark.sql.graftsql.Bridge.asNullable(
+          DataType.fromJson(j).asInstanceOf[StructType]))
+      finally in.close()
+    }
+  }
+
+  // ------------------------------------------------------------------ //
+  // manifests and commits
+  // ------------------------------------------------------------------ //
 
   /** Committed manifest versions under `dir/history`. */
   def committedVersions(fs: FileSystem, dir: String): Seq[Long] = {

@@ -21,6 +21,12 @@ object Bridge {
   def toAnalyzableExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** `s` with every field and nested element nullable — the schema a
+    * file source reads a written schema as (`asNullable` is
+    * `private[spark]`). */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Block until the listener bus has delivered every queued event —
     * observability hook for SparkListener-based metrics collection
     * (`listenerBus` is `private[spark]`; without the drain, shuffle

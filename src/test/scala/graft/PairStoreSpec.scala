@@ -138,6 +138,19 @@ class PairStoreSpec extends SparkSpec {
     assert(PairStore.labels(spark, dir).as[(String, String)].collect().toMap
       == Map("acme" -> "acme", "acmee" -> "acme", "acmees" -> "acme",
         "bolt" -> "bolt", "bolts" -> "bolt", "zed" -> "zed"))
+    // string ids append and delete through the distributed path: a new
+    // variant joins "acme", then deleting "acme" splits the variant off
+    // and re-canonicalizes the rest
+    val more = Seq("acme", "acmx").toDF("term")
+    PairStore.append(Seq("acmx").toDF("term"), Fuzzy.fuzzyPairs(more, "term", 1), dir,
+      "term", "term_a", "term_b", shortcut = true)
+    assert(PairStore.labels(spark, dir).as[(String, String)].collect().toMap
+      .apply("acmx") == "acme")
+    PairStore.delete(Seq("acme").toDF("term"), dir, "term", "term_a", "term_b",
+      shortcut = true)
+    assert(PairStore.labels(spark, dir).as[(String, String)].collect().toMap
+      == Map("acmee" -> "acmee", "acmees" -> "acmee", "acmx" -> "acmx",
+        "bolt" -> "bolt", "bolts" -> "bolt", "zed" -> "zed"))
   }
 
   // ---- crash / replay durability ------------------------------------
@@ -471,7 +484,7 @@ class PairStoreSpec extends SparkSpec {
     }
   }
 
-  test("property: interleaved appends, deletes, and replays == closure over the survivors") {
+  storeTest("property: interleaved appends, deletes, and replays == closure over the survivors") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val gen = for {
@@ -655,7 +668,7 @@ class PairStoreSpec extends SparkSpec {
       "explicit recover (no writer live) reaps staging and tmp manifests")
   }
 
-  test("randomized kill-replay: writes killed in the pre-commit window " +
+  storeTest("randomized kill-replay: writes killed in the pre-commit window " +
       "(generations staged, manifest unpublished) replay to convergence; " +
       "recover+vacuum reap the crashed staging with served state unchanged") {
     // three appends + a delete — the verb mix [[PairStore.onBeforeCommit]]

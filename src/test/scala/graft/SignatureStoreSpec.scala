@@ -34,7 +34,7 @@ class SignatureStoreSpec extends SparkSpec {
 
   private def docs(sf: String) = Tables.documents(spark, sf)
 
-  test("store-backed screen equals the recompute-from-text reference") {
+  storeTest("store-backed screen equals the recompute-from-text reference") {
     val existing = docs(sf0001).filter(col("doc_id") < 30)
     val incoming = docs(sf0001).filter(col("doc_id") >= 30)
     val dir = tmp()
@@ -45,7 +45,7 @@ class SignatureStoreSpec extends SparkSpec {
     assert(want.nonEmpty && got == want)
   }
 
-  test("append grows the store batch-by-batch (second batch sees the first)") {
+  storeTest("append grows the store batch-by-batch (second batch sees the first)") {
     val base = docs(sf0001).filter(col("doc_id") < 20)
     val b1 = docs(sf0001).filter(col("doc_id") >= 20 && col("doc_id") < 35)
     val b2 = docs(sf0001).filter(col("doc_id") >= 35)
@@ -58,7 +58,7 @@ class SignatureStoreSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("short docs (< w tokens) screen exactly via the empty-array row") {
+  storeTest("short docs (< w tokens) screen exactly via the empty-array row") {
     val existing = Seq((1L, "x y"), (2L, "a b c d e")).toDF("doc_id", "text")
     val incoming = Seq((10L, "x y"), (11L, "q r"), (12L, "a b c d e f"))
       .toDF("doc_id", "text")
@@ -71,7 +71,7 @@ class SignatureStoreSpec extends SparkSpec {
     assert(got == Seq(11L))
   }
 
-  test("delete: a batch doc matching ONLY a forgotten doc is now accepted") {
+  storeTest("delete: a batch doc matching ONLY a forgotten doc is now accepted") {
     val keep = Seq((1L, "alpha beta gamma delta epsilon"))
     val forget = Seq((2L, "one two three four five six"))
     val existing = (keep ++ forget).toDF("doc_id", "text")
@@ -195,7 +195,7 @@ class SignatureStoreSpec extends SparkSpec {
     assert(gone.getMessage.contains("vacuumed"), gone.getMessage)
   }
 
-  test("compact: files fold, screening identical, vacuum reaps the old files") {
+  storeTest("compact: files fold, screening identical, vacuum reaps the old files") {
     val base = docs(sf0001).filter(col("doc_id") < 20)
     val b1 = docs(sf0001).filter(col("doc_id") >= 20 && col("doc_id") < 35)
     val b2 = docs(sf0001).filter(col("doc_id") >= 35 && col("doc_id") < 50)
@@ -234,7 +234,7 @@ class SignatureStoreSpec extends SparkSpec {
     assert(SignatureStore.stored(spark, dir).count() > 0)
   }
 
-  test("property: random append/delete interleavings screen like the surviving corpus") {
+  storeTest("property: random append/delete interleavings screen like the surviving corpus") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     // 12-token pool over 5-token docs: exact and near dups occur often

@@ -17,6 +17,38 @@ trait SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
+  /** `body` with session conf `key` set to `value`; the previous setting
+    * (or its absence) is restored after. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Registers `body` twice: as `name` at the default
+    * `graft.store.localRows` (batch-sized store work on the driver), and
+    * as `name [graft.store.localRows=0]` (every store verb distributed). */
+  def storeTest(name: String)(body: => Unit): Unit = {
+    test(name)(body)
+    test(s"$name [${functions.StoreCommit.LocalRowsKey}=0]")(
+      withConf(functions.StoreCommit.LocalRowsKey, "0")(body))
+  }
+
+  /** Spark jobs started while `body` runs (listener bus drained after). */
+  def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.sql.graftsql.Bridge.waitForListeners(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.sql.graftsql.Bridge.waitForListeners(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
+
   private var suiteStartNanos = System.nanoTime()
 
   override protected def beforeAll(): Unit = {
