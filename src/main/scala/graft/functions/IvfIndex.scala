@@ -269,7 +269,7 @@ final class IvfIndex private (
     * physical files. The quantizer stays frozen ([[appendBatch]]'s
     * contract). Superseded cell data stays on disk for pinned readers
     * until [[vacuum]]; replaying a completed delete finds no touched
-    * cell and commits nothing. Ids within `graft.store.localRows`
+    * cell and commits nothing. Ids within the driver-local row bound
     * ([[StoreCommit.localRows]]) are collected once and filter both
     * scans; a larger id set is broadcast-joined. */
   def delete(ids: DataFrame, idCol: String): Unit = {
@@ -281,7 +281,7 @@ final class IvfIndex private (
       case Some(rows) =>
         val del = rows.toSeq.filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct
         if (del.nonEmpty) {
-          val hit = col("id").isin(del: _*)
+          val hit = StoreCommit.inSet(col("id"), del)
           deleteWhere(fs, snap, _.filter(hit).select(col("cell")),
             _.filter(!coalesce(hit, lit(false))))
         }

@@ -191,11 +191,11 @@ object PairStore {
     * The one O(corpus) cost left is the label SCAN that lifts batch pair
     * endpoints onto current labels — a broadcast-batch map-side join, no
     * corpus shuffle (a node-keyed secondary index would remove even the
-    * scan; out of scope here). Append stays distributed at every
-    * `graft.store.localRows` setting: a driver-local closure leaves the
-    * touched-bucket rewrite as its only shuffle, and that rewrite grows
-    * with bucket size when a batch merges stored clusters (ScalingSpec's
-    * append gate measured 5.6× at 8× corpus against its 3× bound).
+    * scan; out of scope here). Append has no driver-local path (unlike
+    * [[delete]]): a driver-local closure leaves the touched-bucket
+    * rewrite as its only shuffle, and that rewrite grows with bucket
+    * size when a batch merges stored clusters (ScalingSpec's append gate
+    * measured 5.6× at 8× corpus against its 3× bound).
     *
     * @param newNodes     one row per NEW node (already-stored ids are
     *                     ignored)
@@ -356,19 +356,24 @@ object PairStore {
     * Cost model per delete batch: one O(corpus) label scan to locate
     * the deleted ids and one O(live pairs) columnar scan for file
     * pruning (neither shuffled), then component-sized rewrite/closure
-    * work. A batch within the `graft.store.localRows` bound
-    * ([[StoreCommit.localRows]]) with integral ids does that work on the
-    * driver: the deleted ids are collected once, the label scan finds
-    * their clusters, one bucket-addressed read collects those clusters'
+    * work. A batch with integral ids within the driver-local row bound
+    * ([[StoreCommit.localRows]]) does that work on the driver: the
+    * deleted ids are collected once, the label scan finds their
+    * clusters, one bucket-addressed read collects those clusters'
     * members, the ONE pair scan yields both the dead files and the pairs
     * among the members, and a union-find closes the survivors; the
     * writes are the survivor pairs of the dead files and the touched
     * buckets. Above the bound, or for other id types, the same steps run
     * distributed (broadcast-semi probes and
-    * [[Clusters.connectedComponents]]). The merge-on-read upgrade
-    * (deletion vectors applied at read time, folded in at compaction)
-    * trades the scans for reader-side work; file-level copy-on-write is
-    * the simpler contract and keeps every reader untouched.
+    * [[Clusters.connectedComponents]]). When the batch fits but the
+    * affected clusters' members or pairs do not (a delete from a cluster
+    * larger than the bound), the distributed path starts from the
+    * deleted ids and clusters already found, so that fallback repeats
+    * only the bucket-addressed member read and the pair scan. The
+    * merge-on-read upgrade (deletion vectors applied at read time,
+    * folded in at compaction) trades the scans for reader-side work;
+    * file-level copy-on-write is the simpler contract and keeps every
+    * reader untouched.
     *
     * Idempotent under whole-batch replay at any crash point: already-
     * deleted ids have no label row and no surviving pair, so a replay
@@ -388,48 +393,55 @@ object PairStore {
     val fs = StoreCommit.fsOf(spark, dir)
     val man = currentManifest(fs, dir)
     val change =
-      localDelete(spark, fs, dir, man, deletedNodes, nodeCol, srcCol, dstCol)
-        .getOrElse(distributedDelete(spark, fs, dir, man, deletedNodes,
-          nodeCol, srcCol, dstCol, shortcut))
+      localDelete(spark, fs, dir, man, deletedNodes, nodeCol, srcCol, dstCol) match {
+        case Right(c) => c
+        case Left(found) => distributedDelete(spark, fs, dir, man, deletedNodes, found,
+          nodeCol, srcCol, dstCol, shortcut)
+      }
     commitChange(spark, fs, dir, man, change, Int.MaxValue, () => ())
   }
 
-  /** [[delete]]'s change computed on the driver, or None — before
-    * anything is written — when the batch or the stored rows it touches
-    * exceed `graft.store.localRows`, or an id is not integral. */
+  /** [[delete]]'s change computed on the driver — or, before anything is
+    * written, Left when an id is not integral or the batch or the stored
+    * rows it touches exceed the driver-local row bound
+    * ([[StoreCommit.localRows]]). Left carries, when already found, the
+    * deleted ids and their clusters as local frames, so the distributed
+    * path does not scan the labels for them again. */
   private def localDelete(
       spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
       deletedNodes: DataFrame, nodeCol: String, srcCol: String,
-      dstCol: String): Option[Change] = {
+      dstCol: String): Either[Option[(DataFrame, DataFrame)], Change] = {
     val labels = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
       .select(col(nodeCol), col("cluster_id"))
     val pairs = readPairs(spark, dir, man.pairFiles)
     val t = labels.schema(nodeCol).dataType
     if (!sameIntegral(t, labels, pairs.select(col(srcCol), col(dstCol)),
-        deletedNodes.select(col(nodeCol)))) return None
+        deletedNodes.select(col(nodeCol)))) return Left(None)
     val box = StoreCommit.boxAs(t) _
     val del = StoreCommit.localRows(deletedNodes.select(col(nodeCol)))
-      .getOrElse(return None).toSeq.filterNot(_.isNullAt(0)).map(idAt(_, 0)).distinct
-    if (del.isEmpty) return Some(Change(man.pairFiles, Seq.empty, () => labels))
+      .getOrElse(return Left(None)).toSeq.filterNot(_.isNullAt(0)).map(idAt(_, 0)).distinct
+    if (del.isEmpty) return Right(Change(man.pairFiles, Seq.empty, () => labels))
     // the deleted ids' clusters (one labels scan; replayed or never-stored
     // ids drop out here), then those clusters' members (one
     // bucket-addressed read)
-    val affected = StoreCommit.localRows(labels.filter(col(nodeCol).isin(del.map(box): _*)))
-      .getOrElse(return None).toSeq.map(idAt(_, 1)).distinct
+    val affected = StoreCommit.localRows(labels.filter(StoreCommit.inSet(col(nodeCol), del.map(box))))
+      .getOrElse(return Left(None)).toSeq.map(idAt(_, 1)).distinct
+    lazy val found = Left(Some((idFrame(spark, nodeCol, t, del),
+      idFrame(spark, "cluster_id", t, affected))))
     val affBk = StoreCommit.residues(spark, t, man.modulus, affected)
     val members =
       if (affected.isEmpty) Seq.empty[Long]
       else StoreCommit.localRows(readLabels(spark, dir, man, affBk)
           .select(col(nodeCol), col("cluster_id"))
-          .filter(col("cluster_id").isin(affected.map(box): _*)))
-        .getOrElse(return None).toSeq.map(idAt(_, 0)).distinct
+          .filter(StoreCommit.inSet(col("cluster_id"), affected.map(box))))
+        .getOrElse(return found).toSeq.map(idAt(_, 0)).distinct
     // ONE pair scan yields both the files holding a dead pair and the
     // pairs among the affected clusters
     val reach = (members ++ del).distinct.map(box)
     val hits = StoreCommit.localRows(pairs
         .select(input_file_name().as("_file"), col(srcCol), col(dstCol))
-        .filter(col(srcCol).isin(reach: _*) || col(dstCol).isin(reach: _*)))
-      .getOrElse(return None).toSeq
+        .filter(StoreCommit.inSet(col(srcCol), reach) || StoreCommit.inSet(col(dstCol), reach)))
+      .getOrElse(return found).toSeq
     val dead = del.toSet
     def end(r: Row, i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(idAt(r, i))
     val deadAbs = hits.filter(r => end(r, 1).exists(dead) || end(r, 2).exists(dead))
@@ -449,36 +461,38 @@ object PairStore {
       if (deadFiles.isEmpty) man.pairFiles
       else {
         val gone = del.map(box)
-        def kept(c: String) = !coalesce(col(c).isin(gone: _*), lit(false))
+        def kept(c: String) = !coalesce(StoreCommit.inSet(col(c), gone), lit(false))
         man.pairFiles.filterNot(deadFiles) ++ writePairs(fs, dir,
           readPairs(spark, dir, deadFiles.toSeq.sorted).filter(kept(srcCol) && kept(dstCol)),
           man.version + 1)
       }
-    Some(Change(pairFiles, touched, () => {
+    Right(Change(pairFiles, touched, () => {
       val rest = readLabels(spark, dir, man, touched).select(col(nodeCol), col("cluster_id"))
       (if (members.isEmpty) rest
-       else rest.filter(!coalesce(col(nodeCol).isin(members.map(box): _*), lit(false))))
+       else rest.filter(!coalesce(StoreCommit.inSet(col(nodeCol), members.map(box)), lit(false))))
         .unionByName(labelFrame(spark, nodeCol, t, cc.toSeq))
     }))
   }
 
   /** [[delete]]'s change computed distributed — any batch size, any id
-    * type. */
+    * type. `found`: the distinct deleted ids and their clusters, when
+    * [[localDelete]] already found them. */
   private def distributedDelete(
       spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
-      deletedNodes: DataFrame, nodeCol: String, srcCol: String,
-      dstCol: String, shortcut: Boolean): Change = {
+      deletedNodes: DataFrame, found: Option[(DataFrame, DataFrame)],
+      nodeCol: String, srcCol: String, dstCol: String, shortcut: Boolean): Change = {
     val b = man.modulus
-    val del = deletedNodes.select(col(nodeCol)).distinct().localCheckpoint(true)
-    val old = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
-      .select(col(nodeCol), col("cluster_id"))
-    // labels of the deleted ids actually stored — batch-sized; replayed
-    // or never-stored ids drop out here (corpus scanned via a broadcast
-    // semi probe, not shuffled)
-    val delRows = old.join(broadcast(del), Seq(nodeCol), "left_semi")
-      .localCheckpoint(true)
-    val affLabels = delRows.select(col("cluster_id")).distinct()
-      .localCheckpoint(true)
+    val (del, affLabels) = found.getOrElse {
+      val del = deletedNodes.select(col(nodeCol)).distinct().localCheckpoint(true)
+      // the clusters of the deleted ids actually stored — batch-sized;
+      // replayed or never-stored ids drop out here (corpus scanned via a
+      // broadcast semi probe, not shuffled)
+      val affLabels = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
+        .join(broadcast(del), Seq(nodeCol), "left_semi")
+        .select(col("cluster_id")).distinct()
+        .localCheckpoint(true)
+      (del, affLabels)
+    }
     // file pruning: one columnar pass over the live pair files tags each
     // file holding a pair that touches a deleted id (endpoints exploded
     // against the broadcast batch — an OR-of-equalities semi would plan
@@ -530,7 +544,7 @@ object PairStore {
         .join(members.select(col(nodeCol)), Seq(nodeCol), "left_anti")
         .select(col(nodeCol), col("cluster_id"))
         .unionByName(cc),
-      () => Seq(cc, members, affLabels, delRows, del)
+      () => Seq(cc, members, affLabels, del)
         .foreach(_.unpersist(blocking = false)))
   }
 
@@ -656,6 +670,12 @@ object PairStore {
     }
     parent.keys.toSeq.map(x => x -> find(x)).toMap
   }
+
+  /** A driver-local one-column frame of `ids`, of integral type `t`. */
+  private def idFrame(
+      spark: SparkSession, name: String, t: DataType, ids: Seq[Long]): DataFrame =
+    StoreCommit.localFrame(spark, StructType(Seq(StructField(name, t))),
+      ids.map(x => Row(StoreCommit.boxAs(t)(x))))
 
   /** A driver-local `(nodeCol, cluster_id)` frame of integral type `t`. */
   private def labelFrame(

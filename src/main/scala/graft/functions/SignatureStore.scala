@@ -121,8 +121,8 @@ object SignatureStore {
     * the dead files for the new ones. Superseded files stay on disk for
     * racing readers until [[vacuum]]; a crash before the commit leaves
     * only an unreferenced generation. Replaying a completed delete is a
-    * no-op (already-deleted ids match no live file). Ids within
-    * `graft.store.localRows` ([[StoreCommit.localRows]]) and of the
+    * no-op (already-deleted ids match no live file). Ids within the
+    * driver-local row bound ([[StoreCommit.localRows]]) and of the
     * store's `doc_id` type are collected once and filter both scans; a
     * larger id set is broadcast-joined. */
   def delete(spark: SparkSession, ids: DataFrame, dir: String): Unit = {
@@ -138,7 +138,7 @@ object SignatureStore {
       case Some(rows) =>
         val del = rows.toSeq.filterNot(_.isNullAt(0)).map(_.get(0)).distinct
         if (del.nonEmpty) {
-          val hit = col("doc_id").isin(del: _*)
+          val hit = StoreCommit.inSet(col("doc_id"), del)
           deleteWhere(spark, fs, dir, v, live,
             _.filter(hit).select(col("_f")), _.filter(!coalesce(hit, lit(false))))
         }
@@ -234,77 +234,101 @@ object SignatureStore {
     * batch-exact-keeper ∧ exact hash unseen ∧ no near-dup vs store ∧ no
     * near-dup vs smaller batch id, in `doc_id` order.
     *
-    * A batch within the `graft.store.localRows` bound
-    * ([[StoreCommit.localRows]]) with integral doc ids is screened on
-    * the driver: its signatures are collected once, the exact-hash
-    * keepers and the batch-internal near-dups are computed in memory,
-    * and ONE column-pruned store scan keeps the rows whose `exact_h` is
-    * a batch hash or whose PPJoin prefix shares a hash with a batch
-    * prefix — lossless for Jaccard ≥ `threshold`, as in
-    * [[NearDup.ngramJaccardPairs]] — which are then verified exactly on
-    * the driver. The result is a local frame. Otherwise every join is
-    * distributed and batch-sized on one side; the store side is touched
+    * A batch with integral doc ids whose signatures fit the driver-local
+    * row bound ([[StoreCommit.localRows]]; signatures are collected
+    * exploded, one row per shingle hash, so the bound counts hashes, not
+    * documents) is screened on the driver: the exact-hash keepers and
+    * the batch-internal near-dups are computed in memory, and ONE
+    * column-pruned store scan keeps the rows whose `exact_h` is a batch
+    * hash or whose PPJoin prefix shares a hash with a batch prefix —
+    * lossless for Jaccard ≥ `threshold`, as in
+    * [[NearDup.ngramJaccardPairs]] — collected under the same bound and
+    * verified exactly on the driver. The result is a local frame.
+    * Otherwise every join is distributed and batch-sized on one side,
+    * over the same cached batch signatures; the store side is touched
     * via column-pruned scans and the prefix hash join only. */
   def screenBatch(
       spark: SparkSession, batch: DataFrame, dir: String,
       threshold: Double, w: Int = 3): DataFrame = {
     val store = stored(spark, dir)
-    val sigs = signatures(batch, w)
-    localScreen(spark, store, sigs, threshold).getOrElse {
-      val batchSigs = sigs.persist()
-      val keepers = batchSigs.groupBy(col("exact_h"))
-        .agg(min(col("doc_id")).as("doc_id"))
-      val afterExact = keepers
-        .join(store.select(col("exact_h")).distinct(), Seq("exact_h"), "left_anti")
-        .select(col("doc_id"))
-      val storeArrs = store
-        .select(col("doc_id"), col("arr"), col("n_shingles"))
-        .filter(col("n_shingles") > 0)
-      val batchArrs = batchSigs
-        .select(col("doc_id"), col("arr"), col("n_shingles"))
-        .filter(col("n_shingles") > 0)
-      val ndStore = NearDup
-        .acrossArrays(batchArrs, storeArrs, threshold)
-        .select(col("id_a").as("doc_id")).distinct()
-      val ndBatch = NearDup.ngramJaccardPairs(batch, threshold, w)
-        .select(col("id_b").as("doc_id")).distinct()
-      // batchSigs released once the survivor set is first materialized —
-      // an ingest loop screens many batches and must not accumulate one
-      // cached signature table per call
-      graft.AutoUnpersist.afterFirstUse(
-        afterExact
-          .join(ndStore, Seq("doc_id"), "left_anti")
-          .join(ndBatch, Seq("doc_id"), "left_anti")
-          .orderBy(col("doc_id")),
-        batchSigs)
+    val batchSigs = signatures(batch, w).persist()
+    localScreen(spark, store, batchSigs, threshold) match {
+      case Some(survivors) =>
+        batchSigs.unpersist(blocking = false)
+        survivors
+      case None =>
+        val keepers = batchSigs.groupBy(col("exact_h"))
+          .agg(min(col("doc_id")).as("doc_id"))
+        val afterExact = keepers
+          .join(store.select(col("exact_h")).distinct(), Seq("exact_h"), "left_anti")
+          .select(col("doc_id"))
+        val storeArrs = store
+          .select(col("doc_id"), col("arr"), col("n_shingles"))
+          .filter(col("n_shingles") > 0)
+        val batchArrs = batchSigs
+          .select(col("doc_id"), col("arr"), col("n_shingles"))
+          .filter(col("n_shingles") > 0)
+        val ndStore = NearDup
+          .acrossArrays(batchArrs, storeArrs, threshold)
+          .select(col("id_a").as("doc_id")).distinct()
+        val ndBatch = NearDup.ngramJaccardPairs(batch, threshold, w)
+          .select(col("id_b").as("doc_id")).distinct()
+        // batchSigs released once the survivor set is first materialized —
+        // an ingest loop screens many batches and must not accumulate one
+        // cached signature table per call
+        graft.AutoUnpersist.afterFirstUse(
+          afterExact
+            .join(ndStore, Seq("doc_id"), "left_anti")
+            .join(ndBatch, Seq("doc_id"), "left_anti")
+            .orderBy(col("doc_id")),
+          batchSigs)
     }
   }
 
-  /** One signature row on the driver. */
-  private final case class Sig(id: Long, exactH: String, arr: Array[Long], n: Int)
+  /** One signature on the driver. */
+  private final case class Sig(id: Long, exactH: String, arr: Array[Long])
 
-  /** [[screenBatch]] on the driver, or None when the batch or its store
-    * candidates exceed `graft.store.localRows`, or the doc ids are null
-    * or not integral. Candidate pairs are the distributed path's — rows
-    * sharing a hash within both PPJoin prefixes ([[NearDup.prefixLenCol]])
-    * — and each is verified with the same exact Jaccard. */
+  /** [[screenBatch]] on the driver, or None when the batch's or its
+    * store candidates' signatures exceed the driver-local row bound, or
+    * the doc ids are null or not integral. Candidate pairs are the
+    * distributed path's — rows sharing a hash within both PPJoin
+    * prefixes ([[NearDup.prefixLenCol]]) — and each is verified with the
+    * same exact Jaccard. */
   private def localScreen(
-      spark: SparkSession, store: DataFrame, sigs: DataFrame,
+      spark: SparkSession, store: DataFrame, batchSigs: DataFrame,
       threshold: Double): Option[DataFrame] = {
-    val idType = sigs.schema("doc_id").dataType
+    val idType = batchSigs.schema("doc_id").dataType
     if (!StoreCommit.isIntegral(idType)) return None
-    def sigsOf(rows: Array[Row]): Seq[Sig] = rows.toSeq.map(r => Sig(
-      r.get(0).asInstanceOf[Number].longValue, r.getString(1),
-      r.getSeq[Long](2).toArray, r.getInt(3)))
-    val cols = Seq("doc_id", "exact_h", "arr", "n_shingles").map(col)
-    val batchRows = StoreCommit.localRows(sigs.select(cols: _*)).getOrElse(return None)
-    if (batchRows.exists(_.isNullAt(0))) return None
+    // signatures collected exploded — one row per hash, its position
+    // first (an empty array yields one null-position row) — and regrouped
+    // in collect order: a signature's rows arrive consecutively and in
+    // array order, so each position 0 (or null) starts the next one
+    def exploded(sigs: DataFrame): DataFrame = sigs.select(col("doc_id"), col("exact_h"),
+      posexplode_outer(col("arr")).as(Seq("pos", "h")))
+    def sigsOf(rows: Array[Row]): Seq[Sig] = {
+      val starts = rows.indices.filter(i => rows(i).isNullAt(2) || rows(i).getInt(2) == 0)
+      (starts :+ rows.length).sliding(2).collect { case Seq(lo, hi) =>
+        val r = rows(lo)
+        Sig(r.get(0).asInstanceOf[Number].longValue, r.getString(1),
+          rows.slice(lo, hi).filterNot(_.isNullAt(3)).map(_.getLong(3)))
+      }.toSeq
+    }
+    // sized by one aggregate before anything is collected; it also fills
+    // the signature cache the distributed path reads when this is over
+    // the bound
+    val sized = batchSigs.agg(count(lit(1)), count(col("doc_id")),
+      coalesce(sum(greatest(size(col("arr")), lit(1))), lit(0L))).head
+    if (sized.getLong(0) != sized.getLong(1)) return None // a null doc id
+    if (!StoreCommit.fitsLocal(sized.getLong(2))) return None
+    val batchRows = exploded(batchSigs).collect()
     val batch = sigsOf(batchRows)
-    def prefix(s: Sig): Array[Long] =
-      s.arr.take((s.n - math.ceil(threshold * s.n - 1e-9).toLong + 1).toInt)
-    val arrs = batch.filter(_.n > 0)
+    def prefix(s: Sig): Array[Long] = {
+      val n = s.arr.length
+      s.arr.take((n - math.ceil(threshold * n - 1e-9).toLong + 1).toInt)
+    }
+    val arrs = batch.filter(_.arr.nonEmpty)
     val byPrefix: Map[Long, Seq[Sig]] =
-      arrs.flatMap(s => prefix(s).distinct.map(_ -> s)).groupMap(_._1)(_._2)
+      arrs.flatMap(s => prefix(s).map(_ -> s)).groupMap(_._1)(_._2)
     def nearDup(a: Sig, b: Sig): Boolean = {
       var i = 0; var j = 0; var inter = 0
       while (i < a.arr.length && j < b.arr.length) {
@@ -312,22 +336,22 @@ object SignatureStore {
         else if (a.arr(i) < b.arr(j)) i += 1
         else j += 1
       }
-      inter.toDouble / (a.n + b.n - inter) >= threshold
+      inter.toDouble / (a.arr.length + b.arr.length - inter) >= threshold
     }
-    def partners(s: Sig): Seq[Sig] = prefix(s).distinct.toSeq.flatMap(byPrefix.getOrElse(_, Nil))
+    def partners(s: Sig): Seq[Sig] = prefix(s).toSeq.flatMap(byPrefix.getOrElse(_, Nil))
     // ONE store scan: rows sharing an exact hash or a prefix hash
     val hashes = batch.flatMap(s => Option(s.exactH)).distinct
     val prefixHashes = byPrefix.keys.toSeq
     val candidates =
       if (hashes.isEmpty && prefixHashes.isEmpty) Seq.empty[Sig]
-      else sigsOf(StoreCommit.localRows(store.select(cols: _*).filter(
-          col("exact_h").isin(hashes: _*) ||
+      else sigsOf(StoreCommit.localRows(exploded(store.filter(
+          StoreCommit.inSet(col("exact_h"), hashes) ||
             (col("n_shingles") > 0 && exists(
               slice(col("arr"), lit(1), NearDup.prefixLenCol(col("n_shingles"), threshold)),
-              h => h.isin(prefixHashes: _*)))))
+              h => StoreCommit.inSet(h, prefixHashes))))))
         .getOrElse(return None))
     val storeHashes = candidates.flatMap(s => Option(s.exactH)).toSet
-    val ndStore = candidates.filter(_.n > 0)
+    val ndStore = candidates.filter(_.arr.nonEmpty)
       .flatMap(c => partners(c).filter(nearDup(_, c)).map(_.id)).toSet
     val ndBatch = arrs
       .flatMap(b => partners(b).filter(a => a.id < b.id && nearDup(a, b)).map(_ => b.id)).toSet

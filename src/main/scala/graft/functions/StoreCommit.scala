@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.apache.spark.sql.types._
 
@@ -29,9 +29,9 @@ import org.apache.spark.sql.types._
   *
   * Store verbs read generations through [[readParquet]] (a memoized
   * schema, so a read starts no Spark job) and take their batch-sized
-  * inputs through [[localRows]], under the one `graft.store.localRows`
-  * bound that decides whether a verb's batch-sized work runs on the
-  * driver.
+  * inputs through [[localRows]], under the one row bound
+  * ([[LocalRows]]) that decides whether a verb's batch-sized work runs
+  * on the driver.
   *
   * '''Exclusive publish.''' HDFS `rename` onto an existing file fails
   * atomically, but POSIX rename(2) REPLACES — so on local filesystems the
@@ -51,27 +51,47 @@ private[graft] object StoreCommit {
   // batch-sized verbs: the driver-local path and its row bound
   // ------------------------------------------------------------------ //
 
-  /** Session conf: the most rows a store verb collects to the driver to
-    * do its batch-sized work there — the reference library's eager,
-    * in-memory model, used only where an input is small by contract (a
-    * verb's batch, the stored rows that batch touches). `0` keeps every
-    * verb on the distributed path. */
-  val LocalRowsKey = "graft.store.localRows"
-  val DefaultLocalRows = 10000
+  /** The most rows a store verb collects to the driver to do its
+    * batch-sized work there — the reference library's eager, in-memory
+    * model, used only where an input is small by contract (a verb's
+    * batch, the stored rows that batch touches). A row is a few ids, or
+    * ONE shingle hash of a signature (the screen collects signatures
+    * exploded), so the bound caps what a verb holds on the driver, and
+    * the literal sets it filters store scans with, at 10,000 small rows
+    * (a few MB), whatever the document lengths. */
+  val LocalRows = 10000
 
-  /** `df`'s rows when it has at most [[LocalRowsKey]] of them, else
+  /** Test seam: the bound [[localRows]] applies; 0 keeps every verb on
+    * its distributed path. [[LocalRows]] in production. */
+  @volatile private[graft] var localRowsBound: Int = LocalRows
+
+  /** `df`'s rows when it has at most [[localRowsBound]] of them, else
     * None — one run of the frame's plan either way (a `limit` one row
     * past the bound), so a frame above the bound is never collected
     * whole. Always None at bound 0. */
   def localRows(df: DataFrame): Option[Array[Row]] = {
-    val bound = df.sparkSession.conf.get(LocalRowsKey, DefaultLocalRows.toString).trim.toInt
-    require(bound >= 0, s"$LocalRowsKey must be >= 0 (0 = always distributed), got $bound")
-    if (bound == 0) None
+    val bound = localRowsBound
+    if (bound <= 0) None
     else {
-      val rows = df.limit(math.min(bound, Int.MaxValue - 1) + 1).collect()
+      val rows = df.limit(bound + 1).collect()
       if (rows.length > bound) None else Some(rows)
     }
   }
+
+  /** Whether `n` rows fit the bound [[localRows]] applies — for a verb
+    * that sizes a frame before collecting it. */
+  def fitsLocal(n: Long): Boolean = localRowsBound > 0 && n <= localRowsBound
+
+  /** `c IN values`, built as Catalyst's `InSet` directly. An `isin`
+    * over thousands of literals makes the analyzer and optimizer walk
+    * every literal child before folding them into this same set, which
+    * cost more than the driver-local delete saved at a few thousand ids.
+    * `values`: Scala values of `c`'s type, no nulls. */
+  def inSet(c: Column, values: Seq[Any]): Column =
+    org.apache.spark.sql.graftsql.Bridge.toColumn(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.graftsql.Bridge.toExpression(c),
+        values.map(org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst).toSet))
 
   /** The id types the driver-local paths accept: their ordering and
     * equality on the driver (as `Long`) are Catalyst's. Other id types

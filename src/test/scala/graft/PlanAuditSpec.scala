@@ -14,12 +14,27 @@ class PlanAuditSpec extends SparkSpec {
     "sim_topk"
   )
 
-  /** Every registered key's DataFrame built ONCE, and the one plan the
-    * warm audits below check (the cold-cache shuffle audit keeps its own
+  /** The keys served by [[functions.SignatureStore.screenBatch]], whose
+    * batch is screened on the driver when its signatures fit the
+    * driver-local row bound: their plans with every store verb
+    * distributed (bound 0) are audited as `<key> [distributed]` too, so
+    * the distributed screen stays audited whatever the bound picks. */
+  private val storeScreenKeys = Set("dedup_incremental_store", "dedup_incremental_deleted")
+
+  /** Every registered key, then each store-screen key again with every
+    * store verb distributed: (audited name, the key's DataFrame built
+    * under that setting). */
+  private def sweep(): Seq[(String, () => org.apache.spark.sql.DataFrame)] =
+    Queries.all.map(q => q.name -> (() => q.fn(spark, sf0001))) ++
+      Queries.all.filter(q => storeScreenKeys(q.name)).map(q =>
+        s"${q.name} [distributed]" -> (() => withLocalRows(0)(q.fn(spark, sf0001))))
+
+  /** Every swept key's DataFrame built ONCE, and the one plan the warm
+    * audits below check (the cold-cache shuffle audit keeps its own
     * pass: it clears the shared caches before each key). */
-  private lazy val audited: Seq[Audited] = Queries.all.map { q =>
-    val df = q.fn(spark, sf0001)
-    Audited(q.name, df.queryExecution.executedPlan.toString(),
+  private lazy val audited: Seq[Audited] = sweep().map { case (name, build) =>
+    val df = build()
+    Audited(name, df.queryExecution.executedPlan.toString(),
       // sparkPlan (pre-AQE): WindowExec nodes are direct tree children,
       // not hidden behind an AdaptiveSparkPlanExec boundary
       df.queryExecution.sparkPlan.collect {
@@ -231,16 +246,16 @@ class PlanAuditSpec extends SparkSpec {
       // shuffle over domain-count-sized frames past the LM.
       else if (name == "mixture_epochs") 12
       else 6
-    val offenders = Queries.all.flatMap { q =>
+    val offenders = sweep().flatMap { case (name, build) =>
       // cold caches per query (the Bench convention): a shared
       // intermediate warmed by an earlier query would collapse a later
       // query's pipeline into an InMemoryRelation and make the audited
       // shuffle count depend on sweep order.
       PlanCache.clearShared()
       spark.catalog.clearCache()
-      val p = q.fn(spark, sf0001).queryExecution.executedPlan.toString()
+      val p = build().queryExecution.executedPlan.toString()
       val n = exchangeId.findAllMatchIn(p).map(_.group(1)).toSet.size
-      if (n > cap(q.name)) Some(s"${q.name}($n)") else None
+      if (n > cap(name.stripSuffix(" [distributed]"))) Some(s"$name($n)") else None
     }
     assert(offenders.isEmpty, s"shuffle-heavy plans: $offenders")
   }

@@ -316,7 +316,10 @@ class ScalingSpec extends SparkSpec {
         "append cost must track the batch, not the corpus")
   }
 
-  test("pair-store delete: shuffle bytes stay batch-proportional as the stored corpus grows 8x") {
+  // registered at both bounds: at the production bound this 6-id batch
+  // runs the driver-local delete, and the "[distributed]" copy keeps the
+  // gate on the distributed closure
+  storeTest("pair-store delete: shuffle bytes stay batch-proportional as the stored corpus grows 8x") {
     import graft.functions.PairStore
     // same synthetic store shape as the append gate; the delete batch is
     // CONSTANT (6 copy-0 pair endpoints → 6 affected clusters), so the

@@ -17,22 +17,22 @@ trait SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  /** `body` with session conf `key` set to `value`; the previous setting
-    * (or its absence) is restored after. */
-  def withConf[T](key: String, value: String)(body: => T): T = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
+  /** `body` with the store verbs' driver-local row bound
+    * ([[functions.StoreCommit.localRowsBound]]) set to `bound`; 0 keeps
+    * every verb distributed. The previous bound is restored after. */
+  def withLocalRows[T](bound: Int)(body: => T): T = {
+    val old = functions.StoreCommit.localRowsBound
+    functions.StoreCommit.localRowsBound = bound
     try body
-    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    finally functions.StoreCommit.localRowsBound = old
   }
 
-  /** Registers `body` twice: as `name` at the default
-    * `graft.store.localRows` (batch-sized store work on the driver), and
-    * as `name [graft.store.localRows=0]` (every store verb distributed). */
+  /** Registers `body` twice: as `name` at the production bound
+    * (batch-sized store work on the driver), and as `name [distributed]`
+    * (every store verb distributed). */
   def storeTest(name: String)(body: => Unit): Unit = {
     test(name)(body)
-    test(s"$name [${functions.StoreCommit.LocalRowsKey}=0]")(
-      withConf(functions.StoreCommit.LocalRowsKey, "0")(body))
+    test(s"$name [distributed]")(withLocalRows(0)(body))
   }
 
   /** Spark jobs started while `body` runs (listener bus drained after). */

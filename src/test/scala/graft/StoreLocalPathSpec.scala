@@ -4,17 +4,18 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{NearDup, PairStore, SignatureStore, StoreCommit}
 
-/** The store verbs' driver-local path (`graft.store.localRows`): a
-  * batch within the bound must leave exactly the store the distributed
-  * path leaves, in fewer Spark jobs, and a warm store's readers start no
-  * job at all. */
+/** The store verbs' driver-local path ([[StoreCommit.localRows]]): a
+  * batch within the row bound must leave exactly the store the
+  * distributed path leaves, in fewer Spark jobs; a batch or touched set
+  * above it must fall back to the same result; and a store's readers
+  * start no job at all. */
 class StoreLocalPathSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft_store_local_spec").toString
 
-  private def distributed[T](body: => T): T = withConf(StoreCommit.LocalRowsKey, "0")(body)
+  private def distributed[T](body: => T): T = withLocalRows(0)(body)
 
   private def pairsFor(batch: DataFrame, ingested: DataFrame): DataFrame =
     NearDup.ngramJaccardAcross(batch, ingested, 0.5)
@@ -40,7 +41,7 @@ class StoreLocalPathSpec extends SparkSpec {
       SignatureStore.screenBatch(spark, probe, s._2, 0.5).as[Long].collect().toSeq)
     def check(step: String): Unit = {
       val (l, d) = (state(local), distributed(state(dist)))
-      assert(l == d, s"after $step: default-setting store != localRows=0 store")
+      assert(l == d, s"after $step: driver-local store != distributed store")
     }
 
     var live = (0L until 12L).toVector
@@ -81,8 +82,8 @@ class StoreLocalPathSpec extends SparkSpec {
     }
   }
 
-  test("delete and screenBatch at the default setting start at most half " +
-      "the Spark jobs of localRows=0") {
+  test("delete and screenBatch at the production bound start at most half " +
+      "the Spark jobs of the distributed path") {
     val docs = Tables.documents(spark, sf0001)
     def slice(lo: Long, hi: Long) = docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
     val (base, batch, probe) = (slice(0, 60), slice(60, 70), slice(70, 90))
@@ -103,9 +104,10 @@ class StoreLocalPathSpec extends SparkSpec {
     // distributed side
     val local = jobs()
     val dist = distributed(jobs())
+    info(s"Spark jobs, driver-local vs distributed: $local vs $dist")
     for (verb <- Seq("delete", "screenBatch"))
       assert(2 * local(verb) <= dist(verb),
-        s"$verb: ${local(verb)} jobs at the default setting vs ${dist(verb)} at localRows=0")
+        s"$verb: ${local(verb)} jobs driver-local vs ${dist(verb)} distributed")
   }
 
   test("on a warm store, constructing PairStore.labels, PairStore.pairs and " +
@@ -128,13 +130,50 @@ class StoreLocalPathSpec extends SparkSpec {
       assert(df.schema == spark.read.parquet(df.inputFiles.head).schema)
   }
 
-  test("localRows: the bound is honoured and a negative setting is refused") {
+  test("above the bound, delete and screenBatch fall back to the distributed " +
+      "path's result") {
+    def sameAsDistributed[T](what: String)(op: => T): Unit = {
+      val (small, dist) = (withLocalRows(8)(op), distributed(op))
+      assert(small == dist, s"$what: bound-8 result != distributed result")
+    }
+    // a 30-member star (hub 0, two extra leaf pairs) and a 6-clique
+    // (40..45, 15 pairs): deleting the hub fits the bound but its
+    // cluster's members do not; deleting a clique node fits members but
+    // not the pairs among them
+    val nodes = (0L until 46L).toDF("id")
+    val star = (1L until 30L).map((0L, _)) ++ Seq((1L, 2L), (3L, 4L))
+    val clique = for (a <- 40L to 45L; b <- a + 1 to 45L) yield (a, b)
+    val dirs = Seq(tmpDir(), tmpDir())
+    def pairStore(dir: String): (Seq[(Long, Long)], Seq[(Long, Long)]) = (
+      PairStore.labels(spark, dir).as[(Long, Long)].collect().sorted.toSeq,
+      PairStore.pairs(spark, dir).select("id_a", "id_b").as[(Long, Long)]
+        .collect().sorted.toSeq)
+    for (dir <- dirs)
+      PairStore.build(nodes, (star ++ clique).toDF("id_a", "id_b"), dir, "id", "id_a", "id_b")
+    for (del <- Seq(Seq(0L), Seq(41L))) {
+      withLocalRows(8)(PairStore.delete(del.toDF("id"), dirs(0), "id", "id_a", "id_b"))
+      distributed(PairStore.delete(del.toDF("id"), dirs(1), "id", "id_a", "id_b"))
+      assert(pairStore(dirs(0)) == pairStore(dirs(1)), s"after deleting $del")
+    }
+    // screens: a 4-doc batch (12 hashes) over the bound, and a 1-doc batch
+    // whose 20 exact-duplicate store candidates (40 rows) are over it
+    val sigDir = tmpDir()
+    SignatureStore.build(
+      ((0L until 20L).map((_, "a b c d")) ++ Seq((20L, "p q r s"))).toDF("doc_id", "text"),
+      sigDir)
+    val wide = Seq((100L, "a b c d e"), (101L, "p q r s t"), (102L, "u v w x y"),
+      (103L, "u v w x z")).toDF("doc_id", "text")
+    val dup = Seq((200L, "a b c d")).toDF("doc_id", "text")
+    for ((name, batch) <- Seq("wide batch" -> wide, "duplicated candidates" -> dup))
+      sameAsDistributed(name)(
+        SignatureStore.screenBatch(spark, batch, sigDir, 0.5).as[Long].collect().toSeq)
+  }
+
+  test("localRows: a frame is returned up to the bound, never above it or at 0") {
     val df = spark.range(5).toDF("x")
-    assert(withConf(StoreCommit.LocalRowsKey, "5")(StoreCommit.localRows(df)).map(_.length)
-      .contains(5))
-    assert(withConf(StoreCommit.LocalRowsKey, "4")(StoreCommit.localRows(df)).isEmpty)
+    assert(withLocalRows(5)(StoreCommit.localRows(df)).map(_.length).contains(5))
+    assert(withLocalRows(4)(StoreCommit.localRows(df)).isEmpty)
     assert(distributed(StoreCommit.localRows(df)).isEmpty)
-    intercept[IllegalArgumentException](
-      withConf(StoreCommit.LocalRowsKey, "-1")(StoreCommit.localRows(df)))
+    assert(StoreCommit.localRowsBound == StoreCommit.LocalRows)
   }
 }
