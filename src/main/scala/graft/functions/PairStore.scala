@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Persisted near-dup pair + cluster-label store — the build-once-serve-
   * many artifact for the whole dedup family. Pair finding (shingle/LSH/
@@ -27,28 +27,52 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *     (auto-triggered past `maxPairFiles`).
   *   - `labels_g<v>.<salt>/cbucket=<b>/` — salted label generations
   *     holding `(nodeCol, cluster_id)` rows node-sorted, one leaf per
-  *     cluster-residue bucket `b = pmod(hash(cluster_id), modulus)`. An
-  *     [[append]] or [[delete]] writes ONLY the buckets holding merged,
-  *     split or fresh clusters — never the corpus table. Readers address
-  *     the live leaves directly, as [[IvfIndex]] reads its cells, so the
-  *     bucket column never reaches them.
+  *     cluster-residue bucket `b = pmod(hash(cluster_id), modulus)`: the
+  *     rows of cluster `c` live only in bucket `pmod(hash(c), modulus)`.
+  *     A bucket is a list of leaves — a base leaf plus DELTA leaves. A
+  *     driver-local [[append]] or [[delete]] writes only the rows whose
+  *     label changed, as one delta generation; the distributed paths
+  *     (above the row bound, or non-integral ids) rewrite the touched
+  *     buckets whole, into one leaf each. Readers address the live leaves
+  *     directly, as [[IvfIndex]] reads its cells, so the bucket column
+  *     never reaches them.
+  *   - TOMBSTONES `(cluster_id, version)`, kept in the manifest: a row in
+  *     a leaf of generation `g` is live unless its `cluster_id` carries a
+  *     tombstone newer than `g`. A verb that relabels a cluster's rows
+  *     tombstones the old label and writes the rows again under their new
+  *     labels, so no bucket is read or rewritten for it. A tombstone is
+  *     versioned because a label can come back: a delete may
+  *     re-canonicalize survivors onto a label tombstoned earlier, and
+  *     those rows are newer than that tombstone. Readers apply the
+  *     tombstones as one `InSet` per tombstone version, in the filter of
+  *     one scan (no join, no shuffle).
+  *   - the FOLD: a commit that would leave a bucket with more than
+  *     [[MaxLeaves]] leaves, or tombstones, rewrites that bucket into one
+  *     leaf in the same version — the whole-bucket rewrite of the
+  *     distributed paths, amortized over [[MaxLeaves]] deltas as the pair
+  *     files' `maxPairFiles` compaction is. A tombstone leaves the
+  *     manifest once its bucket holds no leaf older than it.
   *   - `history/v<N>` — the version-N MANIFEST: the residue modulus
-  *     (fixed at [[build]]), the complete bucket→generation map and the
-  *     complete pair-file list. Publishing it through
+  *     (fixed at [[build]]), the complete bucket→leaves map, the live
+  *     tombstones and the complete pair-file list. Publishing it through
   *     [[StoreCommit.commitManifest]] IS the commit: readers resolve every
-  *     path through it.
+  *     path through it. A manifest written before delta leaves existed
+  *     (one `bucket` line per bucket, no tombstone) reads as single-leaf
+  *     buckets.
   *
   * '''Crash model.''' The manifest publish is the single commit point.
   * Data staged for an uncommitted version is unreachable garbage — no
   * manifest references it — so [[recover]] deletes the generations
   * staged above the last committed manifest and [[vacuum]] every
-  * unreferenced one; there is no journal replay. [[append]] is
-  * idempotent under whole-batch replay, including replay after a crash
-  * at ANY point: the quotient edges derive from the FULL delivered batch
-  * lifted onto current labels (already-merged pairs lift to `label ==
-  * label` and drop out), and a crashed delivery's pair generation is in
-  * no manifest, so the replay converges to the same store as a clean
-  * run.
+  * unreferenced one; there is no journal replay. Tombstones live only in
+  * the manifest, so they commit atomically with the delta leaves that
+  * carry the rows they hide: a crash leaves neither visible. [[append]]
+  * is idempotent under whole-batch replay, including replay after a crash
+  * at ANY point (in a folding commit too): the quotient edges derive
+  * from the FULL delivered batch lifted onto current labels
+  * (already-merged pairs lift to `label == label` and drop out), and a
+  * crashed delivery's pair and label generations are in no manifest, so
+  * the replay converges to the same store as a clean run.
   *
   * '''Snapshots.''' Because data files are immutable and manifests are
   * self-contained, [[snapshot]] pins a consistent (pairs, labels) view
@@ -88,6 +112,13 @@ object PairStore {
     * Spark's listing hides `_` paths). */
   private val BucketCol = "cbucket"
 
+  /** The fold threshold: the most leaves, and the most tombstones, a
+    * bucket keeps after a commit. Past it the commit rewrites the bucket
+    * into one leaf, so a reader opens at most this many leaves per
+    * bucket and a manifest holds at most this many tombstones per
+    * bucket. */
+  private[graft] val MaxLeaves = 8
+
   /** Test seam: invoked by [[append]] immediately before its manifest
     * commit, so PairStoreSpec can interleave a full competing append at
     * exactly the CAS window, deterministically and single-threaded.
@@ -112,20 +143,23 @@ object PairStore {
   final case class Snapshot(version: Long, pairs: DataFrame, labels: DataFrame)
 
   /** The complete state of one committed version. `buckets` maps each
-    * live cluster-residue bucket to the label generation that holds it;
-    * `pairFiles` is the full pair-file list (paths relative to the store
-    * root). Small by construction: ≤ modulus bucket lines plus one line
-    * per pair file (compaction keeps that bounded). */
+    * live cluster-residue bucket to its label generations, oldest first
+    * (one leaf each); `tombstones` maps a cluster id to its bucket and
+    * the version that tombstoned it; `pairFiles` is the full pair-file
+    * list (paths relative to the store root). Small by construction: at
+    * most [[MaxLeaves]] leaf lines and tombstone lines per bucket plus
+    * one line per pair file (compaction keeps that bounded). */
   private final case class Manifest(
-      version: Long, modulus: Int, buckets: Map[Int, String],
-      pairFiles: Seq[String]) {
-    def leaf(bk: Int): Option[String] =
-      buckets.get(bk).map(g => s"$g/$BucketCol=$bk")
+      version: Long, modulus: Int, buckets: Map[Int, Seq[String]],
+      tombstones: Map[Long, (Int, Long)], pairFiles: Seq[String]) {
+    def leaves(bk: Int): Seq[String] =
+      buckets.getOrElse(bk, Seq.empty).map(g => s"$g/$BucketCol=$bk")
     /** Everything this version reads — what its commit verifies and what
       * vacuum keeps while it is retained. */
-    def paths: Seq[String] = buckets.keys.toSeq.sorted.flatMap(leaf) ++ pairFiles
+    def paths: Seq[String] = buckets.keys.toSeq.sorted.flatMap(leaves) ++ pairFiles
     def lines: Seq[String] = s"modulus $modulus" +:
-      (buckets.toSeq.sorted.map { case (bk, g) => s"bucket $bk $g" } ++
+      (buckets.toSeq.sortBy(_._1).flatMap { case (bk, gs) => gs.map(g => s"bucket $bk $g") } ++
+        tombstones.toSeq.sorted.map { case (c, (bk, w)) => s"tombstone $bk $c $w" } ++
         pairFiles.sorted.map(f => s"pairfile $f"))
   }
 
@@ -165,37 +199,44 @@ object PairStore {
       nodes.select(col(nodeCol)), readPairs(spark, dir, pairFiles),
       nodeCol, srcCol, dstCol, shortcut = shortcut)
     commit(fs, dir, Manifest(0L, buckets,
-      writeLabels(fs, dir, labels, buckets, 0L), pairFiles))
+      writeLabels(fs, dir, labels, buckets, 0L).map { case (bk, g) => bk -> Seq(g) },
+      Map.empty, pairFiles))
   }
 
   /** Incrementally extend the store with a batch: append the batch's
-    * verified pairs and commit new label-bucket generations WITHOUT
-    * recomputing the closure over the full corpus. Existing clusters
-    * collapse to SUPER-NODES: each delivered pair (a, b) becomes an
-    * edge between the CURRENT labels of a and b (new nodes label
-    * themselves), so the quotient graph has one node per touched
-    * cluster or new doc and one edge per new pair — connected
-    * components over it costs O(batch pairs), not O(corpus pairs).
-    * Because every label is its cluster's MINIMUM member id, the min
-    * label of a merged super-node set is the merged cluster's true
-    * minimum member — the canonical-id invariant survives, and the
-    * result is row-identical to a full rebuild (pinned by PairStoreSpec
-    * and the `dedup_clusters_incr` oracle).
+    * verified pairs and commit the changed labels WITHOUT recomputing the
+    * closure over the full corpus. Existing clusters collapse to
+    * SUPER-NODES: each delivered pair (a, b) becomes an edge between the
+    * CURRENT labels of a and b (new nodes label themselves), so the
+    * quotient graph has one node per touched cluster or new doc and one
+    * edge per new pair — connected components over it costs O(batch
+    * pairs), not O(corpus pairs). Because every label is its cluster's
+    * MINIMUM member id, the min label of a merged super-node set is the
+    * merged cluster's true minimum member — the canonical-id invariant
+    * survives, and the result is row-identical to a full rebuild (pinned
+    * by PairStoreSpec and the `dedup_clusters_incr` oracle).
     *
-    * Only the TOUCHED buckets get a new generation: those holding rows
-    * of merging clusters (old residue), receiving merged labels (new
-    * residue), or receiving fresh nodes. A pure-growth batch writes the
-    * fresh nodes' buckets; a full replay of a completed batch commits
-    * nothing at all.
+    * A batch with integral ids within the driver-local row bound
+    * ([[StoreCommit.localRows]]) runs on the driver: the batch pairs and
+    * nodes are collected once, one filtered scan each of the stored pairs
+    * and labels yields the fresh pairs, the fresh nodes and the endpoint
+    * labels, a union-find closes the quotient graph, and one
+    * bucket-addressed read collects the members of the stored clusters
+    * merged away. The commit writes the fresh pairs, ONE delta generation
+    * holding the fresh nodes and the relabelled members, and tombstones
+    * for the merged-away labels — writes proportional to the rows whose
+    * label changed, whatever the bucket sizes. Above the bound (the batch,
+    * or the members it merges), or for other id types, the same steps run
+    * distributed (broadcast-semi probes and
+    * [[Clusters.connectedComponents]]) and rewrite whole the buckets rows
+    * move out of (stored clusters merged away) or into (merged labels,
+    * fresh nodes' final labels). A full replay of a completed batch
+    * commits nothing on either path.
     *
     * The one O(corpus) cost left is the label SCAN that lifts batch pair
-    * endpoints onto current labels — a broadcast-batch map-side join, no
-    * corpus shuffle (a node-keyed secondary index would remove even the
-    * scan; out of scope here). Append has no driver-local path (unlike
-    * [[delete]]): a driver-local closure leaves the touched-bucket
-    * rewrite as its only shuffle, and that rewrite grows with bucket
-    * size when a batch merges stored clusters (ScalingSpec's append gate
-    * measured 5.6× at 8× corpus against its 3× bound).
+    * endpoints onto current labels — a filtered scan, no corpus shuffle
+    * (a node-keyed secondary index would remove even the scan; out of
+    * scope here).
     *
     * @param newNodes     one row per NEW node (already-stored ids are
     *                     ignored)
@@ -231,14 +272,90 @@ object PairStore {
     // recover()/vacuum() run when no writer is live.
     val fs = StoreCommit.fsOf(spark, dir)
     val man = currentManifest(fs, dir)
-    commitChange(spark, fs, dir, man,
-      appendChange(spark, fs, dir, man, newNodes, newPairs, nodeCol, srcCol, dstCol, shortcut),
-      maxPairFiles, () => onBeforeAppendCommit())
+    val change =
+      localAppend(spark, fs, dir, man, newNodes, newPairs, nodeCol, srcCol, dstCol)
+        .getOrElse(distributedAppend(spark, fs, dir, man, newNodes, newPairs,
+          nodeCol, srcCol, dstCol, shortcut))
+    commitChange(spark, fs, dir, man, change, maxPairFiles, () => onBeforeAppendCommit())
   }
 
-  /** [[append]]'s change: the screens and the quotient closure, run
-    * distributed. */
-  private def appendChange(
+  /** [[append]]'s change computed on the driver — or, before anything is
+    * written, None when an id is not integral or the batch or the stored
+    * rows it touches exceed the driver-local row bound
+    * ([[StoreCommit.localRows]]). */
+  private def localAppend(
+      spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
+      newNodes: DataFrame, newPairs: DataFrame, nodeCol: String, srcCol: String,
+      dstCol: String): Option[Change] = {
+    val labels = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
+      .select(col(nodeCol), col("cluster_id"))
+    val pairs = readPairs(spark, dir, man.pairFiles)
+    val t = labels.schema(nodeCol).dataType
+    if (!sameIntegral(t, labels, pairs.select(col(srcCol), col(dstCol)),
+        newNodes.select(col(nodeCol)), newPairs.select(col(srcCol), col(dstCol)))) return None
+    val box = StoreCommit.boxAs(t) _
+    val batch = StoreCommit.localRows(newPairs).getOrElse(return None).toSeq
+    val nodes = StoreCommit.localRows(newNodes.select(col(nodeCol)))
+      .getOrElse(return None).toSeq.filterNot(_.isNullAt(0)).map(idAt(_, 0)).distinct
+    val (si, di) = (newPairs.schema.fieldIndex(srcCol), newPairs.schema.fieldIndex(dstCol))
+    val ends = batch.map(r => (end(r, si), end(r, di)))
+    // fresh-pair screen: the stored pairs whose src is a batch src (one
+    // filtered scan). Only the pairs-file append is screened — the label
+    // merge below uses the full batch, so a replay whose pairs landed
+    // before a crash still re-derives its merges
+    val srcs = ends.flatMap(_._1).distinct
+    val stored =
+      if (srcs.isEmpty) Set.empty[(Long, Long)]
+      else StoreCommit.localRows(pairs.select(col(srcCol), col(dstCol))
+          .filter(StoreCommit.inSet(col(srcCol), srcs.map(box))))
+        .getOrElse(return None).toSeq
+        .flatMap(r => for (s <- end(r, 0); d <- end(r, 1)) yield (s, d)).toSet
+    val freshPairs = batch.zip(ends).collect {
+      case (r, (s, d)) if !(s.isDefined && d.isDefined && stored((s.get, d.get))) => r }
+    // the batch nodes' and endpoints' current labels (one filtered scan):
+    // the fresh-node screen and the lift onto labels in one
+    val ask = (nodes ++ ends.flatMap { case (s, d) => s ++ d }).distinct
+    val current =
+      if (ask.isEmpty) Map.empty[Long, Long]
+      else StoreCommit.localRows(labels.filter(StoreCommit.inSet(col(nodeCol), ask.map(box))))
+        .getOrElse(return None).map(r => idAt(r, 0) -> idAt(r, 1)).toMap
+    val freshNodes = nodes.filterNot(current.contains)
+    val label = current ++ freshNodes.map(n => n -> n)
+    // the quotient edges: pairs already inside one cluster lift to
+    // label == label and drop out, which is what makes replay a no-op
+    val qEdges = ends.flatMap { case (s, d) =>
+      for (a <- s; b <- d; la <- label.get(a); lb <- label.get(b) if la != lb) yield (la, lb) }
+    val merged = minLabels(Seq.empty, qEdges).filter { case (q, m) => q != m }
+    // stored clusters merged away: tombstoned, their members relabelled
+    // (one bucket-addressed read)
+    val gone = StoreCommit.residues(spark, t, man.modulus,
+      merged.keys.toSeq.filterNot(freshNodes.toSet).sorted)
+    val members =
+      if (gone.isEmpty) Seq.empty[(Long, Long)]
+      else StoreCommit.localRows(readLabels(spark, dir, man, gone.values.toSeq.distinct)
+          .select(col(nodeCol), col("cluster_id"))
+          .filter(StoreCommit.inSet(col("cluster_id"), gone.keys.toSeq.map(box))))
+        .getOrElse(return None).toSeq.map(r => idAt(r, 0) -> idAt(r, 1))
+    val delta = freshNodes.map(n => n -> merged.getOrElse(n, n)) ++
+      members.map { case (n, q) => n -> merged(q) }
+    // the fresh pairs land in this attempt's own salted generation, in
+    // the distributed path's column order, so a crashed earlier
+    // delivery's files stay out of every manifest — replays never
+    // double-count pair rows
+    val appended =
+      if (freshPairs.isEmpty) Seq.empty[String]
+      else writePairs(fs, dir, StoreCommit.localFrame(spark, newPairs.schema, freshPairs)
+        .select((srcCol +: dstCol +: newPairs.columns.filterNot(Set(srcCol, dstCol)).toSeq)
+          .map(col): _*).coalesce(1), man.version + 1)
+    Some(Change(man.pairFiles ++ appended, () => labelFrame(spark, nodeCol, t, delta),
+      delta = StoreCommit.residues(spark, t, man.modulus, delta.map(_._2)).values.toSeq.distinct,
+      tombs = gone))
+  }
+
+  /** [[append]]'s change computed distributed — any batch size, any id
+    * type: the screens and the quotient closure as broadcast-batch
+    * joins, and the touched buckets rewritten whole. */
+  private def distributedAppend(
       spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
       newNodes: DataFrame, newPairs: DataFrame, nodeCol: String,
       srcCol: String, dstCol: String, shortcut: Boolean): Change = {
@@ -312,26 +429,32 @@ object PairStore {
       .filter(col("_q") =!= col("_merged"))
       .localCheckpoint(true)
 
-    // Buckets needing a new generation: sources of moved rows (old
-    // residue), destinations (new residue), and fresh nodes' residues.
-    // Bounded by the modulus, so the collect is ≤ `buckets` ints.
-    val touched = merged.select(pmod(hash(col("_q")), lit(b)).as("bk"))
-      .unionByName(merged.select(pmod(hash(col("_merged")), lit(b)).as("bk")))
-      .unionByName(freshNodes.select(pmod(hash(col(nodeCol)), lit(b)).as("bk")))
+    // Buckets needing a new generation: the old residues of STORED
+    // clusters merged away (rows move out), the merged labels' residues
+    // (rows move in), and the residues of the fresh nodes that merge into
+    // nothing — a fresh node that joins a cluster lands in its merged
+    // label's bucket, already counted. Bounded by the modulus, so the
+    // collect is ≤ `buckets` ints.
+    val freshQ = freshNodes.select(col(nodeCol).as("_q"))
+    def residue(c: String) = pmod(hash(col(c)), lit(b)).as("bk")
+    val touched = merged.join(freshQ, Seq("_q"), "left_anti").select(residue("_q"))
+      .unionByName(merged.select(residue("_merged")))
+      .unionByName(freshQ.join(merged, Seq("_q"), "left_anti").select(residue("_q")))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
     // New generation = every current row of a touched bucket (read by
     // direct manifest addressing — touched dirs only), relabeled through
     // the batch-sized merge map, plus the fresh nodes. Rows whose new
     // label has a different residue migrate buckets; a bucket whose rows
     // ALL migrate out simply leaves the manifest.
-    Change(man.pairFiles ++ appended, touched,
+    Change(man.pairFiles ++ appended,
       () => readLabels(spark, dir, man, touched)
         .select(col(nodeCol), col("cluster_id"))
         .unionByName(freshNodes.select(col(nodeCol), col(nodeCol).as("cluster_id")))
         .join(broadcast(merged), col("cluster_id") === col("_q"), "left")
         .select(col(nodeCol),
           coalesce(col("_merged"), col("cluster_id")).as("cluster_id")),
-      () => Seq(merged, endLabels, freshNodes, freshPairs, batch)
+      rewrite = touched,
+      release = () => Seq(merged, endLabels, freshNodes, freshPairs, batch)
         .foreach(_.unpersist(blocking = false)))
   }
 
@@ -361,19 +484,22 @@ object PairStore {
     * deleted ids are collected once, the label scan finds their
     * clusters, one bucket-addressed read collects those clusters'
     * members, the ONE pair scan yields both the dead files and the pairs
-    * among the members, and a union-find closes the survivors; the
-    * writes are the survivor pairs of the dead files and the touched
-    * buckets. Above the bound, or for other id types, the same steps run
-    * distributed (broadcast-semi probes and
-    * [[Clusters.connectedComponents]]). When the batch fits but the
-    * affected clusters' members or pairs do not (a delete from a cluster
-    * larger than the bound), the distributed path starts from the
-    * deleted ids and clusters already found, so that fallback repeats
-    * only the bucket-addressed member read and the pair scan. The
-    * merge-on-read upgrade (deletion vectors applied at read time,
-    * folded in at compaction) trades the scans for reader-side work;
-    * file-level copy-on-write is the simpler contract and keeps every
-    * reader untouched.
+    * among the members, and a union-find closes the survivors. Its
+    * writes are the survivor pairs of the dead files and ONE delta
+    * generation holding the survivors' new labels, with the affected
+    * clusters tombstoned — component-sized, whatever the bucket sizes; no
+    * label bucket is read or rewritten. Above the bound, or for other id
+    * types, the same steps run distributed (broadcast-semi probes and
+    * [[Clusters.connectedComponents]]) and rewrite the touched buckets
+    * whole. When the batch fits but the affected clusters' members or
+    * pairs do not (a delete from a cluster larger than the bound), the
+    * distributed path starts from the deleted ids and clusters already
+    * found, so that fallback repeats only the bucket-addressed member
+    * read and the pair scan. The merge-on-read upgrade for PAIRS
+    * (deletion vectors applied at read time, folded in at compaction)
+    * would trade the pair scan for reader-side work; file-level
+    * copy-on-write is the simpler contract and keeps every pair reader
+    * untouched.
     *
     * Idempotent under whole-batch replay at any crash point: already-
     * deleted ids have no label row and no surviving pair, so a replay
@@ -420,7 +546,7 @@ object PairStore {
     val box = StoreCommit.boxAs(t) _
     val del = StoreCommit.localRows(deletedNodes.select(col(nodeCol)))
       .getOrElse(return Left(None)).toSeq.filterNot(_.isNullAt(0)).map(idAt(_, 0)).distinct
-    if (del.isEmpty) return Right(Change(man.pairFiles, Seq.empty, () => labels))
+    if (del.isEmpty) return Right(Change(man.pairFiles, () => labels))
     // the deleted ids' clusters (one labels scan; replayed or never-stored
     // ids drop out here), then those clusters' members (one
     // bucket-addressed read)
@@ -431,7 +557,7 @@ object PairStore {
     val affBk = StoreCommit.residues(spark, t, man.modulus, affected)
     val members =
       if (affected.isEmpty) Seq.empty[Long]
-      else StoreCommit.localRows(readLabels(spark, dir, man, affBk)
+      else StoreCommit.localRows(readLabels(spark, dir, man, affBk.values.toSeq.distinct)
           .select(col(nodeCol), col("cluster_id"))
           .filter(StoreCommit.inSet(col("cluster_id"), affected.map(box))))
         .getOrElse(return found).toSeq.map(idAt(_, 0)).distinct
@@ -443,7 +569,6 @@ object PairStore {
         .filter(StoreCommit.inSet(col(srcCol), reach) || StoreCommit.inSet(col(dstCol), reach)))
       .getOrElse(return found).toSeq
     val dead = del.toSet
-    def end(r: Row, i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(idAt(r, i))
     val deadAbs = hits.filter(r => end(r, 1).exists(dead) || end(r, 2).exists(dead))
       .map(_.getString(0)).distinct
     val deadFiles = man.pairFiles.filter(f => deadAbs.exists(_.endsWith("/" + f))).toSet
@@ -452,9 +577,7 @@ object PairStore {
     val survivors = members.filterNot(dead)
     val alive = survivors.toSet
     val cc = minLabels(survivors, hits.flatMap(r =>
-      for (s <- end(r, 1); d <- end(r, 2) if alive(s) && alive(d)) yield (s, d)))
-    val touched = (affBk ++ StoreCommit.residues(spark, t, man.modulus, cc.values.toSeq))
-      .distinct.sorted
+      for (s <- end(r, 1); d <- end(r, 2) if alive(s) && alive(d)) yield (s, d))).toSeq
     // survivor rows of ONLY the dead files, rewritten as this attempt's
     // pair generation in the stored column order
     val pairFiles =
@@ -466,12 +589,11 @@ object PairStore {
           readPairs(spark, dir, deadFiles.toSeq.sorted).filter(kept(srcCol) && kept(dstCol)),
           man.version + 1)
       }
-    Right(Change(pairFiles, touched, () => {
-      val rest = readLabels(spark, dir, man, touched).select(col(nodeCol), col("cluster_id"))
-      (if (members.isEmpty) rest
-       else rest.filter(!coalesce(StoreCommit.inSet(col(nodeCol), members.map(box)), lit(false))))
-        .unionByName(labelFrame(spark, nodeCol, t, cc.toSeq))
-    }))
+    // the affected clusters are tombstoned and every survivor is written
+    // again under its new label — one delta, no bucket rewritten
+    Right(Change(pairFiles, () => labelFrame(spark, nodeCol, t, cc),
+      delta = StoreCommit.residues(spark, t, man.modulus, cc.map(_._2)).values.toSeq.distinct,
+      tombs = affBk))
   }
 
   /** [[delete]]'s change computed distributed — any batch size, any id
@@ -539,12 +661,13 @@ object PairStore {
     val touched = (affBk ++ cc
         .select(pmod(hash(col("cluster_id")), lit(b)).as("bk"))
         .distinct().collect().map(_.getInt(0))).distinct.sorted
-    Change(pairFiles, touched,
+    Change(pairFiles,
       () => readLabels(spark, dir, man, touched)
         .join(members.select(col(nodeCol)), Seq(nodeCol), "left_anti")
         .select(col(nodeCol), col("cluster_id"))
         .unionByName(cc),
-      () => Seq(cc, members, affLabels, del)
+      rewrite = touched,
+      release = () => Seq(cc, members, affLabels, del)
         .foreach(_.unpersist(blocking = false)))
   }
 
@@ -620,35 +743,64 @@ object PairStore {
   // ------------------------------------------------------------------ //
 
   /** What one [[append]] or [[delete]] changes: the complete pair-file
-    * list it commits (its own pair generation already written), the
-    * label buckets it rewrites with their new rows (read when written),
-    * and the release of its cached intermediates. */
+    * list it commits (its own pair generation already written); the
+    * label rows it writes (read when written) — every row of the
+    * `rewrite` buckets, which they replace, plus the delta rows of the
+    * `delta` buckets, which they join as one more leaf; the clusters it
+    * tombstones, with their buckets; and the release of its cached
+    * intermediates. */
   private final case class Change(
-      pairFiles: Seq[String], touched: Seq[Int], staged: () => DataFrame,
-      release: () => Unit = () => ())
+      pairFiles: Seq[String], rows: () => DataFrame,
+      rewrite: Seq[Int] = Seq.empty, delta: Seq[Int] = Seq.empty,
+      tombs: Map[Long, Int] = Map.empty, release: () => Unit = () => ())
 
-  /** The shared tail of [[append]] and [[delete]]: write the touched
-    * buckets as one label generation, fold the pair files past
-    * `maxPairFiles`, and commit — or commit nothing when the change is
-    * empty (a fully-applied replay, or a batch touching nothing stored),
-    * the fast path that makes restarted loops cheap. */
+  /** The shared tail of [[append]] and [[delete]]: write the change's
+    * label rows — with every bucket the change pushes past [[MaxLeaves]]
+    * leaves or tombstones folded into one leaf — as ONE label
+    * generation, fold the pair files past `maxPairFiles`, and commit; or
+    * commit nothing when the change is empty (a fully-applied replay, or
+    * a batch touching nothing stored), the fast path that makes
+    * restarted loops cheap. */
   private def commitChange(
       spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
       c: Change, maxPairFiles: Int, beforeCommit: () => Unit): Unit =
     try {
-      if (c.touched.nonEmpty || c.pairFiles != man.pairFiles) {
+      if (c.rewrite.nonEmpty || c.delta.nonEmpty || c.tombs.nonEmpty ||
+          c.pairFiles != man.pairFiles) {
         val v = man.version + 1
-        val buckets =
-          if (c.touched.isEmpty) man.buckets
-          else (man.buckets -- c.touched) ++
-            writeLabels(fs, dir, c.staged(), man.modulus, v)
+        val tombs = liveTombstones(
+          man.tombstones ++ c.tombs.map { case (cl, bk) => cl -> (bk, v) }, man.buckets)
+        val fold = (man.buckets.keySet ++ c.delta).toSeq.sorted
+          .filterNot(c.rewrite.contains).filter { bk =>
+            man.buckets.getOrElse(bk, Seq.empty).size + (if (c.delta.contains(bk)) 1 else 0) >
+              MaxLeaves || tombs.values.count(_._1 == bk) > MaxLeaves
+          }
+        val whole = (c.rewrite ++ fold).toSet
+        val written =
+          if (whole.isEmpty && c.delta.isEmpty) Map.empty[Int, String]
+          else writeLabels(fs, dir,
+            if (fold.isEmpty) c.rows()
+            else c.rows().unionByName(readLabels(spark, dir, man.copy(tombstones = tombs), fold)),
+            man.modulus, v)
+        val buckets = written.foldLeft(man.buckets -- whole) { case (m, (bk, g)) =>
+          m.updated(bk, m.getOrElse(bk, Seq.empty) :+ g) }
         val pairFiles =
           if (c.pairFiles.size > maxPairFiles) compactInto(spark, fs, dir, c.pairFiles, v)
           else c.pairFiles
         beforeCommit()
-        commit(fs, dir, Manifest(v, man.modulus, buckets, pairFiles))
+        commit(fs, dir, Manifest(v, man.modulus, buckets, liveTombstones(tombs, buckets),
+          pairFiles))
       }
     } finally c.release()
+
+  /** The tombstones that can still hide a row: those whose bucket holds a
+    * leaf staged before them. */
+  private def liveTombstones(
+      tombs: Map[Long, (Int, Long)], buckets: Map[Int, Seq[String]]): Map[Long, (Int, Long)] =
+    tombs.filter { case (_, (bk, w)) => buckets.getOrElse(bk, Seq.empty).exists(genOf(_) < w) }
+
+  /** The version a label generation `labels_g<v>.<salt>` was staged for. */
+  private def genOf(g: String): Long = g.stripPrefix("labels_g").takeWhile(_.isDigit).toLong
 
   /** Connected components over `nodes` plus the endpoints of `edges`, on
     * the driver: a union-find where the smaller root always wins, so
@@ -692,6 +844,9 @@ object PairStore {
 
   private def idAt(r: Row, i: Int): Long = r.get(i).asInstanceOf[Number].longValue
 
+  /** Field `i` of `r` as an id, None when null. */
+  private def end(r: Row, i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(idAt(r, i))
+
   /** The write verbs' commit: the crash seam, then
     * [[StoreCommit.commitManifest]] over every label leaf and pair file
     * the manifest references. */
@@ -729,27 +884,52 @@ object PairStore {
   }
 
   /** Fold `files` into one fresh pair generation for version `v`;
-    * returns its file list. */
+    * returns its file list. The scan's splits are merged into the output
+    * files without a shuffle: pair rows have no order to restore, so a
+    * compaction reads and writes the live pairs once and moves nothing
+    * between tasks. */
   private def compactInto(
       spark: SparkSession, fs: FileSystem, dir: String, files: Seq[String],
       v: Long, targetFileBytes: Long = 128L << 20): Seq[String] =
     writePairs(fs, dir, readPairs(spark, dir, files)
-      .repartition(StoreCommit.compactedParts(fs, dir, files, targetFileBytes)), v)
+      .coalesce(StoreCommit.compactedParts(fs, dir, files, targetFileBytes)), v)
 
   /** Read a manifest's bucket selection by direct leaf addressing (no
     * listing, no partition discovery, a memoized schema —
-    * [[StoreCommit.readParquet]]); buckets the manifest does not hold are
-    * skipped. A selection with no live leaf reads as a zero-row frame
-    * whose schema comes from any label leaf on disk — or fails loudly on
-    * a store that never held one. */
+    * [[StoreCommit.readParquet]]) in ONE scan; buckets the manifest does
+    * not hold are skipped. The tombstones of the selected buckets filter
+    * that scan: a row is dropped when its `cluster_id` is in the
+    * `InSet` of a tombstone version newer than the generation of the
+    * row's file (read from `_metadata.file_path`, and only for the rows
+    * an `InSet` matched). A selection with no live leaf reads as a
+    * zero-row frame whose schema comes from any label file on disk — or
+    * fails loudly on a store that never held one. */
   private def readLabels(
       spark: SparkSession, dir: String, man: Manifest,
       buckets: Seq[Int]): DataFrame = {
-    val paths = buckets.sorted.flatMap(man.leaf).map(l => s"$dir/$l")
-    if (paths.nonEmpty) StoreCommit.readParquet(spark, paths)
-    else {
+    val sel = buckets.distinct.sorted
+    val paths = sel.flatMap(man.leaves).map(l => s"$dir/$l")
+    if (paths.nonEmpty) {
+      val df = StoreCommit.readParquet(spark, paths)
+      val tombs = man.tombstones.values.count { case (bk, _) => sel.contains(bk) }
+      if (tombs == 0) df
+      else {
+        val box = StoreCommit.boxAs(df.schema("cluster_id").dataType) _
+        // the row's tombstone version (null for most rows), compared with
+        // the generation of its file only when there is one
+        val tombstoned = man.tombstones.toSeq
+          .collect { case (c, (bk, w)) if sel.contains(bk) => (w, c) }
+          .groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+          .map { case (w, cs) => (StoreCommit.inSet(col("cluster_id"), cs.sorted.map(box)), lit(w)) }
+        val version = tombstoned.tail.foldLeft(when(tombstoned.head._1, tombstoned.head._2)) {
+          case (cw, (in, w)) => cw.when(in, w) }
+        val gen = regexp_extract(col("_metadata.file_path"), "^.*/labels_g(\\d+)\\.", 1)
+          .cast(LongType)
+        df.filter(!coalesce(version > gen, lit(false))).select(df.columns.map(col): _*)
+      }
+    } else {
       val fs = StoreCommit.fsOf(spark, dir)
-      val any = Option(fs.globStatus(new Path(s"$dir/labels_g*/$BucketCol=*")))
+      val any = Option(fs.globStatus(new Path(s"$dir/labels_g*/$BucketCol=*/part-*")))
         .toSeq.flatten.headOption.getOrElse(throw new IllegalStateException(
           s"$Store $dir has no label generation to derive a schema from"))
       StoreCommit.readParquet(spark, Seq(any.getPath.toString)).where(lit(false))
@@ -765,14 +945,18 @@ object PairStore {
     * ([[StoreCommit.readManifestLinesCached]]). */
   private def readManifest(fs: FileSystem, dir: String, v: Long): Manifest = {
     var modulus = 0
-    val buckets = Map.newBuilder[Int, String]
+    val leaves = Seq.newBuilder[(Int, String)]
+    val tombs = Map.newBuilder[Long, (Int, Long)]
     val files = Seq.newBuilder[String]
     StoreCommit.readEntries(fs, dir, v, Store) {
-      case Array("modulus", m)    => modulus = m.toInt
-      case Array("bucket", bk, g) => buckets += (bk.toInt -> g)
-      case Array("pairfile", f)   => files += f
+      case Array("modulus", m)              => modulus = m.toInt
+      case Array("bucket", bk, g)           => leaves += (bk.toInt -> g)
+      case Array("tombstone", bk, c, w)     => tombs += (c.toLong -> (bk.toInt -> w.toLong))
+      case Array("pairfile", f)             => files += f
     }
-    Manifest(v, modulus, buckets.result(), files.result())
+    Manifest(v, modulus,
+      leaves.result().groupMap(_._1)(_._2).map { case (bk, gs) => bk -> gs.sortBy(g => (genOf(g), g)) },
+      tombs.result(), files.result())
   }
 
   private def currentManifest(fs: FileSystem, dir: String): Manifest =

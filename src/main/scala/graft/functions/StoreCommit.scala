@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
   *     `ConcurrentModificationException` with the store unharmed.
   *
   * Store verbs read generations through [[readParquet]] (a memoized
-  * schema, so a read starts no Spark job) and take their batch-sized
+  * schema and listing, so a read starts no Spark job) and take their batch-sized
   * inputs through [[localRows]], under the one row bound
   * ([[LocalRows]]) that decides whether a verb's batch-sized work runs
   * on the driver.
@@ -116,15 +116,16 @@ private[graft] object StoreCommit {
     spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** `pmod(hash(v), modulus)` of each value of integral type `t` — the
-    * same Catalyst expression the stores bucket by, evaluated over a
+  /** Each value of integral type `t` mapped to `pmod(hash(v), modulus)` —
+    * the same Catalyst expression the stores bucket by, evaluated over a
     * `LocalRelation` (folded on the driver, no job). */
-  def residues(spark: SparkSession, t: DataType, modulus: Int, values: Seq[Long]): Seq[Int] =
-    if (values.isEmpty) Seq.empty
-    else localFrame(spark, StructType(Seq(StructField("v", t))),
-        values.distinct.map(x => Row(boxAs(t)(x))))
-      .select(pmod(hash(col("v")), lit(modulus))).collect().map(_.getInt(0))
-      .distinct.sorted.toSeq
+  def residues(spark: SparkSession, t: DataType, modulus: Int, values: Seq[Long]): Map[Long, Int] =
+    if (values.isEmpty) Map.empty
+    else {
+      val vs = values.distinct
+      vs.zip(localFrame(spark, StructType(Seq(StructField("v", t))), vs.map(x => Row(boxAs(t)(x))))
+        .select(pmod(hash(col("v")), lit(modulus))).collect().map(_.getInt(0))).toMap
+    }
 
   // ------------------------------------------------------------------ //
   // reads
@@ -136,15 +137,46 @@ private[graft] object StoreCommit {
     * schemas. Durable: a store's layout is an offline-built artifact. */
   private val schemaMemo = new graft.PlanCache[StructType](capacity = 256, durable = true)
 
-  /** Parquet `paths` (absolute, at least one) read with the memoized
-    * schema of the first. A schema-less read would start a Spark job per
-    * read to infer it from a footer; a miss here reads that footer on
-    * the driver instead ([[footerSchema]]). */
+  /** The data files under each store path read so far (a generation's
+    * leaf dir, or one data file), keyed by qualified path. Committed
+    * paths are immutable, so a listing never goes stale; a vacuumed
+    * path's entry outlives it, and a read of it fails on the missing
+    * file. */
+  private val leafMemo = new LruMap[String, Array[FileStatus]](8192)
+
+  private def leafFiles(fs: FileSystem, p: Path): Array[FileStatus] =
+    leafMemo.get(p.toString).getOrElse {
+      val st = fs.getFileStatus(p)
+      val files =
+        if (st.isFile) Array(st)
+        else fs.listStatus(p).filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+      leafMemo.put(p.toString, files)
+      files
+    }
+
+  /** Parquet `paths` (absolute, at least one, committed) read with the
+    * memoized schema of the first and the memoized listing of each. A
+    * schema-less read would start a Spark job per read to infer it from
+    * a footer; a miss here reads that footer on the driver instead
+    * ([[footerSchema]]). And past 32 paths Spark lists them with a Spark
+    * job on every read (its file-status cache is per reader); the
+    * listing handed to the file index here starts none. */
   def readParquet(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
     val schema = schemaMemo.getOrCompute(
       graft.PlanCache.Key(spark, "StoreCommit.schema", paths.head),
       footerSchema(spark, paths.head).getOrElse(spark.read.parquet(paths.head).schema))
-    spark.read.schema(schema).parquet(paths: _*)
+    val fs = fsOf(spark, paths.head)
+    val roots = paths.map(p => fs.makeQualified(new Path(p)))
+    val listed = roots.map(r => r -> leafFiles(fs, r)).toMap
+    val index = new InMemoryFileIndex(spark, roots, Map.empty, Some(schema),
+      new FileStatusCache {
+        override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listed.get(path)
+        override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      })
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(), schema, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat, Map.empty)(spark))
   }
 
   /** The schema Spark infers for the parquet file or directory `path` —

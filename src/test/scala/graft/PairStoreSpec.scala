@@ -235,7 +235,7 @@ class PairStoreSpec extends SparkSpec {
       .forall(_.contains("pairs_g")), "compacted view must read the generation dir")
   }
 
-  test("append writes ONLY the touched label buckets as a new generation") {
+  storeTest("append writes ONLY the touched label buckets as a new generation") {
     val dir = tmpDir()
     val nodes = (1L to 40L).toDF("id")
     PairStore.build(nodes, Seq((1L, 2L), (10L, 11L)).toDF("id_a", "id_b"),
@@ -255,6 +255,18 @@ class PairStoreSpec extends SparkSpec {
       s"expected one new v1 generation for the fresh node's bucket, got $added")
     assert(PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap
       .apply(nv) == nv)
+    // a fresh node joining a stored cluster whose bucket is not its own:
+    // its row lands in the cluster's bucket, and nothing else is written
+    val joiner = (103L to 200L).find(bucketOf(_) != bucketOf(10L)).get
+    val before2 = genDirs()
+    PairStore.append(Seq(joiner).toDF("id"),
+      Seq((joiner, 11L)).toDF("id_a", "id_b"), dir, "id", "id_a", "id_b")
+    val added2 = genDirs() -- before2
+    assert(added2.size == 1 &&
+      added2.head.matches(s"labels_g2\\.\\d+/cbucket=${bucketOf(10L)}"),
+      s"expected one new v2 leaf in cluster 10's bucket, got $added2")
+    assert(PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap
+      .apply(joiner) == 10L)
     // every write verb stages only under salted generation names — no
     // fixed path two same-version writers could share (a delete's
     // survivor rewrite included)
@@ -738,5 +750,162 @@ class PairStoreSpec extends SparkSpec {
         s"scenario $scenario (kills=$kills): crashed staging survived " +
           s"recover+vacuum (${genDirs(dir)} label generations vs $refGens)")
     }
+  }
+
+  // ---- delta leaves, tombstones and the fold --------------------------
+
+  /** The lines of the store's newest committed manifest. */
+  private def headManifest(dir: String): Seq[String] = {
+    val v = fs.listStatus(p(s"$dir/history")).map(_.getPath.getName)
+      .filter(_.matches("v\\d+")).map(_.drop(1).toLong).max
+    val in = fs.open(p(s"$dir/history/v$v"))
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
+      .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+    finally in.close()
+  }
+
+  /** How many manifest lines of `kind` (`bucket` leaves or `tombstone`s)
+    * each bucket has. */
+  private def perBucket(lines: Seq[String], kind: String): Map[Int, Int] =
+    lines.map(_.split(" ")).filter(_.head == kind)
+      .groupBy(_(1).toInt).map { case (bk, ls) => bk -> ls.size }
+
+  /** Connected components of `alive` under the edges among them, each
+    * node labelled with its component's minimum — the closure the store
+    * must hold. */
+  private def closure(alive: Set[Long], edges: Set[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = { val q = parent.getOrElseUpdate(x, x); if (q == x) x else find(q) }
+    alive.foreach(find)
+    edges.foreach { case (a, b) =>
+      if (alive(a) && alive(b)) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(ra.max(rb)) = ra.min(rb)
+      }
+    }
+    alive.map(x => x -> find(x)).toMap
+  }
+
+  storeTest("long run: 30 interleaved appends and deletes keep labels == closure over " +
+      "the survivors, bounded leaves, tombstones and manifest lines, and a flat labels plan") {
+    val dir = tmpDir()
+    val modulus = 4
+    val maxPairFiles = 8
+    var alive = (1L to 20L).toSet
+    var edges = Set((1L, 2L), (2L, 3L), (6L, 7L), (9L, 12L), (15L, 16L))
+    PairStore.build(alive.toSeq.toDF("id"), edges.toSeq.toDF("id_a", "id_b"), dir,
+      "id", "id_a", "id_b", buckets = modulus)
+    def plan(): (Int, Int) = {
+      val qe = PairStore.labels(spark, dir).queryExecution
+      (qe.optimizedPlan.collect { case n => n }.size,
+        qe.explainString(org.apache.spark.sql.execution.ExtendedMode).length)
+    }
+    val (nodes0, chars0) = plan()
+    val rnd = new scala.util.Random(20261018L)
+    var next = 100L
+    val sizes = Seq.newBuilder[(Int, Int)]
+    for (op <- 1 to 30) {
+      val what =
+        if (op == 1) {
+          // two stored singletons 4 < 5 merge through a fresh node: 5 is
+          // tombstoned into 4's cluster...
+          val add = Seq((4L, next), (5L, next))
+          PairStore.append(Seq(next).toDF("id"), add.toDF("id_a", "id_b"), dir,
+            "id", "id_a", "id_b", maxPairFiles = maxPairFiles)
+          alive += next
+          edges ++= add
+          next += 1
+          "merge 5 into 4"
+        } else if (op == 2) {
+          // ...and deleting 4 makes 5 a label again
+          PairStore.delete(Seq(4L).toDF("id"), dir, "id", "id_a", "id_b")
+          alive -= 4L
+          "delete 4"
+        } else if (op % 3 == 0) {
+          val del = rnd.shuffle(alive.toSeq.sorted).take(1 + rnd.nextInt(2))
+          PairStore.delete(del.toDF("id"), dir, "id", "id_a", "id_b")
+          alive --= del
+          s"delete $del"
+        } else {
+          val fresh = (next until next + 1 + rnd.nextInt(3)).toSeq
+          next += fresh.size
+          val pool = (alive.toSeq.sorted ++ fresh).toVector
+          val add = fresh.flatMap { f =>
+            Seq.fill(1 + rnd.nextInt(2))(pool(rnd.nextInt(pool.size))).filter(_ != f).map((_, f)) }
+          PairStore.append(fresh.toDF("id"), add.toDF("id_a", "id_b"), dir,
+            "id", "id_a", "id_b", maxPairFiles = maxPairFiles)
+          alive ++= fresh
+          edges ++= add
+          s"append $fresh with $add"
+        }
+      // deleted nodes' pairs are gone for good
+      edges = edges.filter { case (a, b) => alive(a) && alive(b) }
+      assert(PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap == closure(alive, edges),
+        s"op $op ($what): labels != closure over the survivors")
+      val man = headManifest(dir)
+      assert(perBucket(man, "bucket").values.forall(_ <= PairStore.MaxLeaves),
+        s"op $op: leaves per bucket ${perBucket(man, "bucket")}")
+      assert(perBucket(man, "tombstone").values.forall(_ <= PairStore.MaxLeaves),
+        s"op $op: tombstones per bucket ${perBucket(man, "tombstone")}")
+      // nonce, version, modulus, ≤ 2 × MaxLeaves lines per bucket, pair files
+      val maxLines = 3 + 2 * PairStore.MaxLeaves * modulus + maxPairFiles + 1
+      assert(man.size <= maxLines, s"op $op: ${man.size} manifest lines > $maxLines")
+      // the tombstone filter adds a Filter and a Project, and one InSet
+      // per live tombstone version, which the fold bounds
+      val (n, c) = plan()
+      sizes += ((n, c))
+      assert(n <= 3 * nodes0 && c <= 8 * chars0,
+        s"op $op: labels plan $n nodes / $c explain chars vs $nodes0 / $chars0 after build")
+    }
+    info(s"labels plan after build: $nodes0 nodes, $chars0 explain chars; after each op: " +
+      sizes.result().map { case (n, c) => s"$n/$c" }.mkString(" "))
+  }
+
+  test("kill-replay: a crash in a commit that folds a bucket replays to convergence") {
+    // one bucket, so every delta lands in it and the fold comes within
+    // MaxLeaves appends; each append merges two stored clusters, so the
+    // folded bucket carries tombstones too
+    val steps = PairStore.MaxLeaves + 2
+    def append(dir: String, i: Int): Unit =
+      PairStore.append(Seq(100L + i).toDF("id"),
+        Seq((i.toLong, 100L + i), (i + 1L, 100L + i)).toDF("id_a", "id_b"), dir,
+        "id", "id_a", "id_b")
+    def leaves(dir: String): Int = perBucket(headManifest(dir), "bucket").values.sum
+    def runStore(kill: Option[Int]): (String, Seq[Int]) = {
+      val dir = tmpDir()
+      PairStore.build((1L to 20L).toDF("id"), Seq.empty[(Long, Long)].toDF("id_a", "id_b"),
+        dir, "id", "id_a", "id_b", buckets = 1)
+      val counts = (1 to steps).map { i =>
+        if (kill.contains(i)) {
+          PairStore.onBeforeCommit = () =>
+            throw new RuntimeException("injected crash: pre-commit")
+          try intercept[RuntimeException](append(dir, i))
+          finally PairStore.onBeforeCommit = () => ()
+        }
+        append(dir, i)
+        leaves(dir)
+      }
+      (dir, counts)
+    }
+    def state(dir: String) = (
+      PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap,
+      PairStore.pairs(spark, dir).as[(Long, Long)].collect().sorted.toSeq)
+    val (ref, counts) = runStore(None)
+    // the first append whose commit left the bucket with one leaf folded
+    val foldStep = counts.indexWhere(_ == 1) + 1
+    assert(foldStep > 1, s"no fold within $steps appends: leaves after each $counts")
+    val (dir, crashedCounts) = runStore(Some(foldStep))
+    assert(crashedCounts == counts, "the replayed fold committed a different layout")
+    assert(state(dir) == state(ref), s"a crash in the folding commit (step $foldStep) diverged")
+    assert(state(dir)._1 == closure((1L to 20L).toSet ++ (1 to steps).map(100L + _),
+      (1 to steps).flatMap(i => Seq((i.toLong, 100L + i), (i + 1L, 100L + i))).toSet))
+    for (d <- Seq(ref, dir)) {
+      PairStore.recover(spark, d)
+      PairStore.vacuum(spark, d, keepLast = 1)
+    }
+    assert(state(dir) == state(ref), "recover+vacuum changed the served state")
+    assert(fs.globStatus(p(s"$dir/labels_g*/cbucket=*")).length ==
+      fs.globStatus(p(s"$ref/labels_g*/cbucket=*")).length,
+      "the crashed fold's staging survived recover+vacuum")
   }
 }

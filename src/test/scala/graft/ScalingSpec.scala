@@ -271,7 +271,11 @@ class ScalingSpec extends SparkSpec {
       s"probe bytes grew ${ratio}x on an 8x corpus — partition pruning lost")
   }
 
-  test("pair-store append: shuffle bytes stay batch-proportional as the stored corpus grows 8x") {
+  // registered at both bounds: at the production bound this 50-pair batch
+  // runs the driver-local append (its one shuffle is the delta-leaf
+  // write), and the "[distributed]" copy keeps the gate on the
+  // distributed closure and whole-bucket rewrite
+  storeTest("pair-store append: shuffle bytes stay batch-proportional as the stored corpus grows 8x") {
     import graft.functions.PairStore
     // synthetic edge-sized store: nodes only (append cost is what's
     // measured — pair FINDING is gated by the tests above). Buckets

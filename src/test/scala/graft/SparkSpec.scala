@@ -51,6 +51,19 @@ trait SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   private var suiteStartNanos = System.nanoTime()
 
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome = {
+    val outcome = super.withFixture(test)
+    SparkSpec.tests.incrementAndGet()
+    if (outcome.isFailed) SparkSpec.failed.incrementAndGet()
+    outcome
+  }
+
+  override def run(testName: Option[String], args: org.scalatest.Args): org.scalatest.Status = {
+    SparkSpec.suiteStarted()
+    try super.run(testName, args)
+    catch { case e: Throwable => SparkSpec.aborted.incrementAndGet(); throw e }
+  }
+
   override protected def beforeAll(): Unit = {
     suiteStartNanos = System.nanoTime()
     super.beforeAll()
@@ -71,6 +84,24 @@ trait SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  private val suites = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val tests = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val failed = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val aborted = new java.util.concurrent.atomic.AtomicInteger(0)
+  private lazy val runStartNanos = System.nanoTime()
+
+  /** Counts a suite; the first one starts the run clock and registers
+    * the line the test JVM prints last, as it exits: a log that does not
+    * end with `[summary]` was cut short, and one that does names its
+    * failed tests and aborted suites. */
+  private def suiteStarted(): Unit =
+    if (suites.getAndIncrement() == 0) {
+      runStartNanos
+      Runtime.getRuntime.addShutdownHook(new Thread(() => println(
+        f"[summary] suites ${suites.get}%d, tests ${tests.get}%d, failed ${failed.get}%d, " +
+          f"aborted ${aborted.get}%d, ${(System.nanoTime() - runStartNanos) / 1e9}%.1f s")))
+    }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[8]")

@@ -21,6 +21,9 @@ class StoreLocalPathSpec extends SparkSpec {
     NearDup.ngramJaccardAcross(batch, ingested, 0.5)
       .unionByName(NearDup.ngramJaccardPairs(batch, 0.5))
 
+  // every verb takes a distinct path on the two stores: the driver-local
+  // append (delta leaves and tombstones) against the distributed one
+  // (whole-bucket rewrites), and likewise delete and screenBatch
   test("one seeded op sequence on two stores, one per setting: identical labels, " +
       "pairs and screens after every op") {
     // a 10-token pool over 5-token docs: exact and near dups are common
@@ -82,6 +85,7 @@ class StoreLocalPathSpec extends SparkSpec {
     }
   }
 
+  // append is measured too, under the test's original name
   test("delete and screenBatch at the production bound start at most half " +
       "the Spark jobs of the distributed path") {
     val docs = Tables.documents(spark, sf0001)
@@ -92,9 +96,12 @@ class StoreLocalPathSpec extends SparkSpec {
       PairStore.build(base.select(col("doc_id")), NearDup.ngramJaccardPairs(base, 0.5),
         pairDir, "doc_id", "id_a", "id_b")
       SignatureStore.build(base, sigDir)
-      PairStore.append(batch.select(col("doc_id")), pairsFor(batch, base),
-        pairDir, "doc_id", "id_a", "id_b")
+      // the batch's pairs are found first, so the count is append's own work
+      val found = pairsFor(batch, base)
+      val pairs = StoreCommit.localFrame(spark, found.schema, found.collect().toSeq)
       Map(
+        "append" -> jobsDuring(PairStore.append(batch.select(col("doc_id")), pairs,
+          pairDir, "doc_id", "id_a", "id_b")),
         "delete" -> jobsDuring(PairStore.delete(Seq(3L, 61L, 65L).toDF("doc_id"),
           pairDir, "doc_id", "id_a", "id_b")),
         "screenBatch" -> jobsDuring(
@@ -105,7 +112,7 @@ class StoreLocalPathSpec extends SparkSpec {
     val local = jobs()
     val dist = distributed(jobs())
     info(s"Spark jobs, driver-local vs distributed: $local vs $dist")
-    for (verb <- Seq("delete", "screenBatch"))
+    for (verb <- Seq("append", "delete", "screenBatch"))
       assert(2 * local(verb) <= dist(verb),
         s"$verb: ${local(verb)} jobs driver-local vs ${dist(verb)} distributed")
   }
@@ -130,6 +137,7 @@ class StoreLocalPathSpec extends SparkSpec {
       assert(df.schema == spark.read.parquet(df.inputFiles.head).schema)
   }
 
+  // append is covered too, under the test's original name
   test("above the bound, delete and screenBatch fall back to the distributed " +
       "path's result") {
     def sameAsDistributed[T](what: String)(op: => T): Unit = {
@@ -155,6 +163,26 @@ class StoreLocalPathSpec extends SparkSpec {
       distributed(PairStore.delete(del.toDF("id"), dirs(1), "id", "id_a", "id_b"))
       assert(pairStore(dirs(0)) == pairStore(dirs(1)), s"after deleting $del")
     }
+    // an append whose batch fits but which merges the chain 80..89 (10
+    // members, over the bound) into the chain 60..79: it falls back whole
+    val chains = (60L until 79L).map(a => (a, a + 1)) ++ (80L until 89L).map(a => (a, a + 1))
+    for (dir <- dirs)
+      PairStore.build((60L until 90L).toDF("id"), chains.toDF("id_a", "id_b"), dir,
+        "id", "id_a", "id_b")
+    val (bridge, bridgePairs) = (Seq(100L).toDF("id"), Seq((70L, 100L), (85L, 100L)).toDF("id_a", "id_b"))
+    withLocalRows(8)(PairStore.append(bridge, bridgePairs, dirs(0), "id", "id_a", "id_b"))
+    distributed(PairStore.append(bridge, bridgePairs, dirs(1), "id", "id_a", "id_b"))
+    assert(pairStore(dirs(0)) == pairStore(dirs(1)), "after the merging append")
+    assert(pairStore(dirs(0))._1.map(_._2).distinct == Seq(60L))
+    // the fallback rewrote buckets whole: no tombstone, one leaf a bucket
+    val man = {
+      val hist = new java.io.File(s"${dirs(0)}/history")
+      val v = hist.list().filter(_.matches("v\\d+")).map(_.drop(1).toLong).max
+      scala.io.Source.fromFile(s"$hist/v$v").getLines().toSeq
+    }
+    assert(!man.exists(_.startsWith("tombstone")), man.mkString("\n"))
+    val leaves = man.filter(_.startsWith("bucket ")).map(_.split(" ")(1))
+    assert(leaves.distinct.size == leaves.size, man.mkString("\n"))
     // screens: a 4-doc batch (12 hashes) over the bound, and a 1-doc batch
     // whose 20 exact-duplicate store candidates (40 rows) are over it
     val sigDir = tmpDir()
