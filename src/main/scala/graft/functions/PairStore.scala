@@ -44,13 +44,15 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   *     versioned because a label can come back: a delete may
   *     re-canonicalize survivors onto a label tombstoned earlier, and
   *     those rows are newer than that tombstone. Readers apply the
-  *     tombstones as one `InSet` per tombstone version, in the filter of
-  *     one scan (no join, no shuffle).
+  *     tombstones as one `InSet` of tombstoned labels and one map from
+  *     label to tombstone version, in the filter of one scan (no join, no
+  *     shuffle).
   *   - the FOLD: a commit that would leave a bucket with more than
-  *     [[MaxLeaves]] leaves, or tombstones, rewrites that bucket into one
-  *     leaf in the same version — the whole-bucket rewrite of the
-  *     distributed paths, amortized over [[MaxLeaves]] deltas as the pair
-  *     files' `maxPairFiles` compaction is. A tombstone leaves the
+  *     [[MaxLeaves]] leaves, or more than [[MaxTombstones]] tombstones,
+  *     rewrites that bucket into one leaf in the same version — the
+  *     whole-bucket rewrite of the distributed paths, amortized over
+  *     [[MaxLeaves]] deltas as the pair files' `maxPairFiles` compaction
+  *     is. A tombstone leaves the
   *     manifest once its bucket holds no leaf older than it.
   *   - `history/v<N>` — the version-N MANIFEST: the residue modulus
   *     (fixed at [[build]]), the complete bucket→leaves map, the live
@@ -112,12 +114,25 @@ object PairStore {
     * Spark's listing hides `_` paths). */
   private val BucketCol = "cbucket"
 
-  /** The fold threshold: the most leaves, and the most tombstones, a
-    * bucket keeps after a commit. Past it the commit rewrites the bucket
-    * into one leaf, so a reader opens at most this many leaves per
-    * bucket and a manifest holds at most this many tombstones per
-    * bucket. */
-  private[graft] val MaxLeaves = 8
+  /** The fold threshold: the most leaves a bucket keeps after a commit.
+    * Past it the commit rewrites the bucket into one leaf, so a reader
+    * opens at most this many leaves per bucket. Set from measured read
+    * and append times (SCALING.md): the labels read of a 200,000-node,
+    * 16-bucket store took 290–370 ms at 2–4 leaves a bucket, 400–430 ms
+    * at 8 and 620 ms at 16 (4 CPUs), while its appends measured the same
+    * from 2 to 8. At 2, a read of a
+    * store with the default 16 buckets opens at most 32 leaves, the most
+    * Spark lists on the driver: past 32 paths it lists them with a Spark
+    * job on every read. */
+  private[graft] val MaxLeaves = 2
+
+  /** The most tombstones a bucket keeps after a commit, past which the
+    * commit folds it as past [[MaxLeaves]]: it bounds the manifest and
+    * the readers' tombstone filter. Held apart from [[MaxLeaves]]
+    * because one append can tombstone several clusters of a bucket: at
+    * 2, ScalingSpec's append gate (50 merges over 64 buckets) folded
+    * buckets and read 3.03× against its 3× bound; at 4 it folds none. */
+  private[graft] val MaxTombstones = 4
 
   /** Test seam: invoked by [[append]] immediately before its manifest
     * commit, so PairStoreSpec can interleave a full competing append at
@@ -147,8 +162,9 @@ object PairStore {
     * (one leaf each); `tombstones` maps a cluster id to its bucket and
     * the version that tombstoned it; `pairFiles` is the full pair-file
     * list (paths relative to the store root). Small by construction: at
-    * most [[MaxLeaves]] leaf lines and tombstone lines per bucket plus
-    * one line per pair file (compaction keeps that bounded). */
+    * most [[MaxLeaves]] leaf lines and [[MaxTombstones]] tombstone lines
+    * per bucket plus one line per pair file (compaction keeps that
+    * bounded). */
   private final case class Manifest(
       version: Long, modulus: Int, buckets: Map[Int, Seq[String]],
       tombstones: Map[Long, (Int, Long)], pairFiles: Seq[String]) {
@@ -756,8 +772,8 @@ object PairStore {
 
   /** The shared tail of [[append]] and [[delete]]: write the change's
     * label rows — with every bucket the change pushes past [[MaxLeaves]]
-    * leaves or tombstones folded into one leaf — as ONE label
-    * generation, fold the pair files past `maxPairFiles`, and commit; or
+    * leaves or [[MaxTombstones]] tombstones folded into one leaf — as
+    * ONE label generation, fold the pair files past `maxPairFiles`, and commit; or
     * commit nothing when the change is empty (a fully-applied replay, or
     * a batch touching nothing stored), the fast path that makes
     * restarted loops cheap. */
@@ -773,7 +789,7 @@ object PairStore {
         val fold = (man.buckets.keySet ++ c.delta).toSeq.sorted
           .filterNot(c.rewrite.contains).filter { bk =>
             man.buckets.getOrElse(bk, Seq.empty).size + (if (c.delta.contains(bk)) 1 else 0) >
-              MaxLeaves || tombs.values.count(_._1 == bk) > MaxLeaves
+              MaxLeaves || tombs.values.count(_._1 == bk) > MaxTombstones
           }
         val whole = (c.rewrite ++ fold).toSet
         val written =
@@ -800,7 +816,7 @@ object PairStore {
     tombs.filter { case (_, (bk, w)) => buckets.getOrElse(bk, Seq.empty).exists(genOf(_) < w) }
 
   /** The version a label generation `labels_g<v>.<salt>` was staged for. */
-  private def genOf(g: String): Long = g.stripPrefix("labels_g").takeWhile(_.isDigit).toLong
+  private def genOf(g: String): Long = StoreCommit.genVersion(g).get
 
   /** Connected components over `nodes` plus the endpoints of `edges`, on
     * the driver: a union-find where the smaller root always wins, so
@@ -898,12 +914,12 @@ object PairStore {
     * listing, no partition discovery, a memoized schema —
     * [[StoreCommit.readParquet]]) in ONE scan; buckets the manifest does
     * not hold are skipped. The tombstones of the selected buckets filter
-    * that scan: a row is dropped when its `cluster_id` is in the
-    * `InSet` of a tombstone version newer than the generation of the
-    * row's file (read from `_metadata.file_path`, and only for the rows
-    * an `InSet` matched). A selection with no live leaf reads as a
-    * zero-row frame whose schema comes from any label file on disk — or
-    * fails loudly on a store that never held one. */
+    * that scan: a row is dropped when its `cluster_id` has a tombstone
+    * version newer than the generation of the row's file (read from
+    * `_metadata.file_path`, and only for the rows whose `cluster_id` is
+    * in the `InSet` of tombstoned labels). A selection with no live leaf
+    * reads as a zero-row frame whose schema comes from any label file on
+    * disk — or fails loudly on a store that never held one. */
   private def readLabels(
       spark: SparkSession, dir: String, man: Manifest,
       buckets: Seq[Int]): DataFrame = {
@@ -911,21 +927,19 @@ object PairStore {
     val paths = sel.flatMap(man.leaves).map(l => s"$dir/$l")
     if (paths.nonEmpty) {
       val df = StoreCommit.readParquet(spark, paths)
-      val tombs = man.tombstones.values.count { case (bk, _) => sel.contains(bk) }
-      if (tombs == 0) df
+      val tombs = man.tombstones.collect { case (c, (bk, w)) if sel.contains(bk) => c -> w }
+      if (tombs.isEmpty) df
       else {
-        val box = StoreCommit.boxAs(df.schema("cluster_id").dataType) _
-        // the row's tombstone version (null for most rows), compared with
-        // the generation of its file only when there is one
-        val tombstoned = man.tombstones.toSeq
-          .collect { case (c, (bk, w)) if sel.contains(bk) => (w, c) }
-          .groupMap(_._1)(_._2).toSeq.sortBy(_._1)
-          .map { case (w, cs) => (StoreCommit.inSet(col("cluster_id"), cs.sorted.map(box)), lit(w)) }
-        val version = tombstoned.tail.foldLeft(when(tombstoned.head._1, tombstoned.head._2)) {
-          case (cw, (in, w)) => cw.when(in, w) }
-        val gen = regexp_extract(col("_metadata.file_path"), "^.*/labels_g(\\d+)\\.", 1)
-          .cast(LongType)
-        df.filter(!coalesce(version > gen, lit(false))).select(df.columns.map(col): _*)
+        // the tombstones enter the generated code as two objects, a hash
+        // set and a map literal, and never as inline literals, so a new
+        // tombstone set reuses the compiled filter. A row's tombstone
+        // version is looked up, and the generation of its file read, only
+        // for the rows whose cluster_id is in the set
+        val cid = col("cluster_id").cast(LongType)
+        val newer = element_at(typedLit(tombs), cid) >
+          StoreCommit.genVersionOf(col("_metadata.file_path"), "labels")
+        df.filter(!coalesce(when(StoreCommit.inSet(cid, tombs.keys.toSeq), newer), lit(false)))
+          .select(df.columns.map(col): _*)
       }
     } else {
       val fs = StoreCommit.fsOf(spark, dir)

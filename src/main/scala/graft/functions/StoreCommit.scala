@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod, regexp_extract}
 import org.apache.spark.sql.types._
 
 /** The store tier's one generational commit core: the versioned stores
@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
   *     `ConcurrentModificationException` with the store unharmed.
   *
   * Store verbs read generations through [[readParquet]] (a memoized
-  * schema and listing, so a read starts no Spark job) and take their batch-sized
+  * schema, so a read starts no Spark job) and take their batch-sized
   * inputs through [[localRows]], under the one row bound
   * ([[LocalRows]]) that decides whether a verb's batch-sized work runs
   * on the driver.
@@ -137,46 +137,15 @@ private[graft] object StoreCommit {
     * schemas. Durable: a store's layout is an offline-built artifact. */
   private val schemaMemo = new graft.PlanCache[StructType](capacity = 256, durable = true)
 
-  /** The data files under each store path read so far (a generation's
-    * leaf dir, or one data file), keyed by qualified path. Committed
-    * paths are immutable, so a listing never goes stale; a vacuumed
-    * path's entry outlives it, and a read of it fails on the missing
-    * file. */
-  private val leafMemo = new LruMap[String, Array[FileStatus]](8192)
-
-  private def leafFiles(fs: FileSystem, p: Path): Array[FileStatus] =
-    leafMemo.get(p.toString).getOrElse {
-      val st = fs.getFileStatus(p)
-      val files =
-        if (st.isFile) Array(st)
-        else fs.listStatus(p).filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-      leafMemo.put(p.toString, files)
-      files
-    }
-
-  /** Parquet `paths` (absolute, at least one, committed) read with the
-    * memoized schema of the first and the memoized listing of each. A
-    * schema-less read would start a Spark job per read to infer it from
-    * a footer; a miss here reads that footer on the driver instead
-    * ([[footerSchema]]). And past 32 paths Spark lists them with a Spark
-    * job on every read (its file-status cache is per reader); the
-    * listing handed to the file index here starts none. */
+  /** Parquet `paths` (absolute, at least one) read with the memoized
+    * schema of the first. A schema-less read would start a Spark job per
+    * read to infer it from a footer; a miss here reads that footer on
+    * the driver instead ([[footerSchema]]). */
   def readParquet(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
     val schema = schemaMemo.getOrCompute(
       graft.PlanCache.Key(spark, "StoreCommit.schema", paths.head),
       footerSchema(spark, paths.head).getOrElse(spark.read.parquet(paths.head).schema))
-    val fs = fsOf(spark, paths.head)
-    val roots = paths.map(p => fs.makeQualified(new Path(p)))
-    val listed = roots.map(r => r -> leafFiles(fs, r)).toMap
-    val index = new InMemoryFileIndex(spark, roots, Map.empty, Some(schema),
-      new FileStatusCache {
-        override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listed.get(path)
-        override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
-        override def invalidateAll(): Unit = ()
-      })
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(), schema, None,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat, Map.empty)(spark))
+    spark.read.schema(schema).parquet(paths: _*)
   }
 
   /** The schema Spark infers for the parquet file or directory `path` —
@@ -772,14 +741,28 @@ private[graft] object StoreCommit {
     generations(fs, dir).foreach(g => deleteOrThrow(fs, g._1.getPath, store))
   }
 
-  private val GenName = "^[A-Za-z]+_g(\\d+)\\.\\d+$".r
+  /** A [[saltedGenDir]] name of `prefix` (a regex) as a regex whose group
+    * 1 is the version. */
+  private def genName(prefix: String): String = s"${prefix}_g(\\d+)\\.\\d+"
+
+  private val GenName = s"^${genName("[A-Za-z]+")}$$".r
+
+  /** The version the generation named `name` ([[saltedGenDir]]) was
+    * staged for; None for any other name. */
+  def genVersion(name: String): Option[Long] =
+    GenName.findFirstMatchIn(name).map(_.group(1).toLong)
+
+  /** The version of the `prefix` generation in the path `path` (a
+    * string column): the column form of [[genVersion]]. */
+  def genVersionOf(path: Column, prefix: String): Column =
+    regexp_extract(path, s"/${genName(prefix)}/", 1).cast(LongType)
 
   /** Generation dirs directly under `dir`, with the version each was
     * staged for. */
   private def generations(fs: FileSystem, dir: String): Seq[(FileStatus, Long)] =
     if (!fs.exists(new Path(dir))) Seq.empty
     else fs.listStatus(new Path(dir)).toSeq.flatMap(s =>
-      GenName.findFirstMatchIn(s.getPath.getName).map(m => s -> m.group(1).toLong))
+      genVersion(s.getPath.getName).map(s -> _))
 
   /** Salted generation-dir name `<prefix>_g<v>.<salt>`: unique per
     * attempt, so racing writers stage disjoint paths and a loser's data

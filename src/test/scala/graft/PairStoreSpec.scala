@@ -845,13 +845,15 @@ class PairStoreSpec extends SparkSpec {
       val man = headManifest(dir)
       assert(perBucket(man, "bucket").values.forall(_ <= PairStore.MaxLeaves),
         s"op $op: leaves per bucket ${perBucket(man, "bucket")}")
-      assert(perBucket(man, "tombstone").values.forall(_ <= PairStore.MaxLeaves),
+      assert(perBucket(man, "tombstone").values.forall(_ <= PairStore.MaxTombstones),
         s"op $op: tombstones per bucket ${perBucket(man, "tombstone")}")
-      // nonce, version, modulus, ≤ 2 × MaxLeaves lines per bucket, pair files
-      val maxLines = 3 + 2 * PairStore.MaxLeaves * modulus + maxPairFiles + 1
+      // nonce, version, modulus, ≤ MaxLeaves + MaxTombstones lines per
+      // bucket, pair files
+      val maxLines =
+        3 + (PairStore.MaxLeaves + PairStore.MaxTombstones) * modulus + maxPairFiles + 1
       assert(man.size <= maxLines, s"op $op: ${man.size} manifest lines > $maxLines")
-      // the tombstone filter adds a Filter and a Project, and one InSet
-      // per live tombstone version, which the fold bounds
+      // the tombstone filter adds a Filter and a Project, and its explain
+      // lists the live tombstones, which the fold bounds
       val (n, c) = plan()
       sizes += ((n, c))
       assert(n <= 3 * nodes0 && c <= 8 * chars0,
