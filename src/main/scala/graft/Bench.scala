@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and emits ONE JSON line
@@ -16,31 +15,16 @@ import org.apache.spark.sql.SparkSession
   * converges on the real cost (round-5 min-of-2 showed untouched queries
   * swinging 2-5× round-over-round). The emitted line additionally carries
   * `vs_anchor` — the matched-set min/median ratios against the committed
-  * `bench_full.json` anchor (tools/bench_compare.py's rule) — so a single
-  * run's total is self-interpreting against the anchor's noise band.
+  * `bench_full.json` anchor (tools/bench_compare.py's rule), emitted only
+  * when the anchor was taken at the run's scale factor and CPU count — so
+  * a single run's total is self-interpreting against the anchor's noise
+  * band. The line also records `cpus`, the session's CPU count.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Let AQE re-optimize (coalesce) the plans that materialize CACHED
-      // intermediates (persisted pair tables, closure label rounds, graph
-      // edge tables). Off, every cache materializes at the static
-      // shuffle-partition count and every consumer stage pays that task
-      // count regardless of the cached bytes (guide §2.2: size partitions
-      // by bytes, let AQE coalesce; the r18 probe showed hundreds of
-      // 32-task stages over KB-sized caches). Scale-adaptive by
-      // construction — AQE only coalesces when actual bytes are small —
-      // so the same setting is right at 100 TB.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def run(name: String): Unit =
@@ -122,11 +106,13 @@ object Bench {
       lazy val root =
         new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
       // only a like-for-like comparison is meaningful: the anchor is
-      // recorded at one scale factor (sf0.1); a dev run at another sf
-      // must not emit a ratio that reads as a 2x win/loss
-      def sfMatches: Boolean =
-        Option(root.get("sf")).map(_.asText()).contains(sfDir)
-      if (!f.exists() || !sfMatches) "" else {
+      // recorded at one scale factor (sf0.1) and one CPU count; a dev run
+      // at another sf or CPU count, or against an anchor that records no
+      // CPU count, must not emit a ratio that reads as a 2x win/loss
+      def matches(field: String, value: String): Boolean =
+        Option(root.get(field)).map(_.asText()).contains(value)
+      if (!f.exists() || !matches("sf", sfDir) || !matches("cpus", cpus.toString)) ""
+      else {
         def jmap(field: String): Map[String, Double] = {
           val n = root.get(field)
           if (n == null) Map.empty
@@ -171,7 +157,7 @@ object Bench {
         .mkString("{", ",", "}")
     def line(entries: Seq[(String, Double)], omitted: Int, extra: String = ""): String = {
       val omit = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cold_caches":true,"queries":${qmap(entries)}$omit$extra,"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cold_caches":true,"queries":${qmap(entries)}$omit$extra,"errors":$errs,"sf":"$sfDir","cpus":$cpus}"""
     }
     // Full per-query detail lands in the JSON file (bench_last_run.json,
     // or the explicit SPARK_GRAFT_BENCH_OUT target when recording an

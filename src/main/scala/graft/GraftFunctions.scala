@@ -130,7 +130,7 @@ object GraftFunctions {
 }
 
 /** `spark.sql.extensions` entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * `GraftSession.builder().withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.GraftExtensions`. Installs the SQL
   * function surface AND the banded-range-join optimizer rule
   * ([[graft.plans.BandedRangeJoinRule]] — naive inequality joins stop

@@ -6,12 +6,12 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
   * and [[Ext]] (LLM-pipeline tier); this object is the thin registry the
   * driver introspects.
   *
-  * SESSION REQUIREMENT: the SparkSession must set
-  * `spark.sql.session.timeZone=UTC` on the builder — the event-tier
-  * queries read [[Tables.events]], whose timestamps are defined against
-  * UTC wall clocks, and it THROWS on any other zone rather than silently
-  * re-timing earlier reads (see Tables.events scaladoc). [[Verify]] and
-  * [[Bench]] — the driver's entry points — both set it.
+  * SESSION REQUIREMENT: build the SparkSession from [[GraftSession]],
+  * which sets `spark.sql.session.timeZone=UTC` — the event-tier queries
+  * read [[Tables.events]], whose timestamps are defined against UTC wall
+  * clocks, and it THROWS on any other zone rather than silently
+  * re-timing earlier reads (see Tables.events scaladoc). [[Verify]],
+  * [[Bench]] and the test suites all build their session there.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.

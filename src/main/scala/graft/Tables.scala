@@ -57,7 +57,7 @@ object Tables {
       throw new IllegalStateException(
         s"Tables.events requires spark.sql.session.timeZone=UTC (event-tier " +
           s"timestamps are defined against UTC wall clocks) but the session " +
-          s"has '$tz' — set it on the SparkSession builder before reading events")
+          s"has '$tz' — build the session from graft.GraftSession, which sets it")
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     val raw =

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Empirical per-stage profile of named queries (optimization guide §1.1):
   * runs each query through the bench's noop-sink convention and prints,
@@ -11,7 +10,11 @@ import org.apache.spark.sql.SparkSession
   * box. Repeats each query `reps` times (cold caches per rep, like the
   * bench) and prints every rep so contention swings are visible.
   *
-  * Usage: runMain graft.tools.StageProbe <q1,q2,...> [reps]
+  * The session is [[graft.GraftSession]]'s, so the stages profiled are
+  * the ones Bench times.
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> SPARK_GRAFT_CPUS=<n> \
+  *   sbt "runMain graft.tools.StageProbe <q1,q2,...> [reps]"
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
@@ -21,14 +24,7 @@ object StageProbe {
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().appName("graft-stage-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // stage records accumulated by the listener; drained per query rep

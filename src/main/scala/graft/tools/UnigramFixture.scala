@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** One-shot generator for the frozen unigram piece fixture
@@ -10,16 +9,13 @@ import org.apache.spark.sql.functions.col
   * documents table with a vocab cap ABOVE the EM survivor count (96, so
   * nothing is pruned and every corpus word stays exactly segmentable)
   * and prints `piece prob` lines to stdout. Run once, redirect into the
-  * resource, commit — the `fixtureMerges` convention. */
+  * resource, commit — the `fixtureMerges` convention. At the default
+  * `SPARK_GRAFT_CPUS` (4) it reproduces the committed resource byte for
+  * byte. */
 object UnigramFixture {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .appName("unigram-fixture")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().appName("unigram-fixture").getOrCreate()
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val model = graft.functions.UnigramTrain.learnedPieces(

@@ -280,20 +280,23 @@ class ScalingSpec extends SparkSpec {
     // synthetic edge-sized store: nodes only (append cost is what's
     // measured — pair FINDING is gated by the tests above). Buckets
     // scale with the corpus so one bucket stays a fixed rewrite unit —
-    // the documented operating point.
+    // the documented operating point. Each copy's pairs are one file
+    // whatever the CPU count, so neither size's append passes
+    // `maxPairFiles` and compacts.
     def nodes(f: Int): DataFrame =
       (0 until f).map(i => spark.range(1000).select(
         (col("id") + lit(i.toLong * 1000000L)).as("id")))
         .reduce(_ union _)
     def pairsOf(f: Int): DataFrame =
-      (0 until f).map(i => spark.range(100).select(
+      (0 until f).map(i => spark.range(0, 100, 1, 1).select(
         ((col("id") * 10) + lit(i.toLong * 1000000L)).as("id_a"),
         ((col("id") * 10) + 1L + lit(i.toLong * 1000000L)).as("id_b")))
         .reduce(_ union _)
-    // constant batch: 50 fresh nodes, each paired to a copy-0 node
-    val batchNodes = spark.range(50).select((col("id") + 5000000L).as("id"))
+    // constant batch: 50 nodes above every copy's ids (fresh at both
+    // sizes), each paired to a copy-0 node
+    val batchNodes = spark.range(50).select((col("id") + 100000000L).as("id"))
     val batchPairs = spark.range(50).select(
-      (col("id") + 5000000L).as("id_a"), (col("id") * 7).as("id_b"))
+      (col("id") + 100000000L).as("id_a"), (col("id") * 7).as("id_b"))
     def appendBytes(f: Int): Long = {
       val dir = TempDirs.create("graft_scaling_pairstore")
       PairStore.build(nodes(f), pairsOf(f), dir, "id", "id_a", "id_b",
@@ -315,6 +318,7 @@ class ScalingSpec extends SparkSpec {
     val b8 = appendBytes(8)
     assert(b1 > 0, "no shuffle bytes measured — listener broken?")
     val ratio = b8.toDouble / b1
+    info(f"append shuffle bytes 1x -> 8x: $b1%,d B -> $b8%,d B ($ratio%.2fx)")
     assert(ratio < 3.0,
       s"append shuffle grew ${ratio}x when ONLY the stored corpus grew 8x — " +
         "append cost must track the batch, not the corpus")
@@ -325,7 +329,8 @@ class ScalingSpec extends SparkSpec {
   // gate on the distributed closure
   storeTest("pair-store delete: shuffle bytes stay batch-proportional as the stored corpus grows 8x") {
     import graft.functions.PairStore
-    // same synthetic store shape as the append gate; the delete batch is
+    // same synthetic store shape (one pair file per copy) as the append
+    // gate; the delete batch is
     // CONSTANT (6 copy-0 pair endpoints → 6 affected clusters), so the
     // touched-bucket count stays below BOTH moduli — the rewrite unit is
     // the bucket, and the documented operating point scales the modulus
@@ -338,7 +343,7 @@ class ScalingSpec extends SparkSpec {
         (col("id") + lit(i.toLong * 1000000L)).as("id")))
         .reduce(_ union _)
     def pairsOf(f: Int): DataFrame =
-      (0 until f).map(i => spark.range(100).select(
+      (0 until f).map(i => spark.range(0, 100, 1, 1).select(
         ((col("id") * 10) + lit(i.toLong * 1000000L)).as("id_a"),
         ((col("id") * 10) + 1L + lit(i.toLong * 1000000L)).as("id_b")))
         .reduce(_ union _)
@@ -364,6 +369,7 @@ class ScalingSpec extends SparkSpec {
     val b8 = deleteBytes(8)
     assert(b1 > 0, "no shuffle bytes measured — listener broken?")
     val ratio = b8.toDouble / b1
+    info(f"delete shuffle bytes 1x -> 8x: $b1%,d B -> $b8%,d B ($ratio%.2fx)")
     assert(ratio < 3.0,
       s"delete shuffle grew ${ratio}x when ONLY the stored corpus grew 8x — " +
         "delete cost must track the affected components, not the corpus")

@@ -93,28 +93,32 @@ object SparkSpec {
   /** Counts a suite; the first one starts the run clock and registers
     * the line the test JVM prints last, as it exits: a log that does not
     * end with `[summary]` was cut short, and one that does names its
-    * failed tests and aborted suites. */
+    * failed tests and aborted suites, and the session configuration
+    * the run tested. */
   private def suiteStarted(): Unit =
     if (suites.getAndIncrement() == 0) {
       runStartNanos
       Runtime.getRuntime.addShutdownHook(new Thread(() => println(
         f"[summary] suites ${suites.get}%d, tests ${tests.get}%d, failed ${failed.get}%d, " +
-          f"aborted ${aborted.get}%d, ${(System.nanoTime() - runStartNanos) / 1e9}%.1f s")))
+          f"aborted ${aborted.get}%d, ${(System.nanoTime() - runStartNanos) / 1e9}%.1f s, " +
+          tested)))
     }
 
+  /** The configuration the session ran with, recorded as it starts. */
+  @volatile private var tested = "no session"
+
+  /** The shipped session ([[GraftSession]]) with a throwaway warehouse. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
+    val s = GraftSession.builder()
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    def conf(k: String) = s.conf.get(k)
+    tested = s"master ${conf("spark.master")}, " +
+      s"shuffle partitions ${conf("spark.sql.shuffle.partitions")}, " +
+      s"cached-plan AQE ${conf("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning")}"
     s
   }
 }
