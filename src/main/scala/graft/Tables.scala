@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet table access for the driver testdata star schema (TESTDATA.md).
   *
@@ -9,10 +11,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * lazy Catalyst `LogicalRelation`; Spark's parquet reader gives columnar
   * scan, predicate pushdown and partition-parallel IO for free — the 100 TB
   * replacement for the reference's single-threaded in-RAM `RT[] records`.
+  *
+  * Every read passes its schema ([[readParquet]]): a schema-less read
+  * starts a Spark job per read to infer it from a footer, so the schema
+  * is inferred once and memoized. A table's memo entry is keyed by the
+  * length and modification time of each of its leaf files and by
+  * `spark.sql.legacy.parquet.nanosAsLong` (the one inference setting a
+  * graft session changes, see [[events]]): a second read of an unchanged
+  * table starts no Spark job, and a rewritten file is inferred again.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    leafStamp(spark, path) match {
+      case Some(stamp) =>
+        readParquet(spark, Seq(path), stamp +
+          s"\nnanosAsLong=${spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")}")
+      // a missing path fails as a schema-less read does
+      case None => spark.read.parquet(path)
+    }
+  }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")
@@ -81,4 +99,63 @@ object Tables {
   }
   def documents(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "embeddings")
+
+  /** Inferred parquet schemas, keyed by session, first path and the
+    * caller's `stamp`. Durable (survives `PlanCache.clearShared`): a
+    * schema is a property of the files, and the stamp changes when they
+    * do. */
+  private val schemaMemo = new PlanCache[StructType](capacity = 256, durable = true)
+
+  /** Parquet `paths` (at least one) read with the memoized schema of the
+    * first under `stamp`, which must change whenever that schema can:
+    * [[table]] stamps its leaf files and inference settings; the stores
+    * (`StoreCommit.readParquet`) pass an empty stamp, since their salted
+    * generation paths are immutable once written. A miss reads the schema
+    * from a footer on the driver ([[footerSchema]]) and infers it with a
+    * Spark job only when no footer carries one. */
+  private[graft] def readParquet(spark: SparkSession, paths: Seq[String], stamp: String): DataFrame = {
+    val schema = schemaMemo.getOrCompute(PlanCache.Key(spark, paths.head, stamp),
+      footerSchema(spark, paths.head).getOrElse(spark.read.parquet(paths.head).schema))
+    spark.read.schema(schema).parquet(paths: _*)
+  }
+
+  /** Path, length and modification time of every leaf file under `path`
+    * (the file itself for a file), or None when `path` does not exist. */
+  private def leafStamp(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val it = fs.listFiles(p, true)
+      val leaves = Seq.newBuilder[String]
+      while (it.hasNext) {
+        val f = it.next()
+        leaves += s"${f.getPath} ${f.getLen} ${f.getModificationTime}"
+      }
+      Some(leaves.result().sorted.mkString("\n"))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** The schema Spark infers for the parquet file or directory `path` —
+    * the Spark schema its writer stored in the first data file's footer,
+    * made nullable as file sources read it — read on the driver, or None
+    * when no footer carries one. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file =
+      if (fs.getFileStatus(p).isFile) Some(p)
+      else fs.listStatus(p).map(_.getPath)
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .sortBy(_.getName).headOption
+    file.flatMap { f =>
+      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      try Option(in.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(j => org.apache.spark.sql.graftsql.Bridge.asNullable(
+          DataType.fromJson(j).asInstanceOf[StructType]))
+      finally in.close()
+    }
+  }
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructType}
 
 /** Event-log analytics beyond windows-and-groupbys (EXT tier — the
   * reference has no event surface at all): exact cumulative distinct
@@ -305,12 +305,22 @@ object EventStats {
           .cast(DoubleType) / col("actives")).as("churn_rate"))
   }
 
-  /** Distributed running (inclusive) sum of `valueCol` in `orderKey`
-    * order, emitted as `outCol` — the generic two-pass bucketed cumsum of
+  /** Running (inclusive) sum of `valueCol` in `orderKey` order, emitted
+    * as `outCol` — the generic two-pass bucketed cumsum of
     * [[Packing.packSequences]] (divide-first bucketing, per-bucket totals
     * to bounded driver prefix sums, in-bucket window): exact integer
     * arithmetic, no partition-less window at any size. `orderKey` must be
-    * unique per row and integral. */
+    * unique per row and integral. Null values are skipped as `sum`
+    * skips them, per bucket: a row whose bucket holds only nulls up to
+    * it gets null.
+    *
+    * The bounds aggregate also counts the rows. When the count fits the
+    * driver-local row bound ([[StoreCommit.fitsLocal]], the stores'
+    * `LocalRows`), the keyed rows are collected once and the same
+    * bucketed sums are computed on the driver into a local frame, so a
+    * small input's pipeline runs twice instead of three times (bounds,
+    * totals, final action). Above the bound the distributed two-pass
+    * path runs, with no extra pass. */
   def runningSum(
       df: DataFrame,
       orderKey: Column,
@@ -326,7 +336,7 @@ object EventStats {
       .withColumn("_rs_key", orderKey.cast(LongType))
       .withColumn("_rs_val", valueCol.cast(LongType))
     val bounds = keyed.agg(min(col("_rs_key")), max(col("_rs_key")),
-      sum(when(col("_rs_key").isNull, 1L).otherwise(0L))).collect().head
+      sum(when(col("_rs_key").isNull, 1L).otherwise(0L)), count(lit(1))).collect().head
     if (bounds.isNullAt(0)) return df.withColumn(outCol, lit(null).cast(LongType))
     // a PARTIALLY-null key column would bucket those rows to null and the
     // totals collect below would NPE on the driver with no context — the
@@ -340,6 +350,8 @@ object EventStats {
       catch { case _: ArithmeticException => throw new IllegalArgumentException(
         s"order-key span [$minKey, $maxKey] exceeds Long range; rescale the key") }
     val width = math.max(1L, (span - 1L) / nBuckets + 1L)
+    if (StoreCommit.fitsLocal(bounds.getLong(3)))
+      return runningSumLocal(keyed, df.schema, outCol, minKey, width)
     val bucketed = keyed.withColumn("_rs_bucket",
       expr(s"(_rs_key - ${minKey}L) div ${width}L"))
     val totals = bucketed.groupBy(col("_rs_bucket"))
@@ -364,6 +376,43 @@ object EventStats {
     bucketed
       .withColumn(outCol, sum(col("_rs_val")).over(w) + prefixCol)
       .drop("_rs_key", "_rs_val", "_rs_bucket")
+  }
+
+  /** [[runningSum]]'s driver-local path: `keyed` (`schema`'s columns,
+    * then `_rs_key` and `_rs_val`) collected once and summed bucket by
+    * bucket as the distributed path sums them — the same buckets of
+    * `width` keys from `minKey`, each bucket's null-skipping total added
+    * to the prefix of the buckets before it, and a row null while its
+    * bucket has summed no value yet. Long overflow throws, as `sum`
+    * does under ANSI arithmetic. */
+  private def runningSumLocal(
+      keyed: DataFrame,
+      schema: StructType,
+      outCol: String,
+      minKey: Long,
+      width: Long
+  ): DataFrame = {
+    val (k, v) = (schema.length, schema.length + 1)
+    val rows = keyed.collect().sortBy(_.getLong(k))
+    def bucket(r: Row): Long = (r.getLong(k) - minKey) / width
+    var prefix = 0L // sum of the totals of the buckets before the current one
+    var inBucket: Option[Long] = None // current bucket's running sum
+    val out = rows.indices.map { i =>
+      val r = rows(i)
+      if (i > 0 && bucket(r) != bucket(rows(i - 1))) {
+        prefix = Math.addExact(prefix, inBucket.getOrElse(0L))
+        inBucket = None
+      }
+      if (!r.isNullAt(v))
+        inBucket = Some(Math.addExact(inBucket.getOrElse(0L), r.getLong(v)))
+      Row.fromSeq(r.toSeq.take(k) :+ inBucket.fold[Any](null)(Math.addExact(_, prefix)))
+    }
+    // the sum rides in `_rs_val` so `withColumn` places `outCol` as the
+    // distributed path does (appended, or replacing a column of that name)
+    StoreCommit.localFrame(keyed.sparkSession,
+      schema.add("_rs_val", LongType), out)
+      .withColumn(outCol, col("_rs_val"))
+      .drop("_rs_val")
   }
 
   /** Per-user activity quartile assignment: users bucketed 1–4 by how

@@ -131,46 +131,13 @@ private[graft] object StoreCommit {
   // reads
   // ------------------------------------------------------------------ //
 
-  /** Schemas memoized by the FIRST path read: store generations are
-    * immutable once written (salted dirs), and a rebuilt or compacted
-    * store mints new salted paths — so the key never aliases two
-    * schemas. Durable: a store's layout is an offline-built artifact. */
-  private val schemaMemo = new graft.PlanCache[StructType](capacity = 256, durable = true)
-
   /** Parquet `paths` (absolute, at least one) read with the memoized
-    * schema of the first. A schema-less read would start a Spark job per
-    * read to infer it from a footer; a miss here reads that footer on
-    * the driver instead ([[footerSchema]]). */
-  def readParquet(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val schema = schemaMemo.getOrCompute(
-      graft.PlanCache.Key(spark, "StoreCommit.schema", paths.head),
-      footerSchema(spark, paths.head).getOrElse(spark.read.parquet(paths.head).schema))
-    spark.read.schema(schema).parquet(paths: _*)
-  }
-
-  /** The schema Spark infers for the parquet file or directory `path` —
-    * the Spark schema its writer stored in the first data file's footer,
-    * made nullable as file sources read it — read on the driver, or None
-    * when no footer carries one. */
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val file =
-      if (fs.getFileStatus(p).isFile) Some(p)
-      else fs.listStatus(p).map(_.getPath)
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName).headOption
-    file.flatMap { f =>
-      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      try Option(in.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(j => org.apache.spark.sql.graftsql.Bridge.asNullable(
-          DataType.fromJson(j).asInstanceOf[StructType]))
-      finally in.close()
-    }
-  }
+    * schema of the first ([[graft.Tables.readParquet]]), keyed by that
+    * path alone: store generations are immutable once written (salted
+    * dirs), and a rebuilt or compacted store mints new salted paths — so
+    * the key never aliases two schemas. */
+  def readParquet(spark: SparkSession, paths: Seq[String]): DataFrame =
+    graft.Tables.readParquet(spark, paths, stamp = "")
 
   // ------------------------------------------------------------------ //
   // manifests and commits

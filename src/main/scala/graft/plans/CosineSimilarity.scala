@@ -54,22 +54,21 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      // block-scoped locals: see SortedIntersectCount — unbraced inlining
-      // of two instances would redeclare them
+      // fresh local names: see SortedIntersectCount
+      val Seq(n, dot, na, nb, i, xi, yi) =
+        Seq("n", "dot", "na", "nb", "i", "xi", "yi").map(ctx.freshName)
       s"""
-         |{
-         |  int n = $a.numElements();
-         |  if ($b.numElements() != n) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    double dot = 0.0, na = 0.0, nb = 0.0;
-         |    for (int i = 0; i < n; i++) {
-         |      double xi = $a.getDouble(i);
-         |      double yi = $b.getDouble(i);
-         |      dot += xi * yi; na += xi * xi; nb += yi * yi;
-         |    }
-         |    ${ev.value} = dot / (Math.sqrt(na) * Math.sqrt(nb));
+         |int $n = $a.numElements();
+         |if ($b.numElements() != $n) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    double $xi = $a.getDouble($i);
+         |    double $yi = $b.getDouble($i);
+         |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
          |  }
+         |  ${ev.value} = $dot / (Math.sqrt($na) * Math.sqrt($nb));
          |}
        """.stripMargin
     })

@@ -55,24 +55,23 @@ case class DropSortedPositions(left: Expression, right: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (t, c) => {
       val arrayData = classOf[GenericArrayData].getName
-      // block-scoped locals: see SortedIntersectCount — unbraced inlining
-      // of two instances would redeclare them
+      // fresh local names: see SortedIntersectCount
+      val Seq(n, k, kept, j, m, i, pos) =
+        Seq("n", "k", "kept", "j", "m", "i", "pos").map(ctx.freshName)
       s"""
-         |{
-         |  int n = $t.numElements(), k = $c.numElements();
-         |  Object[] kept = new Object[n];
-         |  int j = 0, m = 0;
-         |  for (int i = 0; i < n; i++) {
-         |    int pos = i + 1;
-         |    while (j < k && $c.getInt(j) < pos) j++;
-         |    if (j < k && $c.getInt(j) == pos) { j++; }
-         |    else {
-         |      kept[m++] = $t.isNullAt(i) ? null : $t.getUTF8String(i);
-         |    }
+         |int $n = $t.numElements(), $k = $c.numElements();
+         |Object[] $kept = new Object[$n];
+         |int $j = 0, $m = 0;
+         |for (int $i = 0; $i < $n; $i++) {
+         |  int $pos = $i + 1;
+         |  while ($j < $k && $c.getInt($j) < $pos) $j++;
+         |  if ($j < $k && $c.getInt($j) == $pos) { $j++; }
+         |  else {
+         |    $kept[$m++] = $t.isNullAt($i) ? null : $t.getUTF8String($i);
          |  }
-         |  ${ev.value} = new $arrayData(
-         |    m == n ? kept : java.util.Arrays.copyOf(kept, m));
          |}
+         |${ev.value} = new $arrayData(
+         |  $m == $n ? $kept : java.util.Arrays.copyOf($kept, $m));
        """.stripMargin
     })
 

@@ -60,29 +60,28 @@ case class SignLshBuckets(
     nullSafeCodeGen(ctx, ev, v => {
       val planesRef = ctx.addReferenceObj("planes", planes, "double[][][]")
       val arrayData = classOf[GenericArrayData].getName
-      // block-scoped locals: see SortedIntersectCount — unbraced inlining
-      // of two instances would redeclare them
+      // fresh local names: see SortedIntersectCount
+      val Seq(tables, out, t, bucket, p, plane, dot, i) =
+        Seq("tables", "out", "t", "bucket", "p", "plane", "dot", "i").map(ctx.freshName)
       s"""
-         |{
-         |double[][][] tables = $planesRef;
-         |long[] out = new long[tables.length];
-         |for (int t = 0; t < tables.length; t++) {
-         |  long bucket = 0L;
-         |  for (int p = 0; p < tables[t].length; p++) {
-         |    double[] plane = tables[t][p];
-         |    if (plane.length != $v.numElements()) {
+         |double[][][] $tables = $planesRef;
+         |long[] $out = new long[$tables.length];
+         |for (int $t = 0; $t < $tables.length; $t++) {
+         |  long $bucket = 0L;
+         |  for (int $p = 0; $p < $tables[$t].length; $p++) {
+         |    double[] $plane = $tables[$t][$p];
+         |    if ($plane.length != $v.numElements()) {
          |      throw new IllegalArgumentException(
-         |        "sign_lsh_buckets: hyperplane dim " + plane.length +
+         |        "sign_lsh_buckets: hyperplane dim " + $plane.length +
          |        " != vector dim " + $v.numElements());
          |    }
-         |    double dot = 0.0;
-         |    for (int i = 0; i < plane.length; i++) dot += $v.getDouble(i) * plane[i];
-         |    if (dot >= 0) bucket |= (1L << p);
+         |    double $dot = 0.0;
+         |    for (int $i = 0; $i < $plane.length; $i++) $dot += $v.getDouble($i) * $plane[$i];
+         |    if ($dot >= 0) $bucket |= (1L << $p);
          |  }
-         |  out[t] = bucket;
+         |  $out[$t] = $bucket;
          |}
-         |${ev.value} = new $arrayData(out);
-         |}
+         |${ev.value} = new $arrayData($out);
        """.stripMargin
     })
 

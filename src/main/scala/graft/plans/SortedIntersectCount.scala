@@ -37,22 +37,23 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      // the body is a BLOCK: with non-nullable children nullSafeCodeGen
-      // inlines this code unbraced, and two instances in one generated
-      // function would redeclare the scratch locals (Janino error →
-      // silent fallback to interpreted projection)
+      // every local takes a fresh name: the generated method around this
+      // code declares its own (an UnsafeProjection's `apply(InternalRow
+      // i)`, another instance of this kernel), and Java forbids a local
+      // that redeclares or shadows one — Janino's compile error would
+      // silently fall back to the interpreted projection
+      val Seq(nx, ny, i, j, c, xi, yj) =
+        Seq("nx", "ny", "i", "j", "c", "xi", "yj").map(ctx.freshName)
       s"""
-         |{
-         |  int nx = $a.numElements(), ny = $b.numElements();
-         |  int i = 0, j = 0, c = 0;
-         |  while (i < nx && j < ny) {
-         |    long xi = $a.getLong(i); long yj = $b.getLong(j);
-         |    if (xi == yj) { c++; i++; j++; }
-         |    else if (xi < yj) i++;
-         |    else j++;
-         |  }
-         |  ${ev.value} = c;
+         |int $nx = $a.numElements(), $ny = $b.numElements();
+         |int $i = 0, $j = 0, $c = 0;
+         |while ($i < $nx && $j < $ny) {
+         |  long $xi = $a.getLong($i); long $yj = $b.getLong($j);
+         |  if ($xi == $yj) { $c++; $i++; $j++; }
+         |  else if ($xi < $yj) $i++;
+         |  else $j++;
          |}
+         |${ev.value} = $c;
        """.stripMargin
     })
 

@@ -17,7 +17,7 @@ object UnigramFixture {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = graft.GraftSession.builder().appName("unigram-fixture").getOrCreate()
     try {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = graft.Tables.documents(spark, sfDir)
       val model = graft.functions.UnigramTrain.learnedPieces(
         docs, col("text"), vocabSize = 96, maxPieceLen = 4,
         emIters = 2, maxWords = 512, seedMultis = 64)

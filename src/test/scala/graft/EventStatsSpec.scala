@@ -17,7 +17,7 @@ class EventStatsSpec extends SparkSpec {
     Gen.zip(Gen.choose(1L, 8L), Gen.choose(1, 9), Gen.choose(0, 59),
       Gen.oneOf("a", "b", "c")))
 
-  test("runningSum == sequential cumsum for random values and sparse keys") {
+  storeTest("runningSum == sequential cumsum for random values and sparse keys") {
     for (seed <- 1 to 6) {
       val data = Gen.listOfN(50, Gen.zip(Gen.choose(-1000L, 1000L), Gen.choose(0L, 50L)))
         .pureApply(Gen.Parameters.default, Seed(seed.toLong))
@@ -32,17 +32,39 @@ class EventStatsSpec extends SparkSpec {
     }
   }
 
-  test("runningSum on empty input yields null column, not a crash") {
+  storeTest("runningSum on empty input yields null column, not a crash") {
     val df = Seq.empty[(Long, Long)].toDF("k", "v")
     assert(EventStats.runningSum(df, col("k"), col("v"), "cum").count() == 0L)
   }
 
-  test("runningSum refuses a partially-null order key with an actionable error") {
+  storeTest("runningSum refuses a partially-null order key with an actionable error") {
     val df = Seq((Some(1L), 1L), (None, 2L), (Some(3L), 3L)).toDF("k", "v")
     val e = intercept[IllegalArgumentException] {
       EventStats.runningSum(df, col("k"), col("v"), "cum").count()
     }
     assert(e.getMessage.contains("orderKey is null"), e.getMessage)
+  }
+
+  storeTest("runningSum skips null values per bucket, as sum over the bucket window does") {
+    // nBuckets 3 over keys 0..8: width 3, buckets {0,1,2} {3,4,5} {6,7,8}.
+    // Bucket 1 is all null (contributes 0 to later prefixes), bucket 2
+    // leads with a null: a row is null until its bucket has summed a value
+    val vals = Seq(Some(1L), None, Some(2L), None, None, None, None, Some(5L), None)
+    val df = vals.zipWithIndex.map { case (v, k) => (k.toLong, v) }.toDF("k", "v")
+    val got = EventStats.runningSum(df, col("k"), col("v"), "cum", nBuckets = 3)
+      .select("k", "cum").as[(Long, Option[Long])].collect().toMap
+    val expected = Map(0L -> Some(1L), 1L -> Some(1L), 2L -> Some(3L),
+      3L -> None, 4L -> None, 5L -> None, 6L -> None, 7L -> Some(8L), 8L -> Some(8L))
+    assert(got == expected)
+  }
+
+  storeTest("runningSum keeps the input's columns and replaces an existing outCol in place") {
+    val df = Seq((2L, 10L, "b", 0L), (1L, 5L, "a", 0L)).toDF("k", "v", "tag", "cum")
+    val out = EventStats.runningSum(df, col("k"), col("v"), "cum")
+    assert(out.columns.toSeq == Seq("k", "v", "tag", "cum"))
+    assert(out.schema("cum").dataType == org.apache.spark.sql.types.LongType)
+    assert(out.orderBy("k").as[(Long, Long, String, Long)].collect().toSeq ==
+      Seq((1L, 5L, "a", 5L), (2L, 10L, "b", 15L)))
   }
 
   test("dailyChurn keeps interior 100%-churn days across calendar gaps") {
@@ -74,7 +96,7 @@ class EventStatsSpec extends SparkSpec {
     assert(r.getLong(2) + r.getLong(3) == 2L) // conversions: -1 and 4
   }
 
-  test("cumulativeDistinctUsers == brute-force distinct recount per day") {
+  storeTest("cumulativeDistinctUsers == brute-force distinct recount per day") {
     for (seed <- 1 to 6) {
       val evs = evGen.pureApply(Gen.Parameters.default, Seed(seed.toLong))
         .map { case (u, day, min, _) => (u, ts(day, min)) }

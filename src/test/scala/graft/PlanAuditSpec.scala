@@ -14,19 +14,23 @@ class PlanAuditSpec extends SparkSpec {
     "sim_topk"
   )
 
-  /** The keys served by [[functions.SignatureStore.screenBatch]], whose
-    * batch is screened on the driver when its signatures fit the
-    * driver-local row bound: their plans with every store verb
-    * distributed (bound 0) are audited as `<key> [distributed]` too, so
-    * the distributed screen stays audited whatever the bound picks. */
-  private val storeScreenKeys = Set("dedup_incremental_store", "dedup_incremental_deleted")
+  /** The keys with a driver-local path under the driver-local row bound
+    * ([[functions.StoreCommit.LocalRows]]): the ones served by
+    * [[functions.SignatureStore.screenBatch]], whose batch is screened on
+    * the driver when its signatures fit, and `dau_cumulative`, whose
+    * running sum ([[functions.EventStats.runningSum]]) closes a small day
+    * table on the driver. Their plans with the bound at 0 are audited as
+    * `<key> [distributed]` too, so the distributed path stays audited
+    * whatever the bound picks. */
+  private val localPathKeys =
+    Set("dedup_incremental_store", "dedup_incremental_deleted", "dau_cumulative")
 
-  /** Every registered key, then each store-screen key again with every
-    * store verb distributed: (audited name, the key's DataFrame built
-    * under that setting). */
+  /** Every registered key, then each local-path key again with the bound
+    * at 0: (audited name, the key's DataFrame built under that
+    * setting). */
   private def sweep(): Seq[(String, () => org.apache.spark.sql.DataFrame)] =
     Queries.all.map(q => q.name -> (() => q.fn(spark, sf0001))) ++
-      Queries.all.filter(q => storeScreenKeys(q.name)).map(q =>
+      Queries.all.filter(q => localPathKeys(q.name)).map(q =>
         s"${q.name} [distributed]" -> (() => withLocalRows(0)(q.fn(spark, sf0001))))
 
   /** Every swept key's DataFrame built ONCE, and the one plan the warm

@@ -13,7 +13,9 @@ import java.sql.Timestamp
   *   1. asserts the column name → Spark-type mapping the engine assumes for
   *      every sf0.001 table (TESTDATA.md as code);
   *   2. pins BOTH historical `ts` encodings against tiny locally-written
-  *      parquet fixtures, proving `Tables.events` dispatches correctly.
+  *      parquet fixtures, proving `Tables.events` dispatches correctly;
+  *   3. pins the `Tables` schema memo: a repeated read infers nothing, a
+  *      rewritten table is inferred again.
   */
 class SchemaContractSpec extends SparkSpec {
 
@@ -131,5 +133,24 @@ class SchemaContractSpec extends SparkSpec {
       s"expected epoch millis ${micros.map(_ / 1000L)}, got ${fromNanos.map(_.getTime)}")
     // Sub-millisecond precision survives both paths.
     assert(fromNanos.map(_.getNanos) == micros.map(us => ((us % 1000000L) * 1000L).toInt))
+  }
+
+  test("Tables infers a table's schema once, and again after its file is rewritten") {
+    Tables.nation(spark, sf0001)
+    assert(jobsDuring(Tables.nation(spark, sf0001)) == 0,
+      "a second read of an unchanged table started a Spark job")
+    Tables.events(spark, sf0001)
+    assert(jobsDuring(Tables.events(spark, sf0001)) == 0)
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft_tables_memo")
+    def copy(name: String): Unit = Files.copy(Paths.get(s"$sf0001/$name.parquet"),
+      dir.resolve("t.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    copy("nation")
+    assert(Tables.table(spark, dir.toString, "t").columns.toSeq ==
+      Tables.nation(spark, sf0001).columns.toSeq)
+    copy("region")
+    val t = Tables.table(spark, dir.toString, "t")
+    assert(t.columns.toSeq == Tables.region(spark, sf0001).columns.toSeq)
+    assert(rows(t.orderBy("r_regionkey")) == rows(Tables.region(spark, sf0001).orderBy("r_regionkey")))
   }
 }

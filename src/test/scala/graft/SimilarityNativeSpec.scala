@@ -84,6 +84,62 @@ class SimilarityNativeSpec extends SparkSpec {
     assert(p.contains("*("), s"expression fell out of codegen:\n$p")
   }
 
+  test("inline-Java kernels compile in a projection and under whole-stage codegen") {
+    // CODEGEN_ONLY and no whole-stage fallback: a kernel whose generated
+    // Java does not compile throws here, instead of Spark silently
+    // running the interpreted projection (the kernels' scratch locals
+    // once collided with an UnsafeProjection's `InternalRow i`)
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.graftsql.Bridge
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val planes = Array(Array(Array(1.0, 0.0), Array(0.0, -1.0)))
+    def kernels(longs: Expression, dbls: Expression, strs: Expression, ints: Expression) = Seq(
+      plans.SortedIntersectCount(longs, longs), plans.CosineSimilarity(dbls, dbls),
+      plans.SignLshBuckets(dbls, planes), plans.DropSortedPositions(strs, ints))
+    val confs = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      // a projection over nullable inputs, each kernel twice
+      val ks = kernels(BoundReference(0, ArrayType(LongType), nullable = true),
+        BoundReference(1, ArrayType(DoubleType), nullable = true),
+        BoundReference(2, ArrayType(StringType), nullable = true),
+        BoundReference(3, ArrayType(IntegerType), nullable = true))
+      val out = UnsafeProjection.create(ks ++ ks).apply(InternalRow(
+        new GenericArrayData(Array(1L, 2L, 3L)), new GenericArrayData(Array(3.0, 4.0)),
+        new GenericArrayData(Array[Any](UTF8String.fromString("a"), UTF8String.fromString("b"))),
+        new GenericArrayData(Array(1))))
+      for (o <- Seq(0, 4)) {
+        assert(out.getInt(o) == 3)
+        assert(out.getDouble(o + 1) == 1.0)
+        assert(out.getArray(o + 2).toLongArray().toSeq == Seq(1L))
+        assert(out.getArray(o + 3).getUTF8String(0).toString == "b" &&
+          out.getArray(o + 3).numElements() == 1)
+      }
+      // whole-stage codegen over a range scan, each kernel twice
+      val in = spark.range(3).select(
+        array(col("id"), col("id") + 1).as("l"),
+        array(col("id").cast("double") + 3.0, lit(4.0)).as("d"),
+        array(col("id").cast("string"), lit("x")).as("s"),
+        array(lit(1)).as("c"))
+      val Seq(l, d, s, c) = Seq("l", "d", "s", "c").map(n => Bridge.toExpression(col(n)))
+      val cols = kernels(l, d, s, c).map(Bridge.toColumn)
+      val df = in.select((cols ++ cols).zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
+      val got = df.collect()
+      assert(got.length == 3 && got.forall(r => r.getInt(0) == 2 && r.getInt(4) == 2 &&
+        r.getSeq[String](3) == Seq("x") && r.getSeq[String](7) == Seq("x")))
+      val p = df.queryExecution.executedPlan.toString()
+      assert(p.contains("*("), s"kernels fell out of whole-stage codegen:\n$p")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("bruteForceTopKCached REFUSES an unbounded query slate (corpus-as-queries)") {
     // the exact-reference collect is only bounded by the slate contract;
     // passing a query side wider than MaxQuerySlate must throw loudly
