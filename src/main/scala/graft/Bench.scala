@@ -155,7 +155,7 @@ object Bench {
     def qmap(entries: Seq[(String, Double)]): String =
       entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
-    def line(entries: Seq[(String, Double)], omitted: Int, extra: String = ""): String = {
+    def line(entries: Seq[(String, Double)], omitted: Int, extra: String): String = {
       val omit = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cold_caches":true,"queries":${qmap(entries)}$omit$extra,"errors":$errs,"sf":"$sfDir","cpus":$cpus}"""
     }

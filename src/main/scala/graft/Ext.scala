@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.Queries.QDef
 import graft.functions.{Dedup, NearDup, Privacy, Similarity, Text}
@@ -3721,7 +3720,7 @@ object Ext {
     * the decoded dims must round-trip the encode. */
   private val mediaDecode = QDef(
     "media_decode",
-    (s, d) => graft.functions.Multimodal.decodeInfo(
+    (s, _) => graft.functions.Multimodal.decodeInfo(
       graft.functions.Multimodal.syntheticMedia(s, 64))
       .toDF().orderBy(col("asset_id")),
     Some("SELECT i AS asset_id, CAST(32 + i % 64 AS INT) AS width, " +
@@ -3735,7 +3734,7 @@ object Ext {
     * covered in `MultimodalSpec` (not SQL-expressible). */
   private val mediaResize = QDef(
     "media_resize",
-    (s, d) => graft.functions.Multimodal.decodeInfo(
+    (s, _) => graft.functions.Multimodal.decodeInfo(
       graft.functions.Multimodal.resize(
         graft.functions.Multimodal.syntheticMedia(s, 64), 16, 16))
       .toDF().orderBy(col("asset_id")),
@@ -3749,7 +3748,7 @@ object Ext {
     * idx/12, per-asset frame dims — all arithmetic. */
   private val videoFrames = QDef(
     "video_frames",
-    (s, d) => graft.functions.Multimodal.videoFrameInfo(
+    (s, _) => graft.functions.Multimodal.videoFrameInfo(
       graft.functions.Multimodal.syntheticVideo(s, 12), everyN = 5)
       .toDF()
       .select(col("asset_id"), col("frame_idx"), round(col("ts_s"), 6).as("ts_s"),
@@ -3769,7 +3768,7 @@ object Ext {
     * approx_agg_bounds — exact RMS would pin cross-engine libm sin). */
   private val audioDecode = QDef(
     "audio_decode",
-    (s, d) => graft.functions.Multimodal.decodeAudioInfo(
+    (s, _) => graft.functions.Multimodal.decodeAudioInfo(
       graft.functions.Multimodal.syntheticAudio(s, 32))
       .toDF()
       .select(col("asset_id"), col("sample_rate"), col("channels"),
@@ -3794,7 +3793,7 @@ object Ext {
     * maxHamming=2. */
   private val mediaPhashDedup = QDef(
     "media_phash_dedup",
-    (s, d) => graft.functions.Multimodal.phashPairs(
+    (s, _) => graft.functions.Multimodal.phashPairs(
         graft.functions.Multimodal.syntheticMediaDups(s, 32), maxHamming = 2)
       .orderBy(col("id_a"), col("id_b")),
     Some("SELECT i AS id_a, i + 32 AS id_b, CAST(0 AS INT) AS hamming " +

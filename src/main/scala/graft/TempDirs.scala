@@ -39,9 +39,6 @@ object TempDirs {
     if (live.remove(p)) deleteRecursively(p)
   }
 
-  /** Number of registered live dirs (test observability). */
-  def liveCount: Int = live.size()
-
   private def deleteRecursively(p: Path): Unit =
     try {
       if (Files.exists(p)) {

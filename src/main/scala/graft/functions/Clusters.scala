@@ -147,8 +147,8 @@ object Clusters {
       srcCol: String,
       dstCol: String,
       maxIter: Int,
-      shortcut: Boolean = false,
-      pairsCanonical: Boolean = false
+      shortcut: Boolean,
+      pairsCanonical: Boolean
   ): (DataFrame, Int) = {
     val nodeSet = nodes.select(col(nodeCol).as("_node"))
     // Symmetric closure of the edge list; self-loops never change a label.

@@ -5,7 +5,6 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 /** IVF (inverted-file) approximate nearest neighbor — the k-means
   * counterpart to sign-LSH bucketing (EXT tier; the "IVF or LSH-bucketed

@@ -66,11 +66,6 @@ final class IvfIndex private (
 
   import IvfIndex._
 
-  /** One committed version, pinned: its quantizer dir and its live
-    * (generation dir, cell) pairs. */
-  private final case class Snap(
-      version: Long, quantDir: String, genCells: Seq[(String, Int)])
-
   private def snapshot(): Snap = {
     val fs = StoreCommit.fsOf(spark, path)
     pin.foreach(StoreCommit.requireCommitted(fs, path, _, Store))
@@ -187,21 +182,13 @@ final class IvfIndex private (
     * instead of silently stacking on the interloper. */
   private def appendFrom(
       snap: Snap, batch: DataFrame, idCol: String, vecCol: String): Unit = {
-    val fs = StoreCommit.fsOf(spark, path)
-    val quant = quantOf(snap)
-    val gen = StoreCommit.saltedGenDir("cells", snap.version + 1)
-    NearDup.fanOut(batch)
-      .select(col(idCol).cast("long").as("id"),
-        Similarity.asDouble(col(vecCol)).as("v"))
-      .withColumn("cell", Ivf.assignCellCol(col("v"), quant.centroids))
-      .withColumn("codes",
-        graft.plans.PqNative.encodeNative(col("v"), quant.codebooks))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$gen")
-    val written = listCells(fs, path, gen)
-    if (written.isEmpty) return // empty batch: nothing to commit
-    onBeforeCommit()
-    commit(fs, path, snap.version + 1, snap.quantDir,
-      snap.genCells ++ written.map(gen -> _))
+    val written =
+      writeCells(encoded(vectors(batch, idCol, vecCol), quantOf(snap)), path, snap.version + 1)
+    if (written.nonEmpty) { // an empty batch commits nothing
+      onBeforeCommit()
+      commit(StoreCommit.fsOf(spark, path), path, snap.version + 1, snap.quantDir,
+        snap.genCells ++ written)
+    }
   }
 
   /** [[appendBatch]] made IDEMPOTENT under whole-batch replay — the
@@ -258,60 +245,33 @@ final class IvfIndex private (
   }
 
   /** Delete vectors by id — the retention path, CELL-pruned copy-on-
-    * write (the ANN mirror of [[PairStore.delete]]'s file pruning): one
-    * columnar `(id, cell)` projection scan locates the cells holding
-    * deleted ids (vector and code pages never read), ONLY those cells'
-    * survivor rows are rewritten into a new generation, and the CAS
-    * commit swaps the touched cells over to it — a fully-emptied cell
-    * simply leaves the manifest (still a valid probe target; later
+    * write (the ANN mirror of [[StoreCommit.copyOnWrite]]'s file
+    * pruning): one columnar `(id, cell)` projection scan locates the
+    * cells holding deleted ids (vector and code pages never read), ONLY
+    * those cells' survivor rows are rewritten into a new generation, and
+    * the CAS commit swaps the touched cells over to it — a fully-emptied
+    * cell simply leaves the manifest (still a valid probe target; later
     * appends may repopulate it). Untouched cells — `(nCells - touched)/
     * nCells` of the corpus — are never read or written, and keep their
     * physical files. The quantizer stays frozen ([[appendBatch]]'s
     * contract). Superseded cell data stays on disk for pinned readers
     * until [[vacuum]]; replaying a completed delete finds no touched
-    * cell and commits nothing. Ids within the driver-local row bound
-    * ([[StoreCommit.localRows]]) are collected once and filter both
-    * scans; a larger id set is broadcast-joined. */
+    * cell and commits nothing. The ids, cast to `long`, go through
+    * [[StoreCommit.withIds]]' driver-local choice. */
   def delete(ids: DataFrame, idCol: String): Unit = {
     requireWritable("delete")
-    val fs = StoreCommit.fsOf(spark, path)
     val snap = snapshot()
-    val idsLong = ids.select(col(idCol).cast("long").as("id"))
-    StoreCommit.localRows(idsLong) match {
-      case Some(rows) =>
-        val del = rows.toSeq.filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct
-        if (del.nonEmpty) {
-          val hit = StoreCommit.inSet(col("id"), del)
-          deleteWhere(fs, snap, _.filter(hit).select(col("cell")),
-            _.filter(!coalesce(hit, lit(false))))
-        }
-      case None =>
-        val del = idsLong.distinct().localCheckpoint(true)
-        // try/finally: losing a CAS race throws out of the commit, and
-        // the checkpointed delete set must release on that path too
-        try deleteWhere(fs, snap,
-          _.join(broadcast(del), Seq("id"), "left_semi").select(col("cell")).distinct(),
-          _.join(broadcast(del), Seq("id"), "left_anti"))
-        finally del.unpersist(blocking = false)
+    StoreCommit.withIds(ids.select(col(idCol).cast("long")), local = true) { del =>
+      val touched = del.tags(cellsOf(snap, None), Seq("id"), col("cell"))
+        .map(_.asInstanceOf[Int]).toSet
+      if (touched.nonEmpty) {
+        val kept = writeCells(del.survivors(cellsOf(snap, Some(touched)), Seq("id")),
+          path, snap.version + 1)
+        onBeforeCommit()
+        commit(StoreCommit.fsOf(spark, path), path, snap.version + 1, snap.quantDir,
+          snap.genCells.filterNot { case (_, c) => touched(c) } ++ kept)
+      }
     }
-  }
-
-  /** [[delete]]'s cell-pruned rewrite: `touchedCells` maps the live
-    * `(id, cell)` rows to the cells holding a deleted id, `survivors`
-    * keeps a frame's rows whose id is not deleted. */
-  private def deleteWhere(
-      fs: FileSystem, snap: Snap,
-      touchedCells: DataFrame => DataFrame, survivors: DataFrame => DataFrame): Unit = {
-    val touched = touchedCells(cellsOf(snap, None).select(col("id"), col("cell")))
-      .collect().map(_.getInt(0)).toSet
-    if (touched.isEmpty) return
-    val gen = StoreCommit.saltedGenDir("cells", snap.version + 1)
-    survivors(cellsOf(snap, Some(touched)))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$gen")
-    val kept = listCells(fs, path, gen)
-    onBeforeCommit()
-    commit(fs, path, snap.version + 1, snap.quantDir,
-      snap.genCells.filterNot { case (_, c) => touched(c) } ++ kept.map(gen -> _))
   }
 
   /** Fold every live generation into ONE — the small-files compaction a
@@ -325,18 +285,19 @@ final class IvfIndex private (
     * stay for pinned readers until [[vacuum]]. Explicit, never
     * auto-triggered: unlike [[PairStore]]'s edge-sized pair compaction,
     * this rewrite is corpus-sized — an ingest loop schedules it, an
-    * append must not silently pay it. */
+    * append must not silently pay it. The fold is
+    * [[StoreCommit.compact]], partitioned by cell. */
   def compact(): Unit = {
     requireWritable("compact")
-    val fs = StoreCommit.fsOf(spark, path)
     val snap = snapshot()
-    if (snap.genCells.map(_._1).distinct.size <= 1) return // already compact
-    val gen = StoreCommit.saltedGenDir("cells", snap.version + 1)
-    cellsOf(snap, None)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$gen")
-    val written = listCells(fs, path, gen)
-    onBeforeCommit()
-    commit(fs, path, snap.version + 1, snap.quantDir, written.map(gen -> _))
+    if (snap.genCells.map(_._1).distinct.size > 1) { // else already compact
+      val gen = StoreCommit.compact(cellsOf(snap, None),
+        snap.genCells.map { case (g, c) => s"$g/cell=$c" }, path, "cells", snap.version + 1,
+        partitionCol = Some("cell"))
+      onBeforeCommit()
+      commit(StoreCommit.fsOf(spark, path), path, snap.version + 1, snap.quantDir,
+        gen.values.map(gen.name -> _))
+    }
   }
 
   /** Blue-green quantizer rebuild — the drift recovery [[appendBatch]]'s
@@ -364,22 +325,16 @@ final class IvfIndex private (
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // unpersist in finally: a failed retrain/write must not pin a
     // corpus-sized cache for the session (the delete()/ingestBatch() rule)
-    val gen = StoreCommit.saltedGenDir("cells", snap.version + 1)
-    val (quantDir, v) = try {
-      val centroids = Ivf.trainCentroids(corpus, "v", nc, seed)
-      val cb = Pq.trainCodebooks(corpus, "v", nm, nk, seed)
-      val nv = snap.version + 1
-      val qd = StoreCommit.saltedGenDir("quant", nv)
-      writeQuantizer(spark, s"$path/$qd", centroids, cb)
-      corpus
-        .withColumn("cell", Ivf.assignCellCol(col("v"), centroids))
-        .withColumn("codes", graft.plans.PqNative.encodeNative(col("v"), cb))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$gen")
-      (qd, nv)
+    val v = snap.version + 1
+    val quantDir = StoreCommit.saltedGenDir("quant", v)
+    val written = try {
+      val quant = Quantizer(Ivf.trainCentroids(corpus, "v", nc, seed),
+        Pq.trainCodebooks(corpus, "v", nm, nk, seed))
+      writeQuantizer(spark, s"$path/$quantDir", quant)
+      writeCells(encoded(corpus, quant), path, v)
     } finally corpus.unpersist(blocking = false)
-    val written = listCells(fs, path, gen)
     onBeforeCommit()
-    commit(fs, path, v, quantDir, written.map(gen -> _))
+    commit(fs, path, v, quantDir, written)
   }
 
   /** Retire manifests older than the newest `keepLast` and delete the
@@ -487,6 +442,11 @@ object IvfIndex {
 
   private val Store = "IvfIndex"
 
+  /** One committed version, pinned: its quantizer dir and its live
+    * (generation dir, cell) pairs. */
+  private final case class Snap(
+      version: Long, quantDir: String, genCells: Seq[(String, Int)])
+
   /** Test seam: invoked immediately before every manifest commit
     * (append/delete/rebuild), so IvfIndexSpec can interleave a full
     * competing write at exactly the CAS window. No-op in production. */
@@ -520,10 +480,23 @@ object IvfIndex {
       genCells.sorted.map { case (g, c) => s"gen $g $c" },
       Store, refs(quantDir, genCells))
 
-  /** Cell ids present in a freshly-written generation dir. */
-  private def listCells(
-      fs: FileSystem, path: String, gen: String): Seq[Int] =
-    StoreCommit.partitionValues(fs, path, gen, "cell")
+  /** `df`'s ids and vectors as the cell layout's `id` and `v`. */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    NearDup.fanOut(df)
+      .select(col(idCol).cast("long").as("id"), Similarity.asDouble(col(vecCol)).as("v"))
+
+  /** `(id, v)` rows assigned to their cells and PQ-encoded under `quant`. */
+  private def encoded(rows: DataFrame, quant: Quantizer): DataFrame =
+    rows.withColumn("cell", Ivf.assignCellCol(col("v"), quant.centroids))
+      .withColumn("codes", graft.plans.PqNative.encodeNative(col("v"), quant.codebooks))
+
+  /** Write `cells` as a cell-partitioned generation for version `v`
+    * ([[StoreCommit.writeGeneration]]); returns its (generation, cell)
+    * pairs, none for a frame without rows. */
+  private def writeCells(cells: DataFrame, path: String, v: Long): Seq[(String, Int)] = {
+    val gen = StoreCommit.writeGeneration(cells, path, "cells", v, Some("cell"))
+    gen.values.map(gen.name -> _)
+  }
 
   /** Per-(path, generation, live-cell-set) relation memo: a generation
     * dir is immutable once a manifest references it (appends mint new
@@ -564,17 +537,15 @@ object IvfIndex {
         Array.tabulate(m) { mi => rows.filter(_._1 == mi).sortBy(_._2).map(_._3) })
     })
 
-  private def writeQuantizer(
-      spark: SparkSession, dir: String,
-      centroids: Array[Array[Double]], cb: Pq.Codebooks): Unit = {
-    val cRows = centroids.zipWithIndex.map { case (c, i) => Row(i, c.toSeq) }
+  private def writeQuantizer(spark: SparkSession, dir: String, quant: Quantizer): Unit = {
+    val cRows = quant.centroids.zipWithIndex.map { case (c, i) => Row(i, c.toSeq) }
     spark.createDataFrame(
       spark.sparkContext.parallelize(cRows.toIndexedSeq, 1),
       StructType(Seq(StructField("cell", IntegerType),
         StructField("centroid", ArrayType(DoubleType)))))
       .write.mode("overwrite").parquet(s"$dir/centroids")
     val cbRows = for {
-      (book, mi) <- cb.zipWithIndex
+      (book, mi) <- quant.codebooks.zipWithIndex
       (c, ki) <- book.zipWithIndex
     } yield Row(mi, ki, c.toSeq)
     spark.createDataFrame(
@@ -592,18 +563,12 @@ object IvfIndex {
     val spark = corpus.sparkSession
     val fs = StoreCommit.fsOf(spark, path)
     StoreCommit.reset(fs, path, Store)
-    val centroids = Ivf.trainCentroids(corpus, vecCol, nCells, seed)
-    val cb = Pq.trainCodebooks(corpus, vecCol, m, kCodes, seed)
+    val quant = Quantizer(Ivf.trainCentroids(corpus, vecCol, nCells, seed),
+      Pq.trainCodebooks(corpus, vecCol, m, kCodes, seed))
     val quantDir = StoreCommit.saltedGenDir("quant", 0L)
-    writeQuantizer(spark, s"$path/$quantDir", centroids, cb)
-    val gen = StoreCommit.saltedGenDir("cells", 0L)
-    NearDup.fanOut(corpus)
-      .select(col(idCol).cast("long").as("id"),
-        Similarity.asDouble(col(vecCol)).as("v"))
-      .withColumn("cell", Ivf.assignCellCol(col("v"), centroids))
-      .withColumn("codes", graft.plans.PqNative.encodeNative(col("v"), cb))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$gen")
-    commit(fs, path, 0L, quantDir, listCells(fs, path, gen).map(gen -> _))
+    writeQuantizer(spark, s"$path/$quantDir", quant)
+    commit(fs, path, 0L, quantDir,
+      writeCells(encoded(vectors(corpus, idCol, vecCol), quant), path, 0L))
     new IvfIndex(spark, path)
   }
 

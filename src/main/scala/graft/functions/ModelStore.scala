@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Durable artifacts for the trained models — train once, PUBLISH, score

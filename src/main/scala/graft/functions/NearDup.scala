@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection over text — MinHash+LSH, SimHash, and exact
@@ -317,7 +316,7 @@ object NearDup {
     * [[ngramJaccardPairsShared]] caches (the sort is applied over the
     * cache, never inside it). */
   private def ngramJaccardPairsAutoUnsorted(
-      docs: DataFrame, threshold: Double, w: Int = 3,
+      docs: DataFrame, threshold: Double, w: Int,
       skewShare: Double = 0.02): DataFrame = {
     val arrs = shingleHashArrays(docs, w).persist()
     // the probe's verdict is MEMOIZED per (corpus, w) in a durable cache

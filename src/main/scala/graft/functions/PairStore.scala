@@ -210,12 +210,12 @@ object PairStore {
     val spark = nodes.sparkSession
     val fs = StoreCommit.fsOf(spark, dir)
     StoreCommit.reset(fs, dir, Store)
-    val pairFiles = writePairs(fs, dir, pairs, 0L)
+    val pairFiles = StoreCommit.writeGeneration(pairs, dir, "pairs", 0L).paths
     val labels = Clusters.connectedComponents(
       nodes.select(col(nodeCol)), readPairs(spark, dir, pairFiles),
       nodeCol, srcCol, dstCol, shortcut = shortcut)
     commit(fs, dir, Manifest(0L, buckets,
-      writeLabels(fs, dir, labels, buckets, 0L).map { case (bk, g) => bk -> Seq(g) },
+      writeLabels(dir, labels, buckets, 0L).map { case (bk, g) => bk -> Seq(g) },
       Map.empty, pairFiles))
   }
 
@@ -289,8 +289,8 @@ object PairStore {
     val fs = StoreCommit.fsOf(spark, dir)
     val man = currentManifest(fs, dir)
     val change =
-      localAppend(spark, fs, dir, man, newNodes, newPairs, nodeCol, srcCol, dstCol)
-        .getOrElse(distributedAppend(spark, fs, dir, man, newNodes, newPairs,
+      localAppend(spark, dir, man, newNodes, newPairs, nodeCol, srcCol, dstCol)
+        .getOrElse(distributedAppend(spark, dir, man, newNodes, newPairs,
           nodeCol, srcCol, dstCol, shortcut))
     commitChange(spark, fs, dir, man, change, maxPairFiles, () => onBeforeAppendCommit())
   }
@@ -300,7 +300,7 @@ object PairStore {
     * rows it touches exceed the driver-local row bound
     * ([[StoreCommit.localRows]]). */
   private def localAppend(
-      spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
+      spark: SparkSession, dir: String, man: Manifest,
       newNodes: DataFrame, newPairs: DataFrame, nodeCol: String, srcCol: String,
       dstCol: String): Option[Change] = {
     val labels = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
@@ -360,9 +360,9 @@ object PairStore {
     // double-count pair rows
     val appended =
       if (freshPairs.isEmpty) Seq.empty[String]
-      else writePairs(fs, dir, StoreCommit.localFrame(spark, newPairs.schema, freshPairs)
+      else StoreCommit.writeGeneration(StoreCommit.localFrame(spark, newPairs.schema, freshPairs)
         .select((srcCol +: dstCol +: newPairs.columns.filterNot(Set(srcCol, dstCol)).toSeq)
-          .map(col): _*).coalesce(1), man.version + 1)
+          .map(col): _*).coalesce(1), dir, "pairs", man.version + 1).paths
     Some(Change(man.pairFiles ++ appended, () => labelFrame(spark, nodeCol, t, delta),
       delta = StoreCommit.residues(spark, t, man.modulus, delta.map(_._2)).values.toSeq.distinct,
       tombs = gone))
@@ -372,7 +372,7 @@ object PairStore {
     * type: the screens and the quotient closure as broadcast-batch
     * joins, and the touched buckets rewritten whole. */
   private def distributedAppend(
-      spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
+      spark: SparkSession, dir: String, man: Manifest,
       newNodes: DataFrame, newPairs: DataFrame, nodeCol: String,
       srcCol: String, dstCol: String, shortcut: Boolean): Change = {
     val b = man.modulus
@@ -401,7 +401,7 @@ object PairStore {
     // commit
     val appended =
       if (freshPairs.isEmpty) Seq.empty[String]
-      else writePairs(fs, dir, freshPairs, man.version + 1)
+      else StoreCommit.writeGeneration(freshPairs, dir, "pairs", man.version + 1).paths
 
     val old = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
       .select(col(nodeCol), col("cluster_id"))
@@ -475,10 +475,11 @@ object PairStore {
   }
 
   /** Remove nodes from the store — the retention / right-to-be-forgotten
-    * path. Copy-on-write at FILE granularity, the same shape engines
-    * like Delta use for DELETE: one columnar scan of the live pair
-    * files finds those holding a pair that touches a deleted id, and
-    * ONLY those files are rewritten (survivor rows into this attempt's
+    * path. Copy-on-write at FILE granularity
+    * ([[StoreCommit.copyOnWrite]]), the same shape engines like Delta
+    * use for DELETE: one columnar scan of the live pair files finds
+    * those holding a pair that touches a deleted id, and ONLY those
+    * files are rewritten (survivor rows into this attempt's
     * salted pair generation); untouched files keep their manifest
     * entries, and the superseded ones stay on disk for pinned snapshots
     * until [[vacuum]].
@@ -496,11 +497,11 @@ object PairStore {
     * the deleted ids and one O(live pairs) columnar scan for file
     * pruning (neither shuffled), then component-sized rewrite/closure
     * work. A batch with integral ids within the driver-local row bound
-    * ([[StoreCommit.localRows]]) does that work on the driver: the
-    * deleted ids are collected once, the label scan finds their
-    * clusters, one bucket-addressed read collects those clusters'
-    * members, the ONE pair scan yields both the dead files and the pairs
-    * among the members, and a union-find closes the survivors. Its
+    * does that work on the driver: the deleted ids are collected once
+    * ([[StoreCommit.withIds]]), the label scan finds their clusters,
+    * one bucket-addressed read collects those clusters' members, the ONE
+    * pair scan yields both the dead files and the pairs among the
+    * members, and a union-find closes the survivors. Its
     * writes are the survivor pairs of the dead files and ONE delta
     * generation holding the survivors' new labels, with the affected
     * clusters tombstoned — component-sized, whatever the bucket sizes; no
@@ -534,42 +535,43 @@ object PairStore {
     // no automatic recover — same concurrent-writer hazard as append
     val fs = StoreCommit.fsOf(spark, dir)
     val man = currentManifest(fs, dir)
-    val change =
-      localDelete(spark, fs, dir, man, deletedNodes, nodeCol, srcCol, dstCol) match {
-        case Right(c) => c
-        case Left(found) => distributedDelete(spark, fs, dir, man, deletedNodes, found,
-          nodeCol, srcCol, dstCol, shortcut)
-      }
-    commitChange(spark, fs, dir, man, change, Int.MaxValue, () => ())
-  }
-
-  /** [[delete]]'s change computed on the driver — or, before anything is
-    * written, Left when an id is not integral or the batch or the stored
-    * rows it touches exceed the driver-local row bound
-    * ([[StoreCommit.localRows]]). Left carries, when already found, the
-    * deleted ids and their clusters as local frames, so the distributed
-    * path does not scan the labels for them again. */
-  private def localDelete(
-      spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
-      deletedNodes: DataFrame, nodeCol: String, srcCol: String,
-      dstCol: String): Either[Option[(DataFrame, DataFrame)], Change] = {
     val labels = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
       .select(col(nodeCol), col("cluster_id"))
     val pairs = readPairs(spark, dir, man.pairFiles)
     val t = labels.schema(nodeCol).dataType
-    if (!sameIntegral(t, labels, pairs.select(col(srcCol), col(dstCol)),
-        deletedNodes.select(col(nodeCol)))) return Left(None)
+    val batch = deletedNodes.select(col(nodeCol))
+    StoreCommit.withIds(batch,
+        sameIntegral(t, labels, pairs.select(col(srcCol), col(dstCol)), batch)) { ids =>
+      val change =
+        (if (ids.values.isEmpty) Left(None)
+        else localDelete(spark, dir, man, labels, pairs, t, ids, nodeCol, srcCol, dstCol)) match {
+          case Right(c) => c
+          case Left(affected) => distributedDelete(spark, dir, man, ids, affected,
+            nodeCol, srcCol, dstCol, shortcut)
+        }
+      commitChange(spark, fs, dir, man, change, Int.MaxValue, () => ())
+    }
+  }
+
+  /** [[delete]]'s change computed on the driver from the collected ids —
+    * or, before anything is written, Left when the stored rows they touch
+    * exceed the driver-local row bound ([[StoreCommit.localRows]]). Left
+    * carries the deleted ids' clusters as a local frame when already
+    * found, so the distributed path does not scan the labels for them
+    * again. */
+  private def localDelete(
+      spark: SparkSession, dir: String, man: Manifest, labels: DataFrame, pairs: DataFrame,
+      t: DataType, ids: StoreCommit.Ids, nodeCol: String, srcCol: String,
+      dstCol: String): Either[Option[DataFrame], Change] = {
     val box = StoreCommit.boxAs(t) _
-    val del = StoreCommit.localRows(deletedNodes.select(col(nodeCol)))
-      .getOrElse(return Left(None)).toSeq.filterNot(_.isNullAt(0)).map(idAt(_, 0)).distinct
+    val del = ids.values.get.map(_.asInstanceOf[Number].longValue)
     if (del.isEmpty) return Right(Change(man.pairFiles, () => labels))
     // the deleted ids' clusters (one labels scan; replayed or never-stored
     // ids drop out here), then those clusters' members (one
     // bucket-addressed read)
-    val affected = StoreCommit.localRows(labels.filter(StoreCommit.inSet(col(nodeCol), del.map(box))))
+    val affected = StoreCommit.localRows(ids.matching(labels, nodeCol))
       .getOrElse(return Left(None)).toSeq.map(idAt(_, 1)).distinct
-    lazy val found = Left(Some((idFrame(spark, nodeCol, t, del),
-      idFrame(spark, "cluster_id", t, affected))))
+    lazy val found = Left(Some(idFrame(spark, "cluster_id", t, affected)))
     val affBk = StoreCommit.residues(spark, t, man.modulus, affected)
     val members =
       if (affected.isEmpty) Seq.empty[Long]
@@ -594,68 +596,36 @@ object PairStore {
     val alive = survivors.toSet
     val cc = minLabels(survivors, hits.flatMap(r =>
       for (s <- end(r, 1); d <- end(r, 2) if alive(s) && alive(d)) yield (s, d))).toSeq
-    // survivor rows of ONLY the dead files, rewritten as this attempt's
-    // pair generation in the stored column order
-    val pairFiles =
-      if (deadFiles.isEmpty) man.pairFiles
-      else {
-        val gone = del.map(box)
-        def kept(c: String) = !coalesce(StoreCommit.inSet(col(c), gone), lit(false))
-        man.pairFiles.filterNot(deadFiles) ++ writePairs(fs, dir,
-          readPairs(spark, dir, deadFiles.toSeq.sorted).filter(kept(srcCol) && kept(dstCol)),
-          man.version + 1)
-      }
     // the affected clusters are tombstoned and every survivor is written
-    // again under its new label — one delta, no bucket rewritten
-    Right(Change(pairFiles, () => labelFrame(spark, nodeCol, t, cc),
+    // again under its new label — one delta, no bucket rewritten; only
+    // the dead files' pairs are rewritten
+    Right(Change(StoreCommit.copyOnWrite(spark, dir, "pairs", man.version + 1, man.pairFiles,
+        ids, Seq(srcCol, dstCol), Some(deadFiles)).getOrElse(man.pairFiles),
+      () => labelFrame(spark, nodeCol, t, cc),
       delta = StoreCommit.residues(spark, t, man.modulus, cc.map(_._2)).values.toSeq.distinct,
       tombs = affBk))
   }
 
   /** [[delete]]'s change computed distributed — any batch size, any id
-    * type. `found`: the distinct deleted ids and their clusters, when
-    * [[localDelete]] already found them. */
+    * type. `found`: the deleted ids' clusters, when [[localDelete]]
+    * already found them. */
   private def distributedDelete(
-      spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
-      deletedNodes: DataFrame, found: Option[(DataFrame, DataFrame)],
-      nodeCol: String, srcCol: String, dstCol: String, shortcut: Boolean): Change = {
+      spark: SparkSession, dir: String, man: Manifest, ids: StoreCommit.Ids,
+      found: Option[DataFrame], nodeCol: String, srcCol: String, dstCol: String,
+      shortcut: Boolean): Change = {
     val b = man.modulus
-    val (del, affLabels) = found.getOrElse {
-      val del = deletedNodes.select(col(nodeCol)).distinct().localCheckpoint(true)
-      // the clusters of the deleted ids actually stored — batch-sized;
-      // replayed or never-stored ids drop out here (corpus scanned via a
-      // broadcast semi probe, not shuffled)
-      val affLabels = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
-        .join(broadcast(del), Seq(nodeCol), "left_semi")
+    // the clusters of the deleted ids actually stored — batch-sized;
+    // replayed or never-stored ids drop out here (corpus scanned via a
+    // broadcast semi probe, not shuffled)
+    val affLabels = found.getOrElse(
+      ids.matching(readLabels(spark, dir, man, man.buckets.keySet.toSeq), nodeCol)
         .select(col("cluster_id")).distinct()
-        .localCheckpoint(true)
-      (del, affLabels)
-    }
-    // file pruning: one columnar pass over the live pair files tags each
-    // file holding a pair that touches a deleted id (endpoints exploded
-    // against the broadcast batch — an OR-of-equalities semi would plan
-    // as a nested-loop join). The collect is file-path-sized.
-    val deadAbs = readPairs(spark, dir, man.pairFiles)
-      .select(input_file_name().as("_file"),
-        explode(array(col(srcCol), col(dstCol))).as(nodeCol))
-      .join(broadcast(del), Seq(nodeCol), "left_semi")
-      .select(col("_file")).distinct().collect().map(_.getString(0))
-    val deadFiles = man.pairFiles
-      .filter(f => deadAbs.exists(_.endsWith("/" + f))).toSet
-    // survivor rows of ONLY the dead files, rewritten as this attempt's
-    // pair generation in the stored column order (a USING join moves its
-    // key first, and a reader takes its schema from the first listed
-    // file); an empty survivor set still writes a schema-bearing file —
-    // harmless, vacuumed with its version
-    val pairFiles =
-      if (deadFiles.isEmpty) man.pairFiles
-      else {
-        val dead = readPairs(spark, dir, deadFiles.toSeq.sorted)
-        man.pairFiles.filterNot(deadFiles) ++ writePairs(fs, dir, dead
-          .join(broadcast(del.select(col(nodeCol).as(srcCol))), Seq(srcCol), "left_anti")
-          .join(broadcast(del.select(col(nodeCol).as(dstCol))), Seq(dstCol), "left_anti")
-          .select(dead.columns.map(col): _*), man.version + 1)
-      }
+        .localCheckpoint(true))
+    // file pruning ([[StoreCommit.copyOnWrite]]): one columnar pass over
+    // the live pair files tags each file holding a pair that touches a
+    // deleted id, and only those files' survivors are rewritten
+    val pairFiles = StoreCommit.copyOnWrite(spark, dir, "pairs", man.version + 1,
+      man.pairFiles, ids, Seq(srcCol, dstCol)).getOrElse(man.pairFiles)
     // affected-component closure: members of the clusters that lost a
     // node (bucket-addressed read + broadcast label semi), minus the
     // deleted ids, over the already-rewritten pair set
@@ -665,8 +635,7 @@ object PairStore {
       .join(broadcast(affLabels), Seq("cluster_id"), "left_semi")
       .select(col(nodeCol), col("cluster_id"))
       .localCheckpoint(true)
-    val survivors = members.select(col(nodeCol))
-      .join(broadcast(del), Seq(nodeCol), "left_anti")
+    val survivors = ids.survivors(members.select(col(nodeCol)), Seq(nodeCol))
     val affPairs = readPairs(spark, dir, pairFiles)
       .join(members.select(col(nodeCol).as(srcCol)), Seq(srcCol), "left_semi")
     val cc = Clusters.connectedComponents(
@@ -683,7 +652,7 @@ object PairStore {
         .select(col(nodeCol), col("cluster_id"))
         .unionByName(cc),
       rewrite = touched,
-      release = () => Seq(cc, members, affLabels, del)
+      release = () => Seq(cc, members, affLabels)
         .foreach(_.unpersist(blocking = false)))
   }
 
@@ -702,8 +671,8 @@ object PairStore {
     StoreCommit.recover(StoreCommit.fsOf(spark, dir), dir, Store)
 
   /** Fold the live pair files into ~`targetFileBytes` outputs as a new
-    * committed version (labels unchanged). Old files stay for pinned
-    * readers until [[vacuum]]. */
+    * committed version (labels unchanged; [[StoreCommit.compact]]). Old
+    * files stay for pinned readers until [[vacuum]]. */
   def compactPairs(
       spark: SparkSession,
       dir: String,
@@ -713,7 +682,7 @@ object PairStore {
     val man = currentManifest(fs, dir)
     val v = man.version + 1
     commit(fs, dir, man.copy(version = v,
-      pairFiles = compactInto(spark, fs, dir, man.pairFiles, v, targetFileBytes)))
+      pairFiles = compactInto(spark, dir, man.pairFiles, v, targetFileBytes)))
   }
 
   /** Retire manifests older than the newest `keepLast` and delete the
@@ -794,14 +763,14 @@ object PairStore {
         val whole = (c.rewrite ++ fold).toSet
         val written =
           if (whole.isEmpty && c.delta.isEmpty) Map.empty[Int, String]
-          else writeLabels(fs, dir,
+          else writeLabels(dir,
             if (fold.isEmpty) c.rows()
             else c.rows().unionByName(readLabels(spark, dir, man.copy(tombstones = tombs), fold)),
             man.modulus, v)
         val buckets = written.foldLeft(man.buckets -- whole) { case (m, (bk, g)) =>
           m.updated(bk, m.getOrElse(bk, Seq.empty) :+ g) }
         val pairFiles =
-          if (c.pairFiles.size > maxPairFiles) compactInto(spark, fs, dir, c.pairFiles, v)
+          if (c.pairFiles.size > maxPairFiles) compactInto(spark, dir, c.pairFiles, v)
           else c.pairFiles
         beforeCommit()
         commit(fs, dir, Manifest(v, man.modulus, buckets, liveTombstones(tombs, buckets),
@@ -871,44 +840,26 @@ object PairStore {
     StoreCommit.commitManifest(fs, dir, m.version, m.lines, Store, m.paths)
   }
 
-  /** Write `rows` as a fresh salted pair generation for version `v`;
-    * returns its files. An empty frame still yields one schema-bearing
-    * file, so every manifest lists a readable schema and no reader ever
-    * falls back to a directory listing. */
-  private def writePairs(
-      fs: FileSystem, dir: String, rows: DataFrame, v: Long): Seq[String] = {
-    val gen = StoreCommit.saltedGenDir("pairs", v)
-    rows.write.parquet(s"$dir/$gen")
-    if (StoreCommit.listDataFiles(fs, dir, gen).isEmpty)
-      rows.limit(0).repartition(1).write.mode("overwrite").parquet(s"$dir/$gen")
-    StoreCommit.listDataFiles(fs, dir, gen)
-  }
-
   /** Write `labels` as a fresh salted label generation for version `v`,
     * one node-sorted leaf per cluster-residue bucket; returns the
     * buckets that produced output, mapped to the generation. */
   private def writeLabels(
-      fs: FileSystem, dir: String, labels: DataFrame, modulus: Int,
-      v: Long): Map[Int, String] = {
-    val gen = StoreCommit.saltedGenDir("labels", v)
-    labels
+      dir: String, labels: DataFrame, modulus: Int, v: Long): Map[Int, String] = {
+    val gen = StoreCommit.writeGeneration(labels
       .withColumn(BucketCol, pmod(hash(col("cluster_id")), lit(modulus)))
       .repartition(col(BucketCol))
-      .sortWithinPartitions(col(BucketCol), col(labels.columns.head))
-      .write.partitionBy(BucketCol).parquet(s"$dir/$gen")
-    StoreCommit.partitionValues(fs, dir, gen, BucketCol).map(_ -> gen).toMap
+      .sortWithinPartitions(col(BucketCol), col(labels.columns.head)),
+      dir, "labels", v, Some(BucketCol))
+    gen.values.map(_ -> gen.name).toMap
   }
 
-  /** Fold `files` into one fresh pair generation for version `v`;
-    * returns its file list. The scan's splits are merged into the output
-    * files without a shuffle: pair rows have no order to restore, so a
-    * compaction reads and writes the live pairs once and moves nothing
-    * between tasks. */
+  /** Fold `files` into one fresh pair generation for version `v`
+    * ([[StoreCommit.compact]]: pair rows have no order to restore, so
+    * nothing is shuffled); returns its file list. */
   private def compactInto(
-      spark: SparkSession, fs: FileSystem, dir: String, files: Seq[String],
+      spark: SparkSession, dir: String, files: Seq[String],
       v: Long, targetFileBytes: Long = 128L << 20): Seq[String] =
-    writePairs(fs, dir, readPairs(spark, dir, files)
-      .coalesce(StoreCommit.compactedParts(fs, dir, files, targetFileBytes)), v)
+    StoreCommit.compact(readPairs(spark, dir, files), files, dir, "pairs", v, targetFileBytes).paths
 
   /** Read a manifest's bucket selection by direct leaf addressing (no
     * listing, no partition discovery, a memoized schema —
@@ -950,7 +901,8 @@ object PairStore {
     }
   }
 
-  /** Read an explicit pair-file list (never empty: see [[writePairs]]). */
+  /** Read an explicit pair-file list (never empty: see
+    * [[StoreCommit.writeGeneration]]). */
   private def readPairs(
       spark: SparkSession, dir: String, files: Seq[String]): DataFrame =
     StoreCommit.readParquet(spark, files.map(f => s"$dir/$f"))

@@ -43,10 +43,10 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * rows. Screening SEMANTICS therefore keep the single-ingest-stream
   * contract ([[graft.streaming.StreamOps.ingestDedupStream]]'s serial
   * foreachBatch); the CAS makes the multi-writer case safe, not
-  * duplicate-proof. [[delete]] is file-pruned
-  * copy-on-write at the manifest level: survivor rows of the dead files
-  * land in a new generation and the dead files leave the manifest —
-  * superseded files stay on disk for concurrent readers until
+  * duplicate-proof. [[delete]] is file-pruned copy-on-write at the
+  * manifest level ([[StoreCommit.copyOnWrite]]): survivor rows of the
+  * dead files land in a new generation and the dead files leave the
+  * manifest — superseded files stay on disk for concurrent readers until
   * [[vacuum]]. A crash before any commit leaves unreferenced garbage
   * only. */
 object SignatureStore {
@@ -75,124 +75,74 @@ object SignatureStore {
   /** Build (overwrite) the store from an initial corpus: the store's
     * history starts over at manifest v0. */
   def build(docs: DataFrame, dir: String, w: Int = 3): Unit = {
-    val spark = docs.sparkSession
-    val fs = StoreCommit.fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(docs.sparkSession, dir)
     StoreCommit.reset(fs, dir, Store)
-    val gen = StoreCommit.saltedGenDir("data", 0L)
-    val sigs = signatures(docs, w)
-    sigs.write.mode("overwrite").parquet(s"$dir/$gen")
-    if (StoreCommit.listDataFiles(fs, dir, gen).isEmpty)
-      // Cross-version insurance, not a reachable path on the shipped
-      // Spark 4.1.2 (which always emits one schema-bearing part file
-      // even for an empty non-partitioned write): should a future Spark/
-      // AQE combination write zero files, force one so every manifest
-      // lists a schema-bearing file and readers never fall back to
-      // directory listing.
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sigs.schema)
-        .repartition(1).write.mode("overwrite").parquet(s"$dir/$gen")
-    commit(fs, dir, 0L, StoreCommit.listDataFiles(fs, dir, gen))
+    commit(fs, dir, 0L, StoreCommit.writeGeneration(signatures(docs, w), dir, "data", 0L).paths)
   }
 
   /** Append a batch's signatures (call after [[screenBatch]] accepts):
     * write a complete salted generation, then CAS-commit the grown file
-    * list. A loser of a concurrent-append race throws with the store
-    * unharmed; replaying its batch (screen + append) converges. */
+    * list; a batch without rows commits nothing. A loser of a
+    * concurrent-append race throws with the store unharmed; replaying
+    * its batch (screen + append) converges. */
   def append(docs: DataFrame, dir: String, w: Int = 3): Unit = {
-    val spark = docs.sparkSession
-    val fs = StoreCommit.fsOf(spark, dir)
+    val fs = StoreCommit.fsOf(docs.sparkSession, dir)
     val v = StoreCommit.currentVersion(fs, dir, Store)
-    val old = liveFiles(fs, dir, v)
-    val gen = StoreCommit.saltedGenDir("data", v + 1)
-    signatures(docs, w).write.mode("overwrite").parquet(s"$dir/$gen")
-    val fresh = StoreCommit.listDataFiles(fs, dir, gen)
-    if (fresh.isEmpty) return // empty batch: nothing to commit
-    onBeforeCommit()
-    commit(fs, dir, v + 1, old ++ fresh)
+    val fresh = StoreCommit.writeGeneration(signatures(docs, w), dir, "data", v + 1)
+    if (fresh.hasRows) {
+      onBeforeCommit()
+      commit(fs, dir, v + 1, liveFiles(fs, dir, v) ++ fresh.paths)
+    }
   }
 
   /** Delete signatures by doc id — the retention pass: once a document
     * is forgotten, future batches must stop being screened against it
     * (a new doc that matches only a deleted one must now be ACCEPTED).
-    * File-pruned copy-on-write at the MANIFEST level: one columnar
-    * `doc_id` scan of the live files tags those holding deleted ids
-    * (the signature arrays' pages are never read), their survivor rows
-    * are written as a new salted generation, and the CAS commit swaps
-    * the dead files for the new ones. Superseded files stay on disk for
-    * racing readers until [[vacuum]]; a crash before the commit leaves
-    * only an unreferenced generation. Replaying a completed delete is a
-    * no-op (already-deleted ids match no live file). Ids within the
-    * driver-local row bound ([[StoreCommit.localRows]]) and of the
-    * store's `doc_id` type are collected once and filter both scans; a
-    * larger id set is broadcast-joined. */
+    * File-pruned copy-on-write at the MANIFEST level
+    * ([[StoreCommit.copyOnWrite]]): one columnar `doc_id` scan of the
+    * live files tags those holding deleted ids (the signature arrays'
+    * pages are never read), their survivor rows are written as a new
+    * salted generation, and the CAS commit swaps the dead files for the
+    * new ones. Superseded files stay on disk for racing readers until
+    * [[vacuum]]; a crash before the commit leaves only an unreferenced
+    * generation. Replaying a completed delete is a no-op
+    * (already-deleted ids match no live file). Ids of the store's
+    * `doc_id` type go through [[StoreCommit.withIds]]' driver-local
+    * choice; others are broadcast-joined. */
   def delete(spark: SparkSession, ids: DataFrame, dir: String): Unit = {
     val fs = StoreCommit.fsOf(spark, dir)
     val v = StoreCommit.currentVersion(fs, dir, Store)
     val live = liveFiles(fs, dir, v)
+    val idCol = ids.select(col(ids.columns.head))
     val store = readFiles(spark, dir, live)
-    val idCol = ids.select(col(ids.columns.head).as("doc_id"))
-    val local =
-      if (idCol.schema.head.dataType != store.schema("doc_id").dataType) None
-      else StoreCommit.localRows(idCol)
-    local match {
-      case Some(rows) =>
-        val del = rows.toSeq.filterNot(_.isNullAt(0)).map(_.get(0)).distinct
-        if (del.nonEmpty) {
-          val hit = StoreCommit.inSet(col("doc_id"), del)
-          deleteWhere(spark, fs, dir, v, live,
-            _.filter(hit).select(col("_f")), _.filter(!coalesce(hit, lit(false))))
+    StoreCommit.withIds(idCol, idCol.schema.head.dataType == store.schema("doc_id").dataType) { del =>
+      StoreCommit.copyOnWrite(spark, dir, "data", v + 1, live, del, Seq("doc_id"))
+        .foreach { files =>
+          onBeforeCommit()
+          commit(fs, dir, v + 1, files)
         }
-      case None =>
-        val del = idCol.distinct().localCheckpoint(true)
-        // try/finally: losing a CAS race throws out of the commit, and
-        // the checkpointed delete set must release on that path too
-        try deleteWhere(spark, fs, dir, v, live,
-          _.join(broadcast(del), Seq("doc_id"), "left_semi").select(col("_f")).distinct(),
-          _.join(broadcast(del), Seq("doc_id"), "left_anti"))
-        finally del.unpersist(blocking = false)
     }
   }
 
-  /** [[delete]]'s file-pruned rewrite: `deadFiles` maps the live
-    * `(doc_id, _f)` rows to the file names `_f` holding a deleted id,
-    * `survivors` keeps a frame's rows whose doc id is not deleted. */
-  private def deleteWhere(
-      spark: SparkSession, fs: FileSystem, dir: String, v: Long, live: Seq[String],
-      deadFiles: DataFrame => DataFrame, survivors: DataFrame => DataFrame): Unit = {
-    val deadAbs = deadFiles(readFiles(spark, dir, live)
-        .select(col("doc_id"), input_file_name().as("_f")))
-      .collect().map(_.getString(0)).distinct
-    val dead = live.filter(f => deadAbs.exists(_.endsWith("/" + f))).toSet
-    if (dead.isEmpty) return
-    val gen = StoreCommit.saltedGenDir("data", v + 1)
-    survivors(readFiles(spark, dir, dead.toSeq.sorted))
-      .write.mode("overwrite").parquet(s"$dir/$gen")
-    onBeforeCommit()
-    commit(fs, dir, v + 1,
-      live.filterNot(dead) ++ StoreCommit.listDataFiles(fs, dir, gen))
-  }
-
   /** Fold the live signature files into ~`targetFileBytes` outputs as a
-    * new committed version — the small-files compaction a long
-    * micro-batch ingest history needs (every [[append]] adds a
-    * generation). Logical content identical; superseded files stay for
-    * pinned readers until [[vacuum]]. Explicit, never auto-triggered
-    * ([[PairStore]]'s auto-compaction folds edge-sized pair files; the
-    * signature table carries the full shingle-hash arrays, so this
-    * rewrite is signature-corpus-sized and an ingest loop schedules
-    * it). */
+    * new committed version ([[StoreCommit.compact]]) — the small-files
+    * compaction a long micro-batch ingest history needs (every
+    * [[append]] adds a generation). Logical content identical;
+    * superseded files stay for pinned readers until [[vacuum]].
+    * Explicit, never auto-triggered ([[PairStore]]'s auto-compaction
+    * folds edge-sized pair files; the signature table carries the full
+    * shingle-hash arrays, so this rewrite is signature-corpus-sized and
+    * an ingest loop schedules it). */
   def compact(
       spark: SparkSession, dir: String,
       targetFileBytes: Long = 128L << 20): Unit = {
     val fs = StoreCommit.fsOf(spark, dir)
     val v = StoreCommit.currentVersion(fs, dir, Store)
     val live = liveFiles(fs, dir, v)
-    val gen = StoreCommit.saltedGenDir("data", v + 1)
-    readFiles(spark, dir, live)
-      .repartition(StoreCommit.compactedParts(fs, dir, live, targetFileBytes))
-      .write.mode("overwrite").parquet(s"$dir/$gen")
+    val gen =
+      StoreCommit.compact(readFiles(spark, dir, live), live, dir, "data", v + 1, targetFileBytes)
     onBeforeCommit()
-    commit(fs, dir, v + 1, StoreCommit.listDataFiles(fs, dir, gen))
+    commit(fs, dir, v + 1, gen.paths)
   }
 
   /** Retire manifests older than the newest `keepLast` and delete the

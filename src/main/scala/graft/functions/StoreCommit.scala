@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, hash, lit, pmod, regexp_extract}
+import org.apache.spark.sql.functions.{array, broadcast, coalesce, col, explode, hash,
+  input_file_name, lit, pmod, regexp_extract}
 import org.apache.spark.sql.types._
 
 /** The store tier's one generational commit core: the versioned stores
@@ -31,7 +32,17 @@ import org.apache.spark.sql.types._
   * schema, so a read starts no Spark job) and take their batch-sized
   * inputs through [[localRows]], under the one row bound
   * ([[LocalRows]]) that decides whether a verb's batch-sized work runs
-  * on the driver.
+  * on the driver. They write, delete from and compact their generations
+  * through one path each:
+  *
+  *   - [[writeGeneration]] writes every data generation (files, or
+  *     partition leaves) and tells its caller whether it holds a row;
+  *   - [[withIds]] chooses a delete's id set once ([[Ids]]): the
+  *     collected ids as `InSet` filters, or a checkpointed frame matched
+  *     with broadcast joins;
+  *   - [[copyOnWrite]] is the file-pruned delete: it rewrites only the
+  *     files holding a deleted id;
+  *   - [[compact]] folds live data into ~target-size files.
   *
   * '''Exclusive publish.''' HDFS `rename` onto an existing file fails
   * atomically, but POSIX rename(2) REPLACES — so on local filesystems the
@@ -126,6 +137,88 @@ private[graft] object StoreCommit {
       vs.zip(localFrame(spark, StructType(Seq(StructField("v", t))), vs.map(x => Row(boxAs(t)(x))))
         .select(pmod(hash(col("v")), lit(modulus))).collect().map(_.getInt(0))).toMap
     }
+
+  // ------------------------------------------------------------------ //
+  // deletes: the one id set and the one file-pruned copy-on-write
+  // ------------------------------------------------------------------ //
+
+  /** The ids a delete removes, chosen once by [[withIds]]: `Right`, the
+    * distinct non-null ids collected under the row bound, filter scans
+    * as `InSet`s; `Left`, the ids' distinct eagerly checkpointed frame,
+    * is matched with broadcast semi and anti joins. */
+  final class Ids private[StoreCommit] (
+      private[StoreCommit] val chosen: Either[DataFrame, Seq[Any]]) {
+
+    /** The collected ids, when they were collected. */
+    def values: Option[Seq[Any]] = chosen.toOption
+
+    /** No id to delete (collected, and none was there). */
+    def isEmpty: Boolean = values.exists(_.isEmpty)
+
+    /** `df`'s rows whose `key` is a deleted id. */
+    def matching(df: DataFrame, key: String): DataFrame = chosen match {
+      case Right(vs) => df.filter(inSet(col(key), vs))
+      case Left(frame) => df.join(broadcast(frame.toDF(key)), Seq(key), "left_semi")
+    }
+
+    /** `df`'s rows none of whose `keys` is a deleted id, in `df`'s column
+      * order (a USING join moves its key first, and a reader takes its
+      * schema from the first file it lists). */
+    def survivors(df: DataFrame, keys: Seq[String]): DataFrame = chosen match {
+      case Right(vs) =>
+        df.filter(keys.map(k => !coalesce(inSet(col(k), vs), lit(false))).reduce(_ && _))
+      case Left(frame) =>
+        keys.foldLeft(df)((d, k) => d.join(broadcast(frame.toDF(k)), Seq(k), "left_anti"))
+          .select(df.columns.map(col): _*)
+    }
+
+    /** The distinct values of `tag` over `df`'s rows with a deleted id in
+      * any of `keys`, collected — one scan. Several keys are exploded
+      * against the broadcast frame: an OR of equalities would plan as a
+      * nested-loop join. */
+    def tags(df: DataFrame, keys: Seq[String], tag: Column): Seq[Any] = {
+      val hits = chosen match {
+        case Right(vs) => df.select(tag.as("_t") +: keys.map(col): _*)
+          .filter(keys.map(k => inSet(col(k), vs)).reduce(_ || _)).select(col("_t"))
+        case Left(_) => matching(df.select(tag.as("_t"), (if (keys.size == 1) col(keys.head)
+          else explode(array(keys.map(col): _*))).as("_id")), "_id").select(col("_t")).distinct()
+      }
+      if (isEmpty) Seq.empty else hits.collect().map(_.get(0)).distinct.toSeq
+    }
+  }
+
+  /** `body` over the ids in the one-column frame `ids`: collected when
+    * the caller's type rule holds (`local`) and they fit the row bound
+    * ([[localRows]]), else checkpointed — released when `body` returns
+    * or throws (a commit that lost its CAS race). */
+  def withIds[T](ids: DataFrame, local: Boolean)(body: Ids => T): T = {
+    val del = new Ids((if (local) localRows(ids) else None) match {
+      case Some(rows) => Right(rows.toSeq.filterNot(_.isNullAt(0)).map(_.get(0)).distinct)
+      case None => Left(ids.toDF("_id").distinct().localCheckpoint(true))
+    })
+    try body(del)
+    finally del.chosen.left.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The one file-pruned copy-on-write delete from the data files `live`
+    * (relative to `dir`): one scan of the `keys` columns, each row tagged
+    * with its file, finds the files holding a deleted id — unless the
+    * caller's own scan found them (`dead`) — and only those files'
+    * survivor rows are rewritten, as one generation of `prefix` for
+    * version `v` ([[writeGeneration]]). Returns the new live list, or
+    * None when no live file holds a deleted id: nothing to commit. */
+  def copyOnWrite(
+      spark: SparkSession, dir: String, prefix: String, v: Long, live: Seq[String],
+      ids: Ids, keys: Seq[String], dead: Option[Set[String]] = None): Option[Seq[String]] = {
+    def read(files: Seq[String]) = readParquet(spark, files.map(f => s"$dir/$f"))
+    val gone = dead.getOrElse {
+      val abs = ids.tags(read(live), keys, input_file_name()).map(_.toString)
+      live.filter(f => abs.exists(_.endsWith("/" + f))).toSet
+    }
+    if (gone.isEmpty) None
+    else Some(live.filterNot(gone) ++
+      writeGeneration(ids.survivors(read(gone.toSeq.sorted), keys), dir, prefix, v).paths)
+  }
 
   // ------------------------------------------------------------------ //
   // reads
@@ -226,11 +319,9 @@ private[graft] object StoreCommit {
     *     rewrite landing within the filesystem's mtime granularity tick.
     *     Cost: an open + ≤64-byte pread instead of a stat — on an object
     *     store a ranged GET in place of a HEAD; still never the full
-    *     read+parse the memo exists to avoid. Manifests written before
-    *     the nonce-first layout (no leading nonce line) fall back to the
-    *     (length, mtime) compare, where a same-length same-tick rewrite
-    *     is undetectable — the detector caveat ADVICE r16 flagged, now
-    *     confined to the legacy layout;
+    *     read+parse the memo exists to avoid. A manifest without a
+    *     leading nonce line (every [[publish]] writes one) is never
+    *     memoized: it is re-read on every call;
     *   - a VACUUMED version's entry outlives its file, but the
     *     validating open/stat (and every read path's
     *     `fs.exists(history/vN)` / [[currentVersion]] gate) fails
@@ -250,28 +341,14 @@ private[graft] object StoreCommit {
     // committed manifests are immutable, so the duplicate read is
     // harmless and last-put-wins leaves identical content.
     manifestMemo.get(k) match {
-      case Some(e) if e.nonceLine.isDefined =>
-        // sound path: one positional read of the leading nonce line
-        if (validateNonceHit(fs, p, e.nonceLine.get)) e.lines
-        else memoizeFresh(fs, dir, v, k)
-      case Some(e) =>
-        // legacy layout (no leading nonce): best-effort stat compare
-        val st = fs.getFileStatus(p)
-        if (e.len == st.getLen && e.mtime == st.getModificationTime) e.lines
-        else memoizeFresh(fs, dir, v, k)
-      case None => memoizeFresh(fs, dir, v, k)
+      // one positional read of the leading nonce line
+      case Some(e) if validateNonceHit(fs, p, e.nonceLine) => e.lines
+      case _ =>
+        val lines = readManifestLines(fs, dir, v)
+        lines.headOption.filter(_.startsWith("nonce "))
+          .foreach(n => manifestMemo.put(k, ManifestMemoEntry(lines, n)))
+        lines
     }
-  }
-
-  private def memoizeFresh(
-      fs: FileSystem, dir: String, v: Long, k: (String, Long)): Seq[String] = {
-    val st = fs.getFileStatus(new Path(s"$dir/history/v$v"))
-    val lines = readManifestLines(fs, dir, v)
-    val e = ManifestMemoEntry(lines,
-      lines.headOption.filter(_.startsWith("nonce ")),
-      st.getLen, st.getModificationTime)
-    manifestMemo.put(k, e)
-    e.lines
   }
 
   /** ONE positional read deciding whether the on-disk manifest is still
@@ -299,8 +376,7 @@ private[graft] object StoreCommit {
   private[graft] val manifestNonceChecks =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private final case class ManifestMemoEntry(
-      lines: Seq[String], nonceLine: Option[String], len: Long, mtime: Long)
+  private final case class ManifestMemoEntry(lines: Seq[String], nonceLine: String)
 
   /** Thread-safe bounded access-ordered LRU — the memo's eviction
     * policy, factored out so its semantics are directly unit-testable
@@ -744,37 +820,61 @@ private[graft] object StoreCommit {
     s"${prefix}_g$v.$salt"
   }
 
-  /** Relative paths of the parquet data files directly under `dir/<sub>`
-    * (recursing one partition level — `cell=N/part-…` layouts). */
-  def listDataFiles(fs: FileSystem, dir: String, sub: String): Seq[String] = {
-    val p = new Path(s"$dir/$sub")
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.flatMap { s =>
-      if (s.isFile && s.getPath.getName.startsWith("part-"))
-        Seq(s"$sub/${s.getPath.getName}")
-      else if (s.isDirectory && s.getPath.getName.contains("="))
-        listDataFiles(fs, dir, s"$sub/${s.getPath.getName}")
-      else Seq.empty
-    }.sorted
+  /** A generation [[writeGeneration]] wrote: its dir `name`, its data
+    * files or partition leaves (`<name>/<col>=<value>`) relative to the
+    * store dir, and whether any of them holds a row. */
+  final case class Generation(name: String, paths: Seq[String], hasRows: Boolean) {
+    /** The int partition values of a partitioned generation's leaves. */
+    def values: Seq[Int] = paths.map(p => p.substring(p.lastIndexOf('=') + 1).toInt)
   }
 
-  /** The int partition values `<partCol>=<value>` present as leaf dirs
-    * of the freshly written generation `dir/<gen>`, ascending. */
-  def partitionValues(
-      fs: FileSystem, dir: String, gen: String, partCol: String): Seq[Int] = {
-    val p = new Path(s"$dir/$gen")
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-      .map(_.getPath.getName.stripPrefix(s"$partCol=").toInt).sorted
+  /** Write `df` as a fresh salted generation ([[saltedGenDir]]) of
+    * `prefix` for version `v` under the store `dir` — the one writer of
+    * the data generations the versioned stores commit. Partitioned by
+    * `partitionCol`, it yields one leaf per value with rows.
+    * Unpartitioned, it yields the part files, and an empty frame still
+    * yields one schema-bearing file, so a committed file list always
+    * names a readable schema; whether a file holds a row is read from
+    * its parquet footer on the driver (no Spark job). */
+  def writeGeneration(
+      df: DataFrame, dir: String, prefix: String, v: Long,
+      partitionCol: Option[String] = None): Generation = {
+    val fs = fsOf(df.sparkSession, dir)
+    val gen = saltedGenDir(prefix, v)
+    val out = new Path(s"$dir/$gen")
+    def listed(keep: String => Boolean): Seq[String] =
+      if (!fs.exists(out)) Seq.empty
+      else fs.listStatus(out).toSeq.map(_.getPath.getName).filter(keep).sorted
+    partitionCol match {
+      case Some(c) =>
+        df.write.partitionBy(c).parquet(out.toString)
+        val leaves = listed(_.startsWith(s"$c="))
+        Generation(gen, leaves.map(l => s"$gen/$l"), leaves.nonEmpty)
+      case None =>
+        df.write.parquet(out.toString)
+        if (listed(_.startsWith("part-")).isEmpty)
+          df.limit(0).repartition(1).write.mode("overwrite").parquet(out.toString)
+        val files = listed(_.startsWith("part-"))
+        Generation(gen, files.map(f => s"$gen/$f"), files.exists { f =>
+          val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(out, f), fs.getConf))
+          try in.getRecordCount > 0 finally in.close()
+        })
+    }
   }
 
-  /** Output file count for folding `files` (relative to `dir`) into
-    * ~`targetFileBytes` outputs — the stores' compaction sizing. */
-  def compactedParts(
-      fs: FileSystem, dir: String, files: Seq[String], targetFileBytes: Long): Int = {
-    val bytes = files.map(f => fs.getFileStatus(new Path(s"$dir/$f")).getLen).sum
-    math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+  /** The one compaction: `live`, the rows of `paths` (files or leaves
+    * relative to `dir`), folded into one generation ([[writeGeneration]])
+    * of ~`targetFileBytes` files. The scan's splits merge into the
+    * output files by a `coalesce`: the live rows are read and written
+    * once and move between no tasks. */
+  def compact(
+      live: DataFrame, paths: Seq[String], dir: String, prefix: String, v: Long,
+      targetFileBytes: Long = 128L << 20, partitionCol: Option[String] = None): Generation = {
+    val fs = fsOf(live.sparkSession, dir)
+    val bytes = paths.map(p => fs.getContentSummary(new Path(s"$dir/$p")).getLength).sum
+    val parts = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+    writeGeneration(live.coalesce(parts), dir, prefix, v, partitionCol)
   }
 
   def deleteOrThrow(fs: FileSystem, p: Path, store: String): Unit =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -25,7 +25,7 @@ object StreamOps {
       events: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]
   ): org.apache.spark.sql.Dataset[UserTotals] = {
     import org.apache.spark.sql.{Encoder, Encoders}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     implicit val encLong: Encoder[Long] = Encoders.scalaLong
     implicit val encTot: Encoder[UserTotals] = Encoders.product[UserTotals]
     implicit val encPair: Encoder[(Long, Double)] = Encoders.product[(Long, Double)]

@@ -172,7 +172,7 @@ class IvfIndexSpec extends SparkSpec {
       == rows(exact))
   }
 
-  test("delete: cell-pruned rewrite, exact serve over the remainder, idempotent") {
+  storeTest("delete: cell-pruned rewrite, exact serve over the remainder, idempotent") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_del").toString
     val idx = IvfIndex.build(e, "vec_id", "embedding", nCells = 8, dir)
     val delIds = e.filter(pmod(col("vec_id"), lit(4)) === 1).select(col("vec_id"))
@@ -205,7 +205,7 @@ class IvfIndexSpec extends SparkSpec {
       == expected)
   }
 
-  test("delete: a fully-emptied cell leaves the manifest, stays probeable, " +
+  storeTest("delete: a fully-emptied cell leaves the manifest, stays probeable, " +
       "and vacuum reaps its superseded data") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_del_all").toString
     val idx = IvfIndex.build(e, "vec_id", "embedding", nCells = 4, dir)
@@ -508,7 +508,7 @@ class IvfIndexSpec extends SparkSpec {
     }
   }
 
-  test("property: random append/delete interleavings stay exact at full probe") {
+  storeTest("property: random append/delete interleavings stay exact at full probe") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     // a random op script over vec_id ranges: the index must serve

@@ -97,7 +97,7 @@ class SignatureStoreSpec extends SparkSpec {
       .as[Long].collect().sorted.toSeq == Seq(10L, 12L))
   }
 
-  test("delete keeps co-located survivors: same-file rows not deleted survive") {
+  storeTest("delete keeps co-located survivors: same-file rows not deleted survive") {
     // one build writes few files; delete doc 1 but doc 2 may share its file
     val existing = Seq(
       (1L, "a b c d e f"), (2L, "g h i j k l"), (3L, "m n o p q r"))
@@ -109,6 +109,20 @@ class SignatureStoreSpec extends SparkSpec {
       .as[Long].collect().sorted.toSeq
     assert(left == Seq(2L, 3L),
       "survivor rows sharing a rewritten file must be preserved")
+  }
+
+  test("an empty append commits nothing: versions and live files unchanged") {
+    // an all-rejected micro-batch reaches append as an empty frame, and
+    // Spark writes one schema-only part file for it
+    val dir = tmp()
+    SignatureStore.build(docs(sf0001).filter(col("doc_id") < 10), dir)
+    val empty = docs(sf0001).filter(lit(false))
+    val versions = SignatureStore.versions(spark, dir)
+    val files = SignatureStore.stored(spark, dir).inputFiles.toSeq.sorted
+    SignatureStore.append(empty, dir)
+    SignatureStore.append(empty, dir)
+    assert(SignatureStore.versions(spark, dir) == versions)
+    assert(SignatureStore.stored(spark, dir).inputFiles.toSeq.sorted == files)
   }
 
   test("interleaved appenders: exactly one commits, the loser fails loudly, " +
