@@ -29,13 +29,12 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   *     holding `(nodeCol, cluster_id)` rows node-sorted, one leaf per
   *     cluster-residue bucket `b = pmod(hash(cluster_id), modulus)`: the
   *     rows of cluster `c` live only in bucket `pmod(hash(c), modulus)`.
-  *     A bucket is a list of leaves — a base leaf plus DELTA leaves. A
-  *     driver-local [[append]] or [[delete]] writes only the rows whose
-  *     label changed, as one delta generation; the distributed paths
-  *     (above the row bound, or non-integral ids) rewrite the touched
-  *     buckets whole, into one leaf each. Readers address the live leaves
-  *     directly, as [[IvfIndex]] reads its cells, so the bucket column
-  *     never reaches them.
+  *     A bucket is a list of leaves — a base leaf plus DELTA leaves. An
+  *     [[append]] or [[delete]] writes only the rows whose label changed,
+  *     as one delta generation, on the driver-local and the distributed
+  *     path alike. Readers address the live leaves directly, as
+  *     [[IvfIndex]] reads its cells, so the bucket column never reaches
+  *     them.
   *   - TOMBSTONES `(cluster_id, version)`, kept in the manifest: a row in
   *     a leaf of generation `g` is live unless its `cluster_id` carries a
   *     tombstone newer than `g`. A verb that relabels a cluster's rows
@@ -47,13 +46,15 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   *     tombstones as one `InSet` of tombstoned labels and one map from
   *     label to tombstone version, in the filter of one scan (no join, no
   *     shuffle).
-  *   - the FOLD: a commit that would leave a bucket with more than
-  *     [[MaxLeaves]] leaves, or more than [[MaxTombstones]] tombstones,
-  *     rewrites that bucket into one leaf in the same version — the
-  *     whole-bucket rewrite of the distributed paths, amortized over
-  *     [[MaxLeaves]] deltas as the pair files' `maxPairFiles` compaction
-  *     is. A tombstone leaves the
-  *     manifest once its bucket holds no leaf older than it.
+  *   - the FOLD, the one whole-bucket rewrite: a commit that would leave
+  *     a bucket with more than [[MaxLeaves]] leaves, or more than
+  *     [[MaxTombstones]] tombstones, rewrites that bucket into one leaf in
+  *     the same version, amortized over [[MaxLeaves]] deltas as the pair
+  *     files' `maxPairFiles` compaction is. Tombstones too many to collect
+  *     under the row bound, or of non-integral labels, never reach the
+  *     manifest: the commit folds every bucket they touch instead. A
+  *     tombstone leaves the manifest once its bucket holds no leaf older
+  *     than it.
   *   - `history/v<N>` — the version-N MANIFEST: the residue modulus
   *     (fixed at [[build]]), the complete bucket→leaves map, the live
   *     tombstones and the complete pair-file list. Publishing it through
@@ -193,7 +194,7 @@ object PairStore {
     * @param shortcut pointer-jumping mode for chain-shaped graphs (typo
     *                 chains) — see [[Clusters.connectedComponents]]
     * @param buckets  cluster-residue modulus: one bucket ≈ one
-    *                 comfortable rewrite unit (at 100 TB / 10^11 docs,
+    *                 comfortable fold unit (at 100 TB / 10^11 docs,
     *                 1024 buckets ≈ 1.6 GB of label rows each). Fixed
     *                 for the store's lifetime.
     */
@@ -238,16 +239,14 @@ object PairStore {
     * and labels yields the fresh pairs, the fresh nodes and the endpoint
     * labels, a union-find closes the quotient graph, and one
     * bucket-addressed read collects the members of the stored clusters
-    * merged away. The commit writes the fresh pairs, ONE delta generation
-    * holding the fresh nodes and the relabelled members, and tombstones
-    * for the merged-away labels — writes proportional to the rows whose
-    * label changed, whatever the bucket sizes. Above the bound (the batch,
-    * or the members it merges), or for other id types, the same steps run
-    * distributed (broadcast-semi probes and
-    * [[Clusters.connectedComponents]]) and rewrite whole the buckets rows
-    * move out of (stored clusters merged away) or into (merged labels,
-    * fresh nodes' final labels). A full replay of a completed batch
-    * commits nothing on either path.
+    * merged away. Above the bound (the batch, or the members it merges),
+    * or for other id types, the same steps run distributed
+    * (broadcast-semi probes and [[Clusters.connectedComponents]]). Either
+    * way the commit writes the fresh pairs, ONE delta generation holding
+    * the fresh nodes and the relabelled members, and tombstones for the
+    * merged-away labels — writes proportional to the rows whose label
+    * changed, whatever the bucket sizes, until a fold. A full replay of a
+    * completed batch commits nothing on either path.
     *
     * The one O(corpus) cost left is the label SCAN that lifts batch pair
     * endpoints onto current labels — a filtered scan, no corpus shuffle
@@ -364,18 +363,17 @@ object PairStore {
         .select((srcCol +: dstCol +: newPairs.columns.filterNot(Set(srcCol, dstCol)).toSeq)
           .map(col): _*).coalesce(1), dir, "pairs", man.version + 1).paths
     Some(Change(man.pairFiles ++ appended, () => labelFrame(spark, nodeCol, t, delta),
-      delta = StoreCommit.residues(spark, t, man.modulus, delta.map(_._2)).values.toSeq.distinct,
-      tombs = gone))
+      StoreCommit.residues(spark, t, man.modulus, delta.map(_._2)).values.toSeq.distinct,
+      idFrame(spark, "cluster_id", t, gone.keys.toSeq)))
   }
 
   /** [[append]]'s change computed distributed — any batch size, any id
     * type: the screens and the quotient closure as broadcast-batch
-    * joins, and the touched buckets rewritten whole. */
+    * joins; the delta and tombstones are [[localAppend]]'s. */
   private def distributedAppend(
       spark: SparkSession, dir: String, man: Manifest,
       newNodes: DataFrame, newPairs: DataFrame, nodeCol: String,
       srcCol: String, dstCol: String, shortcut: Boolean): Change = {
-    val b = man.modulus
     // Eager localCheckpoint: the batch is read several times across the
     // screens and writes below, and each read must see the same rows and
     // start from a leaf plan. Batch-sized by contract.
@@ -437,7 +435,7 @@ object PairStore {
     val qNodes = qEdges.select(col("_ls").as("_q"))
       .union(qEdges.select(col("_ld").as("_q"))).distinct()
     // CC over the touched super-nodes only: (old label -> merged label),
-    // identity rows dropped so the touched-bucket set stays merge-sized
+    // identity rows dropped so the delta and tombstones stay merge-sized
     val merged = Clusters
       .connectedComponents(qNodes, qEdges, "_q", "_ls", "_ld",
         shortcut = shortcut)
@@ -445,32 +443,20 @@ object PairStore {
       .filter(col("_q") =!= col("_merged"))
       .localCheckpoint(true)
 
-    // Buckets needing a new generation: the old residues of STORED
-    // clusters merged away (rows move out), the merged labels' residues
-    // (rows move in), and the residues of the fresh nodes that merge into
-    // nothing — a fresh node that joins a cluster lands in its merged
-    // label's bucket, already counted. Bounded by the modulus, so the
-    // collect is ≤ `buckets` ints.
-    val freshQ = freshNodes.select(col(nodeCol).as("_q"))
-    def residue(c: String) = pmod(hash(col(c)), lit(b)).as("bk")
-    val touched = merged.join(freshQ, Seq("_q"), "left_anti").select(residue("_q"))
-      .unionByName(merged.select(residue("_merged")))
-      .unionByName(freshQ.join(merged, Seq("_q"), "left_anti").select(residue("_q")))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    // New generation = every current row of a touched bucket (read by
-    // direct manifest addressing — touched dirs only), relabeled through
-    // the batch-sized merge map, plus the fresh nodes. Rows whose new
-    // label has a different residue migrate buckets; a bucket whose rows
-    // ALL migrate out simply leaves the manifest.
-    Change(man.pairFiles ++ appended,
-      () => readLabels(spark, dir, man, touched)
-        .select(col(nodeCol), col("cluster_id"))
-        .unionByName(freshNodes.select(col(nodeCol), col(nodeCol).as("cluster_id")))
-        .join(broadcast(merged), col("cluster_id") === col("_q"), "left")
-        .select(col(nodeCol),
-          coalesce(col("_merged"), col("cluster_id")).as("cluster_id")),
-      rewrite = touched,
-      release = () => Seq(merged, endLabels, freshNodes, freshPairs, batch)
+    // stored clusters merged away: tombstoned, their members relabelled
+    // (one bucket-addressed read); the fresh nodes land under their final
+    // labels
+    val gone = merged.join(freshNodes.select(col(nodeCol).as("_q")), Seq("_q"), "left_anti")
+    val fresh = freshNodes.join(broadcast(merged), col(nodeCol) === col("_q"), "left")
+      .select(col(nodeCol), coalesce(col("_merged"), col(nodeCol)).as("cluster_id"))
+    val members = readLabels(spark, dir, man, bucketsOf(gone, "_q", man.modulus))
+      .join(broadcast(gone), col("cluster_id") === col("_q"))
+      .select(col(nodeCol), col("_merged").as("cluster_id"))
+    Change(man.pairFiles ++ appended, () => fresh.unionByName(members),
+      bucketsOf(fresh.select(col("cluster_id")).union(gone.select(col("_merged"))), "cluster_id",
+        man.modulus),
+      gone.select(col("_q").as("cluster_id")),
+      () => Seq(merged, endLabels, freshNodes, freshPairs, batch)
         .foreach(_.unpersist(blocking = false)))
   }
 
@@ -501,22 +487,21 @@ object PairStore {
     * ([[StoreCommit.withIds]]), the label scan finds their clusters,
     * one bucket-addressed read collects those clusters' members, the ONE
     * pair scan yields both the dead files and the pairs among the
-    * members, and a union-find closes the survivors. Its
-    * writes are the survivor pairs of the dead files and ONE delta
-    * generation holding the survivors' new labels, with the affected
-    * clusters tombstoned — component-sized, whatever the bucket sizes; no
-    * label bucket is read or rewritten. Above the bound, or for other id
-    * types, the same steps run distributed (broadcast-semi probes and
-    * [[Clusters.connectedComponents]]) and rewrite the touched buckets
-    * whole. When the batch fits but the affected clusters' members or
-    * pairs do not (a delete from a cluster larger than the bound), the
-    * distributed path starts from the deleted ids and clusters already
-    * found, so that fallback repeats only the bucket-addressed member
-    * read and the pair scan. The merge-on-read upgrade for PAIRS
-    * (deletion vectors applied at read time, folded in at compaction)
-    * would trade the pair scan for reader-side work; file-level
-    * copy-on-write is the simpler contract and keeps every pair reader
-    * untouched.
+    * members, and a union-find closes the survivors. Above the bound, or
+    * for other id types, the same steps run distributed (broadcast-semi
+    * probes and [[Clusters.connectedComponents]]). Either way the writes
+    * are the survivor pairs of the dead files and ONE delta generation
+    * holding the survivors' new labels, with the affected clusters
+    * tombstoned — component-sized, whatever the bucket sizes; only a
+    * fold rewrites a label bucket. When the batch fits but the affected
+    * clusters' members or pairs do not (a delete from a cluster larger
+    * than the bound), the distributed path starts from the deleted ids
+    * and clusters already found, so that fallback repeats only the
+    * bucket-addressed member read and the pair scan. The merge-on-read
+    * upgrade for PAIRS (deletion vectors applied at read time, folded in
+    * at compaction) would trade the pair scan for reader-side work;
+    * file-level copy-on-write is the simpler contract and keeps every
+    * pair reader untouched.
     *
     * Idempotent under whole-batch replay at any crash point: already-
     * deleted ids have no label row and no surviving pair, so a replay
@@ -542,14 +527,17 @@ object PairStore {
     val batch = deletedNodes.select(col(nodeCol))
     StoreCommit.withIds(batch,
         sameIntegral(t, labels, pairs.select(col(srcCol), col(dstCol)), batch)) { ids =>
-      val change =
-        (if (ids.values.isEmpty) Left(None)
-        else localDelete(spark, dir, man, labels, pairs, t, ids, nodeCol, srcCol, dstCol)) match {
-          case Right(c) => c
-          case Left(affected) => distributedDelete(spark, dir, man, ids, affected,
-            nodeCol, srcCol, dstCol, shortcut)
-        }
-      commitChange(spark, fs, dir, man, change, Int.MaxValue, () => ())
+      // a collected batch with no id touches nothing: nothing to commit
+      if (!ids.isEmpty) {
+        val change =
+          (if (ids.values.isEmpty) Left(None)
+          else localDelete(spark, dir, man, labels, pairs, t, ids, nodeCol, srcCol, dstCol)) match {
+            case Right(c) => c
+            case Left(affected) => distributedDelete(spark, dir, man, ids, affected,
+              nodeCol, srcCol, dstCol, shortcut)
+          }
+        commitChange(spark, fs, dir, man, change, Int.MaxValue, () => ())
+      }
     }
   }
 
@@ -565,13 +553,13 @@ object PairStore {
       dstCol: String): Either[Option[DataFrame], Change] = {
     val box = StoreCommit.boxAs(t) _
     val del = ids.values.get.map(_.asInstanceOf[Number].longValue)
-    if (del.isEmpty) return Right(Change(man.pairFiles, () => labels))
     // the deleted ids' clusters (one labels scan; replayed or never-stored
     // ids drop out here), then those clusters' members (one
     // bucket-addressed read)
     val affected = StoreCommit.localRows(ids.matching(labels, nodeCol))
       .getOrElse(return Left(None)).toSeq.map(idAt(_, 1)).distinct
-    lazy val found = Left(Some(idFrame(spark, "cluster_id", t, affected)))
+    val affFrame = idFrame(spark, "cluster_id", t, affected)
+    lazy val found = Left(Some(affFrame))
     val affBk = StoreCommit.residues(spark, t, man.modulus, affected)
     val members =
       if (affected.isEmpty) Seq.empty[Long]
@@ -602,18 +590,16 @@ object PairStore {
     Right(Change(StoreCommit.copyOnWrite(spark, dir, "pairs", man.version + 1, man.pairFiles,
         ids, Seq(srcCol, dstCol), Some(deadFiles)).getOrElse(man.pairFiles),
       () => labelFrame(spark, nodeCol, t, cc),
-      delta = StoreCommit.residues(spark, t, man.modulus, cc.map(_._2)).values.toSeq.distinct,
-      tombs = affBk))
+      StoreCommit.residues(spark, t, man.modulus, cc.map(_._2)).values.toSeq.distinct, affFrame))
   }
 
   /** [[delete]]'s change computed distributed — any batch size, any id
-    * type. `found`: the deleted ids' clusters, when [[localDelete]]
-    * already found them. */
+    * type; the delta and tombstones are [[localDelete]]'s. `found`: the
+    * deleted ids' clusters, when [[localDelete]] already found them. */
   private def distributedDelete(
       spark: SparkSession, dir: String, man: Manifest, ids: StoreCommit.Ids,
       found: Option[DataFrame], nodeCol: String, srcCol: String, dstCol: String,
       shortcut: Boolean): Change = {
-    val b = man.modulus
     // the clusters of the deleted ids actually stored — batch-sized;
     // replayed or never-stored ids drop out here (corpus scanned via a
     // broadcast semi probe, not shuffled)
@@ -629,31 +615,20 @@ object PairStore {
     // affected-component closure: members of the clusters that lost a
     // node (bucket-addressed read + broadcast label semi), minus the
     // deleted ids, over the already-rewritten pair set
-    val affBk = affLabels.select(pmod(hash(col("cluster_id")), lit(b)).as("bk"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val members = readLabels(spark, dir, man, affBk)
+    val members = readLabels(spark, dir, man, bucketsOf(affLabels, "cluster_id", man.modulus))
       .join(broadcast(affLabels), Seq("cluster_id"), "left_semi")
-      .select(col(nodeCol), col("cluster_id"))
+      .select(col(nodeCol))
       .localCheckpoint(true)
-    val survivors = ids.survivors(members.select(col(nodeCol)), Seq(nodeCol))
+    val survivors = ids.survivors(members, Seq(nodeCol))
     val affPairs = readPairs(spark, dir, pairFiles)
       .join(members.select(col(nodeCol).as(srcCol)), Seq(srcCol), "left_semi")
+    // the survivors under their new labels are the delta, and the
+    // affected clusters are tombstoned
     val cc = Clusters.connectedComponents(
         survivors, affPairs, nodeCol, srcCol, dstCol, shortcut = shortcut)
       .localCheckpoint(true)
-    // touched buckets: every affected cluster's old residue plus the
-    // recomputed labels' residues (bounded by the modulus)
-    val touched = (affBk ++ cc
-        .select(pmod(hash(col("cluster_id")), lit(b)).as("bk"))
-        .distinct().collect().map(_.getInt(0))).distinct.sorted
-    Change(pairFiles,
-      () => readLabels(spark, dir, man, touched)
-        .join(members.select(col(nodeCol)), Seq(nodeCol), "left_anti")
-        .select(col(nodeCol), col("cluster_id"))
-        .unionByName(cc),
-      rewrite = touched,
-      release = () => Seq(cc, members, affLabels)
-        .foreach(_.unpersist(blocking = false)))
+    Change(pairFiles, () => cc, bucketsOf(cc, "cluster_id", man.modulus), affLabels,
+      () => Seq(cc, members, affLabels).foreach(_.unpersist(blocking = false)))
   }
 
   /** Delete the data staged for versions above the last committed
@@ -729,52 +704,62 @@ object PairStore {
 
   /** What one [[append]] or [[delete]] changes: the complete pair-file
     * list it commits (its own pair generation already written); the
-    * label rows it writes (read when written) — every row of the
-    * `rewrite` buckets, which they replace, plus the delta rows of the
-    * `delta` buckets, which they join as one more leaf; the clusters it
-    * tombstones, with their buckets; and the release of its cached
-    * intermediates. */
+    * delta — the label rows it writes (read when written), one leaf in
+    * each of the `delta` buckets; the clusters it tombstones, a
+    * `cluster_id` frame; and the release of its cached intermediates. */
   private final case class Change(
-      pairFiles: Seq[String], rows: () => DataFrame,
-      rewrite: Seq[Int] = Seq.empty, delta: Seq[Int] = Seq.empty,
-      tombs: Map[Long, Int] = Map.empty, release: () => Unit = () => ())
+      pairFiles: Seq[String], rows: () => DataFrame, delta: Seq[Int], tombs: DataFrame,
+      release: () => Unit = () => ())
 
   /** The shared tail of [[append]] and [[delete]]: write the change's
-    * label rows — with every bucket the change pushes past [[MaxLeaves]]
-    * leaves or [[MaxTombstones]] tombstones folded into one leaf — as
-    * ONE label generation, fold the pair files past `maxPairFiles`, and commit; or
-    * commit nothing when the change is empty (a fully-applied replay, or
-    * a batch touching nothing stored), the fast path that makes
-    * restarted loops cheap. */
+    * delta as ONE label generation, with the buckets it folds rewritten
+    * into one leaf each, fold the pair files past `maxPairFiles`, and
+    * commit; or commit nothing when the change is empty (a fully-applied
+    * replay, or a batch touching nothing stored), the fast path that
+    * makes restarted loops cheap. The tombstones are chosen once
+    * ([[StoreCommit.withIds]]): collected, they become manifest lines,
+    * and a bucket the commit pushes past [[MaxLeaves]] leaves or
+    * [[MaxTombstones]] tombstones folds; as a frame (above the row bound,
+    * or non-integral ids), every bucket they touch folds. The fold — the
+    * one whole-bucket rewrite — reads the bucket's live leaves, drops the
+    * tombstoned clusters' rows and adds the delta's. */
   private def commitChange(
       spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
       c: Change, maxPairFiles: Int, beforeCommit: () => Unit): Unit =
     try {
-      if (c.rewrite.nonEmpty || c.delta.nonEmpty || c.tombs.nonEmpty ||
-          c.pairFiles != man.pairFiles) {
+      val t = c.tombs.schema("cluster_id").dataType
+      StoreCommit.withIds(c.tombs, StoreCommit.isIntegral(t)) { ids =>
         val v = man.version + 1
-        val tombs = liveTombstones(
-          man.tombstones ++ c.tombs.map { case (cl, bk) => cl -> (bk, v) }, man.buckets)
-        val fold = (man.buckets.keySet ++ c.delta).toSeq.sorted
-          .filterNot(c.rewrite.contains).filter { bk =>
-            man.buckets.getOrElse(bk, Seq.empty).size + (if (c.delta.contains(bk)) 1 else 0) >
-              MaxLeaves || tombs.values.count(_._1 == bk) > MaxTombstones
+        val (added, hit) = ids.values match {
+          case Some(vs) => (StoreCommit.residues(spark, t, man.modulus,
+              vs.map(_.asInstanceOf[Number].longValue)).map { case (cl, bk) => cl -> (bk, v) },
+            Set.empty[Int])
+          case None => (Map.empty[Long, (Int, Long)],
+            bucketsOf(c.tombs, "cluster_id", man.modulus).toSet)
+        }
+        if (c.delta.nonEmpty || added.nonEmpty || hit.nonEmpty || c.pairFiles != man.pairFiles) {
+          val tombs = liveTombstones(man.tombstones ++ added, man.buckets)
+          val fold = (man.buckets.keySet ++ c.delta).toSeq.sorted.filter { bk =>
+            hit(bk) || man.buckets.getOrElse(bk, Seq.empty).size +
+              (if (c.delta.contains(bk)) 1 else 0) > MaxLeaves ||
+              tombs.values.count(_._1 == bk) > MaxTombstones
           }
-        val whole = (c.rewrite ++ fold).toSet
-        val written =
-          if (whole.isEmpty && c.delta.isEmpty) Map.empty[Int, String]
-          else writeLabels(dir,
-            if (fold.isEmpty) c.rows()
-            else c.rows().unionByName(readLabels(spark, dir, man.copy(tombstones = tombs), fold)),
-            man.modulus, v)
-        val buckets = written.foldLeft(man.buckets -- whole) { case (m, (bk, g)) =>
-          m.updated(bk, m.getOrElse(bk, Seq.empty) :+ g) }
-        val pairFiles =
-          if (c.pairFiles.size > maxPairFiles) compactInto(spark, dir, c.pairFiles, v)
-          else c.pairFiles
-        beforeCommit()
-        commit(fs, dir, Manifest(v, man.modulus, buckets, liveTombstones(tombs, buckets),
-          pairFiles))
+          val written =
+            if (fold.isEmpty && c.delta.isEmpty) Map.empty[Int, String]
+            else writeLabels(dir,
+              if (fold.isEmpty) c.rows()
+              else c.rows().unionByName(
+                ids.survivors(readLabels(spark, dir, man, fold), Seq("cluster_id"))),
+              man.modulus, v)
+          val buckets = written.foldLeft(man.buckets -- fold) { case (m, (bk, g)) =>
+            m.updated(bk, m.getOrElse(bk, Seq.empty) :+ g) }
+          val pairFiles =
+            if (c.pairFiles.size > maxPairFiles) compactInto(spark, dir, c.pairFiles, v)
+            else c.pairFiles
+          beforeCommit()
+          commit(fs, dir, Manifest(v, man.modulus, buckets, liveTombstones(tombs, buckets),
+            pairFiles))
+        }
       }
     } finally c.release()
 
@@ -826,6 +811,11 @@ object PairStore {
     * the driver-local paths' precondition. */
   private def sameIntegral(t: DataType, frames: DataFrame*): Boolean =
     StoreCommit.isIntegral(t) && frames.forall(_.schema.forall(_.dataType == t))
+
+  /** The distinct buckets `pmod(hash(c), modulus)` of `df`'s column `c`:
+    * one job, at most `modulus` ints collected. */
+  private def bucketsOf(df: DataFrame, c: String, modulus: Int): Seq[Int] =
+    df.select(pmod(hash(col(c)), lit(modulus))).distinct().collect().map(_.getInt(0)).toSeq.sorted
 
   private def idAt(r: Row, i: Int): Long = r.get(i).asInstanceOf[Number].longValue
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.functions.Blocklist
 
 /** Phrase-blocklist screen ([[graft.functions.Blocklist.phraseHits]]):

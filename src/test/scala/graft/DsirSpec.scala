@@ -15,11 +15,11 @@ class DsirSpec extends SparkSpec {
   // Gopher rules except the B docs' labels don't matter for train()
   private def aText(i: Long) =
     s"the a of item$i " + (1 to 12).map(j => s"alpha$j").mkString(" ")
-  private def bText(i: Long) =
+  private def bText =
     (1 to 16).map(j => s"zz$j$j").mkString(" ")
 
   private def raw = ((1L to 5L).map(i => (i, aText(i))) ++
-    (6L to 10L).map(i => (i, bText(i)))).toDF("doc_id", "text")
+    (6L to 10L).map(i => (i, bText))).toDF("doc_id", "text")
   private def target = (1L to 5L).map(i => (i, aText(i))).toDF("doc_id", "text")
 
   test("self-importance is exactly zero: target == raw => every logw == 0") {

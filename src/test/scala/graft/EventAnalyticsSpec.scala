@@ -44,7 +44,7 @@ class EventAnalyticsSpec extends SparkSpec {
     val expected = pairs.groupBy(_._1).map { case (u, es) =>
       val days = es.map(_._2.toLocalDateTime.getDayOfMonth).distinct.sorted
       val runs = days.foldLeft(List.empty[List[Int]]) {
-        case (acc @ (h :: t), d) if h.head == d - 1 => (d :: h) :: t
+        case (h :: t, d) if h.head == d - 1 => (d :: h) :: t
         case (acc, d)                               => List(d) :: acc
       }
       u -> ((days.size.toLong, runs.size.toLong, runs.map(_.size).max.toLong))
@@ -154,7 +154,6 @@ class EventAnalyticsSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     qs.foreach { case (flag, vals) =>
-      val n = vals.size.toDouble
       val mean = vals.map(BigDecimal(_)).sum.toDouble / vals.size
       val ex2 = vals.map(v => BigDecimal(v) * BigDecimal(v)).sum.toDouble / vals.size
       val vr = ex2 - mean * mean

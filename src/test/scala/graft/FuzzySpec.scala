@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.functions.Fuzzy
 
 /** Deletion-neighborhood fuzzy matching ([[graft.functions.Fuzzy]]) —

@@ -210,7 +210,6 @@ class MultimodalSpec extends SparkSpec {
 
   test("resize keeps original metadata on undecodable rows (no self-contradiction)") {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val junk = Array[Byte](1, 2, 3, 4)
     val df = spark.createDataFrame(
       java.util.Arrays.asList(Row(7L, junk, Row("webp", 640, 480))),

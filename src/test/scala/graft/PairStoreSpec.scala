@@ -863,6 +863,46 @@ class PairStoreSpec extends SparkSpec {
       sizes.result().map { case (n, c) => s"$n/$c" }.mkString(" "))
   }
 
+  test("above the row bound, append writes a delta and tombstones, not whole buckets") {
+    withLocalRows(16) {
+      val dir = tmpDir()
+      // 3,000 stored nodes in 2 buckets (each holds well over 1,000 rows)
+      // and 3 small stored clusters, {1010, 1011}, {1020, 1021}, {1030, 1031}
+      val stored = (1001L to 4000L).toSet
+      val storedEdges = Set((1010L, 1011L), (1020L, 1021L), (1030L, 1031L))
+      PairStore.build(stored.toSeq.toDF("id"), storedEdges.toSeq.toDF("id_a", "id_b"), dir,
+        "id", "id_a", "id_b", buckets = 2)
+      val base = headManifest(dir)
+      assert(perBucket(base, "bucket").values.toSeq.sorted == Seq(1, 1))
+      assert(PairStore.labels(spark, dir).groupBy(pmod(hash(col("cluster_id")), lit(2)))
+        .count().collect().forall(_.getLong(1) >= 1000L), "a bucket holds under 1,000 rows")
+      // a 40-pair batch (over the bound) of 20 fresh nodes 1..20, whose
+      // chain bridges all 3 stored clusters under the fresh label 1
+      val fresh = (1L to 20L).toSet
+      val batch = (1L until 20L).map(a => (a, a + 1)) ++ (1L until 19L).map(a => (a, a + 2)) ++
+        Seq((1L, 1010L), (10L, 1020L), (20L, 1030L))
+      assert(batch.size == 40)
+      PairStore.append(fresh.toSeq.toDF("id"), batch.toDF("id_a", "id_b"), dir,
+        "id", "id_a", "id_b")
+      val man = headManifest(dir)
+      // the new label generation holds exactly the changed rows: the
+      // fresh nodes and the merged-away clusters' members, under label 1
+      val newLeaves = man.map(_.split(" ")).collect {
+        case Array("bucket", bk, g) if g.startsWith("labels_g1.") => s"$dir/$g/cbucket=$bk" }
+      assert(newLeaves.nonEmpty, man.mkString("\n"))
+      val written = spark.read.parquet(newLeaves: _*).as[(Long, Long)].collect().toSet
+      assert(written == (fresh ++ storedEdges.flatMap { case (a, b) => Seq(a, b) }).map(_ -> 1L))
+      // every base leaf is still referenced, and the 3 merged-away
+      // clusters are tombstoned
+      val baseLeaves = base.filter(_.startsWith("bucket "))
+      assert(baseLeaves.forall(man.contains), man.mkString("\n"))
+      assert(man.filter(_.startsWith("tombstone ")).map(_.split(" ")(2).toLong).sorted ==
+        Seq(1010L, 1020L, 1030L), man.mkString("\n"))
+      assert(PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap ==
+        closure(stored ++ fresh, storedEdges ++ batch))
+    }
+  }
+
   test("kill-replay: a crash in a commit that folds a bucket replays to convergence") {
     // one bucket, so every delta lands in it and the fold comes within
     // MaxLeaves appends; each append merges two stored clusters, so the

@@ -274,7 +274,8 @@ class ScalingSpec extends SparkSpec {
   // registered at both bounds: at the production bound this 50-pair batch
   // runs the driver-local append (its one shuffle is the delta-leaf
   // write), and the "[distributed]" copy keeps the gate on the
-  // distributed closure and whole-bucket rewrite
+  // distributed closure, the delta write and the fold of every bucket its
+  // uncollected tombstones touch
   storeTest("pair-store append: shuffle bytes stay batch-proportional as the stored corpus grows 8x") {
     import graft.functions.PairStore
     // synthetic edge-sized store: nodes only (append cost is what's
@@ -332,12 +333,13 @@ class ScalingSpec extends SparkSpec {
     // same synthetic store shape (one pair file per copy) as the append
     // gate; the delete batch is
     // CONSTANT (6 copy-0 pair endpoints → 6 affected clusters), so the
-    // touched-bucket count stays below BOTH moduli — the rewrite unit is
+    // tombstoned-bucket count stays below BOTH moduli — the fold unit is
     // the bucket, and the documented operating point scales the modulus
     // with the corpus so a bucket stays fixed-size; a batch touching
     // most of the small-store modulus would deflate the baseline. The
     // pair-file pruning SCAN is read IO by design (not shuffle) — the
-    // shuffle gate pins the component closure + bucket rewrite costs.
+    // shuffle gate pins the component closure, the delta write and, on
+    // the distributed path, the fold of the tombstoned buckets.
     def nodes(f: Int): DataFrame =
       (0 until f).map(i => spark.range(1000).select(
         (col("id") + lit(i.toLong * 1000000L)).as("id")))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.functions.{IvfIndex, PairStore, SignatureStore, StoreCommit}
 
 /** The store tier's SHARED commit protocol ([[graft.functions.StoreCommit]])

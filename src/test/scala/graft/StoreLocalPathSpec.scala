@@ -22,8 +22,9 @@ class StoreLocalPathSpec extends SparkSpec {
       .unionByName(NearDup.ngramJaccardPairs(batch, 0.5))
 
   // every verb takes a distinct path on the two stores: the driver-local
-  // append (delta leaves and tombstones) against the distributed one
-  // (whole-bucket rewrites), and likewise delete and screenBatch
+  // append against the distributed one (both write delta leaves, the
+  // distributed one folding every bucket its uncollected tombstones
+  // touch), and likewise delete and screenBatch
   test("one seeded op sequence on two stores, one per setting: identical labels, " +
       "pairs and screens after every op") {
     // a 10-token pool over 5-token docs: exact and near dups are common
@@ -169,20 +170,27 @@ class StoreLocalPathSpec extends SparkSpec {
     for (dir <- dirs)
       PairStore.build((60L until 90L).toDF("id"), chains.toDF("id_a", "id_b"), dir,
         "id", "id_a", "id_b")
+    // the store lines (buckets, tombstones, pair files) of manifest v
+    def manifest(v: Long): Seq[String] =
+      scala.io.Source.fromFile(s"${dirs(0)}/history/v$v").getLines().toSeq
+        .filterNot(l => l.startsWith("nonce") || l.startsWith("version"))
     val (bridge, bridgePairs) = (Seq(100L).toDF("id"), Seq((70L, 100L), (85L, 100L)).toDF("id_a", "id_b"))
     withLocalRows(8)(PairStore.append(bridge, bridgePairs, dirs(0), "id", "id_a", "id_b"))
     distributed(PairStore.append(bridge, bridgePairs, dirs(1), "id", "id_a", "id_b"))
     assert(pairStore(dirs(0)) == pairStore(dirs(1)), "after the merging append")
     assert(pairStore(dirs(0))._1.map(_._2).distinct == Seq(60L))
-    // the fallback rewrote buckets whole: no tombstone, one leaf a bucket
-    val man = {
-      val hist = new java.io.File(s"${dirs(0)}/history")
-      val v = hist.list().filter(_.matches("v\\d+")).map(_.drop(1).toLong).max
-      scala.io.Source.fromFile(s"$hist/v$v").getLines().toSeq
-    }
-    assert(!man.exists(_.startsWith("tombstone")), man.mkString("\n"))
-    val leaves = man.filter(_.startsWith("bucket ")).map(_.split(" ")(1))
-    assert(leaves.distinct.size == leaves.size, man.mkString("\n"))
+    // the fallback writes a delta and a tombstone, as the driver path
+    // does: one tombstone line for cluster 80 in 80's bucket, and one new
+    // leaf in 60's bucket; no other bucket line changes
+    def bucketOf(v: Long): Int =
+      Seq(v).toDF("x").select(pmod(hash(col("x")), lit(16))).as[Int].collect().head
+    val (before, after) = (manifest(0), manifest(1))
+    assert(after.filter(_.startsWith("tombstone ")) == Seq(s"tombstone ${bucketOf(80L)} 80 1"),
+      after.mkString("\n"))
+    val added = after.filter(_.startsWith("bucket ")).diff(before)
+    assert(added.size == 1 && added.head.startsWith(s"bucket ${bucketOf(60L)} labels_g1."),
+      after.mkString("\n"))
+    assert(before.filter(_.startsWith("bucket ")).forall(after.contains), after.mkString("\n"))
     // screens: a 4-doc batch (12 hashes) over the bound, and a 1-doc batch
     // whose 20 exact-duplicate store candidates (40 rows) are over it
     val sigDir = tmpDir()
