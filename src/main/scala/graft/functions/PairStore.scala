@@ -364,7 +364,7 @@ object PairStore {
           .map(col): _*).coalesce(1), dir, "pairs", man.version + 1).paths
     Some(Change(man.pairFiles ++ appended, () => labelFrame(spark, nodeCol, t, delta),
       StoreCommit.residues(spark, t, man.modulus, delta.map(_._2)).values.toSeq.distinct,
-      idFrame(spark, "cluster_id", t, gone.keys.toSeq)))
+      idFrame(spark, "cluster_id", t, gone.keys.toSeq), gone.values.toSeq.distinct))
   }
 
   /** [[append]]'s change computed distributed — any batch size, any id
@@ -449,13 +449,14 @@ object PairStore {
     val gone = merged.join(freshNodes.select(col(nodeCol).as("_q")), Seq("_q"), "left_anti")
     val fresh = freshNodes.join(broadcast(merged), col(nodeCol) === col("_q"), "left")
       .select(col(nodeCol), coalesce(col("_merged"), col(nodeCol)).as("cluster_id"))
-    val members = readLabels(spark, dir, man, bucketsOf(gone, "_q", man.modulus))
+    val goneBk = bucketsOf(gone, "_q", man.modulus)
+    val members = readLabels(spark, dir, man, goneBk)
       .join(broadcast(gone), col("cluster_id") === col("_q"))
       .select(col(nodeCol), col("_merged").as("cluster_id"))
     Change(man.pairFiles ++ appended, () => fresh.unionByName(members),
       bucketsOf(fresh.select(col("cluster_id")).union(gone.select(col("_merged"))), "cluster_id",
         man.modulus),
-      gone.select(col("_q").as("cluster_id")),
+      gone.select(col("_q").as("cluster_id")), goneBk,
       () => Seq(merged, endLabels, freshNodes, freshPairs, batch)
         .foreach(_.unpersist(blocking = false)))
   }
@@ -559,7 +560,7 @@ object PairStore {
     val affected = StoreCommit.localRows(ids.matching(labels, nodeCol))
       .getOrElse(return Left(None)).toSeq.map(idAt(_, 1)).distinct
     val affFrame = idFrame(spark, "cluster_id", t, affected)
-    lazy val found = Left(Some(affFrame))
+    val found = Left(Some(affFrame))
     val affBk = StoreCommit.residues(spark, t, man.modulus, affected)
     val members =
       if (affected.isEmpty) Seq.empty[Long]
@@ -590,7 +591,8 @@ object PairStore {
     Right(Change(StoreCommit.copyOnWrite(spark, dir, "pairs", man.version + 1, man.pairFiles,
         ids, Seq(srcCol, dstCol), Some(deadFiles)).getOrElse(man.pairFiles),
       () => labelFrame(spark, nodeCol, t, cc),
-      StoreCommit.residues(spark, t, man.modulus, cc.map(_._2)).values.toSeq.distinct, affFrame))
+      StoreCommit.residues(spark, t, man.modulus, cc.map(_._2)).values.toSeq.distinct, affFrame,
+      affBk.values.toSeq.distinct))
   }
 
   /** [[delete]]'s change computed distributed — any batch size, any id
@@ -615,7 +617,8 @@ object PairStore {
     // affected-component closure: members of the clusters that lost a
     // node (bucket-addressed read + broadcast label semi), minus the
     // deleted ids, over the already-rewritten pair set
-    val members = readLabels(spark, dir, man, bucketsOf(affLabels, "cluster_id", man.modulus))
+    val affBk = bucketsOf(affLabels, "cluster_id", man.modulus)
+    val members = readLabels(spark, dir, man, affBk)
       .join(broadcast(affLabels), Seq("cluster_id"), "left_semi")
       .select(col(nodeCol))
       .localCheckpoint(true)
@@ -627,7 +630,7 @@ object PairStore {
     val cc = Clusters.connectedComponents(
         survivors, affPairs, nodeCol, srcCol, dstCol, shortcut = shortcut)
       .localCheckpoint(true)
-    Change(pairFiles, () => cc, bucketsOf(cc, "cluster_id", man.modulus), affLabels,
+    Change(pairFiles, () => cc, bucketsOf(cc, "cluster_id", man.modulus), affLabels, affBk,
       () => Seq(cc, members, affLabels).foreach(_.unpersist(blocking = false)))
   }
 
@@ -706,10 +709,12 @@ object PairStore {
     * list it commits (its own pair generation already written); the
     * delta — the label rows it writes (read when written), one leaf in
     * each of the `delta` buckets; the clusters it tombstones, a
-    * `cluster_id` frame; and the release of its cached intermediates. */
+    * `cluster_id` frame built from checkpointed or driver-local frames,
+    * and their buckets `tombBuckets`; and the release of its cached
+    * intermediates. */
   private final case class Change(
       pairFiles: Seq[String], rows: () => DataFrame, delta: Seq[Int], tombs: DataFrame,
-      release: () => Unit = () => ())
+      tombBuckets: Seq[Int], release: () => Unit = () => ())
 
   /** The shared tail of [[append]] and [[delete]]: write the change's
     * delta as ONE label generation, with the buckets it folds rewritten
@@ -726,40 +731,37 @@ object PairStore {
   private def commitChange(
       spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
       c: Change, maxPairFiles: Int, beforeCommit: () => Unit): Unit =
-    try {
+    try if (c.delta.nonEmpty || c.tombBuckets.nonEmpty || c.pairFiles != man.pairFiles) {
       val t = c.tombs.schema("cluster_id").dataType
-      StoreCommit.withIds(c.tombs, StoreCommit.isIntegral(t)) { ids =>
+      StoreCommit.withIds(c.tombs, StoreCommit.isIntegral(t), checkpointed = true) { ids =>
         val v = man.version + 1
         val (added, hit) = ids.values match {
           case Some(vs) => (StoreCommit.residues(spark, t, man.modulus,
               vs.map(_.asInstanceOf[Number].longValue)).map { case (cl, bk) => cl -> (bk, v) },
             Set.empty[Int])
-          case None => (Map.empty[Long, (Int, Long)],
-            bucketsOf(c.tombs, "cluster_id", man.modulus).toSet)
+          case None => (Map.empty[Long, (Int, Long)], c.tombBuckets.toSet)
         }
-        if (c.delta.nonEmpty || added.nonEmpty || hit.nonEmpty || c.pairFiles != man.pairFiles) {
-          val tombs = liveTombstones(man.tombstones ++ added, man.buckets)
-          val fold = (man.buckets.keySet ++ c.delta).toSeq.sorted.filter { bk =>
-            hit(bk) || man.buckets.getOrElse(bk, Seq.empty).size +
-              (if (c.delta.contains(bk)) 1 else 0) > MaxLeaves ||
-              tombs.values.count(_._1 == bk) > MaxTombstones
-          }
-          val written =
-            if (fold.isEmpty && c.delta.isEmpty) Map.empty[Int, String]
-            else writeLabels(dir,
-              if (fold.isEmpty) c.rows()
-              else c.rows().unionByName(
-                ids.survivors(readLabels(spark, dir, man, fold), Seq("cluster_id"))),
-              man.modulus, v)
-          val buckets = written.foldLeft(man.buckets -- fold) { case (m, (bk, g)) =>
-            m.updated(bk, m.getOrElse(bk, Seq.empty) :+ g) }
-          val pairFiles =
-            if (c.pairFiles.size > maxPairFiles) compactInto(spark, dir, c.pairFiles, v)
-            else c.pairFiles
-          beforeCommit()
-          commit(fs, dir, Manifest(v, man.modulus, buckets, liveTombstones(tombs, buckets),
-            pairFiles))
+        val tombs = liveTombstones(man.tombstones ++ added, man.buckets)
+        val fold = (man.buckets.keySet ++ c.delta).toSeq.sorted.filter { bk =>
+          hit(bk) || man.buckets.getOrElse(bk, Seq.empty).size +
+            (if (c.delta.contains(bk)) 1 else 0) > MaxLeaves ||
+            tombs.values.count(_._1 == bk) > MaxTombstones
         }
+        val written =
+          if (fold.isEmpty && c.delta.isEmpty) Map.empty[Int, String]
+          else writeLabels(dir,
+            if (fold.isEmpty) c.rows()
+            else c.rows().unionByName(
+              ids.survivors(readLabels(spark, dir, man, fold), Seq("cluster_id"))),
+            man.modulus, v)
+        val buckets = written.foldLeft(man.buckets -- fold) { case (m, (bk, g)) =>
+          m.updated(bk, m.getOrElse(bk, Seq.empty) :+ g) }
+        val pairFiles =
+          if (c.pairFiles.size > maxPairFiles) compactInto(spark, dir, c.pairFiles, v)
+          else c.pairFiles
+        beforeCommit()
+        commit(fs, dir, Manifest(v, man.modulus, buckets, liveTombstones(tombs, buckets),
+          pairFiles))
       }
     } finally c.release()
 

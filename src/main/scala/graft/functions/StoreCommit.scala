@@ -190,14 +190,18 @@ private[graft] object StoreCommit {
   /** `body` over the ids in the one-column frame `ids`: collected when
     * the caller's type rule holds (`local`) and they fit the row bound
     * ([[localRows]]), else checkpointed — released when `body` returns
-    * or throws (a commit that lost its CAS race). */
-  def withIds[T](ids: DataFrame, local: Boolean)(body: Ids => T): T = {
+    * or throws (a commit that lost its CAS race). `checkpointed`: `ids`
+    * is already built from checkpointed frames only, so it is used as is
+    * and its cache stays the caller's. */
+  def withIds[T](ids: DataFrame, local: Boolean, checkpointed: Boolean = false)(
+      body: Ids => T): T = {
     val del = new Ids((if (local) localRows(ids) else None) match {
       case Some(rows) => Right(rows.toSeq.filterNot(_.isNullAt(0)).map(_.get(0)).distinct)
+      case None if checkpointed => Left(ids.toDF("_id"))
       case None => Left(ids.toDF("_id").distinct().localCheckpoint(true))
     })
     try body(del)
-    finally del.chosen.left.foreach(_.unpersist(blocking = false))
+    finally if (!checkpointed) del.chosen.left.foreach(_.unpersist(blocking = false))
   }
 
   /** The one file-pruned copy-on-write delete from the data files `live`
