@@ -1780,7 +1780,7 @@ object Ext {
   private val dedupSnapshotPinned = QDef(
     "dedup_snapshot_pinned",
     (s, d) => graft.functions.PairStore
-      .snapshotAt(s, incrStore(s, d, "incr", 250, Int.MaxValue), 0L)
+      .snapshot(s, incrStore(s, d, "incr", 250, Int.MaxValue), at = Some(0L))
       .labels.orderBy(col("doc_id")),
     Some(closureSqlUnder(250))
   )

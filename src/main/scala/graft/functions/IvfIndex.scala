@@ -66,17 +66,12 @@ final class IvfIndex private (
 
   import IvfIndex._
 
-  private def snapshot(): Snap = {
-    val fs = StoreCommit.fsOf(spark, path)
-    pin.foreach(StoreCommit.requireCommitted(fs, path, _, Store))
-    snapshotAt(pin.getOrElse(StoreCommit.currentVersion(fs, path, Store)))
-  }
-
-  /** A read-only handle PINNED at committed version `v` — the
-    * [[PairStore.snapshotAt]] symmetry: every serve call (topK, pqTopK,
-    * cells, centroids) resolves version `v`'s quantizer and layout no
-    * matter how far appends/deletes/rebuilds have advanced the store
-    * (until [[vacuum]] retires it — then reads fail loudly). Writers
+  /** A read-only handle PINNED at committed version `v`, as a
+    * [[PairStore]] snapshot or a [[SignatureStore]] read is pinned by its
+    * `at`: every serve call (topK, pqTopK, cells, centroids) resolves
+    * version `v`'s quantizer and layout no matter how far
+    * appends/deletes/rebuilds have advanced the store (until [[vacuum]]
+    * retires it — then reads fail loudly). Writers
     * ([[appendBatch]], [[delete]], [[rebuild]], [[compact]],
     * [[vacuum]]) refuse on a pinned handle: a pin is a reproducible
     * VIEW, never a write target. */
@@ -90,13 +85,12 @@ final class IvfIndex private (
       s"$Store: $op refused on a handle pinned at version ${pin.get} — " +
         "pins are reproducible views; write through an unpinned handle")
 
-  private def snapshotAt(v: Long): Snap = {
-    val fs = StoreCommit.fsOf(spark, path)
+  /** Committed version `at` — this handle's pin, else the head — as one
+    * [[Snap]] ([[StoreCommit.pinned]]). */
+  private def snapshot(at: Option[Long] = pin): Snap = {
     var quant: Option[String] = None
     val pairs = Seq.newBuilder[(String, Int)]
-    // serve path: memoized — committed manifests are immutable, so a
-    // pinned or re-resolved version pays the manifest open ONCE per JVM
-    StoreCommit.readEntries(fs, path, v, Store) {
+    val v = StoreCommit.pinned(StoreCommit.fsOf(spark, path), path, Store, at) {
       case Array("quant", q)  => quant = Some(q)
       case Array("gen", g, c) => pairs += ((g, c.toInt))
     }
@@ -184,11 +178,9 @@ final class IvfIndex private (
       snap: Snap, batch: DataFrame, idCol: String, vecCol: String): Unit = {
     val written =
       writeCells(encoded(vectors(batch, idCol, vecCol), quantOf(snap)), path, snap.version + 1)
-    if (written.nonEmpty) { // an empty batch commits nothing
-      onBeforeCommit()
+    if (written.nonEmpty) // an empty batch commits nothing
       commit(StoreCommit.fsOf(spark, path), path, snap.version + 1, snap.quantDir,
         snap.genCells ++ written)
-    }
   }
 
   /** [[appendBatch]] made IDEMPOTENT under whole-batch replay — the
@@ -267,7 +259,6 @@ final class IvfIndex private (
       if (touched.nonEmpty) {
         val kept = writeCells(del.survivors(cellsOf(snap, Some(touched)), Seq("id")),
           path, snap.version + 1)
-        onBeforeCommit()
         commit(StoreCommit.fsOf(spark, path), path, snap.version + 1, snap.quantDir,
           snap.genCells.filterNot { case (_, c) => touched(c) } ++ kept)
       }
@@ -294,7 +285,6 @@ final class IvfIndex private (
       val gen = StoreCommit.compact(cellsOf(snap, None),
         snap.genCells.map { case (g, c) => s"$g/cell=$c" }, path, "cells", snap.version + 1,
         partitionCol = Some("cell"))
-      onBeforeCommit()
       commit(StoreCommit.fsOf(spark, path), path, snap.version + 1, snap.quantDir,
         gen.values.map(gen.name -> _))
     }
@@ -333,7 +323,6 @@ final class IvfIndex private (
       writeQuantizer(spark, s"$path/$quantDir", quant)
       writeCells(encoded(corpus, quant), path, v)
     } finally corpus.unpersist(blocking = false)
-    onBeforeCommit()
     commit(fs, path, v, quantDir, written)
   }
 
@@ -344,7 +333,7 @@ final class IvfIndex private (
   def vacuum(keepLast: Int = 2): Unit = {
     requireWritable("vacuum")
     StoreCommit.vacuum(StoreCommit.fsOf(spark, path), path, Store, keepLast)(
-      v => { val s = snapshotAt(v); refs(s.quantDir, s.genCells) })
+      v => { val s = snapshot(Some(v)); refs(s.quantDir, s.genCells) })
   }
 
   /** Top-k cosine neighbors of each query against the probed cells only,
@@ -446,11 +435,6 @@ object IvfIndex {
     * (generation dir, cell) pairs. */
   private final case class Snap(
       version: Long, quantDir: String, genCells: Seq[(String, Int)])
-
-  /** Test seam: invoked immediately before every manifest commit
-    * (append/delete/rebuild), so IvfIndexSpec can interleave a full
-    * competing write at exactly the CAS window. No-op in production. */
-  private[graft] var onBeforeCommit: () => Unit = () => ()
 
   /** Physical cell-relation builds (each one a leaf-dir listing pass)
     * performed by this JVM — the memo-hit observability seam for

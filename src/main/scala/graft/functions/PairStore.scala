@@ -135,22 +135,6 @@ object PairStore {
     * buckets and read 3.03× against its 3× bound; at 4 it folds none. */
   private[graft] val MaxTombstones = 4
 
-  /** Test seam: invoked by [[append]] immediately before its manifest
-    * commit, so PairStoreSpec can interleave a full competing append at
-    * exactly the CAS window, deterministically and single-threaded.
-    * No-op in production. */
-  private[graft] var onBeforeAppendCommit: () => Unit = () => ()
-
-  /** Test seam: invoked before the manifest commit of EVERY write verb
-    * (build/append/delete/compactPairs), with the writer's generations
-    * fully staged and the manifest not yet published — the store tier's
-    * shared crash window ([[SignatureStore.onBeforeCommit]] /
-    * [[IvfIndex.onBeforeCommit]] convention). PairStoreSpec's
-    * randomized kill-replay injects a crash here and asserts the replay
-    * converges and vacuum reaps the orphaned staging. No-op in
-    * production. */
-  private[graft] var onBeforeCommit: () => Unit = () => ()
-
   /** A pinned, immutable view of the store at one committed version:
     * `pairs` and `labels` resolve to the exact files that version's
     * manifest listed, so the view stays consistent while later appends,
@@ -215,9 +199,10 @@ object PairStore {
     val labels = Clusters.connectedComponents(
       nodes.select(col(nodeCol)), readPairs(spark, dir, pairFiles),
       nodeCol, srcCol, dstCol, shortcut = shortcut)
-    commit(fs, dir, Manifest(0L, buckets,
+    val man = Manifest(0L, buckets,
       writeLabels(dir, labels, buckets, 0L).map { case (bk, g) => bk -> Seq(g) },
-      Map.empty, pairFiles))
+      Map.empty, pairFiles)
+    StoreCommit.commitManifest(fs, dir, 0L, man.lines, Store, man.paths)
   }
 
   /** Incrementally extend the store with a batch: append the batch's
@@ -286,12 +271,12 @@ object PairStore {
     // leftovers are unreferenced garbage for an EXPLICIT
     // recover()/vacuum() run when no writer is live.
     val fs = StoreCommit.fsOf(spark, dir)
-    val man = currentManifest(fs, dir)
+    val man = manifest(fs, dir)
     val change =
       localAppend(spark, dir, man, newNodes, newPairs, nodeCol, srcCol, dstCol)
         .getOrElse(distributedAppend(spark, dir, man, newNodes, newPairs,
           nodeCol, srcCol, dstCol, shortcut))
-    commitChange(spark, fs, dir, man, change, maxPairFiles, () => onBeforeAppendCommit())
+    commitChange(spark, fs, dir, man, change, maxPairFiles)
   }
 
   /** [[append]]'s change computed on the driver — or, before anything is
@@ -520,7 +505,7 @@ object PairStore {
     val spark = deletedNodes.sparkSession
     // no automatic recover — same concurrent-writer hazard as append
     val fs = StoreCommit.fsOf(spark, dir)
-    val man = currentManifest(fs, dir)
+    val man = manifest(fs, dir)
     val labels = readLabels(spark, dir, man, man.buckets.keySet.toSeq)
       .select(col(nodeCol), col("cluster_id"))
     val pairs = readPairs(spark, dir, man.pairFiles)
@@ -537,7 +522,7 @@ object PairStore {
             case Left(affected) => distributedDelete(spark, dir, man, ids, affected,
               nodeCol, srcCol, dstCol, shortcut)
           }
-        commitChange(spark, fs, dir, man, change, Int.MaxValue, () => ())
+        commitChange(spark, fs, dir, man, change, Int.MaxValue)
       }
     }
   }
@@ -657,10 +642,11 @@ object PairStore {
       targetFileBytes: Long = 128L << 20): Unit = {
     // no automatic recover — same concurrent-writer hazard as append
     val fs = StoreCommit.fsOf(spark, dir)
-    val man = currentManifest(fs, dir)
+    val man = manifest(fs, dir)
     val v = man.version + 1
-    commit(fs, dir, man.copy(version = v,
-      pairFiles = compactInto(spark, dir, man.pairFiles, v, targetFileBytes)))
+    val next = man.copy(version = v,
+      pairFiles = compactInto(spark, dir, man.pairFiles, v, targetFileBytes))
+    StoreCommit.commitManifest(fs, dir, v, next.lines, Store, next.paths)
   }
 
   /** Retire manifests older than the newest `keepLast` and delete the
@@ -670,27 +656,20 @@ object PairStore {
     * fail loudly on read. */
   def vacuum(spark: SparkSession, dir: String, keepLast: Int = 2): Unit = {
     val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.vacuum(fs, dir, Store, keepLast)(readManifest(fs, dir, _).paths)
+    StoreCommit.vacuum(fs, dir, Store, keepLast)(v => manifest(fs, dir, Some(v)).paths)
   }
 
   // ------------------------------------------------------------------ //
   // readers
   // ------------------------------------------------------------------ //
 
-  /** Pin the CURRENT committed version as an immutable view — valid
-    * across racing appends/compactions until [[vacuum]] retires it. */
-  def snapshot(spark: SparkSession, dir: String): Snapshot = {
-    val fs = StoreCommit.fsOf(spark, dir)
-    snapshotAt(spark, dir, StoreCommit.currentVersion(fs, dir, Store))
-  }
-
-  /** Pin a specific committed version. Throws if that version was never
-    * committed or has been vacuumed past retention. */
-  def snapshotAt(spark: SparkSession, dir: String, version: Long): Snapshot = {
-    val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.requireCommitted(fs, dir, version, Store)
-    val man = readManifest(fs, dir, version)
-    Snapshot(version, readPairs(spark, dir, man.pairFiles),
+  /** Pin committed version `at` — the CURRENT one when None — as an
+    * immutable view, valid across racing appends/compactions until
+    * [[vacuum]] retires it. Throws if `at` was never committed or has
+    * been vacuumed past retention. */
+  def snapshot(spark: SparkSession, dir: String, at: Option[Long] = None): Snapshot = {
+    val man = manifest(StoreCommit.fsOf(spark, dir), dir, at)
+    Snapshot(man.version, readPairs(spark, dir, man.pairFiles),
       readLabels(spark, dir, man, man.buckets.keySet.toSeq))
   }
 
@@ -730,7 +709,7 @@ object PairStore {
     * tombstoned clusters' rows and adds the delta's. */
   private def commitChange(
       spark: SparkSession, fs: FileSystem, dir: String, man: Manifest,
-      c: Change, maxPairFiles: Int, beforeCommit: () => Unit): Unit =
+      c: Change, maxPairFiles: Int): Unit =
     try if (c.delta.nonEmpty || c.tombBuckets.nonEmpty || c.pairFiles != man.pairFiles) {
       val t = c.tombs.schema("cluster_id").dataType
       StoreCommit.withIds(c.tombs, StoreCommit.isIntegral(t), checkpointed = true) { ids =>
@@ -759,9 +738,8 @@ object PairStore {
         val pairFiles =
           if (c.pairFiles.size > maxPairFiles) compactInto(spark, dir, c.pairFiles, v)
           else c.pairFiles
-        beforeCommit()
-        commit(fs, dir, Manifest(v, man.modulus, buckets, liveTombstones(tombs, buckets),
-          pairFiles))
+        val next = Manifest(v, man.modulus, buckets, liveTombstones(tombs, buckets), pairFiles)
+        StoreCommit.commitManifest(fs, dir, v, next.lines, Store, next.paths)
       }
     } finally c.release()
 
@@ -823,14 +801,6 @@ object PairStore {
 
   /** Field `i` of `r` as an id, None when null. */
   private def end(r: Row, i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(idAt(r, i))
-
-  /** The write verbs' commit: the crash seam, then
-    * [[StoreCommit.commitManifest]] over every label leaf and pair file
-    * the manifest references. */
-  private def commit(fs: FileSystem, dir: String, m: Manifest): Unit = {
-    onBeforeCommit()
-    StoreCommit.commitManifest(fs, dir, m.version, m.lines, Store, m.paths)
-  }
 
   /** Write `labels` as a fresh salted label generation for version `v`,
     * one node-sorted leaf per cluster-residue bucket; returns the
@@ -899,14 +869,14 @@ object PairStore {
       spark: SparkSession, dir: String, files: Seq[String]): DataFrame =
     StoreCommit.readParquet(spark, files.map(f => s"$dir/$f"))
 
-  /** Manifest `v` through the serve-path memo
-    * ([[StoreCommit.readManifestLinesCached]]). */
-  private def readManifest(fs: FileSystem, dir: String, v: Long): Manifest = {
+  /** The manifest of committed version `at`, the head when None
+    * ([[StoreCommit.pinned]]). */
+  private def manifest(fs: FileSystem, dir: String, at: Option[Long] = None): Manifest = {
     var modulus = 0
     val leaves = Seq.newBuilder[(Int, String)]
     val tombs = Map.newBuilder[Long, (Int, Long)]
     val files = Seq.newBuilder[String]
-    StoreCommit.readEntries(fs, dir, v, Store) {
+    val v = StoreCommit.pinned(fs, dir, Store, at) {
       case Array("modulus", m)              => modulus = m.toInt
       case Array("bucket", bk, g)           => leaves += (bk.toInt -> g)
       case Array("tombstone", bk, c, w)     => tombs += (c.toLong -> (bk.toInt -> w.toLong))
@@ -916,7 +886,4 @@ object PairStore {
       leaves.result().groupMap(_._1)(_._2).map { case (bk, gs) => bk -> gs.sortBy(g => (genOf(g), g)) },
       tombs.result(), files.result())
   }
-
-  private def currentManifest(fs: FileSystem, dir: String): Manifest =
-    readManifest(fs, dir, StoreCommit.currentVersion(fs, dir, Store))
 }

@@ -53,12 +53,6 @@ object SignatureStore {
 
   private val Store = "SignatureStore"
 
-  /** Test seam: invoked immediately before [[append]]'s /[[delete]]'s
-    * manifest commit, so SignatureStoreSpec can interleave a full
-    * competing write at exactly the CAS window, deterministically.
-    * No-op in production. */
-  private[graft] var onBeforeCommit: () => Unit = () => ()
-
   /** Signature frame for a doc table: (doc_id, exact_h, arr, n_shingles).
     * Docs shorter than `w` tokens get an empty array (they can never be
     * near-dups but still screen exactly). */
@@ -87,12 +81,9 @@ object SignatureStore {
     * its batch (screen + append) converges. */
   def append(docs: DataFrame, dir: String, w: Int = 3): Unit = {
     val fs = StoreCommit.fsOf(docs.sparkSession, dir)
-    val v = StoreCommit.currentVersion(fs, dir, Store)
+    val (v, live) = liveFiles(fs, dir)
     val fresh = StoreCommit.writeGeneration(signatures(docs, w), dir, "data", v + 1)
-    if (fresh.hasRows) {
-      onBeforeCommit()
-      commit(fs, dir, v + 1, liveFiles(fs, dir, v) ++ fresh.paths)
-    }
+    if (fresh.hasRows) commit(fs, dir, v + 1, live ++ fresh.paths)
   }
 
   /** Delete signatures by doc id — the retention pass: once a document
@@ -111,16 +102,12 @@ object SignatureStore {
     * choice; others are broadcast-joined. */
   def delete(spark: SparkSession, ids: DataFrame, dir: String): Unit = {
     val fs = StoreCommit.fsOf(spark, dir)
-    val v = StoreCommit.currentVersion(fs, dir, Store)
-    val live = liveFiles(fs, dir, v)
+    val (v, live) = liveFiles(fs, dir)
     val idCol = ids.select(col(ids.columns.head))
     val store = readFiles(spark, dir, live)
     StoreCommit.withIds(idCol, idCol.schema.head.dataType == store.schema("doc_id").dataType) { del =>
       StoreCommit.copyOnWrite(spark, dir, "data", v + 1, live, del, Seq("doc_id"))
-        .foreach { files =>
-          onBeforeCommit()
-          commit(fs, dir, v + 1, files)
-        }
+        .foreach(commit(fs, dir, v + 1, _))
     }
   }
 
@@ -137,11 +124,9 @@ object SignatureStore {
       spark: SparkSession, dir: String,
       targetFileBytes: Long = 128L << 20): Unit = {
     val fs = StoreCommit.fsOf(spark, dir)
-    val v = StoreCommit.currentVersion(fs, dir, Store)
-    val live = liveFiles(fs, dir, v)
+    val (v, live) = liveFiles(fs, dir)
     val gen =
       StoreCommit.compact(readFiles(spark, dir, live), live, dir, "data", v + 1, targetFileBytes)
-    onBeforeCommit()
     commit(fs, dir, v + 1, gen.paths)
   }
 
@@ -153,28 +138,18 @@ object SignatureStore {
     * abort. */
   def vacuum(spark: SparkSession, dir: String, keepLast: Int = 2): Unit = {
     val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.vacuum(fs, dir, Store, keepLast)(liveFiles(fs, dir, _))
+    StoreCommit.vacuum(fs, dir, Store, keepLast)(v => liveFiles(fs, dir, Some(v))._2)
   }
 
-  /** The stored signature table at the CURRENT committed version — a
-    * consistent snapshot that stays valid while appends/deletes race
-    * ahead (until [[vacuum]] retires it). */
-  def stored(spark: SparkSession, dir: String): DataFrame = {
-    val fs = StoreCommit.fsOf(spark, dir)
-    storedAt(spark, dir, StoreCommit.currentVersion(fs, dir, Store))
-  }
-
-  /** The signature table PINNED at a specific committed version — the
-    * [[PairStore.snapshotAt]] symmetry the versioned manifests buy:
-    * "screen this batch against the store AS OF version V" is what makes
-    * an ingest decision reproducible after the store has moved on.
-    * Throws if `version` was never committed or has been vacuumed past
-    * retention. */
-  def storedAt(spark: SparkSession, dir: String, version: Long): DataFrame = {
-    val fs = StoreCommit.fsOf(spark, dir)
-    StoreCommit.requireCommitted(fs, dir, version, Store)
-    readFiles(spark, dir, liveFiles(fs, dir, version))
-  }
+  /** The stored signature table at committed version `at` — the CURRENT
+    * one when None: a consistent snapshot that stays valid while
+    * appends/deletes race ahead (until [[vacuum]] retires it). A pin is
+    * what makes "screen this batch against the store AS OF version V"
+    * reproducible after the store has moved on, as a [[PairStore]]
+    * snapshot or an [[IvfIndex.at]] handle is. Throws if `at` was never
+    * committed or has been vacuumed past retention. */
+  def stored(spark: SparkSession, dir: String, at: Option[Long] = None): DataFrame =
+    readFiles(spark, dir, liveFiles(StoreCommit.fsOf(spark, dir), dir, at)._2)
 
   /** Committed versions, ascending (the audit/ops verb). */
   def versions(spark: SparkSession, dir: String): Seq[Long] =
@@ -320,13 +295,13 @@ object SignatureStore {
     StoreCommit.commitManifest(fs, dir, v, files.sorted.map(f => s"file $f"),
       Store, files)
 
-  private def liveFiles(fs: FileSystem, dir: String, v: Long): Seq[String] = {
-    // memoized: committed manifests are immutable; any commit at `dir`
-    // invalidates its entries (StoreCommit.commitManifest), so the serve
-    // path pays the manifest open once per (dir, version) per JVM
+  /** Committed version `at` — the head when None — and its live files
+    * ([[StoreCommit.pinned]]). */
+  private def liveFiles(
+      fs: FileSystem, dir: String, at: Option[Long] = None): (Long, Seq[String]) = {
     val files = Seq.newBuilder[String]
-    StoreCommit.readEntries(fs, dir, v, Store) { case Array("file", f) => files += f }
-    files.result()
+    val v = StoreCommit.pinned(fs, dir, Store, at) { case Array("file", f) => files += f }
+    (v, files.result())
   }
 
   private def readFiles(

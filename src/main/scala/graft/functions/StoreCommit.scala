@@ -28,12 +28,14 @@ import org.apache.spark.sql.types._
   *     head. A loser of a racing commit throws
   *     `ConcurrentModificationException` with the store unharmed.
   *
-  * Store verbs read generations through [[readParquet]] (a memoized
-  * schema, so a read starts no Spark job) and take their batch-sized
-  * inputs through [[localRows]], under the one row bound
-  * ([[LocalRows]]) that decides whether a verb's batch-sized work runs
-  * on the driver. They write, delete from and compact their generations
-  * through one path each:
+  * Every store resolves the version it reads, the head or a pin,
+  * through the one [[pinned]] read, and every commit passes the one
+  * pre-commit seam ([[onBeforeCommit]]). Store verbs read generations
+  * through [[readParquet]] (a memoized schema, so a read starts no
+  * Spark job) and take their batch-sized inputs through [[localRows]],
+  * under the one row bound ([[LocalRows]]) that decides whether a verb's
+  * batch-sized work runs on the driver. They write, delete from and
+  * compact their generations through one path each:
   *
   *   - [[writeGeneration]] writes every data generation (files, or
   *     partition leaves) and tells its caller whether it holds a row;
@@ -271,30 +273,32 @@ private[graft] object StoreCommit {
     finally in.close()
   }
 
-  /** Feed each line of the served manifest `v` to `parse`, split on
-    * spaces, after dropping its `nonce` and `version` lines; a line
-    * `parse` does not define is a loud corruption error. */
-  def readEntries(fs: FileSystem, dir: String, v: Long, store: String)(
-      parse: PartialFunction[Array[String], Unit]): Unit =
+  /** The one pinned read of a versioned store: version `at` of the store
+    * at `dir` — the committed head ([[currentVersion]]) when None — with
+    * each line of its manifest fed to `parse`, split on spaces, through
+    * the serve-path memo ([[readManifestLinesCached]]). The `nonce` and
+    * `version` lines are dropped; a line `parse` does not define is a
+    * loud corruption error. `Some(v)` fails loudly unless `v` is
+    * committed and not yet vacuumed. Returns the version read. */
+  def pinned(fs: FileSystem, dir: String, store: String, at: Option[Long])(
+      parse: PartialFunction[Array[String], Unit]): Long = {
+    val v = at.getOrElse(currentVersion(fs, dir, store))
+    if (at.isDefined)
+      require(fs.exists(new Path(s"$dir/history/v$v")),
+        s"$store $dir has no committed version $v (never written, or " +
+          "vacuumed past retention)")
     readManifestLinesCached(fs, dir, v).map(_.split(" ")).foreach {
       case Array("nonce" | "version", _) => ()
       case f => parse.applyOrElse(f, (_: Array[String]) =>
         throw new IllegalStateException(s"corrupt $store manifest line " +
           s"'${f.mkString(" ")}' in $dir/history/v$v"))
     }
-
-  /** Fail loudly unless version `v` of the store at `dir` is committed
-    * and not yet vacuumed — the pinned readers' gate. */
-  def requireCommitted(
-      fs: FileSystem, dir: String, v: Long, store: String): Unit =
-    require(fs.exists(new Path(s"$dir/history/v$v")),
-      s"$store $dir has no committed version $v (never written, or " +
-        "vacuumed past retention)")
+    v
+  }
 
   /** Physical manifest-file reads performed by this JVM — the test seam
     * pinning that pinned-version serve reads hit the memo (no second
-    * open of `history/vN`), the memo-equivalent of [[onBeforeCommit]]-
-    * style seams elsewhere in the store tier. */
+    * open of `history/vN`). */
   private[graft] val manifestFileReads =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -428,9 +432,16 @@ private[graft] object StoreCommit {
     manifestMemo.removeIf(_._1 == d)
   }
 
+  /** Test seam: invoked first in [[commitManifest]], before the version
+    * CAS — every versioned store's pre-commit window, whatever the verb:
+    * the writer's generations are fully staged and its manifest is not
+    * yet published. Specs inject crashes here (kill-replay) and land a
+    * competing write at exactly the CAS window. No-op in production. */
+  private[graft] var onBeforeCommit: () => Unit = () => ()
+
   /** Publish `lines` (after a generated `nonce` and the `version` line)
     * as version `v` of the store at `dir` — the CAS commit point.
-    * Guards, in order:
+    * After [[onBeforeCommit]], guards, in order:
     *
     *  1. '''Version CAS''': any committed version ≥ `v` means another
     *     writer advanced the store since this commit's manifest was read
@@ -445,6 +456,7 @@ private[graft] object StoreCommit {
   def commitManifest(
       fs: FileSystem, dir: String, v: Long, lines: Seq[String],
       store: String, referenced: Seq[String]): Unit = {
+    onBeforeCommit()
     val latest = committedVersions(fs, dir).maxOption
     if (latest.exists(_ >= v))
       throw new java.util.ConcurrentModificationException(

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{IvfIndex, Similarity}
+import graft.functions.{IvfIndex, Similarity, StoreCommit}
 
 /** Persisted IVF index: exactness at full probe, partition pruning at the
   * scan, and recall at partial probe. */
@@ -252,14 +252,14 @@ class IvfIndexSpec extends SparkSpec {
     val batchA = e.filter(col("vec_id") >= 400 && col("vec_id") < 460)
     val batchB = e.filter(col("vec_id") >= 430 && col("vec_id") < 480)
     val err = try {
-      IvfIndex.onBeforeCommit = () => {
-        IvfIndex.onBeforeCommit = () => () // B must not recurse
+      StoreCommit.onBeforeCommit = () => {
+        StoreCommit.onBeforeCommit = () => () // B must not recurse
         idx.appendBatchIdempotent(batchB, "vec_id", "embedding")
       }
       intercept[java.util.ConcurrentModificationException] {
         idx.appendBatchIdempotent(batchA, "vec_id", "embedding")
       }
-    } finally IvfIndex.onBeforeCommit = () => ()
+    } finally StoreCommit.onBeforeCommit = () => ()
     assert(err.getMessage.contains("concurrent writer"), err.getMessage)
     // exactly B's commit landed — no duplicate ids, no A rows
     val afterB = idx.cells.select(col("id")).as[Long].collect().toSeq
@@ -340,14 +340,14 @@ class IvfIndexSpec extends SparkSpec {
     // B lands the IDENTICAL batch inside A's screen-to-commit window: A
     // must CAS-abort (its screen is stale), never commit a second copy
     val err = try {
-      IvfIndex.onBeforeCommit = () => {
-        IvfIndex.onBeforeCommit = () => ()
+      StoreCommit.onBeforeCommit = () => {
+        StoreCommit.onBeforeCommit = () => ()
         idx.appendBatchIdempotent(batch, "vec_id", "embedding")
       }
       intercept[java.util.ConcurrentModificationException] {
         idx.appendBatchIdempotent(batch, "vec_id", "embedding")
       }
-    } finally IvfIndex.onBeforeCommit = () => ()
+    } finally StoreCommit.onBeforeCommit = () => ()
     assert(err.getMessage.contains("concurrent writer"), err.getMessage)
     // A's replay against the new head appends nothing — B landed it all
     assert(idx.appendBatchIdempotent(batch, "vec_id", "embedding") == 0L)
@@ -421,12 +421,12 @@ class IvfIndexSpec extends SparkSpec {
     // a racing writer hitting the rebuild's commit window loses loudly
     // and the committed delete survives the aborted rebuild
     val err = try {
-      IvfIndex.onBeforeCommit = () => {
-        IvfIndex.onBeforeCommit = () => ()
+      StoreCommit.onBeforeCommit = () => {
+        StoreCommit.onBeforeCommit = () => ()
         idx.delete(Seq(7L).toDF("vec_id"), "vec_id")
       }
       intercept[java.util.ConcurrentModificationException](idx.rebuild())
-    } finally IvfIndex.onBeforeCommit = () => ()
+    } finally StoreCommit.onBeforeCommit = () => ()
     assert(err.getMessage.contains("concurrent writer"), err.getMessage)
     assert(!idx.cells.select(col("id")).as[Long].collect().contains(7L),
       "the racing delete's committed state must stand")
@@ -481,17 +481,17 @@ class IvfIndexSpec extends SparkSpec {
         // the ambush op commits first (inside the outer's CAS window)
         var ambushed = false
         try {
-          IvfIndex.onBeforeCommit = () => {
-            IvfIndex.onBeforeCommit = () => ()
+          StoreCommit.onBeforeCommit = () => {
+            StoreCommit.onBeforeCommit = () => ()
             ambushed = true
             applyOp(!outerIsAppend, rAmbush) // opposite kind, full op
           }
           applyOp(outerIsAppend, rOuter)
           // no commit window was reached (e.g. replay/no-op): clear seam
-          IvfIndex.onBeforeCommit = () => ()
+          StoreCommit.onBeforeCommit = () => ()
         } catch {
           case _: java.util.ConcurrentModificationException =>
-            IvfIndex.onBeforeCommit = () => ()
+            StoreCommit.onBeforeCommit = () => ()
             applyOp(outerIsAppend, rOuter) // the loser replays
         }
         val got = idx.cells.select(col("id")).as[Long].collect().toSeq

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Clusters, Fuzzy, NearDup, PairStore}
+import graft.functions.{Clusters, Fuzzy, NearDup, PairStore, StoreCommit}
 
 /** Durable pair/cluster store ([[graft.functions.PairStore]]): the
   * persisted pairs and labels must equal a live recompute exactly (the
@@ -345,7 +345,7 @@ class PairStoreSpec extends SparkSpec {
     assert(PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap
       == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
     val err = intercept[IllegalArgumentException] {
-      PairStore.snapshotAt(spark, dir, snap.version)
+      PairStore.snapshot(spark, dir, Some(snap.version))
     }
     assert(err.getMessage.contains("vacuumed") ||
       err.getMessage.contains("no committed version"))
@@ -568,8 +568,8 @@ class PairStoreSpec extends SparkSpec {
     // window the hook runs appender B's ENTIRE append (which commits
     // v1). A must then abort without touching B's committed state.
     val err = try {
-      PairStore.onBeforeAppendCommit = () => {
-        PairStore.onBeforeAppendCommit = () => () // B must not recurse
+      StoreCommit.onBeforeCommit = () => {
+        StoreCommit.onBeforeCommit = () => () // B must not recurse
         PairStore.append(Seq(8L).toDF("id"),
           Seq((5L, 8L)).toDF("id_a", "id_b"), dir, "id", "id_a", "id_b")
       }
@@ -577,7 +577,7 @@ class PairStoreSpec extends SparkSpec {
         PairStore.append(Seq(7L).toDF("id"),
           Seq((3L, 7L)).toDF("id_a", "id_b"), dir, "id", "id_a", "id_b")
       }
-    } finally PairStore.onBeforeAppendCommit = () => ()
+    } finally StoreCommit.onBeforeCommit = () => ()
     assert(err.getMessage.contains("concurrent writer"), err.getMessage)
     // exactly B's commit landed: history = {v0, v1}, state = B-only
     assert(fs.listStatus(p(s"$dir/history")).map(_.getPath.getName).toSet
@@ -609,7 +609,7 @@ class PairStoreSpec extends SparkSpec {
       finally in.close()
     }
     val err = try {
-      PairStore.onBeforeAppendCommit = () => {
+      StoreCommit.onBeforeCommit = () => {
         // a competing writer publishes v1 (same content, new version)
         // right inside A's CAS window — the narrowest possible race
         val out = fs.create(p(s"$dir/history/v1"), true)
@@ -620,7 +620,7 @@ class PairStoreSpec extends SparkSpec {
         PairStore.append(Seq(4L).toDF("id"),
           Seq((3L, 4L)).toDF("id_a", "id_b"), dir, "id", "id_a", "id_b")
       }
-    } finally PairStore.onBeforeAppendCommit = () => ()
+    } finally StoreCommit.onBeforeCommit = () => ()
     assert(err.getMessage.contains("committed by a concurrent writer"),
       err.getMessage)
     assert(PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap
@@ -683,7 +683,7 @@ class PairStoreSpec extends SparkSpec {
   storeTest("randomized kill-replay: writes killed in the pre-commit window " +
       "(generations staged, manifest unpublished) replay to convergence; " +
       "recover+vacuum reap the crashed staging with served state unchanged") {
-    // three appends + a delete — the verb mix [[PairStore.onBeforeCommit]]
+    // three appends + a delete — the verb mix [[StoreCommit.onBeforeCommit]]
     // covers (the seam fires inside commitManifest for every write verb)
     val appends = Seq(
       (Seq(3L, 4L), Seq((2L, 3L), (3L, 4L))),
@@ -699,11 +699,11 @@ class PairStoreSpec extends SparkSpec {
         if (!kill) op
         else {
           val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
-          PairStore.onBeforeCommit = () =>
+          StoreCommit.onBeforeCommit = () =>
             if (armed.getAndSet(false))
               throw new RuntimeException("injected crash: pre-commit")
           try intercept[RuntimeException](op)
-          finally PairStore.onBeforeCommit = () => ()
+          finally StoreCommit.onBeforeCommit = () => ()
           // the caller's at-least-once redelivery: replay the whole verb
           op
         }
@@ -919,10 +919,10 @@ class PairStoreSpec extends SparkSpec {
         dir, "id", "id_a", "id_b", buckets = 1)
       val counts = (1 to steps).map { i =>
         if (kill.contains(i)) {
-          PairStore.onBeforeCommit = () =>
+          StoreCommit.onBeforeCommit = () =>
             throw new RuntimeException("injected crash: pre-commit")
           try intercept[RuntimeException](append(dir, i))
-          finally PairStore.onBeforeCommit = () => ()
+          finally StoreCommit.onBeforeCommit = () => ()
         }
         append(dir, i)
         leaves(dir)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{NearDup, SignatureStore}
+import graft.functions.{NearDup, SignatureStore, StoreCommit}
 
 /** Persisted signature store ([[graft.functions.SignatureStore]]) — the
   * store round-trip must be invisible: screening against parquet
@@ -136,14 +136,14 @@ class SignatureStoreSpec extends SparkSpec {
     // appender B's ENTIRE append (committing the next version). A must
     // abort without touching B's committed state.
     val err = try {
-      SignatureStore.onBeforeCommit = () => {
-        SignatureStore.onBeforeCommit = () => () // B must not recurse
+      StoreCommit.onBeforeCommit = () => {
+        StoreCommit.onBeforeCommit = () => () // B must not recurse
         SignatureStore.append(bB, dir)
       }
       intercept[java.util.ConcurrentModificationException] {
         SignatureStore.append(bA, dir)
       }
-    } finally SignatureStore.onBeforeCommit = () => ()
+    } finally StoreCommit.onBeforeCommit = () => ()
     assert(err.getMessage.contains("concurrent writer"), err.getMessage)
     // exactly B's commit landed
     assert(SignatureStore.stored(spark, dir).select("doc_id")
@@ -168,14 +168,14 @@ class SignatureStoreSpec extends SparkSpec {
     val dir = tmp()
     SignatureStore.build(docs, dir)
     val err = try {
-      SignatureStore.onBeforeCommit = () => {
-        SignatureStore.onBeforeCommit = () => ()
+      StoreCommit.onBeforeCommit = () => {
+        StoreCommit.onBeforeCommit = () => ()
         SignatureStore.delete(spark, Seq(3L).toDF("doc_id"), dir)
       }
       intercept[java.util.ConcurrentModificationException] {
         SignatureStore.delete(spark, Seq(2L).toDF("doc_id"), dir)
       }
-    } finally SignatureStore.onBeforeCommit = () => ()
+    } finally StoreCommit.onBeforeCommit = () => ()
     assert(err.getMessage.contains("concurrent writer"), err.getMessage)
     assert(SignatureStore.stored(spark, dir).select("doc_id")
       .as[Long].collect().sorted.toSeq == Seq(1L, 2L),
@@ -193,11 +193,11 @@ class SignatureStoreSpec extends SparkSpec {
     val dir = tmp()
     SignatureStore.build(base, dir)
     val v0 = SignatureStore.versions(spark, dir).max
-    val want = SignatureStore.storedAt(spark, dir, v0)
+    val want = SignatureStore.stored(spark, dir, Some(v0))
       .select("doc_id").as[Long].collect().sorted.toSeq
     SignatureStore.append(b1, dir)
     SignatureStore.delete(spark, Seq(3L).toDF("doc_id"), dir)
-    assert(SignatureStore.storedAt(spark, dir, v0)
+    assert(SignatureStore.stored(spark, dir, Some(v0))
       .select("doc_id").as[Long].collect().sorted.toSeq == want,
       "the pinned version must not see later appends/deletes")
     assert(SignatureStore.stored(spark, dir)
@@ -205,7 +205,7 @@ class SignatureStoreSpec extends SparkSpec {
     assert(SignatureStore.versions(spark, dir).size == 3)
     SignatureStore.vacuum(spark, dir, keepLast = 1)
     val gone = intercept[IllegalArgumentException](
-      SignatureStore.storedAt(spark, dir, v0))
+      SignatureStore.stored(spark, dir, Some(v0)))
     assert(gone.getMessage.contains("vacuumed"), gone.getMessage)
   }
 

@@ -11,7 +11,9 @@ import graft.functions.{IvfIndex, PairStore, SignatureStore, StoreCommit}
   * staged generation), and a randomized cross-store interleave pinning that
   * racing writers + vacuums on sibling stores under one root never
   * cross-talk through StoreCommit's JVM-level state and never commit a
-  * manifest referencing deleted paths. */
+  * manifest referencing deleted paths. Every write verb of every
+  * versioned store is killed at the one pre-commit seam and replayed,
+  * and the signature store's read plan is gated over a long run. */
 class StoreCommitSpec extends SparkSpec {
   import spark.implicits._
 
@@ -47,9 +49,9 @@ class StoreCommitSpec extends SparkSpec {
     // same contract for the signature store's pinned reader
     val sdir = tmp("sc_memo_sig")
     SignatureStore.build(docsRange(0, 10), sdir)
-    SignatureStore.storedAt(spark, sdir, 0L).count()
+    SignatureStore.stored(spark, sdir, Some(0L)).count()
     val before2 = StoreCommit.manifestFileReads.get()
-    SignatureStore.storedAt(spark, sdir, 0L).count()
+    SignatureStore.stored(spark, sdir, Some(0L)).count()
     assert(StoreCommit.manifestFileReads.get() == before2,
       "a pinned SignatureStore read re-opened history/vN")
   }
@@ -284,14 +286,14 @@ class StoreCommitSpec extends SparkSpec {
     // interleave a vacuum at exactly the CAS window: the appender's
     // staged generation is unreferenced at that instant, so the reap
     // deletes it — the commit's referenced-data verify must catch that
-    SignatureStore.onBeforeCommit = () => {
-      SignatureStore.onBeforeCommit = () => ()
+    StoreCommit.onBeforeCommit = () => {
+      StoreCommit.onBeforeCommit = () => ()
       SignatureStore.vacuum(spark, dir, keepLast = 1)
     }
     try
       intercept[java.util.ConcurrentModificationException](
         SignatureStore.append(docsRange(20, 30), dir))
-    finally SignatureStore.onBeforeCommit = () => ()
+    finally StoreCommit.onBeforeCommit = () => ()
     // the store is unharmed and the loser's replay converges
     assert(SignatureStore.stored(spark, dir).count() == 20)
     SignatureStore.append(docsRange(20, 30), dir)
@@ -305,12 +307,12 @@ class StoreCommitSpec extends SparkSpec {
       Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"), pdir, "id", "id_a", "id_b")
     def appendPair(): Unit = PairStore.append(Seq.empty[Long].toDF("id"),
       Seq((1L, 3L)).toDF("id_a", "id_b"), pdir, "id", "id_a", "id_b")
-    PairStore.onBeforeCommit = () => {
-      PairStore.onBeforeCommit = () => ()
+    StoreCommit.onBeforeCommit = () => {
+      StoreCommit.onBeforeCommit = () => ()
       PairStore.vacuum(spark, pdir, keepLast = 1)
     }
     try intercept[java.util.ConcurrentModificationException](appendPair())
-    finally PairStore.onBeforeCommit = () => ()
+    finally StoreCommit.onBeforeCommit = () => ()
     assert(PairStore.snapshot(spark, pdir).version == 0L)
     assert(PairStore.pairs(spark, pdir).as[(Long, Long)].collect().sorted.toSeq
       == Seq((1L, 2L), (2L, 3L)), "v0 must still be served")
@@ -426,5 +428,118 @@ class StoreCommitSpec extends SparkSpec {
     // manifest-referenced cell dir exists and scans)
     assert(ivf.topK(vecsRange(0, 2), "id", "v", k = 3, nProbe = 2)
       .count() > 0)
+  }
+
+  // ------------------------------------------- kill-replay at the one seam
+
+  /** Runs `verbs` in order on a store built by `build` and on a fresh
+    * twin built the same way. On the first store each verb is killed once
+    * at the one pre-commit seam ([[StoreCommit.onBeforeCommit]]): it must
+    * throw with the head version and the `served` rows unchanged. Its
+    * replay must then equal the twin's uninterrupted run, and `maintain`
+    * (vacuum, and recover) must leave the served rows as they are. */
+  private def killReplay(store: String, build: String => Unit, head: String => Long,
+      served: String => Any, maintain: String => Unit)(
+      verbs: (String, String => Unit)*): Unit = {
+    val (dir, twin) = (tmp(s"sc_kill_$store"), tmp(s"sc_twin_$store"))
+    build(dir)
+    build(twin)
+    verbs.foreach { case (name, verb) =>
+      val (v0, rows0) = (head(dir), served(dir))
+      val crash = s"injected crash: $store.$name pre-commit"
+      val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+      StoreCommit.onBeforeCommit = () =>
+        if (armed.getAndSet(false)) throw new RuntimeException(crash)
+      val err = try withClue(s"$store.$name: ")(intercept[RuntimeException](verb(dir)))
+        finally StoreCommit.onBeforeCommit = () => ()
+      assert(err.getMessage == crash, s"$store.$name failed elsewhere: $err")
+      assert(head(dir) == v0, s"$store.$name: a killed verb moved the head")
+      assert(served(dir) == rows0, s"$store.$name: a killed verb changed the served rows")
+      verb(dir)
+      verb(twin)
+      val want = served(twin)
+      assert(head(dir) == head(twin), s"$store.$name: replay committed another version count")
+      assert(served(dir) == want, s"$store.$name: replay != an uninterrupted run")
+      maintain(dir)
+      assert(served(dir) == want, s"$store.$name: maintenance changed the served rows")
+    }
+  }
+
+  storeTest("kill-replay: every write verb of every store, killed at the one pre-commit " +
+      "seam, leaves the head and the served rows unchanged, replays to an uninterrupted " +
+      "run's result, and survives vacuum (and recover)") {
+    killReplay("PairStore",
+      dir => PairStore.build((1L to 12L).toDF("id"),
+        Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L)).toDF("id_a", "id_b"), dir,
+        "id", "id_a", "id_b", buckets = 4),
+      PairStore.snapshot(spark, _).version,
+      dir => (PairStore.labels(spark, dir).as[(Long, Long)].collect().toMap,
+        PairStore.pairs(spark, dir).as[(Long, Long)].collect().sorted.toSeq),
+      dir => { PairStore.vacuum(spark, dir, keepLast = 1); PairStore.recover(spark, dir) })(
+      ("append", PairStore.append((13L to 14L).toDF("id"),
+        Seq((3L, 13L), (6L, 13L), (9L, 14L)).toDF("id_a", "id_b"), _, "id", "id_a", "id_b")),
+      ("delete", PairStore.delete(Seq(2L, 14L).toDF("id"), _, "id", "id_a", "id_b")),
+      ("compactPairs", PairStore.compactPairs(spark, _)))
+
+    def sigVersion(dir: String) = SignatureStore.versions(spark, dir).max
+    killReplay("SignatureStore", SignatureStore.build(docsRange(0, 10), _), sigVersion,
+      dir => rows(SignatureStore.stored(spark, dir).orderBy("doc_id")),
+      SignatureStore.vacuum(spark, _, keepLast = 1))(
+      ("append", SignatureStore.append(docsRange(10, 15), _)),
+      ("delete", SignatureStore.delete(spark, Seq(3L, 12L).toDF("doc_id"), _)),
+      ("compact", SignatureStore.compact(spark, _)))
+
+    // ids and full-probe top-k: exact whatever the quantizer a rebuild trains
+    val q = vecsRange(0, 3)
+    killReplay("IvfIndex", dir => IvfIndex.build(vecsRange(0, 40), "id", "v", 2, dir),
+      IvfIndex.load(spark, _).version,
+      dir => {
+        val ix = IvfIndex.load(spark, dir)
+        (ix.cells.select("id").as[Long].collect().sorted.toSeq,
+          rows(ix.topK(q, "id", "v", k = 3, nProbe = 2)))
+      },
+      IvfIndex.load(spark, _).vacuum(keepLast = 1))(
+      ("appendBatch", IvfIndex.load(spark, _).appendBatch(vecsRange(40, 50), "id", "v")),
+      // before the delete, which may rewrite every cell into one generation
+      ("compact", IvfIndex.load(spark, _).compact()),
+      ("delete", IvfIndex.load(spark, _).delete(Seq(1L, 45L).toDF("id"), "id")),
+      ("rebuild", IvfIndex.load(spark, _).rebuild()))
+  }
+
+  // ------------------------------------------- read-plan gates
+
+  storeTest("plan gate: 30 alternating SignatureStore appends and deletes keep the " +
+      "stored() plan within 3x the nodes and 8x the explain chars of its plan after build") {
+    val dir = tmp("sc_sig_plan")
+    SignatureStore.build(docsRange(0, 20), dir)
+    def plan(): (Int, Int) = {
+      val qe = SignatureStore.stored(spark, dir).queryExecution
+      (qe.optimizedPlan.collect { case n => n }.size,
+        qe.explainString(org.apache.spark.sql.execution.ExtendedMode).length)
+    }
+    val (nodes0, chars0) = plan()
+    var live = (0L until 20L).toSet
+    var next = 20
+    val rnd = new scala.util.Random(20261021L)
+    val sizes = Seq.newBuilder[(Int, Int)]
+    for (op <- 1 to 30) {
+      if (op % 2 == 1) {
+        SignatureStore.append(docsRange(next, next + 3), dir)
+        live ++= (next until next + 3).map(_.toLong)
+        next += 3
+      } else {
+        val del = rnd.shuffle(live.toSeq.sorted).take(2)
+        SignatureStore.delete(spark, del.toDF("doc_id"), dir)
+        live --= del
+      }
+      assert(SignatureStore.stored(spark, dir).select("doc_id").as[Long].collect().toSet == live,
+        s"op $op: stored ids != the survivors")
+      val (n, c) = plan()
+      sizes += ((n, c))
+      assert(n <= 3 * nodes0 && c <= 8 * chars0,
+        s"op $op: stored plan $n nodes / $c explain chars vs $nodes0 / $chars0 after build")
+    }
+    info(s"stored plan after build: $nodes0 nodes, $chars0 explain chars; after each op: " +
+      sizes.result().map { case (n, c) => s"$n/$c" }.mkString(" "))
   }
 }

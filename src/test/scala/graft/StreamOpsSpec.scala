@@ -175,7 +175,7 @@ class StreamOpsSpec extends SparkSpec {
       val mem = MemoryStream[Doc]
       val armed = new java.util.concurrent.atomic.AtomicBoolean(kill.isDefined)
       if (kill.contains("precommit"))
-        graft.functions.SignatureStore.onBeforeCommit = () =>
+        graft.functions.StoreCommit.onBeforeCommit = () =>
           if (armed.getAndSet(false))
             throw new RuntimeException("injected crash: pre-commit")
       val q = StreamOps.ingestCleanStream(
@@ -189,7 +189,7 @@ class StreamOpsSpec extends SparkSpec {
       catch { case _: Throwable => false }
       finally {
         q.stop()
-        graft.functions.SignatureStore.onBeforeCommit = () => ()
+        graft.functions.StoreCommit.onBeforeCommit = () => ()
       }
     }
 
@@ -1135,7 +1135,7 @@ class StreamOpsSpec extends SparkSpec {
       val mem = MemoryStream[Vec]
       val armed = new java.util.concurrent.atomic.AtomicBoolean(kill.isDefined)
       if (kill.contains("precommit"))
-        graft.functions.IvfIndex.onBeforeCommit = () =>
+        graft.functions.StoreCommit.onBeforeCommit = () =>
           if (armed.getAndSet(false))
             throw new RuntimeException("injected crash: pre-commit")
       val ix = graft.functions.IvfIndex.load(spark, s"$dir/idx")
@@ -1149,7 +1149,7 @@ class StreamOpsSpec extends SparkSpec {
       catch { case _: Throwable => false }
       finally {
         q.stop()
-        graft.functions.IvfIndex.onBeforeCommit = () => ()
+        graft.functions.StoreCommit.onBeforeCommit = () => ()
       }
     }
 
